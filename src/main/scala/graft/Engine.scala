@@ -78,6 +78,15 @@ object Engine {
       Archive.results(spark, resultPaths),
       cfg)
 
+  /** Extraction over checkpoint `seq` of the archive at `root`: the one
+    * per-checkpoint read both ingest runners commit.
+    */
+  def extract(spark: SparkSession, root: String, seq: Long, passphrase: String,
+      cfg: ExtractConfig): DataFrame = {
+    val Seq(txs, ledgers, results) = Archive.triple(root, seq)
+    extract(spark, Seq(txs), Seq(ledgers), Seq(results), passphrase, cfg)
+  }
+
   /** Q1: GET /payments?source=&limit= over a collected payments table. */
   def paymentsBySource(payments: DataFrame, source: String, limit: Int = 20): DataFrame =
     Serve.paymentsBySource(payments, source, limit)

@@ -31,10 +31,10 @@ case class Md5PrefixLong(child: Expression, n: Int) extends UnaryExpression {
   override def prettyName: String = "md5_prefix_long"
 
   override protected def nullSafeEval(input: Any): Any =
-    Md5PrefixLong.eval(input.asInstanceOf[Array[Byte]], n)
+    Md5PrefixLong.prefix(input.asInstanceOf[Array[Byte]], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5PrefixLong.eval($c, $n)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.Md5PrefixLong.prefix($c, $n)")
 
   override protected def withNewChildInternal(newChild: Expression): Md5PrefixLong =
     copy(child = newChild)
@@ -45,8 +45,11 @@ object Md5PrefixLong {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
 
-  /** Static hot path shared by eval and generated code. */
-  def eval(bytes: Array[Byte], n: Int): Long = {
+  /** Static hot path shared by eval and generated code. Not named
+    * `eval`: the case class's inherited `eval(InternalRow)` would then
+    * block the static forwarder the generated code calls.
+    */
+  def prefix(bytes: Array[Byte], n: Int): Long = {
     val md = localMd.get()
     md.reset()
     val dig = md.digest(bytes)

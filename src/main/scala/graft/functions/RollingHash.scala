@@ -74,11 +74,16 @@ object GraftFunctions {
         messageParameters = Map("message" ->
           s"$name expects exactly $n argument(s), got ${exprs.length} (parameters are fixed at registration: 8 hashes, 3-word shingles)"))
 
-  def register(spark: SparkSession): Unit =
+  /** Registers the functions the session's registry lacks; names that
+    * [[GraftExtensions]] already injected stay as they are.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(new FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.pipeline.{LedgerEntry, TxHistoryEntry, TxResultEntry}
@@ -59,6 +60,23 @@ object Archive {
     */
   def checkpointRange(root: String, category: String, from: Long, to: Long): Seq[String] =
     (from to to by 64).filter(isCheckpoint).map(pathFor(root, category, _))
+
+  /** Checkpoint `seq`'s three files: transactions, ledger, results. */
+  def triple(root: String, seq: Long): Seq[String] =
+    Seq("transactions", "ledger", "results").map(pathFor(root, _, seq))
+
+  /** The filesystem under `root`, resolved through the session's Hadoop
+    * conf, so `spark.hadoop.*` settings (S3A credentials, endpoints)
+    * reach the availability probes as they reach the binaryFile reads.
+    */
+  def fileSystem(spark: SparkSession, root: String): FileSystem =
+    new HPath(root).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** A checkpoint is readable once all three of its files exist; every
+    * ingest runner stops at the first checkpoint that is not.
+    */
+  def available(fs: FileSystem, root: String, seq: Long): Boolean =
+    triple(root, seq).forall(p => fs.exists(new HPath(p)))
 
   private def binary(spark: SparkSession, paths: Seq[String]): Dataset[Array[Byte]] = {
     implicit val enc = Encoders.BINARY

@@ -1,28 +1,27 @@
 package graft.sources
 
 import java.util
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Full-fidelity custom Structured Streaming source for the history
-  * archive (SURVEY.md §7.5 "sequenced micro-batch source"): the offset IS
-  * the reference's 8-hex checkpoint sequence, advancing in strides of 64
+/** Custom Structured Streaming source for the history archive
+  * (SURVEY.md §7.5 "sequenced micro-batch source"): the offset IS the
+  * reference's 8-hex checkpoint sequence, advancing in strides of 64
   * (python/main.py:205-228), so Spark's offset log replaces `lastfile`
   * natively and restarts resume exactly-once.
   *
-  * Each emitted row is one checkpoint triple: (seq, transactions bytes,
-  * ledger bytes, results bytes). Decode + extraction stay in the normal
-  * declarative plan downstream (foreachBatch → graft.pipeline.Extract),
-  * keeping the source a pure availability/offset concern.
+  * The source carries offsets only: each emitted row is the `seq` of
+  * one available checkpoint, and its reader opens no file. Consumers
+  * read the triple through [[Archive]]'s binaryFile readers, which
+  * gunzip and decode it on the executors under the session's Hadoop
+  * conf — the same read [[graft.streaming.ArchiveTail]] commits.
   *
   * Usage:
   * {{{
@@ -31,31 +30,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     .option("maxPerBatch", "128").load()
   * }}}
   */
-/** Java-serializable Hadoop Configuration carrier: the DSv2 reader
-  * factory ships the SESSION's Hadoop conf to executors, so
-  * `spark.hadoop.fs.s3a.*` credentials/endpoints set on the session
-  * reach the archive reads — a bare `new Configuration()` silently
-  * drops them, which is exactly the pitfall PartitionedFileSink's
-  * scaladoc documents for the sink side.
-  */
-private[sources] class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject(); value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
 object ArchiveStreamTable {
-  val Schema: StructType = StructType(Seq(
-    StructField("seq", LongType, nullable = false),
-    StructField("transactions", BinaryType, nullable = false),
-    StructField("ledger", BinaryType, nullable = false),
-    StructField("results", BinaryType, nullable = false)))
+  val Schema: StructType = StructType(Seq(StructField("seq", LongType, nullable = false)))
 }
 
 class ArchiveStreamProvider extends TableProvider {
@@ -69,53 +45,20 @@ class ArchiveStreamTable(props: util.Map[String, String]) extends Table with Sup
   override def name(): String = s"archive(${props.get("root")})"
   override def schema(): StructType = ArchiveStreamTable.Schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
+    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     () => new Scan {
-      // the SESSION's Hadoop conf (spark.hadoop.* settings included),
-      // captured at plan time on the driver and threaded to every
-      // FileSystem resolution — driver-side availability walks and
-      // executor-side partition reads alike
-      private val conf = new SerializableHadoopConf(
-        SparkSession.active.sessionState.newHadoopConf())
       override def readSchema(): StructType = ArchiveStreamTable.Schema
-      override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+      override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+        val root = options.get("root")
         new ArchiveMicroBatchStream(
-          options.get("root"),
+          Archive.fileSystem(SparkSession.active, root),
+          root,
           Option(options.get("firstSeq")).map(_.toLong).getOrElse(0x3fL),
-          Option(options.get("maxPerBatch")).map(_.toInt).getOrElse(64),
-          conf)
-      // batch path (`spark.read.format(...)`): one InputPartition per
-      // currently-available checkpoint, same executor-side reader as the
-      // stream — backfill parallelism = number of archive triples
-      override def toBatch: Batch = new ArchiveBatch(
-        options.get("root"),
-        Option(options.get("firstSeq")).map(_.toLong).getOrElse(0x3fL),
-        conf)
+          Option(options.get("maxPerBatch")).map(_.toInt).getOrElse(64))
+      }
     }
-}
-
-/** Batch scan of every checkpoint available at plan time (the DSv2 form
-  * of [[ArchiveTail.runOnce]]'s availability walk).
-  */
-class ArchiveBatch(root: String, firstSeq: Long,
-    conf: SerializableHadoopConf) extends Batch {
-  require(Archive.isCheckpoint(firstSeq), s"firstSeq $firstSeq must satisfy (seq+1)%64==0")
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val fs = new HPath(root).getFileSystem(conf.value)
-    def available(seq: Long): Boolean =
-      Seq("transactions", "ledger", "results")
-        .forall(c => fs.exists(new HPath(Archive.pathFor(root, c, seq))))
-    Iterator.iterate(firstSeq)(Archive.nextSeq)
-      .takeWhile(available)
-      .map(seq => ArchivePartition(root, seq): InputPartition)
-      .toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ArchiveReaderFactory(conf)
 }
 
 /** Offset = highest checkpoint sequence already committed (exclusive
@@ -125,16 +68,11 @@ case class SeqOffset(seq: Long) extends Offset {
   override def json(): String = seq.toString
 }
 
-class ArchiveMicroBatchStream(root: String, firstSeq: Long, maxPerBatch: Int,
-    conf: SerializableHadoopConf) extends MicroBatchStream with SupportsTriggerAvailableNow {
+class ArchiveMicroBatchStream(fs: FileSystem, root: String, firstSeq: Long, maxPerBatch: Int)
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
   require(Archive.isCheckpoint(firstSeq), s"firstSeq $firstSeq must satisfy (seq+1)%64==0")
 
-  @transient private lazy val fs: FileSystem =
-    new HPath(root).getFileSystem(conf.value)
-
-  private def available(seq: Long): Boolean =
-    Seq("transactions", "ledger", "results")
-      .forall(c => fs.exists(new HPath(Archive.pathFor(root, c, seq))))
+  private def available(seq: Long): Boolean = Archive.available(fs, root, seq)
 
   /** Before the first checkpoint: one stride below it (exclusive). */
   override def initialOffset(): Offset = SeqOffset(firstSeq - 64)
@@ -178,14 +116,10 @@ class ArchiveMicroBatchStream(root: String, firstSeq: Long, maxPerBatch: Int,
 
   override def reportLatestOffset(): Offset = SeqOffset(lastSeen)
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[SeqOffset].seq
-    val e = end.asInstanceOf[SeqOffset].seq
-    ((s + 64) to e by 64).map(seq => ArchivePartition(root, seq): InputPartition).toArray
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    Array(SeqRange(start.asInstanceOf[SeqOffset].seq, end.asInstanceOf[SeqOffset].seq))
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ArchiveReaderFactory(conf)
+  override def createReaderFactory(): PartitionReaderFactory = ArchiveReaderFactory
 
   override def deserializeOffset(json: String): Offset = {
     val o = SeqOffset(json.trim.toLong)
@@ -196,80 +130,42 @@ class ArchiveMicroBatchStream(root: String, firstSeq: Long, maxPerBatch: Int,
   override def stop(): Unit = ()
 }
 
-case class ArchivePartition(root: String, seq: Long) extends InputPartition
+/** One micro-batch's checkpoints: the sequences in `(after, upTo]`. */
+case class SeqRange(after: Long, upTo: Long) extends InputPartition
 
-class ArchiveReaderFactory(conf: SerializableHadoopConf)
-    extends PartitionReaderFactory {
+/** Emits the batch's sequences; it never opens an archive file. */
+object ArchiveReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ArchivePartition]
+    val r = partition.asInstanceOf[SeqRange]
     new PartitionReader[InternalRow] {
-      private var done = false
-      override def next(): Boolean = !done
-      override def get(): InternalRow = {
-        done = true
-        val fs = new HPath(p.root).getFileSystem(conf.value)
-        def read(cat: String): Array[Byte] = {
-          val in = fs.open(new HPath(Archive.pathFor(p.root, cat, p.seq)))
-          try {
-            val out = new java.io.ByteArrayOutputStream()
-            val buf = new Array[Byte](65536)
-            var n = in.read(buf)
-            while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-            out.toByteArray
-          } finally in.close()
-        }
-        new GenericInternalRow(Array[Any](
-          p.seq, read("transactions"), read("ledger"), read("results")))
-      }
+      private var seq = r.after
+      override def next(): Boolean = { seq = Archive.nextSeq(seq); seq <= r.upTo }
+      override def get(): InternalRow = InternalRow(seq)
       override def close(): Unit = ()
     }
   }
 }
 
-/** Driver for the custom source: per micro-batch, decodes the triple
-  * columns ON EXECUTORS (the archive bytes never transit the driver — the
-  * only thing collected is the batch's list of checkpoint sequences, a
-  * handful of longs), runs the extraction plan per checkpoint, and commits
-  * through a [[graft.sinks.CheckpointSink]] in strict sequence order
-  * (replays are idempotent per seq; Spark's offset log provides resume).
-  *
-  * The batch is persisted once so the per-seq filter jobs re-read cached
-  * partitions instead of re-fetching archive files; each per-seq plan is
-  * `filter(seq) → mapPartitions(decode)` — the same executor-side decode
-  * path as the batch [[Archive]] readers.
+/** Driver for the custom source: per micro-batch, only the batch's
+  * checkpoint sequences reach the driver (a handful of longs); each
+  * checkpoint is then read, decoded and extracted on the executors by
+  * `Engine.extract` — the same per-checkpoint read
+  * [[graft.streaming.ArchiveTail]] commits — and committed through a
+  * [[graft.sinks.CheckpointSink]] in strict sequence order (replays are
+  * idempotent per seq; Spark's offset log provides resume).
   */
 object ArchiveStreamRunner {
-  import org.apache.spark.sql.Encoders
   import org.apache.spark.sql.streaming.Trigger
-  import graft.pipeline.{Extract, ExtractConfig, LedgerEntry, TxHistoryEntry, TxResultEntry}
+  import graft.pipeline.ExtractConfig
   import graft.sinks.CheckpointSink
 
-  /** Decode + extract + commit one micro-batch (the shared foreachBatch
-    * body of both runners).
+  /** Extract + commit one micro-batch (the shared foreachBatch body of
+    * both runners).
     */
-  private def drainBatch(
-      batch: DataFrame, passphrase: String, cfg: ExtractConfig, sink: CheckpointSink): Unit = {
-    val cached = batch.persist()
-    try {
-      // seq longs only — content columns stay distributed.
-      val seqs = cached.select("seq")
-        .as[Long](Encoders.scalaLong).collect().sorted
-      seqs.foreach { seq =>
-        val one = cached.filter(org.apache.spark.sql.functions.col("seq") === seq)
-        def bytes(c: String) = one.select(c).as[Array[Byte]](Encoders.BINARY)
-        val txs = bytes("transactions").mapPartitions(
-          _.flatMap(b => graft.xdr.Stellar.decodeTxEntries(Archive.gunzip(b), passphrase)))(
-          Encoders.product[TxHistoryEntry])
-        val ledgers = bytes("ledger").mapPartitions(
-          _.flatMap(b => graft.xdr.Stellar.decodeLedgerEntries(Archive.gunzip(b))))(
-          Encoders.product[LedgerEntry])
-        val results = bytes("results").mapPartitions(
-          _.flatMap(b => graft.xdr.Stellar.decodeResultEntries(Archive.gunzip(b))))(
-          Encoders.product[TxResultEntry])
-        sink.save(Extract.operations(txs, ledgers, results, cfg), seq)
-      }
-    } finally { cached.unpersist(); () }
-  }
+  private def drainBatch(batch: DataFrame, root: String, passphrase: String,
+      cfg: ExtractConfig, sink: CheckpointSink): Unit =
+    batch.select("seq").as[Long](Encoders.scalaLong).collect().sorted.foreach(seq =>
+      sink.save(graft.Engine.extract(batch.sparkSession, root, seq, passphrase, cfg), seq))
 
   private def stream(spark: SparkSession, root: String, firstSeq: Long): DataFrame =
     spark.readStream
@@ -289,7 +185,7 @@ object ArchiveStreamRunner {
     val q = stream(spark, root, firstSeq).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch((batch: DataFrame, _: Long) => drainBatch(batch, passphrase, cfg, sink))
+      .foreachBatch((batch: DataFrame, _: Long) => drainBatch(batch, root, passphrase, cfg, sink))
       .start()
     q.awaitTermination()
   }
@@ -314,6 +210,6 @@ object ArchiveStreamRunner {
     stream(spark, root, firstSeq).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(intervalMs))
-      .foreachBatch((batch: DataFrame, _: Long) => drainBatch(batch, passphrase, cfg, sink))
+      .foreachBatch((batch: DataFrame, _: Long) => drainBatch(batch, root, passphrase, cfg, sink))
       .start()
 }

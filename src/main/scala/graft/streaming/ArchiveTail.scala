@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
-import graft.pipeline.{Extract, ExtractConfig}
+import graft.Engine
+import graft.pipeline.ExtractConfig
 import graft.sinks.CheckpointSink
 import graft.sources.Archive
 
@@ -15,11 +15,10 @@ import graft.sources.Archive
   * (poll + retry, :88-105); the sink's `save(df, seq)` is the atomic
   * commit (K2/K4).
   *
-  * Scale: each iteration's decode + extract runs distributed (the triple
-  * fans out over executors); for bulk BACKFILL call [[backfill]], which
-  * feeds ALL available checkpoints to one Spark job — decode parallelism
-  * = number of archive files — and only then starts tailing. The tail
-  * itself is inherently sequential because the reference's offset
+  * Scale: each iteration reads its triple through `Engine.extract`
+  * (binaryFile reads, gunzip and decode on the executors) — the same
+  * per-checkpoint read the Structured Streaming runners commit. The
+  * tail itself is inherently sequential because the reference's offset
   * contract (one `lastfile` pointer) is.
   */
 final class ArchiveTail(
@@ -40,8 +39,7 @@ final class ArchiveTail(
   // (python/adapters/s3_storage_adapter.py:169-192).
   sink.selfTest()
 
-  private val fs: FileSystem =
-    new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val fs = Archive.fileSystem(spark, root)
 
   /** Next sequence to process (offset recovery, S5). `lastfile ==
     * firstSeq` resumes AT firstSeq, not past it — the reference's
@@ -70,20 +68,10 @@ final class ArchiveTail(
   @volatile private var firstSeqSeeded: Boolean =
     sink.lastSequence.contains(firstSeq)
 
-  private def triple(seq: Long): Seq[String] =
-    Seq("transactions", "ledger", "results").map(Archive.pathFor(root, _, seq))
-
-  private def available(seq: Long): Boolean = triple(seq).forall(p => fs.exists(new HPath(p)))
-
   /** Process exactly one checkpoint if its triple is present. */
   def processOne(seq: Long): Boolean = {
-    if (!available(seq)) return false
-    val Seq(txP, ledP, resP) = triple(seq)
-    val ops = Extract.operations(
-      Archive.transactions(spark, Seq(txP), passphrase),
-      Archive.ledgers(spark, Seq(ledP)),
-      Archive.results(spark, Seq(resP)),
-      cfg)
+    if (!Archive.available(fs, root, seq)) return false
+    val ops = Engine.extract(spark, root, seq, passphrase, cfg)
     if (metrics ne IngestMetrics.Noop) {
       // per-commit counts (hc_storage_adapter.py:47-58 logging parity).
       // Persist so the counting agg reuses the partitions the save

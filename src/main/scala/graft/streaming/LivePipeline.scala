@@ -172,8 +172,8 @@ object LivePipeline {
     * the DSv2 archive stream (`ArchiveStreamProvider`, the S1/S2
     * surface) become documents and flow through the same curate→dedup→
     * pack step — the collector and the training-data engine joined end
-    * to end. Per micro-batch, the gzip'd checkpoint blobs decode
-    * executor-side (the ArchiveStreamRunner discipline); `doc_id =
+    * to end. Per micro-batch, the batch's `transactions` files are read
+    * and decoded executor-side by `Archive.transactions`; `doc_id =
     * (ledger_seq << 12) | tx_index` is monotone with arrival, so the
     * ordered-intake packing contract holds across batches. Memos are
     * 28-byte-class texts, far under x11's corpus-calibrated bar — set
@@ -194,21 +194,19 @@ object LivePipeline {
       .load()
     val fn: (DataFrame, Long) => Unit = { (batch, id) =>
       import spark.implicits._
-      val docs = batch.select("seq", "transactions").as[(Long, Array[Byte])]
-        .flatMap { case (_, gz) =>
-          graft.xdr.Stellar
-            .decodeTxEntries(graft.sources.Archive.gunzip(gz), passphrase)
-            .flatMap { e =>
-              // 12 bits of tx index: overflow would collide with the
-              // next ledger's doc_ids and break monotonicity — fail
-              // loudly, never silently shadow a document
-              require(e.txSet.txs.size <= (1 << 12),
-                s"ledger ${e.ledgerSeq}: tx-set of ${e.txSet.txs.size} exceeds the 12-bit doc_id index")
-              e.txSet.txs.zipWithIndex.collect {
-                case (tx, i) if tx.tx.memoText.exists(_.nonEmpty) =>
-                  ((e.ledgerSeq << 12) | i.toLong, "memo", tx.tx.memoText.get)
-              }
-            }
+      val txPaths = batch.select("seq").as[Long].collect().toSeq
+        .map(graft.sources.Archive.pathFor(archiveRoot, "transactions", _))
+      val docs = graft.sources.Archive.transactions(batch.sparkSession, txPaths, passphrase)
+        .flatMap { e =>
+          // 12 bits of tx index: overflow would collide with the next
+          // ledger's doc_ids and break monotonicity — fail loudly,
+          // never silently shadow a document
+          require(e.txSet.txs.size <= (1 << 12),
+            s"ledger ${e.ledgerSeq}: tx-set of ${e.txSet.txs.size} exceeds the 12-bit doc_id index")
+          e.txSet.txs.zipWithIndex.collect {
+            case (tx, i) if tx.tx.memoText.exists(_.nonEmpty) =>
+              ((e.ledgerSeq << 12) | i.toLong, "memo", tx.tx.memoText.get)
+          }
         }
         .toDF("doc_id", "lang", "text")
       index match {
@@ -291,25 +289,32 @@ object LivePipeline {
     if (committedParts(s, s"${cfg.root}/cursors").isEmpty) step(existing, -1L, cfg)
   }
 
-  /** One incremental step: curate → dedup (exact then LSH-novelty) →
-    * pack the arriving batch against state as of the previous commit.
-    */
   /** Run INDEPENDENT Spark actions concurrently on a bounded pool and
     * wait for all (guide §2.6: actions are only sequential because
     * driver code calls them sequentially; a few in flight back-fill
     * executors freed by the current job's straggler tail). Callers
-    * submit only writes/folds with no mutual ordering; any failure
-    * propagates (Await rethrows) and the pool never outlives the call.
+    * submit only writes/folds with no mutual ordering. Every thunk
+    * finishes before the first failure (in wave order) is rethrown, so
+    * no write is still in flight when an error reaches the caller, and
+    * the pool's threads never outlive the call.
     */
   private[streaming] def runWave(thunks: Seq[() => Unit]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    val pool = Executors.newFixedThreadPool(4)
     try {
-      val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      thunks.map(t => scala.concurrent.Future(t())(ec)).foreach(f =>
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-    } finally { pool.shutdown(); () }
+      // invokeAll returns once every task is done, failed ones included
+      pool.invokeAll(thunks.map(t => (() => t()): Callable[Unit]).asJava)
+        .asScala.foreach(f => try f.get() catch { case e: ExecutionException => throw e.getCause })
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS); ()
+    }
   }
 
+  /** One incremental step: curate → dedup (exact then LSH-novelty) →
+    * pack the arriving batch against state as of the previous commit.
+    */
   def step(batch: DataFrame, batchId: Long, cfg: Config): Unit = {
     val s = batch.sparkSession
     if (committed(s, cfg.root, batchId)) return // crash-replay of a done batch

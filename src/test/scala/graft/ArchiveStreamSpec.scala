@@ -61,6 +61,7 @@ class ArchiveStreamSpec extends AnyFunSuite {
     writeCheckpoint(archive, 0x3fL)
     writeCheckpoint(archive, 0x7fL)
     writeCheckpoint(archive, 0xbfL)
+    writeCheckpoint(archive, 0x13fL) // past a gap: 0xff is missing
 
     val sink = new PartitionedFileSink(out)
     // maxPerBatch=1 → the drain needs three micro-batches; the
@@ -86,31 +87,8 @@ class ArchiveStreamSpec extends AnyFunSuite {
       .start()
     q.awaitTermination()
     assert(batchSizes.toSeq === Seq(1L, 1L, 1L)) // paced: one checkpoint per batch
+    // a gap stops the drain: only contiguous checkpoints are offered
     assert(sink.completed === Seq("0000003f", "0000007f", "000000bf"))
-  }
-
-  test("batch read path plans one partition per available checkpoint") {
-    val archive = Files.createTempDirectory("graft-batch-read").toString
-    writeCheckpoint(archive, 0x3fL)
-    writeCheckpoint(archive, 0x7fL)
-    writeCheckpoint(archive, 0xbfL)
-    val df = spark.read
-      .format("graft.sources.ArchiveStreamProvider")
-      .option("root", archive)
-      .option("firstSeq", 0x3fL.toString)
-      .load()
-    assert(df.rdd.getNumPartitions === 3) // backfill parallelism = #triples
-    val rows = df.collect().sortBy(_.getLong(0))
-    assert(rows.map(_.getLong(0)).toSeq === Seq(0x3fL, 0x7fL, 0xbfL))
-    // content decodes through the same path the stream uses
-    val decoded = Stellar.decodeTxEntries(
-      Archive.gunzip(rows.head.getAs[Array[Byte]]("transactions")), Passphrase)
-    assert(decoded.head.ledgerSeq === 0x3fL)
-    // a gap stops the walk: only contiguous checkpoints are planned
-    writeCheckpoint(archive, 0x13fL) // skips 0xff
-    assert(spark.read.format("graft.sources.ArchiveStreamProvider")
-      .option("root", archive).option("firstSeq", 0x3fL.toString)
-      .load().count() === 3)
   }
 
   test("ProcessingTime tail picks up a checkpoint appended mid-stream") {
@@ -162,6 +140,29 @@ class ArchiveStreamSpec extends AnyFunSuite {
     assert(sink.lastSequence === Some(0xbfL))
     assert(sink.completed === Seq("0000003f", "0000007f", "000000bf"))
     assert(spark.read.option("header", "false").csv(s"$out/ledgers").count() === 3)
+  }
+
+  test("the streaming runner and the collector commit identical output") {
+    val archive = Files.createTempDirectory("graft-stream-parity").toString
+    writeCheckpoint(archive, 0x3fL, memo = Some("first"))
+    writeCheckpoint(archive, 0x7fL)
+    writeCheckpoint(archive, 0xbfL, memo = Some("third"))
+    val streamed = Files.createTempDirectory("graft-parity-stream").toString
+    val collected = Files.createTempDirectory("graft-parity-collect").toString
+    val streamSink = new PartitionedFileSink(streamed)
+    val collectSink = new PartitionedFileSink(collected)
+    ArchiveStreamRunner.runAvailableNow(spark, archive, Passphrase, cfg, streamSink,
+      Files.createTempDirectory("graft-parity-ckpt").toString)
+    assert(Engine.collect(spark, archive, Passphrase, cfg, collectSink) === 3)
+    def rows(out: String) = spark.read.option("header", "false").csv(s"$out/ledgers")
+      .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(rows(streamed).length === 3)
+    assert(rows(streamed) === rows(collected))
+    assert(streamSink.completed === Seq("0000003f", "0000007f", "000000bf"))
+    assert(streamSink.completed === collectSink.completed)
+    def lastFile(out: String) = new String(Files.readAllBytes(Paths.get(out, "last_file")), "UTF-8")
+    assert(lastFile(streamed) === "000000bf")
+    assert(lastFile(streamed) === lastFile(collected))
   }
 
   test("archive memos flow through the live curate-dedup-pack intake end to end") {

@@ -48,6 +48,18 @@ class FunctionsSpec extends AnyFunSuite {
     })
   }
 
+  test("register is idempotent: functions already in the registry stay as they are") {
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    def infos = GraftFunctions.all.map { case (name, _) =>
+      registry.lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name)).get
+    }
+    GraftFunctions.register(s)
+    val first = infos
+    GraftFunctions.register(s) // a second call must not replace anything
+    assert(infos.zip(first).forall { case (a, b) => a eq b })
+  }
+
   test("TopKDoubles keeps a bounded buffer and returns sorted top-k") {
     import spark.implicits._
     val topk = udaf(new TopKDoubles(3))

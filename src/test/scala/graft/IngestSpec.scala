@@ -175,6 +175,14 @@ class IngestSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(out, "etl", "ledgers", "ledger=0000007f")))
     assert(Files.exists(Paths.get(out, "etl", "completed_ledgers")))
     assert(Files.exists(Paths.get(out, "etl", "last_file")))
+    // the streaming runner over the same s3a:// root: its availability
+    // probes and binaryFile reads both take the session's Hadoop conf
+    val streamed = Files.createTempDirectory("graft-s3a-stream").toString
+    val streamSink = new PartitionedFileSink(streamed)
+    graft.sources.ArchiveStreamRunner.runAvailableNow(spark, Deploy.archiveRoot(env),
+      Passphrase, cfg, streamSink, Files.createTempDirectory("graft-s3a-ckpt").toString)
+    assert(streamSink.completed === Seq("0000003f", "0000007f"))
+    assert(spark.read.option("header", "false").csv(s"$streamed/ledgers").count() === 3)
     } finally {
       prevImpl.fold(hconf.unset("fs.s3a.impl"))(hconf.set("fs.s3a.impl", _))
       prevCommitter.fold(hconf.unset("mapreduce.outputcommitter.factory.scheme.s3a"))(

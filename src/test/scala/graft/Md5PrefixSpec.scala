@@ -106,4 +106,27 @@ class Md5PrefixSpec extends AnyFunSuite {
       assert(!miss2.queryExecution.optimizedPlan.toString.contains("md5_prefix_long"))
     }
   }
+
+  test("the rewritten idiom compiles: CODEGEN_ONLY evaluates it without fallback") {
+    // CODEGEN_ONLY turns a generated-code compile failure into a job
+    // failure instead of a silent drop to the interpreted path, and
+    // codegen.fallback=false does the same for whole-stage codegen
+    // a fresh frame per use: a Dataset caches its optimized plan
+    def q = fuzz.select(
+      (conv(substring(md5(col("s")), 1, 8), 16, 10).cast("long") % 97).as("b"))
+    val expected = q.collect()
+    val got = withRule {
+      spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      try {
+        val rewritten = q
+        assert(rewritten.queryExecution.optimizedPlan.toString.contains("md5_prefix_long"))
+        rewritten.collect()
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.fallback")
+      }
+    }
+    assert(got.toSeq === expected.toSeq)
+  }
 }
