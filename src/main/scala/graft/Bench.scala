@@ -498,6 +498,38 @@ object Bench {
       ).view.mapValues((_, 0.076)).toMap
   }
 
+  /** Local cores of the harness mains' session (Bench, Verify, Profile). */
+  val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The harness mains' session: [[Engine.session]] on [[cpus]] local
+    * cores, one shuffle partition per core.
+    */
+  def session(): SparkSession = {
+    val spark = Engine.session(s"local[$cpus]", cpus)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Warm-up pass: JVM/JIT, codegen compiler, parquet footers, plus the
+    * one-time materializations (ingest-time work at the design point) —
+    * outside the timed region, so timed runs measure steady-state
+    * serving and the first real query isn't charged for them.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+    Tables.events(spark, sfDir).count()
+    graft.operators.Dedup.ensureStores(spark, sfDir)
+    graft.operators.Similarity.ensureStores(spark, sfDir)
+    graft.operators.Ivf.ensureStores(spark, sfDir)
+    graft.operators.Pq.ensureStores(spark, sfDir)
+    // NOTE: with training warmed here, the timed x20_bpe_train entry
+    // measures only a driver-local toDF over the memoized merge rules —
+    // by design (training is ingest-time work; x21 still measures the
+    // serving-path encode join). Read its median as memo overhead, not
+    // training cost.
+    graft.operators.Bpe.ensureTrained(spark, sfDir)
+  }
+
   def main(args: Array[String]): Unit = {
     // Baseline coverage must track the inventory exactly: a query missing
     // here is silently exempt from the regression gate (the round-4..7
@@ -533,44 +565,8 @@ object Bench {
     val tStart = System.nanoTime()
     def phase(tag: String): Unit =
       System.err.println(f"[bench] $tag at ${(System.nanoTime() - tStart) / 1e9}%.0f s")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the library's own optimizer rules (value-identical native
-      // kernels) — the session Engine.session documents and Verify
-      // gates; see OPTIMIZATION_r19.md §dsum
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // 64-bucket folds stay under driver-side listing (Engine.session
-      // carries the rationale)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      // keep small batches' pushed In(key) filters as real or-chains at
-      // parquet (beyond the threshold Spark collapses In to a min/max
-      // range — useless against uniform hash keys); the probes cap
-      // their key pushdown at this value, so the two stay in step
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm-up pass: JVM/JIT, codegen compiler, parquet footers — outside
-    // the timed region so the first real query isn't charged for them.
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    Tables.events(spark, sfDir).count()
-    // One-time materializations (ingest-time work at the design point) —
-    // built here so timed runs measure steady-state serving.
-    graft.operators.Dedup.ensureStores(spark, sfDir)
-    graft.operators.Similarity.ensureStores(spark, sfDir)
-    graft.operators.Ivf.ensureStores(spark, sfDir)
-    graft.operators.Pq.ensureStores(spark, sfDir)
-    // NOTE: with training warmed here, the timed x20_bpe_train entry
-    // measures only a driver-local toDF over the memoized merge rules —
-    // by design (training is ingest-time work; x21 still measures the
-    // serving-path encode join). Read its median as memo overhead, not
-    // training cost.
-    graft.operators.Bpe.ensureTrained(spark, sfDir)
+    val spark = session()
+    warmUp(spark, sfDir)
     phase("warmup done")
     // Streaming-path throughput artifact (the batch medians above never
     // time the continuous intake): drain the documents slice through the

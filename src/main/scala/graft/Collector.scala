@@ -19,10 +19,10 @@ import graft.sinks.JdbcTxnSink
   *    offset, then follows the archive at the reference's cadence.
   *
   * Cluster config (master, executors, s3a credentials) arrives via
-  * spark-submit; the collector itself only pins the UTC session
-  * timezone the pipeline's timestamp semantics assume. `POLL_ROUNDS`
-  * bounds the loop for smoke tests; unset means run until the retry
-  * budget exhausts, like the reference's infinite poll loop.
+  * spark-submit and wins over [[Engine.session]]'s defaults, so the
+  * deployed collector runs the session every gate and benchmark runs.
+  * `POLL_ROUNDS` bounds the loop for smoke tests; unset means run until
+  * the retry budget exhausts, like the reference's infinite poll loop.
   */
 object Collector {
 
@@ -48,10 +48,7 @@ object Collector {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-collector")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, sys.env) finally spark.stop()
   }

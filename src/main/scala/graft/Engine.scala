@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.pipeline.{Extract, ExtractConfig, Serve}
 import graft.sinks.CheckpointSink
@@ -20,30 +21,38 @@ import graft.streaming.ArchiveTail
   */
 object Engine {
 
-  /** Session with this engine's functions, optimizer rule, and the
-    * settings the correctness/bench harnesses use.
+  /** The one session builder: this engine's functions and optimizer
+    * rules plus the settings every main, gate and spec runs under.
+    *
+    * Each setting, `master` and `shufflePartitions` included, is a
+    * default: a key the JVM's SparkConf already carries (spark-submit's
+    * `--master`/`--conf`, a `-Dspark.*` property) keeps its preset value.
+    * A rule is switched off per session with Spark's own
+    * `spark.sql.optimizer.excludedRules=<rule class>`.
     */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
-    val s = SparkSession.builder()
-      .master(master)
-      .appName("historycollectorspark")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    val conf = new SparkConf()
+    Seq(
+      "spark.master" -> master,
+      "spark.app.name" -> "historycollectorspark",
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.extensions" -> "graft.functions.GraftExtensions",
       // the streaming stores fold into 64 `bucket=` dirs, which is past
       // the default 32-path cutover to DISTRIBUTED file listing — a
       // whole Spark job (~0.25 s locally) just to list 64 directories,
       // paid per store read per probe. Keep fold-sized listings
       // driver-side; on a high-latency object store with much wider
       // layouts, lower this back (MIGRATION.md).
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+      "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "1024",
       // keep small batches' pushed In(key) filters as real or-chains at
       // parquet (beyond the threshold Spark collapses In to a min/max
       // range — useless against uniform hash keys); the probes cap
       // their key pushdown at this value, so the two stay in step
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .getOrCreate()
+      "spark.sql.parquet.pushdown.inFilterThreshold" -> "1024"
+    ).foreach { case (k, v) => conf.setIfMissing(k, v) }
+    val s = SparkSession.builder().config(conf).getOrCreate()
     graft.functions.GraftFunctions.register(s) // same-JVM reuse safety
     s
   }

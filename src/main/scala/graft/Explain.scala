@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints `explain("formatted")` for the named queries
   * (or a default set of scale-critical ones). Used to keep pushdown /
   * broadcast / codegen properties honest; findings recorded in PLANS.md.
@@ -20,14 +18,7 @@ object Explain {
         "d16_dedup_recall", "x28_nfc_normalize", "q6_recursive_cte",
         "q7_pipe_syntax", "x30_intake_audit", "x31_intake_contract",
         "x32_token_budget", "x33_leakage_split", "o6_global_rank")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n########## $n ##########")

@@ -17,28 +17,8 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionStart => SqlS
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .config("spark.sql.limit.initialNumPartitions",
-        sys.env.getOrElse("SPARK_GRAFT_LIMIT_PARTS", "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    Tables.events(spark, sfDir).count()
-    graft.operators.Dedup.ensureStores(spark, sfDir)
-    graft.operators.Similarity.ensureStores(spark, sfDir)
-    graft.operators.Ivf.ensureStores(spark, sfDir)
-    graft.operators.Pq.ensureStores(spark, sfDir)
-    graft.operators.Bpe.ensureTrained(spark, sfDir)
+    val spark = Bench.session()
+    Bench.warmUp(spark, sfDir)
 
     // executionId → (description, first job start ms, last job end ms, jobs)
     final class ExecRec(val desc: String) {

@@ -1,33 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the library's own optimizer rules (the value-identical native
-      // kernels: NativeDotRule, NativeSumRule) — Engine.session has
-      // always carried them; the harness mains must run the session the
-      // library documents, or the gates measure a config no deployment
-      // uses
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // 64-bucket folds stay under driver-side listing (Engine.session
-      // carries the rationale)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      // keep small batches' pushed In(key) filters as real or-chains at
-      // parquet (beyond the threshold Spark collapses In to a min/max
-      // range — useless against uniform hash keys); the probes cap
-      // their key pushdown at this value, so the two stay in step
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (comma-separated name list); the driver
     // never sets it, so the gate always runs the full inventory.

@@ -39,8 +39,9 @@ import org.apache.spark.sql.types._
   * exactly where the ANSI decimal spelling overflows. NULL semantics
   * match SQL SUM: nulls are skipped, empty/all-null groups yield NULL.
   *
-  * Injected by [[NativeSumRule]]; `spark.graft.nativeSum=false` turns
-  * the rewrite off per-session.
+  * Injected by [[NativeSumRule]];
+  * `spark.sql.optimizer.excludedRules=graft.functions.NativeSumRule`
+  * turns the rewrite off per session.
   */
 case class DecimalSum128(child: Expression)
     extends DeclarativeAggregate with UnaryLike[Expression] {
@@ -192,7 +193,8 @@ object DecimalSum128 {
     catch {
       case _: ArithmeticException => throw new ArithmeticException(
         s"graft_decimal_sum: |$x| exceeds the exact unscaled-long window (~9.2e12); " +
-          "set spark.graft.nativeSum=false to use the portable DECIMAL(28,6) spelling")
+          "set spark.sql.optimizer.excludedRules=graft.functions.NativeSumRule to use " +
+          "the portable DECIMAL(28,6) spelling")
     }
   }
 

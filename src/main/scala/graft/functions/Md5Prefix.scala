@@ -72,11 +72,13 @@ object Md5PrefixLong {
   * [[Md5PrefixLong]] — the [[NativeSumRule]] discipline: users keep the
   * declarative cross-engine spelling, the optimizer swaps the
   * implementation, and the DuckDB oracle re-validates every query with
-  * the rule active (Verify and Bench both run under GraftExtensions).
+  * the rule active (Verify and Bench both run [[graft.Engine.session]]).
   *
   * Guards: the exact Substring(·, 1, n)/Conv(·, 16, 10) literal shape
-  * only, n bounded so the value is exactly representable in the target
-  * type, and `spark.graft.nativeMd5=false` as the escape hatch.
+  * only, and n bounded so the value is exactly representable in the
+  * target type;
+  * `spark.sql.optimizer.excludedRules=graft.functions.NativeMd5Rule`
+  * turns the rewrite off per session.
   */
 object NativeMd5Rule extends Rule[LogicalPlan] {
   private object Pattern {
@@ -89,12 +91,10 @@ object NativeMd5Rule extends Rule[LogicalPlan] {
     }
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString("spark.graft.nativeMd5", "true") == "false") plan
-    else plan.transformAllExpressions {
-      case Cast(Pattern(c, len), LongType, _, _) =>
-        Md5PrefixLong(c, len)
-      case cast @ Cast(Pattern(c, len), DoubleType, _, _) if len <= 13 =>
-        cast.copy(child = Md5PrefixLong(c, len))
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
+    case Cast(Pattern(c, len), LongType, _, _) =>
+      Md5PrefixLong(c, len)
+    case cast @ Cast(Pattern(c, len), DoubleType, _, _) if len <= 13 =>
+      cast.copy(child = Md5PrefixLong(c, len))
+  }
 }

@@ -19,7 +19,9 @@ import org.apache.spark.sql.types._
   * `spark.sql.extensions=graft.functions.GraftExtensions`.
   *
   * Guards: only float-array inputs (DecimalDot reads packed floats) and
-  * only the exact DECIMAL(28,12) accumulator shape.
+  * only the exact DECIMAL(28,12) accumulator shape;
+  * `spark.sql.optimizer.excludedRules=graft.functions.NativeDotRule`
+  * turns the rewrite off per session.
   */
 /** Optimizer rule: rewrite the portable exact-sum spelling
   *
@@ -32,24 +34,23 @@ import org.apache.spark.sql.types._
   * same final decimal→double conversion; see the kernel scaladoc).
   *
   * Guards: only a DOUBLE child (the cast-from-int spellings keep the
-  * decimal path), only non-DISTINCT aggregates, and only when
-  * `spark.graft.nativeSum` is not set to false. The FILTER clause and
-  * the aggregate's resultId are preserved — only the function inside
-  * the AggregateExpression changes, so the surrounding plan (including
+  * decimal path) and only non-DISTINCT aggregates;
+  * `spark.sql.optimizer.excludedRules=graft.functions.NativeSumRule`
+  * turns the rewrite off per session. The FILTER clause and the
+  * aggregate's resultId are preserved — only the function inside the
+  * AggregateExpression changes, so the surrounding plan (including
   * partial/final splitting) is untouched.
   */
 object NativeSumRule extends Rule[LogicalPlan] {
   private val Dec = DecimalType(28, 6)
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString("spark.graft.nativeSum", "true") == "false") plan
-    else plan.transformAllExpressions {
-      case Cast(ae @ aggregate.AggregateExpression(
-            aggregate.Sum(Cast(d, dt: DecimalType, _, _), _), _, false, _, _),
-          DoubleType, _, _)
-          if dt == Dec && d.dataType == DoubleType =>
-        ae.copy(aggregateFunction = DecimalSum128(d))
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
+    case Cast(ae @ aggregate.AggregateExpression(
+          aggregate.Sum(Cast(d, dt: DecimalType, _, _), _), _, false, _, _),
+        DoubleType, _, _)
+        if dt == Dec && d.dataType == DoubleType =>
+      ae.copy(aggregateFunction = DecimalSum128(d))
+  }
 }
 
 object NativeDotRule extends Rule[LogicalPlan] {

@@ -16,51 +16,23 @@ class DecimalSumSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def withRule[A](f: => A): A = {
-    spark.experimental.extraOptimizations =
-      (spark.experimental.extraOptimizations :+ NativeSumRule).distinct
-    try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == NativeSumRule)
-  }
-
-  /** Bit-compare the native result against the portable spelling (rule
-    * disabled via the session flag) on identical input.
-    */
-  private def assertIdentical(df: => DataFrame): Unit = withRule {
-    val fast = df.collect()
-    spark.conf.set("spark.graft.nativeSum", "false")
-    val slow = try df.collect() finally spark.conf.unset("spark.graft.nativeSum")
-    assert(fast.length === slow.length)
-    fast.zip(slow).foreach { case (f, s) =>
-      (0 until f.length).foreach { i =>
-        if (f.isNullAt(i) || s.isNullAt(i)) assert(f.isNullAt(i) === s.isNullAt(i))
-        else (f.get(i), s.get(i)) match {
-          case (a: Double, b: Double) =>
-            assert(java.lang.Double.doubleToLongBits(a) ===
-              java.lang.Double.doubleToLongBits(b), s"col $i: $a vs $b")
-          case (a, b) => assert(a === b)
-        }
-      }
-    }
-  }
+  private def assertIdentical(df: => DataFrame): Unit =
+    TestSpark.assertBitIdentical(NativeSumRule)(df)
 
   test("NativeSumRule rewrites the dsum spelling and leaves DISTINCT/int alone") {
-    withRule {
-      val df = Seq(1.5, 2.25).toDF("v").agg(Cols.dsum($"v").as("s"))
-      assert(df.queryExecution.optimizedPlan.toString.contains("graft_decimal_sum"),
-        df.queryExecution.optimizedPlan.toString)
-      // DISTINCT keeps the decimal path (the planner's distinct rewrite
-      // is entitled to the original function)
-      val dist = Seq(1.0, 1.0, 2.0).toDF("v")
-        .agg(sum_distinct($"v".cast(Cols.Dec)).cast("double").as("s"))
-      assert(!dist.queryExecution.optimizedPlan.toString.contains("graft_decimal_sum"))
-      assert(dist.head.getDouble(0) === 3.0)
-      // int child keeps the decimal path (only double inputs are proven)
-      val ints = Seq(1, 2).toDF("v").agg(sum($"v".cast(Cols.Dec)).cast("double").as("s"))
-      assert(!ints.queryExecution.optimizedPlan.toString.contains("graft_decimal_sum"))
-      assert(ints.head.getDouble(0) === 3.0)
-    }
+    val df = Seq(1.5, 2.25).toDF("v").agg(Cols.dsum($"v").as("s"))
+    assert(df.queryExecution.optimizedPlan.toString.contains("graft_decimal_sum"),
+      df.queryExecution.optimizedPlan.toString)
+    // DISTINCT keeps the decimal path (the planner's distinct rewrite
+    // is entitled to the original function)
+    val dist = Seq(1.0, 1.0, 2.0).toDF("v")
+      .agg(sum_distinct($"v".cast(Cols.Dec)).cast("double").as("s"))
+    assert(!dist.queryExecution.optimizedPlan.toString.contains("graft_decimal_sum"))
+    assert(dist.head.getDouble(0) === 3.0)
+    // int child keeps the decimal path (only double inputs are proven)
+    val ints = Seq(1, 2).toDF("v").agg(sum($"v".cast(Cols.Dec)).cast("double").as("s"))
+    assert(!ints.queryExecution.optimizedPlan.toString.contains("graft_decimal_sum"))
+    assert(ints.head.getDouble(0) === 3.0)
   }
 
   test("bit-identical with the portable spelling across value classes") {
@@ -106,14 +78,12 @@ class DecimalSumSpec extends AnyFunSuite {
   }
 
   test("inputs beyond the exact unscaled-long window fail loudly") {
-    withRule {
-      val e = intercept[Exception] {
-        Seq(1.0e13).toDF("v").agg(Cols.dsum($"v").as("s")).collect()
-      }
-      def msgs(t: Throwable): Seq[String] =
-        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-      assert(msgs(e).exists(_.contains("unscaled-long window")), e.toString)
+    val e = intercept[Exception] {
+      Seq(1.0e13).toDF("v").agg(Cols.dsum($"v").as("s")).collect()
     }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(e).exists(_.contains("unscaled-long window")), e.toString)
   }
 
   test("u6 fast path agrees with the BigDecimal reference across magnitudes") {

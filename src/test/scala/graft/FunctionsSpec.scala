@@ -1,17 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{GraftFunctions, RollingHash, TopKDoubles}
+import graft.functions.{GraftFunctions, NativeDotRule, NativeMd5Rule, NativeSumRule, RollingHash, TopKDoubles}
 import org.apache.spark.unsafe.types.UTF8String
 
 class FunctionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  private val sf = "/root/testdata/sf0.001"
 
   test("rolling_hash matches the reference recurrence and handles nulls") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     def expected(s: String): Long = {
       var h = 7L
       s.foreach(c => h = (h * 31 + c) % 1000000007L)
@@ -30,18 +31,20 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions wires functions and the optimizer rule") {
-    // A same-JVM getOrCreate reuses the shared session and silently skips
-    // spark.sql.extensions, so validate the injector directly: it applies
-    // cleanly and its builders produce the right expression nodes.
-    new graft.functions.GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
-    val builders = GraftFunctions.all.toMap
-    val L = org.apache.spark.sql.catalyst.expressions.Literal
-    val rh = builders("rolling_hash")(Seq(L("abc")))
-    assert(rh.isInstanceOf[RollingHash])
-    val dd = builders("decimal_dot")(Seq(L(Array(1f)), L(Array(1f))))
-    assert(dd.isInstanceOf[graft.functions.DecimalDot])
-    // SQL path through the per-session registration
-    GraftFunctions.register(spark)
+    // the shared test session is Engine.session: every rewrite rule runs,
+    // and naming a rule in excludedRules keeps its kernel out of the plan
+    val e = Tables.embeddings(spark, sf)
+    val cases = Seq[(Rule[_], String, () => DataFrame)](
+      (NativeMd5Rule, "md5_prefix_long", () => e.select(
+        conv(substring(md5(col("vec_id").cast("string")), 1, 8), 16, 10).cast("long"))),
+      (NativeSumRule, "graft_decimal_sum", () => e.agg(Cols.dsum(col("vec_id").cast("double")))),
+      (NativeDotRule, "decimal_dot", () => e.select(Cols.dotDec(col("embedding"), col("embedding")))))
+    cases.foreach { case (rule, kernel, df) =>
+      def plan = df().queryExecution.optimizedPlan.toString
+      assert(plan.contains(kernel), plan)
+      val excluded = TestSpark.excluding(rule)(plan)
+      assert(!excluded.contains(kernel), excluded)
+    }
     val out = spark.sql("SELECT rolling_hash('abc') AS h").collect()
     assert(out(0).getLong(0) === {
       var h = 7L; "abc".foreach(c => h = (h * 31 + c) % 1000000007L); h
@@ -74,39 +77,28 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("NativeDotRule rewrites the lambda spelling into DecimalDot") {
-    // experimental.extraOptimizations is the runtime hook for an existing
-    // session; GraftExtensions wires the same rule for cluster deploys.
-    spark.experimental.extraOptimizations =
-      (spark.experimental.extraOptimizations :+ graft.functions.NativeDotRule).distinct
-    try {
-      val df = Tables.embeddings(spark, "/root/testdata/sf0.001")
-        .select(Cols.dotDec(col("embedding"), col("embedding")).as("dot"))
-      assert(df.queryExecution.optimizedPlan.toString.contains("decimal_dot"),
-        df.queryExecution.optimizedPlan.toString)
-      // and the rewritten plan computes the same values as the raw kernel
-      GraftFunctions.register(spark)
-      val direct = Tables.embeddings(spark, "/root/testdata/sf0.001")
-        .select(call_function("decimal_dot", col("embedding"), col("embedding")).as("dot"))
-      assert(df.collect().map(_.getDouble(0)).toSeq === direct.collect().map(_.getDouble(0)).toSeq)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.functions.NativeDotRule)
-    }
+    val df = Tables.embeddings(spark, sf)
+      .select(Cols.dotDec(col("embedding"), col("embedding")).as("dot"))
+    assert(df.queryExecution.optimizedPlan.toString.contains("decimal_dot"),
+      df.queryExecution.optimizedPlan.toString)
+    // and the rewritten plan computes the same values as the raw kernel
+    val direct = Tables.embeddings(spark, sf)
+      .select(call_function("decimal_dot", col("embedding"), col("embedding")).as("dot"))
+    assert(df.collect().map(_.getDouble(0)).toSeq === direct.collect().map(_.getDouble(0)).toSeq)
   }
 
   test("DecimalDot is bit-identical with the Catalyst lambda spelling") {
-    GraftFunctions.register(spark)
-    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val cmp = e.crossJoin(
-        e.filter(col("vec_id") === 0).select(col("embedding").as("qv")))
-      .select(
-        Cols.dotDec(col("embedding"), col("qv")).as("slow"),
-        Cols.fastDot(col("embedding"), col("qv")).as("fast"))
-      .collect()
-    assert(cmp.nonEmpty)
-    cmp.foreach(r => assert(
-      java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
-        java.lang.Double.doubleToLongBits(r.getDouble(1))))
+    val e = Tables.embeddings(spark, sf)
+    val pairs = e.crossJoin(
+      e.filter(col("vec_id") === 0).select(col("embedding").as("qv")))
+    def dots(dot: (Column, Column) => Column) =
+      pairs.select(col("vec_id"), dot(col("embedding"), col("qv"))).collect()
+        .map(r => r.get(0) -> java.lang.Double.doubleToLongBits(r.getDouble(1))).toMap
+    // the lambda leg runs with NativeDotRule excluded, or it would be
+    // rewritten into the kernel it is checked against
+    val slow = TestSpark.excluding(NativeDotRule)(dots(Cols.dotDec))
+    assert(slow.nonEmpty)
+    assert(dots(Cols.fastDot) === slow)
   }
 
   test("WordShingles edge cases match the declarative spelling") {

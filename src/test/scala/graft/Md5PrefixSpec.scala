@@ -16,31 +16,8 @@ class Md5PrefixSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def withRule[A](f: => A): A = {
-    spark.experimental.extraOptimizations =
-      (spark.experimental.extraOptimizations :+ NativeMd5Rule).distinct
-    try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == NativeMd5Rule)
-  }
-
-  private def assertIdentical(df: => DataFrame): Unit = withRule {
-    val fast = df.collect()
-    spark.conf.set("spark.graft.nativeMd5", "false")
-    val slow = try df.collect() finally spark.conf.unset("spark.graft.nativeMd5")
-    assert(fast.length === slow.length)
-    fast.zip(slow).foreach { case (f, s) =>
-      (0 until f.length).foreach { i =>
-        if (f.isNullAt(i) || s.isNullAt(i)) assert(f.isNullAt(i) === s.isNullAt(i))
-        else (f.get(i), s.get(i)) match {
-          case (a: Double, b: Double) =>
-            assert(java.lang.Double.doubleToLongBits(a) ===
-              java.lang.Double.doubleToLongBits(b), s"col $i: $a vs $b")
-          case (a, b) => assert(a === b, s"col $i")
-        }
-      }
-    }
-  }
+  private def assertIdentical(df: => DataFrame): Unit =
+    TestSpark.assertBitIdentical(NativeMd5Rule)(df)
 
   // parquet-backed, NOT a LocalRelation: ConvertToLocalRelation folds
   // projections over local data during the main optimizer batch, before
@@ -91,20 +68,18 @@ class Md5PrefixSpec extends AnyFunSuite {
   }
 
   test("the rule fires on the long-cast spelling and skips n=16") {
-    withRule {
-      val hit = fuzz.select(
-        conv(substring(md5(col("s")), 1, 4), 16, 10).cast("long"))
-      assert(hit.queryExecution.optimizedPlan.toString.contains("md5_prefix_long"),
-        hit.queryExecution.optimizedPlan.toString)
-      // n = 16 can exceed a signed long — must stay on the portable path
-      val miss = fuzz.select(
-        conv(substring(md5(col("s")), 1, 16), 16, 10).cast("long"))
-      assert(!miss.queryExecution.optimizedPlan.toString.contains("md5_prefix_long"))
-      // substring not at position 1 — untouched
-      val miss2 = fuzz.select(
-        conv(substring(md5(col("s")), 2, 4), 16, 10).cast("long"))
-      assert(!miss2.queryExecution.optimizedPlan.toString.contains("md5_prefix_long"))
-    }
+    val hit = fuzz.select(
+      conv(substring(md5(col("s")), 1, 4), 16, 10).cast("long"))
+    assert(hit.queryExecution.optimizedPlan.toString.contains("md5_prefix_long"),
+      hit.queryExecution.optimizedPlan.toString)
+    // n = 16 can exceed a signed long — must stay on the portable path
+    val miss = fuzz.select(
+      conv(substring(md5(col("s")), 1, 16), 16, 10).cast("long"))
+    assert(!miss.queryExecution.optimizedPlan.toString.contains("md5_prefix_long"))
+    // substring not at position 1 — untouched
+    val miss2 = fuzz.select(
+      conv(substring(md5(col("s")), 2, 4), 16, 10).cast("long"))
+    assert(!miss2.queryExecution.optimizedPlan.toString.contains("md5_prefix_long"))
   }
 
   test("the rewritten idiom compiles: CODEGEN_ONLY evaluates it without fallback") {
@@ -114,18 +89,16 @@ class Md5PrefixSpec extends AnyFunSuite {
     // a fresh frame per use: a Dataset caches its optimized plan
     def q = fuzz.select(
       (conv(substring(md5(col("s")), 1, 8), 16, 10).cast("long") % 97).as("b"))
-    val expected = q.collect()
-    val got = withRule {
-      spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      spark.conf.set("spark.sql.codegen.fallback", "false")
-      try {
-        val rewritten = q
-        assert(rewritten.queryExecution.optimizedPlan.toString.contains("md5_prefix_long"))
-        rewritten.collect()
-      } finally {
-        spark.conf.unset("spark.sql.codegen.factoryMode")
-        spark.conf.unset("spark.sql.codegen.fallback")
-      }
+    val expected = TestSpark.excluding(NativeMd5Rule)(q.collect())
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    val got = try {
+      val rewritten = q
+      assert(rewritten.queryExecution.optimizedPlan.toString.contains("md5_prefix_long"))
+      rewritten.collect()
+    } finally {
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+      spark.conf.unset("spark.sql.codegen.fallback")
     }
     assert(got.toSeq === expected.toSeq)
   }
