@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionStart => SqlStart}
 
 /** Optimization-round measurement tool (guide §1): runs the named
@@ -49,77 +48,8 @@ object Profile {
         Option(jobExec.get(e.jobId)).foreach(r => r.t1 = math.max(r.t1, e.time))
     }
 
-    // ad-hoc experiment frames ("exp:<tag>"): cost-attribution probes
-    // for spelling alternatives, never part of the inventory
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.DecimalType
-    def experiment(tag: String): (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      tag match {
-        case "md5buckets" => (s, d) => { // the x25 feature-bucket map stage alone
-          val base = Tables.documents(s, d).select(col("doc_id"),
-            split(col("text"), " ").as("a"))
-          base.select(col("doc_id"), explode(concat(
-              col("a"),
-              when(size(col("a")) >= 2, expr(
-                "transform(sequence(1, size(a) - 1), " +
-                  "i -> concat(element_at(a, i), '_', element_at(a, i + 1)))"))
-                .otherwise(array()))).as("feat"))
-            .select((conv(substring(md5(concat(lit("dsir|"), col("feat"))), 1, 2), 16, 10)
-              .cast("long") % 256).as("bucket"))
-        }
-        case "a10dec" => (s, d) => { // the a10 aggregate as shipped
-          val q = col("l_quantity"); val p = col("l_extendedprice")
-          Tables.lineitem(s, d).groupBy("l_returnflag")
-            .agg(count(lit(1)).as("n"), Cols.dsum(q).as("sum_q"), Cols.dsum(p).as("sum_p"),
-              Cols.dsum(q * q).as("sum_qq"), Cols.dsum(p * p).as("sum_pp"),
-              Cols.dsum(q * p).as("sum_qp"))
-        }
-        case "a10dbl" => (s, d) => { // same with double sums (inexact)
-          val q = col("l_quantity").cast("double"); val p = col("l_extendedprice").cast("double")
-          Tables.lineitem(s, d).groupBy("l_returnflag")
-            .agg(count(lit(1)).as("n"), sum(q).as("sum_q"), sum(p).as("sum_p"),
-              sum(q * q).as("sum_qq"), sum(p * p).as("sum_pp"), sum(q * p).as("sum_qp"))
-        }
-        case "a10one" => (s, d) => { // ONE decimal sum, rest dropped
-          val q = col("l_quantity")
-          Tables.lineitem(s, d).groupBy("l_returnflag")
-            .agg(count(lit(1)).as("n"), Cols.dsum(q).as("sum_q"))
-        }
-        case "a10n" => (s, d) => // no sums at all: scan + count only
-          Tables.lineitem(s, d).groupBy("l_returnflag").agg(count(lit(1)).as("n"))
-        case "a10d18" => (s, d) => { // decimal(18,6) inputs (compact reps)
-          val dec = DecimalType(18, 6)
-          val q = col("l_quantity").cast(dec); val p = col("l_extendedprice").cast(dec)
-          Tables.lineitem(s, d).groupBy("l_returnflag")
-            .agg(count(lit(1)).as("n"),
-              sum(q).cast("double").as("sum_q"), sum(p).cast("double").as("sum_p"),
-              sum(q * q).cast("double").as("sum_qq"),
-              sum(p * p).cast("double").as("sum_pp"),
-              sum(q * p).cast("double").as("sum_qp"))
-        }
-        case "a10ul" => (s, d) => { // cast to decimal kept, ADD in long
-          import org.apache.spark.sql.catalyst.expressions.{Cast, UnscaledValue}
-          s.sessionState.functionRegistry.createOrReplaceTempFunction(
-            "ul6", exprs => UnscaledValue(Cast(exprs.head, Cols.Dec)), "built-in")
-          def ul(c: org.apache.spark.sql.Column) = call_function("ul6", c)
-          val q = col("l_quantity"); val p = col("l_extendedprice")
-          Tables.lineitem(s, d).groupBy("l_returnflag")
-            .agg(count(lit(1)).as("n"), sum(ul(q)).as("sum_q"), sum(ul(p)).as("sum_p"),
-              sum(ul(q * q)).as("sum_qq"), sum(ul(q)).as("sum_pp"),
-              sum(ul(q * p)).as("sum_qp"))
-        }
-        case "a10dec5" => (s, d) => { // dec spelling minus the pp column
-          val q = col("l_quantity"); val p = col("l_extendedprice")
-          Tables.lineitem(s, d).groupBy("l_returnflag")
-            .agg(count(lit(1)).as("n"), Cols.dsum(q).as("sum_q"), Cols.dsum(p).as("sum_p"),
-              Cols.dsum(q * q).as("sum_qq"), Cols.dsum(q).as("sum_pp"),
-              Cols.dsum(q * p).as("sum_qp"))
-        }
-        case other => sys.error(s"unknown experiment: $other")
-      }
     for (name <- args) {
-      val fn = if (name.startsWith("exp:")) experiment(name.stripPrefix("exp:"))
-        else SparkEntry.queries(name)
+      val fn = SparkEntry.queries(name)
       // warm run: JIT, codegen, footer caches — profile the steady state
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       // three timed runs for a median wall; exec detail from the last

@@ -80,6 +80,13 @@ object Cols {
   def davg(c: Column): Column =
     sum(c.cast(Dec)).cast("double") / count(c).cast("double")
 
+  /** First `n` (1..15) hex digits of `md5(key)` as a non-negative long:
+    * the library's deterministic coin (shards, sketch cells, splits,
+    * seeded uniforms), computed by [[graft.functions.Md5PrefixLong]] and
+    * value-identical with the portable spelling its scaladoc shows.
+    */
+  def md5Prefix(key: Column, n: Int): Column = call_function("md5_prefix_long", key, lit(n))
+
   /** Oracle-SQL spelling of [[dsum]]. */
   def dsumSql(e: String): String = s"CAST(SUM(CAST($e AS DECIMAL(28,6))) AS DOUBLE)"
 

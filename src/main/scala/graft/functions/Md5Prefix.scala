@@ -3,14 +3,12 @@ package graft.functions
 import java.security.MessageDigest
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
 /** First `n` hex digits of md5 as an unsigned long — the native kernel
   * behind the library's deterministic hash-bucket idiom
   *
-  * {{{ CAST(conv(substring(md5(x), 1, n), 16, 10) AS BIGINT) }}}
+  * {{{ CAST(conv(h, 16, 10) AS BIGINT) }}}   with h = substring(md5(x), 1, n)
   *
   * (sampling buckets, DSIR feature cells, CMS cells, pack shards,
   * train/test splits, seeded uniforms — every engine-portable
@@ -23,10 +21,18 @@ import org.apache.spark.sql.types._
   * cast per row — all allocation; this kernel folds the nibbles off
   * the digest bytes directly, with a thread-local MessageDigest
   * (DigestUtils inside Spark's Md5 looks the provider up per call).
+  *
+  * Every coin site calls it through [[graft.Cols.md5Prefix]]
+  * (`md5_prefix_long(x, n)`, registered by [[GraftFunctions]]); the
+  * portable spelling above survives only in the specs, as the reference
+  * the kernel is compared against. A string key is cast to binary
+  * exactly as Spark's `Md5` casts it.
   */
-case class Md5PrefixLong(child: Expression, n: Int) extends UnaryExpression {
+case class Md5PrefixLong(child: Expression, n: Int)
+    extends UnaryExpression with ImplicitCastInputTypes {
   require(n >= 1 && n <= 15, s"md5 prefix length $n outside [1, 15]")
 
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def dataType: DataType = LongType
   override def prettyName: String = "md5_prefix_long"
 
@@ -61,40 +67,5 @@ object Md5PrefixLong {
       i += 1
     }
     v
-  }
-}
-
-/** Optimizer rule: rewrite the portable hash-bucket spelling
-  *
-  * {{{ CAST(conv(substring(md5(x), 1, n), 16, 10) AS BIGINT) }}}   (n ≤ 15)
-  *
-  * (and its `AS DOUBLE` variant, exact for n ≤ 13 < 2^53) into
-  * [[Md5PrefixLong]] — the [[NativeSumRule]] discipline: users keep the
-  * declarative cross-engine spelling, the optimizer swaps the
-  * implementation, and the DuckDB oracle re-validates every query with
-  * the rule active (Verify and Bench both run [[graft.Engine.session]]).
-  *
-  * Guards: the exact Substring(·, 1, n)/Conv(·, 16, 10) literal shape
-  * only, and n bounded so the value is exactly representable in the
-  * target type;
-  * `spark.sql.optimizer.excludedRules=graft.functions.NativeMd5Rule`
-  * turns the rewrite off per session.
-  */
-object NativeMd5Rule extends Rule[LogicalPlan] {
-  private object Pattern {
-    def unapply(e: Expression): Option[(Expression, Int)] = e match {
-      case Conv(Substring(Md5(c), Literal(1, IntegerType), Literal(len: Int, IntegerType)),
-            Literal(16, IntegerType), Literal(10, IntegerType), _)
-          if len >= 1 && len <= 15 =>
-        Some((c, len))
-      case _ => None
-    }
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
-    case Cast(Pattern(c, len), LongType, _, _) =>
-      Md5PrefixLong(c, len)
-    case cast @ Cast(Pattern(c, len), DoubleType, _, _) if len <= 13 =>
-      cast.copy(child = Md5PrefixLong(c, len))
   }
 }

@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -64,15 +64,27 @@ object GraftFunctions {
     "float_dot" -> (exprs => { arity("float_dot", exprs, 2); FloatDot(exprs.head, exprs(1)) }),
     "minhash_sigs" -> (exprs => { arity("minhash_sigs", exprs, 1); MinHashSigs(exprs.head, 8) }),
     "word_shingles" -> (exprs => { arity("word_shingles", exprs, 1); WordShingles(exprs.head, 3) }),
-    "nfc_normalize" -> (exprs => { arity("nfc_normalize", exprs, 1); NormalizeNfc(exprs.head) }))
+    "nfc_normalize" -> (exprs => { arity("nfc_normalize", exprs, 1); NormalizeNfc(exprs.head) }),
+    "md5_prefix_long" -> (exprs => {
+      arity("md5_prefix_long", exprs, 2); Md5PrefixLong(exprs.head, prefixLength(exprs(1))) }))
 
-  private def arity(name: String, exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      n: Int): Unit =
+  private def arity(name: String, exprs: Seq[Expression], n: Int): Unit =
     if (exprs.length != n)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "_LEGACY_ERROR_TEMP_3000",
-        messageParameters = Map("message" ->
-          s"$name expects exactly $n argument(s), got ${exprs.length} (parameters are fixed at registration: 8 hashes, 3-word shingles)"))
+      fail(s"$name expects exactly $n argument(s), got ${exprs.length} (parameters are fixed at registration: 8 hashes, 3-word shingles)")
+
+  // the kernel's own `require` would surface as an opaque
+  // IllegalArgumentException from inside analysis; name the argument
+  private def prefixLength(e: Expression): Int = e match {
+    case Literal(n: Int, IntegerType) if n >= 1 && n <= 15 => n
+    case other =>
+      fail(s"md5_prefix_long's prefix length n must be an integer literal in 1..15, got ${other.sql}")
+  }
+
+  // an error class whose template is the bare `<message>`: any other
+  // template turns the message into an INTERNAL_ERROR
+  private def fail(message: String): Nothing =
+    throw new org.apache.spark.sql.AnalysisException(
+      errorClass = "_LEGACY_ERROR_TEMP_3100", messageParameters = Map("message" -> message))
 
   /** Registers the functions the session's registry lacks; names that
     * [[GraftExtensions]] already injected stay as they are.
@@ -96,6 +108,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     e.injectOptimizerRule(_ => NativeDotRule)
     e.injectOptimizerRule(_ => NativeSumRule)
-    e.injectOptimizerRule(_ => NativeMd5Rule)
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{Cols, Tables}
 
 /** Corpus-curation operators beyond the dedup/ANN/privacy families:
   * rule-based quality filtering (Gopher-style), bigram language-model
@@ -432,8 +432,7 @@ object Curation {
     * public so the streaming heavy-hitter build can share it.
     */
   def cmsBucket(i: Int, c: Column, width: Int = CmsWidth): Column =
-    conv(substring(md5(concat(lit(s"cms$i|"), c.cast("string"))), 1, 4), 16, 10)
-      .cast("long") % width
+    Cols.md5Prefix(concat(lit(s"cms$i|"), c.cast("string")), 4) % width
 
   /** Exploded (h, b) cell coordinates for a key across all rows. */
   def cmsProbe(c: Column, depth: Int = CmsDepth, width: Int = CmsWidth): Column =
@@ -483,8 +482,9 @@ object Curation {
     * together, never in one Scala copy.
     */
   private def hllRegisterCols(key: Column): (Column, Column) = {
-    val h = md5(concat(lit("hll|"), key.cast("string")))
-    val j = conv(substring(h, 1, 2), 16, 10).cast("long") % HllM
+    val salted = concat(lit("hll|"), key.cast("string"))
+    val h = md5(salted)
+    val j = Cols.md5Prefix(salted, 2) % HllM
     val w = conv(substring(h, 3, 8), 16, 10).cast("long") // 32-bit slice
     // rho = position of the first 1-bit of w in a 32-wide field; w=0 -> 33
     val rho = when(w === 0L, lit(33L))

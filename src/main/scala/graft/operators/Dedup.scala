@@ -352,8 +352,8 @@ object Dedup {
         .join(labels, Seq("doc_id"), "left")
         .withColumn("cluster", coalesce(col("c"), col("doc_id")))
         .withColumn("split",
-          when(conv(substring(md5(concat(lit("split|"), col("cluster").cast("string"))), 1, 2),
-            16, 10).cast("long") < 205, "train").otherwise("test"))
+          when(Cols.md5Prefix(concat(lit("split|"), col("cluster").cast("string")), 2) < 205,
+            "train").otherwise("test"))
         .select("doc_id", "cluster", "split")
         .orderBy("doc_id")
     }
@@ -461,8 +461,8 @@ object Dedup {
       // at corpus scale. Same expression, same values.
       val toks = sigStore(s, d)
         .withColumn("split",
-          when(conv(substring(md5(concat(lit("smp|"), col("doc_id").cast("string"))), 1, 4), 16, 10)
-            .cast("long") < lit(0.8) * 65536, "train").otherwise("test"))
+          when(Cols.md5Prefix(concat(lit("smp|"), col("doc_id").cast("string")), 4)
+            < lit(0.8) * 65536, "train").otherwise("test"))
         .select(col("doc_id"), col("split"), explode(col("sh")).as("shingle"))
         .join(broadcast(hotShingles), Seq("shingle"), "left_anti")
       val train = toks.filter(col("split") === "train")

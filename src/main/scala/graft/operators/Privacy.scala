@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Cols, Tables}
 
 /** Privacy operators for training-data preparation: PII scrubbing
   * (pseudonymization + pattern redaction) and k-anonymity suppression.
@@ -577,8 +577,7 @@ object Privacy {
     * empty salt this is byte-identical to the oracle's spelling.
     */
   private def seededUnifKey(tag: String, salt: String, key: Column): Column = {
-    val v = conv(substring(md5(concat(lit(tag), lit(salt), key)), 1, 8),
-      16, 10).cast("long")
+    val v = Cols.md5Prefix(concat(lit(tag), lit(salt), key), 8)
     (v.cast("double") + lit(0.5)) / lit(4294967296.0)
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{Cols, Tables}
 
 /** Text-analysis operators over the `documents` table: language ID,
   * quality scoring, token counting, document fingerprinting
@@ -89,8 +89,7 @@ object TextAnalysis {
     * streaming pipeline assigns the SAME shard a batch re-pack would.
     */
   def packShard(docId: Column, shards: Int = NumPackShards): Column =
-    conv(substring(md5(concat(lit("pk|"), docId.cast("string"))), 1, 2), 16, 10)
-      .cast("long") % shards
+    Cols.md5Prefix(concat(lit("pk|"), docId.cast("string")), 2) % shards
 
   private def packShardSql(docId: String): String =
     s"CAST(('0x' || substr(md5('pk|' || CAST($docId AS VARCHAR)), 1, 2)) AS BIGINT) % $NumPackShards"
@@ -197,8 +196,7 @@ object TextAnalysis {
             "i -> concat(element_at(a, i), '_', element_at(a, i + 1)))"))
           .otherwise(array()))).as("feat"))
       .withColumn("bucket",
-        conv(substring(md5(concat(lit("dsir|"), col("feat"))), 1, 2), 16, 10)
-          .cast("long") % buckets)
+        Cols.md5Prefix(concat(lit("dsir|"), col("feat")), 2) % buckets)
     // One corpus-shaped pass: collapse the occurrence stream to
     // (doc, bucket, n) — at most `buckets` rows per document — then BOTH
     // the model counts and the scoring read that aggregate (identical
@@ -328,7 +326,8 @@ object TextAnalysis {
     */
   private[graft] def stratumRanked(joined: DataFrame,
       skewShare: Double = 0.5): DataFrame = {
-    val strat = md5(concat(lit("strat|"), col("doc_id").cast("string")))
+    val stratKey = concat(lit("strat|"), col("doc_id").cast("string"))
+    val strat = md5(stratKey)
     val st = joined.groupBy("source", "lang").agg(count(lit(1)).as("c"))
       .agg(coalesce(max(col("c")), lit(0L)).as("mx"),
         coalesce(sum(col("c")), lit(0L)).as("n")).head()
@@ -339,7 +338,7 @@ object TextAnalysis {
     } else
       graft.queries.CoreRelational.keyedRankQuantile(
           joined, Seq("source", "lang"),
-          conv(substring(strat, 1, 15), 16, 10).cast("long"),
+          Cols.md5Prefix(stratKey, 15),
           struct(strat, col("doc_id")))
         .withColumnRenamed("rnk", "rk").drop("n_key")
   }
@@ -459,8 +458,7 @@ object TextAnalysis {
     // the standard trick for stable train/test assignment at 100 TB
     // (no global shuffle, no state, pure map-side).
     "x6_hash_sampling" -> { (s, d) =>
-      val bucket = conv(substring(md5(concat(lit("smp|"), col("doc_id").cast("string"))), 1, 4), 16, 10)
-        .cast("long")
+      val bucket = Cols.md5Prefix(concat(lit("smp|"), col("doc_id").cast("string")), 4)
       val rate = when(col("lang") === "en", lit(0.25)).otherwise(lit(0.5)) // stratified
       Tables.documents(s, d)
         .withColumn("bucket", bucket)
@@ -749,7 +747,7 @@ object TextAnalysis {
     // executors.
     "x25_dsir_selection" -> { (s, d) =>
       val w = dsirWeights(Tables.documents(s, d), col("lang") === "en")
-      val u = (conv(substring(md5(concat(lit("gum|"), col("doc_id").cast("string"))), 1, 8), 16, 10)
+      val u = (Cols.md5Prefix(concat(lit("gum|"), col("doc_id").cast("string")), 8)
         .cast("double") + lit(1.0)) / lit(4294967297.0)
       val keyed = w.withColumn("gkey", round(col("log_w") + -log(-log(u)), 9))
       keyed.orderBy(col("gkey").desc, col("doc_id")).limit(100)
@@ -837,8 +835,7 @@ object TextAnalysis {
         // md5-prefix kernel. fingerprint/pos unpack bit-identically
         // (%08x is the same lowercase zero-padded hex the substring
         // produced).
-        .withColumn("ghl",
-          conv(substring(md5(col("gram")), 1, 8), 16, 10).cast("long"))
+        .withColumn("ghl", Cols.md5Prefix(col("gram"), 8))
         .withColumn("key",
           col("ghl") * 10000000L + (lit(9999999L) - col("pos")))
       val win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, wlen - 1)
@@ -868,8 +865,7 @@ object TextAnalysis {
         .select(col("doc_id"), posexplode(split(col("text"), " ")))
         .toDF("doc_id", "pos", "word")
         .withColumn("bdy",
-          when(conv(substring(md5(col("word")), 1, 2), 16, 10).cast("long") % 8 === 0,
-            1L).otherwise(0L))
+          when(Cols.md5Prefix(col("word"), 2) % 8 === 0, 1L).otherwise(0L))
         .withColumn("chunk_id", sum(col("bdy"))
           .over(Window.partitionBy("doc_id").orderBy("pos")
             .rowsBetween(Window.unboundedPreceding, 0)))

@@ -172,8 +172,8 @@ object SqlSurface {
     },
     // Recursive CTE (Spark 4's WITH RECURSIVE): enumerate the archive's
     // 128 checkpoint sequences from FIRST_FILE at the reference's
-    // stride-64 cadence (the S1 planning recursion Archive.checkpointRange
-    // spells imperatively), render each as the 8-hex name + nibble-pair
+    // stride-64 cadence (the S1 planning recursion, Archive.nextSeq
+    // applied 127 times), render each as the 8-hex name + nibble-pair
     // directory fan-out (the t8 machinery), and bucket-count orders per
     // checkpoint span. The recursion itself is bounded planning state
     // (128 one-row steps); the corpus-shaped work is one equi-join on

@@ -5,6 +5,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import graft.sources.Archive
 
 /** Sink contract mirroring the reference's storage-adapter ABC
   * (python/adapters/hc_storage_adapter.py:12-59): save a checkpoint's
@@ -53,14 +54,16 @@ final class PartitionedFileSink(root: String, format: String = "csv") extends Ch
   private val markers = new HPath(rootPath, "completed_ledgers")
   private val lastFile = new HPath(rootPath, "last_file")
 
-  /** FileSystem for `root`'s scheme, using the active Spark session's
-    * Hadoop conf when one exists (so s3a credentials / endpoint settings
-    * configured on the session apply to the side-files too).
+  /** FileSystem for `root`'s scheme, resolved through the active Spark
+    * session's Hadoop conf when one exists — the conf the partition
+    * write itself uses, so s3a credentials / endpoint settings set on
+    * the session (`spark.conf.set`, `spark.hadoop.*`) reach the
+    * side-files too.
     */
   private def fs: FileSystem = {
     val conf = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
+      .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
     rootPath.getFileSystem(conf)
   }
@@ -142,6 +145,24 @@ final class PartitionedFileSink(root: String, format: String = "csv") extends Ch
     if (f.exists(markers))
       f.listStatus(markers).map(_.getPath.getName).toSeq.sorted
     else Nil
+  }
+}
+
+/** The JDBC sinks' offset read: the single-row `lastfile` pointer. */
+private[sinks] object LastFile {
+  // None means exactly "no offset committed yet" (lastfile exists and
+  // is empty). A FAILED read — missing table, lock timeout, revoked
+  // SELECT — propagates instead of masquerading as None: the save
+  // guard would otherwise re-insert a committed checkpoint and the
+  // tail would silently restart from the beginning (run
+  // ensureSchema/bootstrap before first use; the Collector chain
+  // does).
+  def read(connect: () => Connection): Option[Long] = {
+    val c = connect()
+    try {
+      val rs = c.createStatement().executeQuery("SELECT name FROM lastfile")
+      if (rs.next()) Some(java.lang.Long.parseLong(rs.getString(1), 16)) else None
+    } finally c.close()
   }
 }
 
@@ -229,20 +250,7 @@ final class JdbcTxnSink(
     } finally c.close()
   }
 
-  override def lastSequence: Option[Long] = {
-    // None means exactly "no offset committed yet" (lastfile exists and
-    // is empty). A FAILED read — missing table, lock timeout, revoked
-    // SELECT — propagates instead of masquerading as None: the save
-    // guard would otherwise re-insert a committed checkpoint and the
-    // tail would silently restart from the beginning (run
-    // ensureSchema/bootstrap before first use; the Collector chain
-    // does).
-    val c = connect()
-    try {
-      val rs = c.createStatement().executeQuery("SELECT name FROM lastfile")
-      if (rs.next()) Some(java.lang.Long.parseLong(rs.getString(1), 16)) else None
-    } finally c.close()
-  }
+  override def lastSequence: Option[Long] = LastFile.read(connect)
 
   /** Insert/select/delete probe inside one rolled-back transaction: the
     * reference's canned creation row (s3_storage_adapter.py:180-188),
@@ -329,7 +337,7 @@ final class JdbcTwoTableSink(connect: () => Connection) extends CheckpointSink {
     val seq = java.lang.Long.parseLong(firstFile.trim, 16)
     // seed validation (build_database.py:25-28): the first scanned file
     // must be the last ledger of a 64-ledger checkpoint span
-    if ((seq + 1) % 64 != 0)
+    if (!Archive.isCheckpoint(seq))
       throw new IllegalArgumentException(
         s"first file $firstFile is not a checkpoint boundary ((seq+1) % 64 != 0)")
     adminConnect.foreach { ac =>
@@ -426,20 +434,7 @@ final class JdbcTwoTableSink(connect: () => Connection) extends CheckpointSink {
     } finally c.close()
   }
 
-  override def lastSequence: Option[Long] = {
-    // None means exactly "no offset committed yet" (lastfile exists and
-    // is empty). A FAILED read — missing table, lock timeout, revoked
-    // SELECT — propagates instead of masquerading as None: the save
-    // guard would otherwise re-insert a committed checkpoint and the
-    // tail would silently restart from the beginning (run
-    // ensureSchema/bootstrap before first use; the Collector chain
-    // does).
-    val c = connect()
-    try {
-      val rs = c.createStatement().executeQuery("SELECT name FROM lastfile")
-      if (rs.next()) Some(java.lang.Long.parseLong(rs.getString(1), 16)) else None
-    } finally c.close()
-  }
+  override def lastSequence: Option[Long] = LastFile.read(connect)
 
   /** Canned creation row written to `creations`, read back, deleted, all
     * inside one rolled-back transaction (the reference's probe uses a

@@ -55,12 +55,6 @@ object Archive {
     s"$root/$category/${s.substring(0, 2)}/${s.substring(2, 4)}/${s.substring(4, 6)}/$category-$s.xdr.gz"
   }
 
-  /** All checkpoint paths in [from, to] — driver-side planning of a
-    * backfill batch (the streaming tail enumerates one at a time).
-    */
-  def checkpointRange(root: String, category: String, from: Long, to: Long): Seq[String] =
-    (from to to by 64).filter(isCheckpoint).map(pathFor(root, category, _))
-
   /** Checkpoint `seq`'s three files: transactions, ledger, results. */
   def triple(root: String, seq: Long): Seq[String] =
     Seq("transactions", "ledger", "results").map(pathFor(root, _, seq))

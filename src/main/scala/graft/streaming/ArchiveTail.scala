@@ -34,6 +34,9 @@ final class ArchiveTail(
     alerts: IngestAlerts = IngestAlerts.Noop,
     metrics: IngestMetrics = IngestMetrics.Noop) {
 
+  // a non-checkpoint start would poll for files that never exist
+  require(Archive.isCheckpoint(firstSeq), s"firstSeq $firstSeq must satisfy (seq+1)%64==0")
+
   // Startup probe (K6): a misconfigured sink must fail here, before any
   // ingest work — the reference runs the same dry-run at adapter init
   // (python/adapters/s3_storage_adapter.py:169-192).

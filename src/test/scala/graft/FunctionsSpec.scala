@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{GraftFunctions, NativeDotRule, NativeMd5Rule, NativeSumRule, RollingHash, TopKDoubles}
+import graft.functions.{GraftFunctions, NativeDotRule, NativeSumRule, RollingHash, TopKDoubles}
 import org.apache.spark.unsafe.types.UTF8String
 
 class FunctionsSpec extends AnyFunSuite {
@@ -35,8 +35,6 @@ class FunctionsSpec extends AnyFunSuite {
     // and naming a rule in excludedRules keeps its kernel out of the plan
     val e = Tables.embeddings(spark, sf)
     val cases = Seq[(Rule[_], String, () => DataFrame)](
-      (NativeMd5Rule, "md5_prefix_long", () => e.select(
-        conv(substring(md5(col("vec_id").cast("string")), 1, 8), 16, 10).cast("long"))),
       (NativeSumRule, "graft_decimal_sum", () => e.agg(Cols.dsum(col("vec_id").cast("double")))),
       (NativeDotRule, "decimal_dot", () => e.select(Cols.dotDec(col("embedding"), col("embedding")))))
     cases.foreach { case (rule, kernel, df) =>

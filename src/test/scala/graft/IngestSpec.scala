@@ -135,6 +135,41 @@ class IngestSpec extends AnyFunSuite {
     hc.unset("fs.s3a.bucket.pub-archive2.aws.credentials.provider")
   }
 
+  test("Deploy.tail rejects a FIRST_FILE that is not a checkpoint") {
+    // 0x40 is no checkpoint: a tail started there would poll for files
+    // that can never exist
+    val env = Map(
+      "BUCKET_NAME" -> s"file://${Files.createTempDirectory("graft-first-arch")}",
+      "CORE_DIRECTORY" -> "",
+      "NETWORK_PASSPHRASE" -> Passphrase,
+      "KIN_ISSUER" -> issuer,
+      "FIRST_FILE" -> "00000040",
+      "S3_STORAGE_BUCKET" -> s"file://${Files.createTempDirectory("graft-first-out")}")
+    val e = intercept[IllegalArgumentException](Deploy.tail(spark, env))
+    assert(e.getMessage.contains("firstSeq 64"), e.getMessage)
+  }
+
+  test("file sink side files resolve their FileSystem through the session conf") {
+    // the stub is bound with spark.conf.set alone, as a deployment's
+    // session-level s3a settings are; the bucket is one no other test
+    // uses, because Hadoop caches a FileSystem per scheme and authority
+    val local = Files.createTempDirectory("graft-s3a-session").toString
+    spark.conf.set("fs.s3a.impl", classOf[StubS3aFileSystem].getName)
+    spark.conf.set("mapreduce.outputcommitter.factory.scheme.s3a", "")
+    try {
+      val sink = new PartitionedFileSink(s"s3a://graft-session-conf-bucket$local")
+      sink.selfTest()
+      import spark.implicits._
+      sink.save(Seq(("payment", 1L)).toDF("type", "amount"), 0x3fL)
+      assert(sink.lastSequence === Some(0x3fL))
+      assert(sink.completed === Seq("0000003f"))
+      assert(Files.exists(Paths.get(local, "ledgers", "ledger=0000003f")))
+    } finally {
+      spark.conf.unset("fs.s3a.impl")
+      spark.conf.unset("mapreduce.outputcommitter.factory.scheme.s3a")
+    }
+  }
+
   test("s3a:// archive root drives Deploy/Archive scheme handling end to end (stub FS)") {
     // Register the stub for the s3a scheme; resolution happens through
     // the same hadoopConfiguration lookup production uses, so the whole

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.Assertions._
 
@@ -27,9 +27,13 @@ object TestSpark {
     * with it excluded (the portable spelling), row by row, on identical
     * input.
     */
-  def assertBitIdentical(rule: Rule[_])(df: => DataFrame): Unit = {
-    val fast = df.collect()
-    val slow = excluding(rule)(df.collect())
+  def assertBitIdentical(rule: Rule[_])(df: => DataFrame): Unit =
+    assertSameBits(df.collect(), excluding(rule)(df.collect()))
+
+  /** Row-by-row bit comparison of a native kernel's rows (`fast`) with
+    * the portable spelling's (`slow`); doubles compare by their bits.
+    */
+  def assertSameBits(fast: Array[Row], slow: Array[Row]): Unit = {
     assert(fast.length === slow.length)
     fast.zip(slow).foreach { case (f, s) =>
       (0 until f.length).foreach { i =>

@@ -88,7 +88,6 @@ class XdrSpec extends AnyFunSuite {
     assert(Archive.nextSeq(0x3fL) === 0x7fL)
     assert(Archive.pathFor("s3://b/core", "transactions", 0xabcdefL)
       === "s3://b/core/transactions/00/ab/cd/transactions-00abcdef.xdr.gz")
-    assert(Archive.checkpointRange("r", "ledger", 0x3f, 0xff).length === 4)
   }
 
   test("end-to-end: archive files on disk → decode → Extract plan") {
