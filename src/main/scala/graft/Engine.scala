@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.pipeline.{Extract, ExtractConfig, Serve}
@@ -56,6 +57,18 @@ object Engine {
     graft.functions.GraftFunctions.register(s) // same-JVM reuse safety
     s
   }
+
+  /** The one FileSystem resolution for every store, sink and archive
+    * probe: `path`'s scheme resolved through the session's Hadoop conf,
+    * so a binding made with `spark.conf.set` or `spark.hadoop.*` (S3A
+    * credentials, endpoints, a test filesystem) reaches the driver-side
+    * listings, markers and renames as it reaches Spark's own reads and
+    * writes. The conf is a copy of the shared one with session keys
+    * overlaid, so keys written into `sparkContext.hadoopConfiguration`
+    * reach it too.
+    */
+  def fileSystem(spark: SparkSession, path: Path): FileSystem =
+    path.getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Q0 ingest: drain every available checkpoint, then tail with the
     * reference's bounded polling retry. Returns checkpoints committed.

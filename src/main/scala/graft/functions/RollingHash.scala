@@ -62,15 +62,19 @@ object GraftFunctions {
     "rolling_hash" -> (exprs => { arity("rolling_hash", exprs, 1); RollingHash(exprs.head) }),
     "decimal_dot" -> (exprs => { arity("decimal_dot", exprs, 2); DecimalDot(exprs.head, exprs(1)) }),
     "float_dot" -> (exprs => { arity("float_dot", exprs, 2); FloatDot(exprs.head, exprs(1)) }),
-    "minhash_sigs" -> (exprs => { arity("minhash_sigs", exprs, 1); MinHashSigs(exprs.head, 8) }),
-    "word_shingles" -> (exprs => { arity("word_shingles", exprs, 1); WordShingles(exprs.head, 3) }),
+    "minhash_sigs" -> (exprs => {
+      arity("minhash_sigs", exprs, 1, " (the hash count is fixed at registration: 8)")
+      MinHashSigs(exprs.head, 8) }),
+    "word_shingles" -> (exprs => {
+      arity("word_shingles", exprs, 1, " (the shingle width is fixed at registration: 3 words)")
+      WordShingles(exprs.head, 3) }),
     "nfc_normalize" -> (exprs => { arity("nfc_normalize", exprs, 1); NormalizeNfc(exprs.head) }),
     "md5_prefix_long" -> (exprs => {
       arity("md5_prefix_long", exprs, 2); Md5PrefixLong(exprs.head, prefixLength(exprs(1))) }))
 
-  private def arity(name: String, exprs: Seq[Expression], n: Int): Unit =
+  private def arity(name: String, exprs: Seq[Expression], n: Int, fixed: String = ""): Unit =
     if (exprs.length != n)
-      fail(s"$name expects exactly $n argument(s), got ${exprs.length} (parameters are fixed at registration: 8 hashes, 3-word shingles)")
+      fail(s"$name expects exactly $n argument(s), got ${exprs.length}$fixed")
 
   // the kernel's own `require` would surface as an opaque
   // IllegalArgumentException from inside analysis; name the argument

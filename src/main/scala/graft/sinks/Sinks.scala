@@ -54,19 +54,17 @@ final class PartitionedFileSink(root: String, format: String = "csv") extends Ch
   private val markers = new HPath(rootPath, "completed_ledgers")
   private val lastFile = new HPath(rootPath, "last_file")
 
-  /** FileSystem for `root`'s scheme, resolved through the active Spark
-    * session's Hadoop conf when one exists — the conf the partition
-    * write itself uses, so s3a credentials / endpoint settings set on
-    * the session (`spark.conf.set`, `spark.hadoop.*`) reach the
-    * side-files too.
+  /** FileSystem for `root`'s scheme through [[graft.Engine.fileSystem]]
+    * when a Spark session exists — the conf the partition write itself
+    * uses, so s3a credentials / endpoint settings set on the session
+    * (`spark.conf.set`, `spark.hadoop.*`) reach the side-files too. A
+    * sink probed before any session exists (`selfTest` at startup)
+    * falls back to a plain Hadoop conf.
     */
-  private def fs: FileSystem = {
-    val conf = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new Configuration())
-    rootPath.getFileSystem(conf)
-  }
+  private def fs: FileSystem =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(graft.Engine.fileSystem(_, rootPath))
+      .getOrElse(rootPath.getFileSystem(new Configuration()))
 
   private def writeFile(f: FileSystem, p: HPath, bytes: Array[Byte]): Unit = {
     val out = f.create(p, true) // overwrite: markers/pointer are idempotent

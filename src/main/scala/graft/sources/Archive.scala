@@ -59,13 +59,6 @@ object Archive {
   def triple(root: String, seq: Long): Seq[String] =
     Seq("transactions", "ledger", "results").map(pathFor(root, _, seq))
 
-  /** The filesystem under `root`, resolved through the session's Hadoop
-    * conf, so `spark.hadoop.*` settings (S3A credentials, endpoints)
-    * reach the availability probes as they reach the binaryFile reads.
-    */
-  def fileSystem(spark: SparkSession, root: String): FileSystem =
-    new HPath(root).getFileSystem(spark.sessionState.newHadoopConf())
-
   /** A checkpoint is readable once all three of its files exist; every
     * ingest runner stops at the first checkpoint that is not.
     */

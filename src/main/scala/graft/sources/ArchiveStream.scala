@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.util
-import org.apache.hadoop.fs.FileSystem
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, Par
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.Engine
 
 /** Custom Structured Streaming source for the history archive
   * (SURVEY.md §7.5 "sequenced micro-batch source"): the offset IS the
@@ -53,7 +54,7 @@ class ArchiveStreamTable(props: util.Map[String, String]) extends Table with Sup
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
         val root = options.get("root")
         new ArchiveMicroBatchStream(
-          Archive.fileSystem(SparkSession.active, root),
+          Engine.fileSystem(SparkSession.active, new HPath(root)),
           root,
           Option(options.get("firstSeq")).map(_.toLong).getOrElse(0x3fL),
           Option(options.get("maxPerBatch")).map(_.toInt).getOrElse(64))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import graft.Engine
 import graft.pipeline.ExtractConfig
@@ -42,7 +43,7 @@ final class ArchiveTail(
   // (python/adapters/s3_storage_adapter.py:169-192).
   sink.selfTest()
 
-  private val fs = Archive.fileSystem(spark, root)
+  private val fs = Engine.fileSystem(spark, new Path(root))
 
   /** Next sequence to process (offset recovery, S5). `lastfile ==
     * firstSeq` resumes AT firstSeq, not past it — the reference's

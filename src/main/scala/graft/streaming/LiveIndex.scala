@@ -1,9 +1,11 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
+import graft.Engine
 import graft.operators.Retrieval
 
 /** Continuously-maintained sparse (BM25) retrieval index — the fourth
@@ -140,7 +142,8 @@ object LiveIndex {
     val s = batch.sparkSession
     val deduped = batch.dropDuplicates("doc_id")
     val masked = deduped
-      .join(broadcast(tombstones(s, cfg)), Seq("doc_id"), "left_anti")
+      .join(broadcast(BatchParts.tombstoneIds(s, cfg.root, "doc_id")),
+        Seq("doc_id"), "left_anti")
     if (dlParts.isEmpty) return masked
     val store = BatchParts.readMaybeBucketed(s, dlParts, DoclenSchema, idBucket, B)
     val bucketed = store.columns.contains("bucket")
@@ -210,8 +213,6 @@ object LiveIndex {
   private def horizon(s: SparkSession, cfg: Config): Option[Long] =
     BatchParts.effectiveParts(s, s"${cfg.root}/doclens").lastOption.map(_._1)
 
-  private val TombSchema = StructType(Seq(StructField("doc_id", LongType)))
-
   /** Right-to-be-forgotten for the INDEX: unlike [[LivePipeline]]'s
     * dedup stores (which deliberately RETAIN forgotten hashes so a
     * later copy stays rejected), an index SERVES content — a
@@ -219,24 +220,13 @@ object LiveIndex {
     * statistics are additive over docs, masking its rows makes every
     * remaining score EXACTLY what a from-scratch index over the
     * surviving corpus would compute (df, n_docs, total_tokens all
-    * shrink by the doc's contribution — parity spec'd). Tombstones
-    * are a tiny keyed table anti-joined into both store reads;
-    * [[compact]] applies them physically and retires the applied
-    * partitions, bounding the mask.
+    * shrink by the doc's contribution — parity spec'd). The ids go
+    * on the shared [[BatchParts]] tombstone shelf, anti-joined into
+    * both store reads; [[compact]] applies them physically and retires
+    * the applied partitions, bounding the mask.
     */
-  def forget(s: SparkSession, cfg: Config, docIds: Seq[Long]): Unit = {
-    val next = BatchParts.committed(s, s"${cfg.root}/tombstones")
-      .lastOption.map(_._1 + 1).getOrElse(0L)
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(docIds.map(Row(_)).asJava, TombSchema)
-      .write.mode("overwrite").parquet(s"${cfg.root}/tombstones/batch=$next")
-  }
-
-  private def tombstones(s: SparkSession, cfg: Config): DataFrame = {
-    val dirs = BatchParts.committed(s, s"${cfg.root}/tombstones").map(_._2)
-    if (dirs.isEmpty) s.createDataFrame(s.sparkContext.emptyRDD[Row], TombSchema)
-    else s.read.schema(TombSchema).parquet(dirs: _*)
-  }
+  def forget(s: SparkSession, cfg: Config, docIds: Seq[Long]): Unit =
+    BatchParts.appendTombstones(s, cfg.root, "doc_id", docIds)
 
   /** Top-`n` BM25 over the live index for keyword query `terms` — the
     * x14 serving surface from the continuously-maintained store.
@@ -247,7 +237,7 @@ object LiveIndex {
   def bm25(s: SparkSession, cfg: Config, terms: Seq[String], n: Int,
       k1: Double = Retrieval.K1, b: Double = Retrieval.B): DataFrame = {
     val h = horizon(s, cfg).getOrElse(Long.MinValue)
-    val tomb = broadcast(tombstones(s, cfg))
+    val tomb = broadcast(BatchParts.tombstoneIds(s, cfg.root, "doc_id"))
     val dl = readStore(s, s"${cfg.root}/doclens", DoclenSchema, h)
       .join(tomb, Seq("doc_id"), "left_anti")
     // postings: when the fold is word-bucketed, a CONSTANT-FOLDABLE
@@ -320,7 +310,7 @@ object LiveIndex {
   private[graft] def matchedPostingsCount(s: SparkSession, cfg: Config,
       terms: Seq[String]): Long = {
     val h = horizon(s, cfg).getOrElse(Long.MinValue)
-    postingsFor(s, cfg, h, broadcast(tombstones(s, cfg)),
+    postingsFor(s, cfg, h, broadcast(BatchParts.tombstoneIds(s, cfg.root, "doc_id")),
       terms.distinct, None).count()
   }
 
@@ -345,19 +335,18 @@ object LiveIndex {
     */
   private def indexStats(s: SparkSession, cfg: Config, h: Long,
       terms: Seq[String]): Option[(Map[String, Long], (Long, Long))] = {
-    import org.apache.hadoop.fs.Path
     val pParts = BatchParts.effectiveParts(s, s"${cfg.root}/postings").filter(_._1 <= h)
     val dParts = BatchParts.effectiveParts(s, s"${cfg.root}/doclens").filter(_._1 <= h)
     val pFold = pParts.find(_._3).map(_._2)
     val dFold = dParts.find(_._3).map(_._2)
     if (pFold.isEmpty || dFold.isEmpty) return None
-    val fs = new Path(cfg.root).getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = Engine.fileSystem(s, new Path(cfg.root))
     val termdfPath = new Path(pFold.get, "_termdf")
     val statsPath = new Path(dFold.get, "_stats")
     if (!fs.exists(termdfPath) || !fs.exists(statsPath)) return None
     val cap = BatchParts.pushMaxKeys(s)
     val tombIds: Seq[Long] = {
-      val page = tombstones(s, cfg).limit(cap + 1).collect()
+      val page = BatchParts.tombstoneIds(s, cfg.root, "doc_id").limit(cap + 1).collect()
       if (page.length > cap) return None // unbounded mask → honest fallback
       page.map(_.getLong(0)).toSeq
     }
@@ -420,7 +409,8 @@ object LiveIndex {
     *
     * Compaction is also where [[forget]]'s tombstones are applied
     * PHYSICALLY (the fold anti-joins them out) and then retired —
-    * only the partitions read at entry, and only after both folds:
+    * only the shelf partitions listed at entry (the [[BatchParts]]
+    * tombstone shelf's contract), and only after both folds:
     * a crash between the folds leaves the tombstones in place, still
     * masking the unfolded store, and the re-run's anti-join on the
     * already-clean store is a no-op. Until a compaction applies them,
@@ -436,8 +426,8 @@ object LiveIndex {
     Seq("postings", "doclens").foreach(k =>
       BatchParts.recoverFold(s, s"${cfg.root}/$k"))
     horizon(s, cfg).foreach { h =>
-      val tombParts = BatchParts.committed(s, s"${cfg.root}/tombstones")
-      val tomb = broadcast(tombstones(s, cfg))
+      val tombParts = BatchParts.tombstoneParts(s, cfg.root)
+      val tomb = broadcast(BatchParts.tombstoneIds(s, cfg.root, "doc_id", tombParts))
       // the two stores' folds are independent relations over disjoint
       // dirs ("a crash between them leaves one folded and one not,
       // which readers assemble identically" — the scaladoc's own
@@ -506,11 +496,7 @@ object LiveIndex {
           BatchParts.commitFold(s, dir, hk, gen)
         }
         })
-      val fs = new org.apache.hadoop.fs.Path(cfg.root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      tombParts.foreach { case (_, p) =>
-        fs.delete(new org.apache.hadoop.fs.Path(p), true); ()
-      }
+      BatchParts.retireTombstoneParts(s, cfg.root, tombParts)
     }
   }
 }

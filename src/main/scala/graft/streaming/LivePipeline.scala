@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
+import graft.Engine
 import graft.operators.{Dedup, TextAnalysis}
 
 /** Streaming-first corpus intake: the x11 curation→dedup→pack pipeline
@@ -255,7 +256,7 @@ object LivePipeline {
   def seedWithIndex(existing: DataFrame, cfg: Config,
       idx: LiveIndex.Config): Unit = {
     val s = existing.sparkSession
-    val cur = committedParts(s, s"${cfg.root}/cursors")
+    val cur = BatchParts.committed(s, s"${cfg.root}/cursors")
     if (cur.isEmpty || cur.exists(_._1 == -1L))
       stepWithIndex(existing, -1L, cfg, idx)
   }
@@ -286,7 +287,7 @@ object LivePipeline {
     */
   def seed(existing: DataFrame, cfg: Config): Unit = {
     val s = existing.sparkSession
-    if (committedParts(s, s"${cfg.root}/cursors").isEmpty) step(existing, -1L, cfg)
+    if (BatchParts.committed(s, s"${cfg.root}/cursors").isEmpty) step(existing, -1L, cfg)
   }
 
   /** Run INDEPENDENT Spark actions concurrently on a bounded pool and
@@ -321,7 +322,7 @@ object LivePipeline {
     // a maintenance compaction that crashed between staging and rename
     // must be completed before the stores are read, or the dedup state
     // would silently miss the partitions it had already dropped
-    Seq("exact", "bands", "ids").foreach(k => recoverCompaction(s, cfg.root, k))
+    Seq("exact", "bands", "ids").foreach(k => BatchParts.recoverFold(s, s"${cfg.root}/$k"))
     // idle-period batches write nothing (P4's empty-batch skip): no
     // commit marker either, so a replay of the same empty batch is a
     // second no-op and partitions don't proliferate at idle cadence
@@ -748,7 +749,7 @@ object LivePipeline {
       asOf: Long = Long.MaxValue): DataFrame =
     readOutput(s, s"${cfg.root}/packed", PackedSchema, fromBatch,
         math.min(asOf, frontier(s, cfg)))
-      .join(broadcast(tombstones(s, cfg)), Seq("doc_id"), "left_anti")
+      .join(broadcast(BatchParts.tombstoneIds(s, cfg.root, "doc_id")), Seq("doc_id"), "left_anti")
 
   /** The commit frontier: the last batch whose CURSOR snapshot (the
     * step's commit marker) exists. Output reads are clamped to it — a
@@ -760,7 +761,7 @@ object LivePipeline {
     * compaction keeps the latest snapshot, which is all this needs).
     */
   private def frontier(s: SparkSession, cfg: Config): Long =
-    committedParts(s, s"${cfg.root}/cursors").lastOption.map(_._1)
+    BatchParts.committed(s, s"${cfg.root}/cursors").lastOption.map(_._1)
       .getOrElse(Long.MinValue)
 
   /** One committed batch's audit rows read DIRECTLY from its partition
@@ -778,7 +779,7 @@ object LivePipeline {
   private[graft] def auditBatch(s: SparkSession, cfg: Config,
       batchId: Long): Option[DataFrame] = {
     val p = new Path(part(cfg.root, "audit", batchId))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = Engine.fileSystem(s, p)
     if (!fs.exists(new Path(p, "_SUCCESS"))) None
     else Some(s.read.schema(AuditSchema).parquet(p.toString))
   }
@@ -796,7 +797,8 @@ object LivePipeline {
   private[graft] def auditBatchServed(s: SparkSession, cfg: Config,
       batchId: Long): DataFrame =
     (if (batchId > frontier(s, cfg)) None else auditBatch(s, cfg, batchId))
-      .map(_.join(broadcast(tombstones(s, cfg)), Seq("doc_id"), "left_anti"))
+      .map(_.join(broadcast(BatchParts.tombstoneIds(s, cfg.root, "doc_id")),
+        Seq("doc_id"), "left_anti"))
       .getOrElse(s.createDataFrame(s.sparkContext.emptyRDD[Row], AuditSchema))
 
   /** Right-to-be-forgotten: tombstone document ids. The outputs
@@ -808,8 +810,8 @@ object LivePipeline {
     * forgotten docs' hashes and band keys: a copy of forgotten content
     * arriving later must still be rejected, not silently re-admitted —
     * forgetting the content cannot re-open the door to it. Tombstones
-    * are a tiny keyed table, appended like everything else and
-    * broadcast into the output reads.
+    * are a tiny keyed table on the shared [[BatchParts]] tombstone
+    * shelf, broadcast into the output reads.
     */
   def forget(s: SparkSession, cfg: Config, docIds: Seq[Long]): Unit =
     BatchParts.appendTombstones(s, cfg.root, "doc_id", docIds)
@@ -828,10 +830,6 @@ object LivePipeline {
     forget(s, cfg, docIds)
   }
 
-  private def tombstones(s: SparkSession, cfg: Config): DataFrame =
-    readStore(s, cfg.root, "tombstones", Long.MaxValue,
-      StructType(Seq(StructField("doc_id", LongType))))
-
   /** Retention sweep for the dead-letter shelf: drop whole committed
     * `quarantine/batch=` partitions with id < `beforeBatch` — and the
     * only road out for a `malformed` row with a null doc_id (no
@@ -843,7 +841,7 @@ object LivePipeline {
     * shrink row-wise via [[vacuum]]).
     */
   def retireQuarantine(s: SparkSession, cfg: Config, beforeBatch: Long): Unit = {
-    val fs = new Path(cfg.root).getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = Engine.fileSystem(s, new Path(cfg.root))
     // a committed `.rewrite-<id>` staging left by a crashed vacuum
     // holds the same partition's surviving rows: left in place it
     // would substitute for a deleted source in readers AND be renamed
@@ -856,7 +854,7 @@ object LivePipeline {
     BatchParts.pendingRewrites(s, s"${cfg.root}/quarantine")
       .filter(_._1 < beforeBatch)
       .foreach { case (_, p) => fs.delete(new Path(p), true); () }
-    committedParts(s, s"${cfg.root}/quarantine").filter(_._1 < beforeBatch)
+    BatchParts.committed(s, s"${cfg.root}/quarantine").filter(_._1 < beforeBatch)
       .foreach { case (_, p) => fs.delete(new Path(p), true); () }
   }
 
@@ -904,7 +902,7 @@ object LivePipeline {
   private def readOutput(s: SparkSession, dir: String, schema: StructType,
       fromBatch: Long, toBatch: Long = Long.MaxValue): DataFrame = {
     def inRange(id: Long) = id >= fromBatch && id <= toBatch
-    val live = committedParts(s, dir).filter(p => inRange(p._1))
+    val live = BatchParts.committed(s, dir).filter(p => inRange(p._1))
     val liveIds = live.map(_._1).toSet
     val substituted = BatchParts.pendingRewrites(s, dir)
       .filter { case (id, _) => inRange(id) && !liveIds(id) }
@@ -929,7 +927,7 @@ object LivePipeline {
       asOf: Long = Long.MaxValue): DataFrame =
     readOutput(s, s"${cfg.root}/audit", AuditSchema, Long.MinValue,
         math.min(asOf, frontier(s, cfg)))
-      .join(broadcast(tombstones(s, cfg)), Seq("doc_id"), "left_anti")
+      .join(broadcast(BatchParts.tombstoneIds(s, cfg.root, "doc_id")), Seq("doc_id"), "left_anti")
 
   /** The dead-letter shelf: quarantined rows with their payloads —
     * what a producer debugging a `malformed`/`id_collision` fate
@@ -944,7 +942,7 @@ object LivePipeline {
       asOf: Long = Long.MaxValue): DataFrame =
     readOutput(s, s"${cfg.root}/quarantine", QuarantineSchema, Long.MinValue,
         math.min(asOf, frontier(s, cfg)))
-      .join(broadcast(tombstones(s, cfg)), Seq("doc_id"), "left_anti")
+      .join(broadcast(BatchParts.tombstoneIds(s, cfg.root, "doc_id")), Seq("doc_id"), "left_anti")
 
   /** Physically remove tombstoned docs' rows from the `packed/`,
     * `audit/`, and `quarantine/` partitions that contain them, then
@@ -968,8 +966,9 @@ object LivePipeline {
     * delete or rename didn't finish is completed by the next writer
     * ([[BatchParts.recoverRewrites]]) and substituted by readers
     * meanwhile. Tombstones are retired LAST, and only the partitions
-    * read at entry — a tombstone added concurrently by [[forget]] (the
-    * same owner) survives to the next vacuum. Re-running after any
+    * listed at entry (the [[BatchParts]] tombstone shelf's contract) —
+    * a tombstone added concurrently by [[forget]] (the same owner)
+    * survives to the next vacuum. Re-running after any
     * crash converges: already-rewritten partitions no longer match the
     * semi-join, and retiring an already-applied tombstone partition is
     * an anti-join of absent ids.
@@ -983,11 +982,9 @@ object LivePipeline {
   def vacuum(s: SparkSession, cfg: Config): Unit = {
     Seq("packed", "audit", "quarantine").foreach(k =>
       BatchParts.recoverRewrites(s, s"${cfg.root}/$k"))
-    val tombParts = committedParts(s, s"${cfg.root}/tombstones")
+    val tombParts = BatchParts.tombstoneParts(s, cfg.root)
     if (tombParts.isEmpty) return
-    val tomb = s.read
-      .schema(StructType(Seq(StructField("doc_id", LongType))))
-      .parquet(tombParts.map(_._2): _*)
+    val tomb = BatchParts.tombstoneIds(s, cfg.root, "doc_id", tombParts)
     for ((kind, schema) <- Seq("packed" -> PackedSchema, "audit" -> AuditSchema,
         "quarantine" -> QuarantineSchema)) {
       val dir = s"${cfg.root}/$kind"
@@ -1001,8 +998,7 @@ object LivePipeline {
         BatchParts.completeRewrite(s, dir, id)
       }
     }
-    val fs = new Path(cfg.root).getFileSystem(s.sparkContext.hadoopConfiguration)
-    tombParts.foreach { case (_, p) => fs.delete(new Path(p), true); () }
+    BatchParts.retireTombstoneParts(s, cfg.root, tombParts)
   }
 
   /** The pack frontier: the latest committed cursor snapshot —
@@ -1058,7 +1054,7 @@ object LivePipeline {
     * GC'd from the NEXT writer op — never inside the commit, so a
     * concurrent reader's listing stays readable (the [[BatchParts]]
     * fold protocol). A crash anywhere leaves either the staging dir
-    * incomplete (discarded on the next [[recoverCompaction]]) or
+    * incomplete (discarded on the next [[BatchParts.recoverFold]]) or
     * complete (committed then — safe at ANY later time because the
     * fold is a superset of exactly the partitions ≤ h it replaces,
     * and later batch ids are untouched). [[step]] recovers
@@ -1087,7 +1083,7 @@ object LivePipeline {
     // that id would collide with the replay's overwrite of the same
     // partition, erasing every earlier batch's dedup state (r12
     // review #1).
-    val lastCommitted = committedParts(s, s"${cfg.root}/cursors").lastOption.map(_._1)
+    val lastCommitted = BatchParts.committed(s, s"${cfg.root}/cursors").lastOption.map(_._1)
     // the three stores' folds are INDEPENDENT lifecycles over disjoint
     // dirs (recovery, staging write, commit rename — nothing orders one
     // store's fold against another's; a crash between folds already
@@ -1098,7 +1094,7 @@ object LivePipeline {
     // store's map tasks.
     runWave(for (kind <- Seq("exact", "bands", "ids")) yield { () =>
           val dir = s"${cfg.root}/$kind"
-          recoverCompaction(s, cfg.root, kind)
+          BatchParts.recoverFold(s, dir)
           val parts = BatchParts.effectiveParts(s, dir)
             .filter(p => lastCommitted.exists(p._1 <= _))
           // re-fold when there is history to fold — or when the lone fold
@@ -1141,26 +1137,17 @@ object LivePipeline {
     // listed just before a newer snapshot landed a full maintenance
     // cycle of grace, the same deferred-GC posture as the fold
     // protocol.
-    val cur = committedParts(s, s"${cfg.root}/cursors")
+    val cur = BatchParts.committed(s, s"${cfg.root}/cursors")
     if (cur.length > 2) {
-      val fs = new Path(cfg.root).getFileSystem(s.sparkContext.hadoopConfiguration)
+      val fs = Engine.fileSystem(s, new Path(cfg.root))
       cur.dropRight(2).foreach { case (_, p) => fs.delete(new Path(p), true); () }
     }
   }
 
-  /** Complete or discard an interrupted [[compact]] of one store
-    * (writer-side — see [[BatchParts]]' mode contract).
-    */
-  private def recoverCompaction(s: SparkSession, root: String, kind: String): Unit =
-    BatchParts.recoverFold(s, s"$root/$kind")
-
   private def part(root: String, kind: String, id: Long) = s"$root/$kind/batch=$id"
 
-  private def committedParts(s: SparkSession, dir: String): Seq[(Long, String)] =
-    BatchParts.committed(s, dir)
-
   private def committed(s: SparkSession, root: String, id: Long): Boolean =
-    committedParts(s, s"$root/cursors").exists(_._1 == id)
+    BatchParts.committed(s, s"$root/cursors").exists(_._1 == id)
 
   /** Union of a store's partitions committed STRICTLY BEFORE `ltBatch`
     * (state as of the previous commit), or an empty frame on a cold
@@ -1203,7 +1190,7 @@ object LivePipeline {
     * FULL per-(lang, shard) states, so only the latest one is read).
     */
   private def latestCursors(s: SparkSession, cfg: Config, ltBatch: Long): DataFrame = {
-    val dirs = committedParts(s, s"${cfg.root}/cursors").filter(_._1 < ltBatch)
+    val dirs = BatchParts.committed(s, s"${cfg.root}/cursors").filter(_._1 < ltBatch)
     if (dirs.isEmpty) s.createDataFrame(s.sparkContext.emptyRDD[Row], CursorSchema)
     else s.read.schema(CursorSchema).parquet(dirs.last._2)
   }
@@ -1285,9 +1272,16 @@ private[streaming] object BatchParts {
     */
   private val ExistsProbeMaxChildren = 256
 
+  /** `dir`'s FileSystem and immediate children (none when it is absent). */
+  private def listChildren(s: SparkSession, dir: String): (FileSystem, Seq[FileStatus]) = {
+    val p = new Path(dir)
+    val fs = Engine.fileSystem(s, p)
+    (fs, if (fs.exists(p)) fs.listStatus(p).toSeq else Nil)
+  }
+
   private def committedNames(s: SparkSession, dir: String): (Path, Set[String]) = {
     val raw = new Path(dir)
-    val fs = raw.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = Engine.fileSystem(s, raw)
     val p = fs.makeQualified(raw)
     if (!fs.exists(p)) return (p, Set.empty)
     val children = fs.listStatus(p).filter(_.isDirectory)
@@ -1307,10 +1301,14 @@ private[streaming] object BatchParts {
     (p, b.result())
   }
 
-  def committed(s: SparkSession, dir: String): Seq[(Long, String)] = {
-    val (p, names) = committedNames(s, dir)
-    names.toSeq.filter(_.startsWith("batch="))
-      .flatMap(n => n.stripPrefix("batch=").toLongOption
+  def committed(s: SparkSession, dir: String): Seq[(Long, String)] =
+    idsIn(committedNames(s, dir), "batch=")
+
+  /** The listed `<prefix><id>` names as `(id, path)` sorted by id. */
+  private def idsIn(listed: (Path, Set[String]), prefix: String): Seq[(Long, String)] = {
+    val (p, names) = listed
+    names.toSeq.filter(_.startsWith(prefix))
+      .flatMap(n => n.stripPrefix(prefix).toLongOption
         .map(id => (id, new Path(p, n).toString)))
       .sortBy(_._1)
   }
@@ -1334,10 +1332,17 @@ private[streaming] object BatchParts {
     * (h, gen). At most one survives [[gc]]; several can exist
     * transiently between a fold commit and the next writer op.
     */
-  def folds(s: SparkSession, dir: String): Seq[(Long, Long, String)] = {
-    val (p, names) = committedNames(s, dir)
-    names.toSeq.filter(_.startsWith("fold="))
-      .flatMap(n => parseHG(n.stripPrefix("fold="))
+  def folds(s: SparkSession, dir: String): Seq[(Long, Long, String)] =
+    hgsIn(committedNames(s, dir), "fold=")
+
+  /** The listed `<prefix><h>-<gen>` names as `(h, gen, path)` sorted by
+    * (h, gen).
+    */
+  private def hgsIn(listed: (Path, Set[String]),
+      prefix: String): Seq[(Long, Long, String)] = {
+    val (p, names) = listed
+    names.toSeq.filter(_.startsWith(prefix))
+      .flatMap(n => parseHG(n.stripPrefix(prefix))
         .map { case (h, g) => (h, g, new Path(p, n).toString) })
       .sortBy(t => (t._1, t._2))
   }
@@ -1367,10 +1372,7 @@ private[streaming] object BatchParts {
     * fold. One driver-side listing.
     */
   def foldBuckets(s: SparkSession, dir: String): Option[Long] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val names = fs.listStatus(p).toSeq.map(_.getPath.getName)
+    val names = listChildren(s, dir)._2.map(_.getPath.getName)
     names.collectFirst { case n if n.startsWith("_buckets-") =>
       n.stripPrefix("_buckets-").toLongOption.getOrElse(-1L)
     } match {
@@ -1490,7 +1492,7 @@ private[streaming] object BatchParts {
           .drop("_prev_key")
       }
     out.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = Engine.fileSystem(s, new Path(dir))
     fs.create(new Path(staging, s"_buckets-$b"), true).close()
   }
 
@@ -1499,17 +1501,11 @@ private[streaming] object BatchParts {
     * would rename a new fold onto a name a reader may hold).
     */
   def nextFoldGen(s: SparkSession, dir: String): Long = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val gens =
-      if (!fs.exists(p)) Seq.empty[Long]
-      else fs.listStatus(p).toSeq.map(_.getPath.getName).flatMap {
-        case n if n.startsWith("fold=") =>
-          parseHG(n.stripPrefix("fold=")).map(_._2)
-        case n if n.startsWith(".compact-") =>
-          parseHG(n.stripPrefix(".compact-")).map(_._2)
-        case _ => None
-      }
+    val gens = listChildren(s, dir)._2.map(_.getPath.getName).flatMap {
+      case n if n.startsWith("fold=") => parseHG(n.stripPrefix("fold=")).map(_._2)
+      case n if n.startsWith(".compact-") => parseHG(n.stripPrefix(".compact-")).map(_._2)
+      case _ => None
+    }
     gens.maxOption.map(_ + 1).getOrElse(0L)
   }
 
@@ -1521,7 +1517,7 @@ private[streaming] object BatchParts {
     * the fold is already committed (a recovery re-run) — tolerated.
     */
   def commitFold(s: SparkSession, dir: String, h: Long, gen: Long): Unit = {
-    val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = Engine.fileSystem(s, new Path(dir))
     val dest = new Path(s"$dir/fold=$h-$gen")
     val staging = new Path(stagingPath(dir, h, gen))
     if (!fs.rename(staging, dest) &&
@@ -1538,28 +1534,14 @@ private[streaming] object BatchParts {
     * maintenance cycle.
     */
   def effectiveParts(s: SparkSession, dir: String): Seq[(Long, String, Boolean)] = {
-    val (p, names) = committedNames(s, dir)
-    val batches = names.toSeq.filter(_.startsWith("batch="))
-      .flatMap(n => n.stripPrefix("batch=").toLongOption
-        .map(id => (id, new Path(p, n).toString)))
-      .sortBy(_._1)
-    val newest = names.toSeq.filter(_.startsWith("fold="))
-      .flatMap(n => parseHG(n.stripPrefix("fold="))
-        .map(hg => (hg, new Path(p, n).toString)))
-      .sortBy(_._1).lastOption
-    newest match {
-      case Some(((h, _), fp)) =>
+    val listed = committedNames(s, dir)
+    val batches = idsIn(listed, "batch=")
+    hgsIn(listed, "fold=").lastOption match {
+      case Some((h, _, fp)) =>
         (h, fp, true) +: batches.collect { case (id, bp) if id > h => (id, bp, false) }
       case None => batches.map { case (id, bp) => (id, bp, false) }
     }
   }
-
-  /** Effective part paths only — for stores whose batch and fold dirs
-    * carry identical data columns (every store here: the `batch` id is
-    * dir-name metadata, never a data column the serve paths read).
-    */
-  def effectiveDirs(s: SparkSession, dir: String): Seq[String] =
-    effectiveParts(s, dir).map(_._2)
 
   /** Is batch `id`'s state in the store — as its own committed dir, or
     * folded into a committed fold at/past it? (Streaming replays only
@@ -1585,28 +1567,22 @@ private[streaming] object BatchParts {
     * fold commits even though the superseded dirs still sit on disk
     * until the next writer op's GC.
     */
-  def dirCount(s: SparkSession, dir: String): Int = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).count { st =>
+  def dirCount(s: SparkSession, dir: String): Int =
+    listChildren(s, dir)._2.count { st =>
       val n = st.getPath.getName
       st.isDirectory && (n.startsWith("batch=") || n.startsWith("fold=") ||
         n.startsWith(".compact-") || n.startsWith(".rewrite-"))
     }
-  }
 
   /** WRITER-side deferred GC: with a newest committed fold `(h, gen)`,
     * drop every `batch=` dir with id ≤ h (committed or not — an id ≤ h
     * is folded state, so any dir under that id is a superseded replay
     * or crash debris) and every older `fold=` dir.
     */
-  def gc(s: SparkSession, dir: String): Unit = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
+  def gc(s: SparkSession, dir: String): Unit =
     folds(s, dir).lastOption.foreach { case (h, g, _) =>
-      fs.listStatus(p).toSeq.filter(_.isDirectory).foreach { st =>
+      val (fs, kids) = listChildren(s, dir)
+      kids.filter(_.isDirectory).foreach { st =>
         val n = st.getPath.getName
         val drop =
           (n.startsWith("batch=") &&
@@ -1618,7 +1594,6 @@ private[streaming] object BatchParts {
         if (drop) { fs.delete(st.getPath, true); () }
       }
     }
-  }
 
   /** WRITER-side recovery at every step/compact entry: [[gc]] what
     * PREVIOUS ops superseded, then commit a completed staging (crash
@@ -1631,10 +1606,8 @@ private[streaming] object BatchParts {
     */
   def recoverFold(s: SparkSession, dir: String): Unit = {
     gc(s, dir)
-    val p = new Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(".compact-"))
+    val (fs, kids) = listChildren(s, dir)
+    kids.filter(st => st.isDirectory && st.getPath.getName.startsWith(".compact-"))
       .foreach { st =>
         val raw = st.getPath.getName.stripPrefix(".compact-")
         // legacy `.compact-<m>` (the pre-generation format) migrates
@@ -1657,13 +1630,8 @@ private[streaming] object BatchParts {
     * writer op will commit ([[LivePipeline.status]] observability;
     * readers never touch stagings under this protocol).
     */
-  def pendingFold(s: SparkSession, dir: String): Option[(Long, String)] = {
-    val (p, names) = committedNames(s, dir)
-    names.toSeq.filter(_.startsWith(".compact-"))
-      .flatMap(n => parseHG(n.stripPrefix(".compact-"))
-        .map(hg => (hg._1, new Path(p, n).toString)))
-      .sortBy(_._1).lastOption
-  }
+  def pendingFold(s: SparkSession, dir: String): Option[(Long, String)] =
+    hgsIn(committedNames(s, dir), ".compact-").lastOption.map(t => (t._1, t._3))
 
   /** Single-partition REPLACE staging (`.rewrite-<id>` replaces exactly
     * `batch=<id>` — [[LivePipeline.vacuum]]), next to the FOLD staging
@@ -1676,20 +1644,15 @@ private[streaming] object BatchParts {
   /** Committed (`_SUCCESS`) rewrite stagings: `(id, path)`. Non-mutating
     * — the reader-side substitution source.
     */
-  def pendingRewrites(s: SparkSession, dir: String): Seq[(Long, String)] = {
-    val (p, names) = committedNames(s, dir)
-    names.toSeq.filter(_.startsWith(".rewrite-"))
-      .flatMap(n => n.stripPrefix(".rewrite-").toLongOption
-        .map(id => (id, new Path(p, n).toString)))
-      .sortBy(_._1)
-  }
+  def pendingRewrites(s: SparkSession, dir: String): Seq[(Long, String)] =
+    idsIn(committedNames(s, dir), ".rewrite-")
 
   /** WRITER-side: source-delete → rename for one committed rewrite
     * staging. Safe to call with the source already gone (crash between
     * delete and rename — recovery path).
     */
   def completeRewrite(s: SparkSession, dir: String, id: Long): Unit = {
-    val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = Engine.fileSystem(s, new Path(dir))
     val src = new Path(s"$dir/batch=$id")
     // both results CHECKED ([[commitFold]]'s discipline): vacuum
     // retires the tombstones right after these — a silently-failed
@@ -1710,10 +1673,8 @@ private[streaming] object BatchParts {
     * incomplete ones (the [[recoverFold]] contract for rewrites).
     */
   def recoverRewrites(s: SparkSession, dir: String): Unit = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(".rewrite-"))
+    val (fs, kids) = listChildren(s, dir)
+    kids.filter(st => st.isDirectory && st.getPath.getName.startsWith(".rewrite-"))
       .foreach { st =>
         // unparseable names are foreign debris — skipped, not fatal
         // (the parseHG leniency invariant, applied to rewrites)
@@ -1724,91 +1685,56 @@ private[streaming] object BatchParts {
       }
   }
 
-  // ── shared tombstone shelf ──
-  // LivePipeline, LiveIndex, and LiveVectors each keep a `tombstones/`
-  // store with identical append/read semantics. One spelling here (the
-  // BatchParts charter: the stores cannot diverge in crash behavior) —
-  // a fix to the retirement race or the append protocol lands once
-  // instead of being hand-replicated across three copies.
+  // ── tombstone shelf ──
+  // Right-to-be-forgotten ids of the three live stores (LivePipeline and
+  // LiveIndex by `doc_id`, LiveVectors by `vec_id`) live in one
+  // `<root>/tombstones/batch=<n>` store per root, spelled only here.
+  // Store reads anti-join [[tombstoneIds]]; a compaction or vacuum
+  // lists [[tombstoneParts]] ONCE, anti-joins exactly those parts, and
+  // retires exactly those parts after its rewrite commits — so a
+  // tombstone appended meanwhile survives to the next pass, and a crash
+  // before the retire leaves the mask in place (re-running applies an
+  // already-applied mask, a no-op).
 
   private def tombSchema(idCol: String): StructType =
     StructType(Seq(StructField(idCol, LongType)))
+
+  /** Committed tombstone parts under `root`, `(n, path)` sorted by n. */
+  def tombstoneParts(s: SparkSession, root: String): Seq[(Long, String)] =
+    committed(s, s"$root/tombstones")
 
   /** Append one tombstone partition under `root/tombstones/batch=<n>`
     * (n monotone; overwrite makes a retried append idempotent).
     */
   def appendTombstones(s: SparkSession, root: String, idCol: String,
       ids: Seq[Long]): Unit = {
-    val next = committed(s, s"$root/tombstones")
-      .lastOption.map(_._1 + 1).getOrElse(0L)
+    val next = tombstoneParts(s, root).lastOption.map(_._1 + 1).getOrElse(0L)
     import scala.jdk.CollectionConverters._
     s.createDataFrame(ids.map(Row(_)).asJava, tombSchema(idCol))
       .write.mode("overwrite").parquet(s"$root/tombstones/batch=$next")
   }
 
-  /** Every committed tombstone id as a one-column frame (empty frame,
-    * never a throw, on a storeless root).
+  /** Every committed tombstone id under `root` as a one-column `idCol`
+    * frame (empty, never a throw, on a storeless root).
     */
-  def readTombstones(s: SparkSession, root: String, idCol: String): DataFrame = {
-    val dirs = committed(s, s"$root/tombstones").map(_._2)
-    if (dirs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[Row], tombSchema(idCol))
-    else s.read.schema(tombSchema(idCol)).parquet(dirs: _*)
-  }
+  def tombstoneIds(s: SparkSession, root: String, idCol: String): DataFrame =
+    tombstoneIds(s, root, idCol, tombstoneParts(s, root))
 
-  /** Record that a committed fold PHYSICALLY applied every tombstone
-    * partition with id ≤ `upTo`. The marker is an empty file
-    * `_tomb_applied-<upTo>` inside the tombstones dir — not `batch=`-
-    * named, so shelf listings ignore it. Write-then-clean: a crash
-    * between leaves extra lower markers whose max still reads right.
+  /** The ids of exactly `parts` — the listing a compaction or vacuum
+    * took at entry and will hand to [[retireTombstoneParts]].
     */
-  def markTombstonesApplied(s: SparkSession, root: String, upTo: Long): Unit = {
-    val dir = new Path(s"$root/tombstones")
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    fs.create(new Path(dir, s"_tomb_applied-$upTo"), true).close()
-    fs.listStatus(dir).toSeq.map(_.getPath).foreach { p =>
-      val n = p.getName
-      if (n.startsWith("_tomb_applied-") &&
-          n.stripPrefix("_tomb_applied-").toLongOption.exists(_ < upTo)) {
-        fs.delete(p, false); ()
-      }
-    }
-  }
+  def tombstoneIds(s: SparkSession, root: String, idCol: String,
+      parts: Seq[(Long, String)]): DataFrame =
+    if (parts.isEmpty) s.createDataFrame(s.sparkContext.emptyRDD[Row], tombSchema(idCol))
+    else s.read.schema(tombSchema(idCol)).parquet(parts.map(_._2): _*)
 
-  /** Highest applied-marker value, Long.MinValue when none. */
-  def appliedTombstoneHorizon(s: SparkSession, root: String): Long = {
-    val dir = new Path(s"$root/tombstones")
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Long.MinValue
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_tomb_applied-"))
-      .flatMap(_.stripPrefix("_tomb_applied-").toLongOption)
-      .maxOption.getOrElse(Long.MinValue)
-  }
-
-  /** Are there tombstone partitions no committed fold has applied yet?
-    * The compaction trigger: an applied shelf does not force a
-    * store-wide re-fold on every maintenance pass.
+  /** Delete exactly `parts` — call only after the fold or rewrite that
+    * anti-joined them has committed.
     */
-  def hasUnappliedTombstones(s: SparkSession, root: String): Boolean =
-    committed(s, s"$root/tombstones").lastOption
-      .exists(_._1 > appliedTombstoneHorizon(s, root))
-
-  /** Delete APPLIED tombstone partitions (id ≤ the applied marker),
-    * un-burning those ids for re-admission. EXPLICIT maintenance op
-    * with a quiescence precondition the store itself cannot check:
-    * run it only when the feeding stream has no pending replay (every
-    * offered batch committed). Retiring under an in-flight replay
-    * would let the replayed batch re-admit forgotten content — the
-    * step-side anti-join masks arrivals only while the tombstone
-    * exists, and a batch that crashed before its commit replays AFTER
-    * a compaction folded the forgotten rows out.
-    */
-  def retireTombstones(s: SparkSession, root: String): Unit = {
-    val applied = appliedTombstoneHorizon(s, root)
-    val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-    committed(s, s"$root/tombstones").filter(_._1 <= applied)
-      .foreach { case (_, p) => fs.delete(new Path(p), true); () }
+  def retireTombstoneParts(s: SparkSession, root: String,
+      parts: Seq[(Long, String)]): Unit = {
+    val fs = Engine.fileSystem(s, new Path(root))
+    parts.foreach { case (_, p) => fs.delete(new Path(p), true); () }
   }
 }
+

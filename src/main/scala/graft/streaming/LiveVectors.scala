@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
-import graft.Cols
+import graft.{Cols, Engine}
 import graft.operators.Similarity
 
 /** Streaming ANN-index maintenance: the n2 sign-LSH serving path with
@@ -91,7 +91,7 @@ object LiveVectors {
     */
   def ensurePlanes(planes: DataFrame, cfg: Config): Unit = {
     val dir = new Path(s"${cfg.root}/planes")
-    val fs = dir.getFileSystem(planes.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = Engine.fileSystem(planes.sparkSession, dir)
     if (!fs.exists(new Path(dir, "_SUCCESS"))) {
       val hids = planes.select("hid").collect().map(_.getLong(0)).sorted.toSeq
       require(hids == (1L to NumPlanes),
@@ -148,7 +148,8 @@ object LiveVectors {
         deduped.join(matched, Seq("vec_id"), "left_anti")
       }
     val fresh = dropped
-      .join(broadcast(tombstones(s, cfg)), Seq("vec_id"), "left_anti")
+      .join(broadcast(BatchParts.tombstoneIds(s, cfg.root, "vec_id")),
+        Seq("vec_id"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // a batch whose arrivals are all already indexed writes nothing
@@ -163,31 +164,19 @@ object LiveVectors {
     } finally { fresh.unpersist(); () }
   }
 
-  private val TombSchema = StructType(Seq(StructField("vec_id", LongType)))
-
-  /** Right-to-be-forgotten for the vector index: tombstoned vec_ids
-    * leave every [[topK]] result immediately (a broadcast anti-join in
-    * [[index]]), and [[compact]] removes their rows physically and
-    * retires the applied tombstone partitions. Like [[LiveIndex]] and
+  /** Right-to-be-forgotten for the vector index: vec_ids go on the
+    * shared [[BatchParts]] tombstone shelf and leave every [[topK]]
+    * result immediately (a broadcast anti-join in [[index]]), and
+    * [[compact]] removes their rows physically and retires the applied
+    * tombstone partitions. Like [[LiveIndex]] and
     * unlike the dedup stores, an index SERVES content — forgetting
     * must actually empty the shelf. A re-arrival of a forgotten
     * vec_id is dropped until a compaction applies the tombstones
     * (the store row still exists, masked); after retirement the id
     * can be indexed anew.
     */
-  def forget(s: SparkSession, cfg: Config, vecIds: Seq[Long]): Unit = {
-    val next = BatchParts.committed(s, s"${cfg.root}/tombstones")
-      .lastOption.map(_._1 + 1).getOrElse(0L)
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(vecIds.map(Row(_)).asJava, TombSchema)
-      .write.mode("overwrite").parquet(s"${cfg.root}/tombstones/batch=$next")
-  }
-
-  private def tombstones(s: SparkSession, cfg: Config): DataFrame = {
-    val dirs = BatchParts.committed(s, s"${cfg.root}/tombstones").map(_._2)
-    if (dirs.isEmpty) s.createDataFrame(s.sparkContext.emptyRDD[Row], TombSchema)
-    else s.read.schema(TombSchema).parquet(dirs: _*)
-  }
+  def forget(s: SparkSession, cfg: Config, vecIds: Seq[Long]): Unit =
+    BatchParts.appendTombstones(s, cfg.root, "vec_id", vecIds)
 
   /** The index as one multi-path relation over the effective parts
     * (the newest committed fold plus the batches past its horizon —
@@ -197,7 +186,8 @@ object LiveVectors {
     * next writer op. Tombstoned vec_ids are masked out ([[forget]]).
     */
   def index(s: SparkSession, cfg: Config): DataFrame =
-    rawIndex(s, cfg).join(broadcast(tombstones(s, cfg)), Seq("vec_id"), "left_anti")
+    rawIndex(s, cfg).join(broadcast(BatchParts.tombstoneIds(s, cfg.root, "vec_id")),
+      Seq("vec_id"), "left_anti")
 
   private def rawIndex(s: SparkSession, cfg: Config): DataFrame =
     rawIndexFrom(s, cfg, BatchParts.effectiveParts(s, s"${cfg.root}/sigs"))
@@ -230,32 +220,36 @@ object LiveVectors {
     * `_SUCCESS` IS the batch commit marker (single store), so any
     * committed dir is foldable — a crashed step leaves an uncommitted
     * dir this listing never sees, and its replay overwrites only that
-    * dir. [[step]] completes interrupted folds before reading.
+    * dir. [[step]] completes interrupted folds before reading. The
+    * fold applies and retires [[forget]]'s tombstones through the
+    * [[BatchParts]] tombstone shelf.
     */
   def compact(s: SparkSession, cfg: Config): Unit = {
     val dir = s"${cfg.root}/sigs"
     BatchParts.recoverFold(s, dir)
     val parts = BatchParts.effectiveParts(s, dir)
     // the fold also applies forget()'s tombstones physically and
-    // retires them AFTER the fold commits (a crash before the commit
-    // leaves them in place, still masking; the re-run's anti-join on
-    // the already-clean fold is a no-op). A tombstone-only fold keeps
-    // the horizon and bumps the generation — committed under a fresh
-    // fold= name, never overwriting the dir readers are on.
-    val tombParts = BatchParts.committed(s, s"${cfg.root}/tombstones")
+    // retires exactly the parts it anti-joined, AFTER the fold commits
+    // (a crash before the commit leaves them in place, still masking;
+    // the re-run's anti-join on the already-clean fold is a no-op). No
+    // fold, no retirement: on an empty store a tombstone must keep
+    // masking the forgotten id's later arrival. A tombstone-only fold
+    // keeps the horizon and bumps the generation — committed under a
+    // fresh fold= name, never overwriting the dir readers are on.
+    val tombParts = BatchParts.tombstoneParts(s, cfg.root)
     if (parts.length > 1 || (parts.nonEmpty && tombParts.nonEmpty)) {
       val h = parts.last._1
       val gen = BatchParts.nextFoldGen(s, dir)
       rawIndexFrom(s, cfg, parts)
         .dropDuplicates("vec_id")
-        .join(broadcast(tombstones(s, cfg)), Seq("vec_id"), "left_anti")
+        .join(broadcast(BatchParts.tombstoneIds(s, cfg.root, "vec_id", tombParts)),
+          Seq("vec_id"), "left_anti")
         .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(BatchParts.stagingPath(dir, h, gen))
       BatchParts.commitFold(s, dir, h, gen)
+      BatchParts.retireTombstoneParts(s, cfg.root, tombParts)
     }
-    val fs = new Path(cfg.root).getFileSystem(s.sparkContext.hadoopConfiguration)
-    tombParts.foreach { case (_, p) => fs.delete(new Path(p), true); () }
   }
 
   private def ad(a: Array[Float]) =

@@ -1024,8 +1024,7 @@ class StreamingSpec extends AnyFunSuite {
     spark.read.schema(pschema).parquet(s"$pdir/batch=1")
       .filter(col("doc_id") =!= 200)
       .write.mode("overwrite").parquet(s"$pdir/.rewrite-1")
-    val fs = new org.apache.hadoop.fs.Path(pdir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Engine.fileSystem(spark, new org.apache.hadoop.fs.Path(pdir))
     assert(fs.delete(new org.apache.hadoop.fs.Path(s"$pdir/batch=1"), true))
     val subst = graft.streaming.LivePipeline.packedOutput(spark, cfg)
       .filter(col("doc_id") === 201).collect()
@@ -1045,6 +1044,37 @@ class StreamingSpec extends AnyFunSuite {
     // idempotence: a second vacuum with nothing to do changes nothing
     graft.streaming.LivePipeline.vacuum(spark, cfg)
     assert(packedIds() === Set(1L, 2L, 103L, 201L, 300L))
+  }
+
+  test("live stores resolve their FileSystem through the session conf") {
+    import spark.implicits._
+    // the stub is bound with spark.conf.set alone, as a deployment's
+    // session-level s3a settings are; the bucket is one no other test
+    // uses, because Hadoop caches a FileSystem per scheme and authority
+    val local = java.nio.file.Files.createTempDirectory("graft-s3a-stores").toString
+    spark.conf.set("fs.s3a.impl", classOf[StubS3aFileSystem].getName)
+    spark.conf.set("mapreduce.outputcommitter.factory.scheme.s3a", "")
+    try {
+      val root = s"s3a://graft-session-conf-stores$local"
+      val idx = graft.streaming.LiveIndex.Config(s"$root/index")
+      graft.streaming.LiveIndex.step(Seq((1L, "spark merge window"),
+        (2L, "spark other words")).toDF("doc_id", "text"), 0L, idx)
+      graft.streaming.LiveIndex.step(Seq((3L, "spark again")).toDF("doc_id", "text"), 1L, idx)
+      graft.streaming.LiveIndex.forget(spark, idx, Seq(2L))
+      graft.streaming.LiveIndex.compact(spark, idx)
+      assert(graft.streaming.LiveIndex.bm25(spark, idx, Seq("spark"), 5)
+        .collect().map(_.getAs[Long]("doc_id")).toSet === Set(1L, 3L))
+      val cfg = graft.streaming.LivePipeline.Config(s"$root/intake")
+      val text = (1 to 36).map(j => s"alefterm$j").mkString(" ") + " the alef of this is high"
+      graft.streaming.LivePipeline.step(Seq(LDoc(1, "en", text)).toDF(), 0L, cfg)
+      assert(graft.streaming.LivePipeline.packedOutput(spark, cfg).count() === 1L)
+      graft.streaming.LivePipeline.forget(spark, cfg, Seq(1L))
+      graft.streaming.LivePipeline.vacuum(spark, cfg)
+      assert(graft.streaming.LivePipeline.packedOutput(spark, cfg).count() === 0L)
+    } finally {
+      spark.conf.unset("fs.s3a.impl")
+      spark.conf.unset("mapreduce.outputcommitter.factory.scheme.s3a")
+    }
   }
 
   test("live vectors: streamed index serves the same top-k as a batch-built bucket scan") {
@@ -1168,6 +1198,26 @@ class StreamingSpec extends AnyFunSuite {
     assert(new java.io.File(s"$root/tombstones").listFiles() == null ||
       !new java.io.File(s"$root/tombstones").listFiles().exists(_.getName.startsWith("batch=")))
     assert(!topIds().contains(gone) && topIds().take(9) === expected.tail.map(_._1).toSeq)
+  }
+
+  test("live vectors: compact on an empty store keeps the tombstones it never applied") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-live-vec-empty").toString
+    val cfg = graft.streaming.LiveVectors.Config(root)
+    graft.streaming.LiveVectors.ensurePlanes((1L to 8L).map(h =>
+      (h, Array.tabulate(4)(i => if ((h + i) % 3 == 0) 1f else -1f))).toDF("hid", "hv"), cfg)
+    // the id is forgotten before it ever arrives: no sigs part exists,
+    // so compact folds nothing and must retire nothing
+    graft.streaming.LiveVectors.forget(spark, cfg, Seq(7L))
+    graft.streaming.LiveVectors.compact(spark, cfg)
+    graft.streaming.LiveVectors.step(Seq(VRow(7L, Array(1f, 2f, 3f, 4f), 0),
+      VRow(8L, Array(4f, 3f, 2f, 1f), 1)).toDF(), 0L, cfg)
+    assert(graft.streaming.LiveVectors.index(spark, cfg)
+      .collect().map(_.getAs[Long]("vec_id")).toSet === Set(8L),
+      "a tombstone no fold applied must keep masking the forgotten id")
+    assert(spark.read.parquet(s"$root/sigs/batch=0").select("vec_id")
+      .collect().map(_.getLong(0)).toSet === Set(8L),
+      "the arrival of a still-tombstoned id must be dropped, not stored")
   }
 
   test("live counts: streamed partials re-aggregate to the batch answer; d12 df parity") {

@@ -18,10 +18,13 @@ import org.apache.hadoop.util.Progressable
   * Registered per-test via `fs.s3a.impl`, this drives the collector's
   * REAL code paths — `Deploy.archiveRoot`'s bare-bucket → `s3a://`
   * mapping, `Archive.pathFor` key fan-out, `ArchiveTail`'s existence
-  * probes, Spark's binaryFile reads, and the sink's FS-agnostic side
-  * files — through an s3a-schemed URI end to end. Production swaps in
-  * the real `S3AFileSystem` purely by classpath + credentials
-  * (MIGRATION.md's config recipe); none of the code under test changes.
+  * probes, Spark's binaryFile reads, the sink's FS-agnostic side
+  * files, and the live stores' (`LivePipeline`, `LiveIndex`,
+  * `LiveVectors`) listings, markers, renames and tombstone shelf — all
+  * resolved through `Engine.fileSystem` — through an s3a-schemed URI
+  * end to end. Production swaps in the real `S3AFileSystem` purely by
+  * classpath + credentials (MIGRATION.md's config recipe); none of the
+  * code under test changes.
   */
 class StubS3aFileSystem extends FileSystem {
   private val local = new RawLocalFileSystem

@@ -28,7 +28,7 @@ class BatchPartsSpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.spark
 
   private def fs(dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.Engine.fileSystem(spark, new Path(dir))
 
   /** A store of 3 committed partitions holding rows 0..8 (3 each). */
   private def mkStore(): String = {
@@ -362,6 +362,29 @@ class BatchPartsSpec extends AnyFunSuite {
     // tombstones were applied+retired by the fold: the ids re-index
     LiveIndex.step(Seq((1L, "spark merge window")).toDF("doc_id", "text"), 2L, cfg)
     assert(LiveIndex.bm25(spark, cfg, Seq("spark", "merge"), 5).count() === 1)
+  }
+
+  test("tombstone shelf: retire removes only the parts listed at entry") {
+    import spark.implicits._
+    // a compaction or vacuum lists the shelf once, applies that listing,
+    // and retires exactly it: a forget landing in between survives and
+    // keeps masking its id until the next pass
+    val root = java.nio.file.Files.createTempDirectory("graft-tomb-shelf").toString
+    val cfg = LiveIndex.Config(root)
+    LiveIndex.step(Seq((1L, "spark one"), (2L, "spark two"), (3L, "spark three"))
+      .toDF("doc_id", "text"), 0L, cfg)
+    LiveIndex.forget(spark, cfg, Seq(1L))
+    val listed = BatchParts.tombstoneParts(spark, root)
+    LiveIndex.forget(spark, cfg, Seq(2L))
+    BatchParts.retireTombstoneParts(spark, root, listed)
+    val left = BatchParts.tombstoneParts(spark, root)
+    assert(left.map(_._1) === Seq(1L), "only the listed part is retired")
+    assert(BatchParts.tombstoneIds(spark, root, "doc_id", left)
+      .collect().map(_.getLong(0)).toSeq === Seq(2L))
+    val served = LiveIndex.bm25(spark, cfg, Seq("spark"), 5)
+      .collect().map(_.getAs[Long]("doc_id")).toSet
+    assert(!served.contains(2L), "the surviving tombstone still masks its id")
+    assert(served.contains(3L))
   }
 
   test("fold and rewrite pending at once: recovery handles both") {
