@@ -2,11 +2,12 @@ package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.SparkConf
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.pipeline.{Extract, ExtractConfig, Serve}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import graft.pipeline.{Extract, ExtractConfig, Schemas, Serve}
 import graft.sinks.CheckpointSink
 import graft.sources.Archive
 import graft.streaming.ArchiveTail
+import graft.xdr.Stellar
 
 /** User-facing facade: everything a user of the reference service runs
   * today, as one object (SURVEY.md §3 entry points).
@@ -101,13 +102,25 @@ object Engine {
       cfg)
 
   /** Extraction over checkpoint `seq` of the archive at `root`: the one
-    * per-checkpoint read both ingest runners commit.
+    * per-checkpoint read both ingest runners commit. One task reads the
+    * three files of the triple, gunzips and decodes them, and joins them
+    * in memory ([[Extract.checkpointRows]]), so committing a checkpoint
+    * costs its sink one Spark job over a flat plan of
+    * [[graft.pipeline.Schemas.operations]] rows.
     */
   def extract(spark: SparkSession, root: String, seq: Long, passphrase: String,
-      cfg: ExtractConfig): DataFrame = {
-    val Seq(txs, ledgers, results) = Archive.triple(root, seq)
-    extract(spark, Seq(txs), Seq(ledgers), Seq(results), passphrase, cfg)
-  }
+      cfg: ExtractConfig): DataFrame =
+    spark.read.format("binaryFile").load(Archive.triple(root, seq): _*)
+      .select("path", "content").coalesce(1)
+      .mapPartitions { files =>
+        val raw = files.map(f =>
+          Archive.category(f.getString(0)) -> Archive.gunzip(f.getAs[Array[Byte]](1))).toMap
+        Extract.checkpointRows(
+          Stellar.decodeTxEntries(raw("transactions"), passphrase),
+          Stellar.decodeLedgerEntries(raw("ledger")),
+          Stellar.decodeResultEntries(raw("results")),
+          cfg)
+      }(Encoders.row(Schemas.operations))
 
   /** Q1: GET /payments?source=&limit= over a collected payments table. */
   def paymentsBySource(payments: DataFrame, source: String, limit: Int = 20): DataFrame =

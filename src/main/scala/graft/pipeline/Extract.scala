@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import java.sql.Timestamp
+import java.util.regex.Pattern
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
 /** The reference's procedural per-file loop (python/main.py:126-199)
@@ -14,11 +16,13 @@ import org.apache.spark.sql.functions._
   *        ──▶ per-type filters + projections ──▶ unionByName
   * }}}
   *
-  * Scale notes: both build sides are bounded (64 ledgers / their txs per
-  * archive file) so the joins broadcast; the plan is otherwise a single
-  * narrow pipeline per input split — no shuffle at all — and Catalyst
-  * prunes the nested schema down to the ~15 consumed paths
-  * (spark.sql.optimizer.nestedSchemaPruning.enabled is on by default).
+  * Scale notes: this plan is the batch and SQL surface's spelling, for
+  * inputs of any size: the dimension joins broadcast and the plan is
+  * otherwise one narrow pipeline, with the nested schema pruned to the
+  * ~15 consumed paths. The ingest runners commit one checkpoint at a
+  * time, whose three files are small, so they read it through
+  * [[checkpointRows]] instead: the same rows from in-task lookups, with
+  * no exchange and no nested plan to build per checkpoint.
   *
   * Fidelity decisions (SURVEY.md §7.4):
   *  - zip truncation: `zip(ops, results.get('results', []))`
@@ -172,6 +176,60 @@ object Extract {
           .otherwise(col("res.tr.createAccountResult")).as("op_status"),
         col("hash"),
         timestamp_seconds(col("closeTime")).as("time"))
+  }
+
+  /** One checkpoint's [[operations]] rows, joined in memory: the
+    * reference's close-time and tx-result dicts (python/main.py:108-123)
+    * as multimaps, so a duplicate ledger or tx hash multiplies rows
+    * exactly as the left joins of [[operations]] do. Rows follow
+    * [[Schemas.operations]]; every fidelity decision above holds:
+    *  - a tx without a result row, or whose result has no op list,
+    *    emits nothing (the NULL zip of the plan);
+    *  - ops and result legs zip to the shorter side;
+    *  - a null result leg yields NULL op_status;
+    *  - a missing ledger row leaves `time` NULL.
+    */
+  def checkpointRows(
+      txs: Seq[TxHistoryEntry],
+      ledgers: Seq[LedgerEntry],
+      results: Seq[TxResultEntry],
+      cfg: ExtractConfig): Iterator[Row] = {
+    val closeTimes = ledgers.groupMap(_.header.ledgerSeq)(l =>
+      new Timestamp(l.header.scpValue.closeTime * 1000L))
+    val txResults = results.flatMap(_.txResultSet.results).groupMap(_.transactionHash)(_.result)
+    val appMemo: Option[String] => Boolean = cfg.appId match {
+      case Some(app) =>
+        val re = Pattern.compile(cfg.appIdRegex) // RLIKE: find(), not matches()
+        _.exists(m => re.matcher(m).find() && m.split("-", -1).lift(1).contains(app))
+      case None => _ => true
+    }
+    for {
+      entry <- txs.iterator
+      t <- entry.txSet.txs.iterator if appMemo(t.tx.memoText)
+      time <- closeTimes.getOrElse(entry.ledgerSeq, Seq(null)).iterator
+      r <- txResults.getOrElse(t.hash, Nil).iterator
+      legs <- r.result.results.iterator
+      ((op, res), pos) <- t.tx.operations.iterator.zip(legs).zipWithIndex
+      body = op.body
+      isPayment = body.opType == 1 && body.paymentOp.exists(_.asset.alphaNum4.exists(a =>
+        a.assetCode == cfg.assetCode && a.issuer.ed25519 == cfg.assetIssuer))
+      if isPayment || body.opType == 0
+    } yield {
+      val src = op.sourceAccount.headOption.fold(t.tx.sourceAccount.ed25519)(_.ed25519)
+      val tr = Option(res).map(_.tr)
+      if (isPayment) {
+        val p = body.paymentOp.get
+        Row("payment", src, p.destination.ed25519, p.amount, null, t.tx.memoText.orNull,
+          t.tx.fee, r.feeCharged, pos, r.result.code,
+          tr.flatMap(_.paymentResult).orNull, t.hash, time)
+      } else {
+        val c = body.createAccountOp
+        Row("creation", src, c.map(_.destination.ed25519).orNull, null,
+          c.map[Any](_.startingBalance).orNull, t.tx.memoText.orNull,
+          t.tx.fee, r.feeCharged, pos, r.result.code,
+          tr.flatMap(_.createAccountResult).orNull, t.hash, time)
+      }
+    }
   }
 
   /** Kin3 fidelity variant (SURVEY.md §7.4): the reference stores raw

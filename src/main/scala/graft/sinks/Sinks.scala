@@ -3,8 +3,8 @@ package graft.sinks
 import java.sql.Connection
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 import graft.sources.Archive
 
 /** Sink contract mirroring the reference's storage-adapter ABC
@@ -37,8 +37,9 @@ trait CheckpointSink {
   * checkpoint rewrites its own `ledger=` partition (INSERT OVERWRITE
   * semantics) before the marker lands — the manual rollback/compensating
   * deletes of the reference (s3_storage_adapter.py:80-108) disappear.
-  * Empty checkpoints write the marker only (P4,
-  * s3_storage_adapter.py:201-203).
+  * Empty checkpoints leave the marker only (P4,
+  * s3_storage_adapter.py:201-203). Part files are header-less CSV, the
+  * reference's layout.
   *
   * ALL I/O — the Spark partition write and the marker/pointer/probe
   * side-files — goes through the Hadoop `FileSystem` resolved from
@@ -48,7 +49,7 @@ trait CheckpointSink {
   * medium, python/adapters/s3_storage_adapter.py:27-78). `java.nio`
   * would silently only ever work on local disk.
   */
-final class PartitionedFileSink(root: String, format: String = "csv") extends CheckpointSink {
+final class PartitionedFileSink(root: String) extends CheckpointSink {
   private def seqStr(seq: Long) = f"$seq%08x"
   private val rootPath = new HPath(root)
   private val markers = new HPath(rootPath, "completed_ledgers")
@@ -84,25 +85,21 @@ final class PartitionedFileSink(root: String, format: String = "csv") extends Ch
 
   override def save(ops: DataFrame, seq: Long): Unit = {
     val s = seqStr(seq)
-    // persist around the emptiness check + write: both actions would
-    // otherwise re-run the whole decode/join/filter plan (a checkpoint
-    // is <=64 ledgers of extract — caching it is cheap, re-deriving it
-    // is the hot ingest path's dominant cost). The `ledger` value lives
-    // ONLY in the directory name (Hive partition discovery restores it
-    // on read): writing it as a data column too would duplicate the
-    // partition column — parquet reads reject that outright, and the
-    // reference's 13-column CSV layout has no ledger column.
-    val cached = ops.persist()
-    try {
-      if (!cached.isEmpty) {
-        val w = cached.write.mode("overwrite")
-        val target = new HPath(rootPath, s"ledgers/ledger=$s").toString
-        (if (format == "csv") w.option("header", "false") else w)
-          .format(format)
-          .save(target)
-      }
-    } finally { cached.unpersist(); () }
     val f = fs
+    // One job: the write counts its own rows, and an empty checkpoint's
+    // partition is removed after it. The `ledger` value lives ONLY in the
+    // directory name (Hive partition discovery restores it on read):
+    // writing it as a data column too would duplicate the partition
+    // column, and the reference's 13-column CSV layout has none. A frame
+    // with no columns is a marker-only commit: a file source cannot
+    // write it.
+    if (ops.columns.nonEmpty) {
+      val target = new HPath(rootPath, s"ledgers/ledger=$s")
+      val written = Observation()
+      ops.observe(written, count(lit(1)).as("rows"))
+        .write.mode("overwrite").option("header", "false").csv(target.toString)
+      if (written.get.get("rows").contains(0L)) f.delete(target, true)
+    }
     f.mkdirs(markers)
     writeFile(f, new HPath(markers, s), Array.emptyByteArray)
     writeFile(f, lastFile, s.getBytes("UTF-8"))

@@ -15,10 +15,12 @@ import graft.xdr.Stellar
   * `hexseq` is the 8-hex-digit checkpoint sequence (stride 64) and
   * XX/YY/ZZ are its first three nibble pairs (python/main.py:76-105).
   *
-  * Scale: one archive file ≈ one input split; decode runs in
-  * mapPartitions on executors (no driver-side parsing), so backfill
-  * throughput scales linearly with executor count. Sequence math is
-  * driver-side planning only.
+  * Scale: gunzip and decode run on the executors, never on the driver;
+  * sequence math is driver-side planning only. The category readers
+  * below read one input split per archive file; an ingest runner reads
+  * a checkpoint's whole triple in one task instead
+  * ([[graft.Engine.extract]]), since its three files are small and
+  * joined to each other.
   */
 object Archive {
 
@@ -58,6 +60,12 @@ object Archive {
   /** Checkpoint `seq`'s three files: transactions, ledger, results. */
   def triple(root: String, seq: Long): Seq[String] =
     Seq("transactions", "ledger", "results").map(pathFor(root, _, seq))
+
+  /** The category of an archive file path: its name up to the first `-`
+    * ("transactions", "ledger" or "results").
+    */
+  def category(path: String): String =
+    path.substring(path.lastIndexOf('/') + 1).takeWhile(_ != '-')
 
   /** A checkpoint is readable once all three of its files exist; every
     * ingest runner stops at the first checkpoint that is not.

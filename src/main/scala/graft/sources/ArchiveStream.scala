@@ -20,9 +20,10 @@ import graft.Engine
   *
   * The source carries offsets only: each emitted row is the `seq` of
   * one available checkpoint, and its reader opens no file. Consumers
-  * read the triple through [[Archive]]'s binaryFile readers, which
-  * gunzip and decode it on the executors under the session's Hadoop
-  * conf — the same read [[graft.streaming.ArchiveTail]] commits.
+  * read the triple through [[graft.Engine.extract]], one binaryFile
+  * task that gunzips, decodes and joins it on an executor under the
+  * session's Hadoop conf — the same read
+  * [[graft.streaming.ArchiveTail]] commits.
   *
   * Usage:
   * {{{
@@ -149,11 +150,12 @@ object ArchiveReaderFactory extends PartitionReaderFactory {
 
 /** Driver for the custom source: per micro-batch, only the batch's
   * checkpoint sequences reach the driver (a handful of longs); each
-  * checkpoint is then read, decoded and extracted on the executors by
+  * checkpoint is then read, decoded and joined in one executor task by
   * `Engine.extract` — the same per-checkpoint read
   * [[graft.streaming.ArchiveTail]] commits — and committed through a
   * [[graft.sinks.CheckpointSink]] in strict sequence order (replays are
-  * idempotent per seq; Spark's offset log provides resume).
+  * idempotent per seq; Spark's offset log provides resume). With the
+  * file sink each checkpoint costs one Spark job, its write.
   */
 object ArchiveStreamRunner {
   import org.apache.spark.sql.streaming.Trigger
@@ -161,7 +163,7 @@ object ArchiveStreamRunner {
   import graft.sinks.CheckpointSink
 
   /** Extract + commit one micro-batch (the shared foreachBatch body of
-    * both runners).
+    * both runners): one `save` per checkpoint, in sequence order.
     */
   private def drainBatch(batch: DataFrame, root: String, passphrase: String,
       cfg: ExtractConfig, sink: CheckpointSink): Unit =

@@ -113,10 +113,10 @@ final class ValidatingAlerts(transports: Seq[AlertTransport]) extends IngestAler
 /** Per-commit ingest observability, the hook form of the reference's
   * post-save logging ("Successfully stored the data of file: X",
   * python/adapters/hc_storage_adapter.py:47-58 — which also knows how
-  * many payments/creations it just stored). Bound to Noop by default:
-  * the counts cost one extra aggregation pass over the checkpoint's
-  * (small, ≤64-ledger) extract, so the engine only pays it when a
-  * deployment actually wires the hook to its metrics system.
+  * many payments/creations it just stored). Bound to Noop by default.
+  * The counts are observed on the job the sink's save runs, so they
+  * cost no extra pass; a save that runs no job (a JDBC sink skipping an
+  * already-committed checkpoint) reports 0 and 0.
   */
 trait IngestMetrics {
   /** A checkpoint committed: `seq` plus its payment/creation row counts. */
@@ -124,6 +124,6 @@ trait IngestMetrics {
 }
 
 object IngestMetrics {
-  /** Default: no metrics bound (and no counting pass run). */
+  /** Default: no metrics bound. */
   object Noop extends IngestMetrics
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count_if}
 import graft.Engine
 import graft.pipeline.ExtractConfig
 import graft.sinks.CheckpointSink
@@ -16,10 +17,11 @@ import graft.sources.Archive
   * (poll + retry, :88-105); the sink's `save(df, seq)` is the atomic
   * commit (K2/K4).
   *
-  * Scale: each iteration reads its triple through `Engine.extract`
-  * (binaryFile reads, gunzip and decode on the executors) — the same
-  * per-checkpoint read the Structured Streaming runners commit. The
-  * tail itself is inherently sequential because the reference's offset
+  * Scale: each iteration reads its triple through `Engine.extract` —
+  * one task gunzips, decodes and joins the three files on an executor,
+  * the same per-checkpoint read the Structured Streaming runners commit
+  * — so a checkpoint costs one Spark job, the sink's own. The tail
+  * itself is inherently sequential because the reference's offset
   * contract (one `lastfile` pointer) is.
   */
 final class ArchiveTail(
@@ -75,21 +77,17 @@ final class ArchiveTail(
   /** Process exactly one checkpoint if its triple is present. */
   def processOne(seq: Long): Boolean = {
     if (!Archive.available(fs, root, seq)) return false
-    val ops = Engine.extract(spark, root, seq, passphrase, cfg)
-    if (metrics ne IngestMetrics.Noop) {
-      // per-commit counts (hc_storage_adapter.py:47-58 logging parity).
-      // Persist so the counting agg reuses the partitions the save
-      // already computed instead of re-running gunzip + XDR decode +
-      // extraction from the raw archive bytes a second time.
-      val cached = ops.persist()
-      try {
-        sink.save(cached, seq)
-        val counts = cached.groupBy("type").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        metrics.onCommit(seq,
-          counts.getOrElse("payment", 0L), counts.getOrElse("creation", 0L))
-      } finally { cached.unpersist(); () }
-    } else sink.save(ops, seq)
+    // per-commit counts (hc_storage_adapter.py:47-58 logging parity),
+    // observed on the job the sink's save runs. A sink that runs no job
+    // (a JDBC sink skipping a committed seq) leaves them unset, so they
+    // are read without waiting and report 0.
+    val counts = Observation()
+    sink.save(Engine.extract(spark, root, seq, passphrase, cfg).observe(counts,
+      count_if(col("type") === "payment").as("payments"),
+      count_if(col("type") === "creation").as("creations")), seq)
+    val (payments, creations) = counts.future.value.flatMap(_.toOption)
+      .filter(_.length == 2).map(r => (r.getLong(0), r.getLong(1))).getOrElse((0L, 0L))
+    metrics.onCommit(seq, payments, creations)
     firstSeqSeeded = false // the pointer now reflects a real commit
     true
   }

@@ -1,10 +1,16 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline._
+import graft.sources.Archive
+import graft.xdr.{Stellar, StellarWriter}
 
 /** Extraction-plan semantics against the edge-case fixtures of
-  * FIXTURES.md §3 (reference behavior: python/main.py:126-199).
+  * FIXTURES.md §3 (reference behavior: python/main.py:126-199). Every
+  * fixture also runs through the ingest runners' in-task join,
+  * [[Extract.checkpointRows]], which must give the plan's rows.
   */
 class ExtractSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -34,6 +40,19 @@ class ExtractSpec extends AnyFunSuite {
   private def createLeg(code: String) = OpResult(OpResultTr(None, Some(code)))
 
   private val ledgers = Seq(LedgerEntry(LedgerHeader(100L, ScpValue(1535594286L))))
+
+  private def bag(rows: Seq[Row]): Map[Seq[Any], Int] =
+    rows.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+
+  /** [[Extract.checkpointRows]] gives the row multiset of
+    * [[Extract.operations]] on the same input; returns that row count.
+    */
+  private def assertParity(txs: Seq[TxHistoryEntry], results: Seq[TxResultEntry],
+      c: ExtractConfig = cfg, leds: Seq[LedgerEntry] = ledgers): Int = {
+    val plan = Extract.operations(txs.toDS(), leds.toDS(), results.toDS(), c).collect().toSeq
+    assert(bag(Extract.checkpointRows(txs, leds, results, c).toSeq) === bag(plan))
+    plan.length
+  }
 
   test("payment + creation extraction: filters, zip, result legs, time join") {
     val txs = Seq(TxHistoryEntry(100L, TxSet(Seq(
@@ -65,6 +84,7 @@ class ExtractSpec extends AnyFunSuite {
     assert(c.getAs[Double]("starting_balance") === 10.0)
     assert(c.getAs[Int]("operation_index") === 2)
     assert(c.getAs[String]("op_status") === "CREATE_ACCOUNT_SUCCESS")
+    assert(assertParity(txs, results) === 2)
   }
 
   test("failed tx with no per-op results emits zero rows (zip truncation)") {
@@ -72,6 +92,7 @@ class ExtractSpec extends AnyFunSuite {
       tx("h2", None, Seq(kinPay("GD1", 5.0), create("GD2", 1.0)))))))
     val results = Seq(TxResultEntry(TxResultSet(Seq(res("h2", "txFAILED", None)))))
     assert(Extract.operations(txs.toDS(), ledgers.toDS(), results.toDS(), cfg).count() === 0)
+    assert(assertParity(txs, results) === 0)
   }
 
   test("result list shorter than ops truncates to the shorter side") {
@@ -81,6 +102,7 @@ class ExtractSpec extends AnyFunSuite {
       res("h3", "txSUCCESS", Some(Seq(payLeg("PAYMENT_SUCCESS"))))))))
     val out = Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg).collect()
     assert(out.map(_.getAs[String]("destination")).toSeq === Seq("GD1"))
+    assert(assertParity(txs, results) === 1)
   }
 
   test("null result element yields NULL op_status (falsy guard)") {
@@ -91,6 +113,7 @@ class ExtractSpec extends AnyFunSuite {
     assert(out.length === 1)
     assert(out(0).getAs[String]("op_status") === null)
     assert(out(0).getAs[String]("tx_status") === "txSUCCESS")
+    assert(assertParity(txs, results) === 1)
   }
 
   test("op-level source override wins; absent falls back to tx source") {
@@ -101,6 +124,7 @@ class ExtractSpec extends AnyFunSuite {
     val out = Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg)
       .orderBy("operation_index").collect()
     assert(out.map(_.getAs[String]("source")).toSeq === Seq("GOVERRIDE", "GSRC"))
+    assert(assertParity(txs, results) === 2)
   }
 
   test("missing ledger row leaves time NULL (dict .get fidelity)") {
@@ -110,6 +134,7 @@ class ExtractSpec extends AnyFunSuite {
     val out = Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg).collect()
     assert(out.length === 1)
     assert(out(0).getAs[java.sql.Timestamp]("time") === null)
+    assert(assertParity(txs, results) === 1)
   }
 
   test("app-id memo filter keeps only matching-app txs") {
@@ -128,6 +153,7 @@ class ExtractSpec extends AnyFunSuite {
       res("m5", "txSUCCESS", Some(Seq(payLeg("ok"))))))))
     val out = Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(), appCfg).collect()
     assert(out.map(_.getAs[String]("destination")).toSeq === Seq("GD1"))
+    assert(assertParity(txs, results, appCfg) === 1)
   }
 
   test("S3 naming variant maps the canonical schema (SURVEY §1.2)") {
@@ -153,6 +179,57 @@ class ExtractSpec extends AnyFunSuite {
         cfg.copy(appId = Some("ab^d"), legacyAzClass = legacy)).count()
     assert(count(legacy = true) === 1)  // reference fidelity: [A-z] admits '^'
     assert(count(legacy = false) === 0) // sane default rejects it
+    Seq(true, false).foreach { legacy =>
+      assertParity(txs, results, cfg.copy(appId = Some("ab^d"), legacyAzClass = legacy))
+    }
+  }
+
+  test("in-task join multiplies duplicate tx hashes and ledgers like the left joins") {
+    val txs = Seq(TxHistoryEntry(100L, TxSet(Seq(
+      tx("dup", Some("a"), Seq(kinPay("GD1", 1.0), create("GD2", 2.0))),
+      tx("dup", Some("b"), Seq(kinPay("GD3", 3.0)))))))
+    val results = Seq(
+      TxResultEntry(TxResultSet(Seq(res("dup", "txSUCCESS", Some(Seq(payLeg("ok"), createLeg("ok"))))))),
+      TxResultEntry(TxResultSet(Seq(res("dup", "txFAILED", Some(Seq(payLeg("no"))), 7)))))
+    val twoCloses = ledgers :+ LedgerEntry(LedgerHeader(100L, ScpValue(1535594300L)))
+    // per ledger row: tx 1 zips 2 ops with the 2-leg result and 1 op
+    // with the 1-leg one; tx 2 zips 1 op with each
+    assert(assertParity(txs, results, leds = twoCloses) === 2 * (3 + 2))
+  }
+
+  test("in-task join of an encoded archive triple equals the plan (Engine.extract)") {
+    // XdrSpec's round-trip triple, read back through both per-checkpoint spellings
+    def addr(seed: Int): String =
+      Stellar.strkeyEncode(Array.tabulate(32)(i => ((seed * 31 + i) & 0xff).toByte))
+    val issuer = addr(1)
+    val ops = Seq(
+      Operation(Seq(Ed25519(addr(5))),
+        OpBody(1, Some(PaymentOp(Asset(Some(AssetAlphaNum4("KIN", Ed25519(issuer)))), Ed25519(addr(3)), 1250000.0)), None)),
+      Operation(Nil, OpBody(0, None, Some(CreateAccountOp(Ed25519(addr(4)), 500.0)))))
+    val seq = 127L
+    val txGz = Archive.gzip(StellarWriter.encodeTxEntry(TxHistoryEntry(seq, TxSet(Seq(
+      TxWithHash("", TxCore(Some("1-abcd-test"), 100, Ed25519(addr(2)), ops)))))))
+    val hash = Stellar.decodeTxEntries(Archive.gunzip(txGz), "Test Net").head.txSet.txs.head.hash
+    val resEntry = TxResultEntry(TxResultSet(Seq(
+      TxResultPair(hash, TxResultOuter(90, TxResultInner("txSUCCESS", Some(Seq(
+        OpResult(OpResultTr(Some("PAYMENT_SUCCESS"), None)),
+        OpResult(OpResultTr(None, Some("CREATE_ACCOUNT_SUCCESS")))))))))))
+    val dir = Files.createTempDirectory("graft-parity").toString
+    def put(cat: String, bytes: Array[Byte]): String = {
+      val p = Paths.get(Archive.pathFor(dir, cat, seq))
+      Files.createDirectories(p.getParent)
+      Files.write(p, bytes).toString
+    }
+    val paths = Seq(put("transactions", txGz),
+      put("ledger", Archive.gzip(StellarWriter.encodeLedgerEntry(
+        LedgerEntry(LedgerHeader(seq, ScpValue(1535594286L)))))),
+      put("results", Archive.gzip(StellarWriter.encodeResultEntry(resEntry, seq))))
+    val xcfg = ExtractConfig(assetIssuer = issuer, appId = Some("abcd"))
+    val inTask = Engine.extract(spark, dir, seq, "Test Net", xcfg).collect().toSeq
+    val plan = Engine.extract(spark, Seq(paths(0)), Seq(paths(1)), Seq(paths(2)),
+      "Test Net", xcfg).collect().toSeq
+    assert(inTask.length === 2)
+    assert(bag(inTask) === bag(plan))
   }
 
   test("Kin3 decimal amounts: quarks → exact DECIMAL(20,5) whole units") {

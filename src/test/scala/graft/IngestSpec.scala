@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline._
 import graft.sinks.{JdbcTwoTableSink, JdbcTxnSink, PartitionedFileSink}
@@ -71,6 +73,26 @@ class IngestSpec extends AnyFunSuite {
     assert(tail2.resumeSeq === 0xffL)
     assert(tail2.runOnce() === 1)
     assert(sink.lastSequence === Some(0xffL))
+  }
+
+  test("one non-empty checkpoint commits in exactly one Spark job") {
+    val archive = Files.createTempDirectory("graft-onejob").toString
+    val out = Files.createTempDirectory("graft-onejob-out").toString
+    writeCheckpoint(archive, 0x3fL, 2)
+    val tail = new ArchiveTail(spark, archive, Passphrase, cfg, new PartitionedFileSink(out))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(tail.processOne(0x3fL))
+      TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get === 1)
+    assert(spark.read.csv(s"$out/ledgers").count() === 2)
   }
 
   test("Deploy wires the whole collector from the compose env map alone") {

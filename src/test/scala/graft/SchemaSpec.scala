@@ -1,7 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline._
+import graft.sources.Archive
+import graft.xdr.StellarWriter
 
 /** The extraction plan conforms to the declared canonical schemas. */
 class SchemaSpec extends AnyFunSuite {
@@ -18,5 +21,22 @@ class SchemaSpec extends AnyFunSuite {
     assert(Extract.payments(txs, ledgers, results, cfg).schema === Schemas.payments)
     assert(Extract.creations(txs, ledgers, results, cfg).schema === Schemas.creations)
     assert(Extract.operations(txs, ledgers, results, cfg).schema === Schemas.operations)
+  }
+
+  test("the per-checkpoint Engine.extract emits exactly the operations schema") {
+    val root = Files.createTempDirectory("graft-schema").toString
+    val seq = 0x3fL
+    Seq(
+      "transactions" -> StellarWriter.encodeTxEntry(TxHistoryEntry(seq, TxSet(Nil))),
+      "ledger" -> StellarWriter.encodeLedgerEntry(LedgerEntry(LedgerHeader(seq, ScpValue(0L)))),
+      "results" -> StellarWriter.encodeResultEntry(TxResultEntry(TxResultSet(Nil)), seq)
+    ).foreach { case (cat, bytes) =>
+      val p = Paths.get(Archive.pathFor(root, cat, seq))
+      Files.createDirectories(p.getParent)
+      Files.write(p, Archive.gzip(bytes))
+    }
+    val ops = Engine.extract(spark, root, seq, "Test Net", cfg)
+    assert(ops.schema === Schemas.operations)
+    assert(ops.isEmpty)
   }
 }
