@@ -602,6 +602,50 @@ object Bench {
       (m("numFiles"), m("filesSize"), m("numOutputRows"))
     }
 
+    // `body`'s result and every execution it runs, captured through a
+    // QueryExecutionListener. The listener is async on the shared bus:
+    // before the body, three consecutive quiet 250 ms windows must pass
+    // and everything that arrived is discarded (events from executions
+    // that COMPLETED before registration can still be delivered to it
+    // when the bus is backlogged); after the body, three quiet windows
+    // again before reading (under load a single quiet window can elapse
+    // while onSuccess events are still queued, silently undercounting).
+    // The sleeps sit outside any timed region. Deadline-bounded:
+    // continuous activity on the shared session must degrade the
+    // capture, never hang the bench — after 30 s a wait proceeds with
+    // whatever arrived (calm sessions, the recording condition, never
+    // hit it).
+    def captureExecutions[A](body: => A): (A, Seq[org.apache.spark.sql.execution.QueryExecution]) = {
+      val qes = new java.util.concurrent.ConcurrentLinkedQueue[
+        org.apache.spark.sql.execution.QueryExecution]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            durationNs: Long): Unit = { qes.add(qe); () }
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            exception: Exception): Unit = ()
+      }
+      def quiesce(): Unit = {
+        var last = -1
+        var quiet = 0
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (quiet < 3 && System.nanoTime() < deadline) {
+          Thread.sleep(250)
+          if (qes.size == last) quiet += 1 else { quiet = 0; last = qes.size }
+        }
+      }
+      spark.listenerManager.register(listener)
+      try {
+        quiesce()
+        qes.clear()
+        val result = body
+        quiesce()
+        import scala.jdk.CollectionConverters._
+        (result, qes.asScala.toSeq)
+      } finally spark.listenerManager.unregister(listener)
+    }
+
     // Drain outcome: wall-clock rate (noisy — the honest session spread
     // is 23.8–57.4 docs/s, r17's adjudication) plus DETERMINISTIC scan
     // totals captured from every execution the drain ran (r17 verdict
@@ -624,53 +668,20 @@ object Bench {
       val slice = Tables.documents(spark, sfDir)
         .select("doc_id", "lang", "text").filter(col("doc_id") % 10 < 4)
       val nDocs = slice.count().toDouble // outside the timed region
-      val qes = new java.util.concurrent.ConcurrentLinkedQueue[
-        org.apache.spark.sql.execution.QueryExecution]()
-      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit = { qes.add(qe); () }
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = ()
-      }
-      // the shared async listener-bus discipline (r17's straggler-bug
-      // fix, verbatim from the maxscore capture): require three quiet
-      // 250 ms windows, discard pre-registration stragglers, then run,
-      // then quiesce again before reading. The sleeps sit OUTSIDE the
-      // timed region, so the rate is unchanged. Deadline-bounded (r18
-      // review): continuous activity on the shared session must
-      // degrade the capture, never hang the bench — after 30 s the
-      // loop proceeds with whatever arrived (calm sessions, the
-      // recording condition, never hit it).
-      def quiesce(): Unit = {
-        var last = -1
-        var quiet = 0
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (quiet < 3 && System.nanoTime() < deadline) {
-          Thread.sleep(250)
-          if (qes.size == last) quiet += 1 else { quiet = 0; last = qes.size }
-        }
-      }
-      spark.listenerManager.register(listener)
-      try {
-        quiesce()
-        qes.clear()
+      val (rate, qes) = captureExecutions {
         val t0 = System.nanoTime()
         for (i <- 0 until 6) {
           graft.streaming.LivePipeline.stepWithIndex(
             slice.filter(col("doc_id") % 6 === i), i.toLong, cfg, idx)
           if (i == 2) graft.streaming.LivePipeline.compact(spark, cfg)
         }
-        val rate = nDocs / ((System.nanoTime() - t0) / 1e9)
-        quiesce()
-        import scala.jdk.CollectionConverters._
-        val plans = qes.asScala.toSeq.map(_.executedPlan)
-        val store = plans.map(p => storeScanStats(p, root))
-        val src = plans.map(p => storeScanStats(p, sfDir))
-        DrainStats(rate, store.map(_._3).sum, src.map(_._3).sum,
-          store.map(_._2).sum / 1e6)
-      } finally spark.listenerManager.unregister(listener)
+        nDocs / ((System.nanoTime() - t0) / 1e9)
+      }
+      val plans = qes.map(_.executedPlan)
+      val store = plans.map(p => storeScanStats(p, root))
+      val src = plans.map(p => storeScanStats(p, sfDir))
+      DrainStats(rate, store.map(_._3).sum, src.map(_._3).sum,
+        store.map(_._2).sum / 1e6)
     } catch { case _: Throwable => DrainStats(-1.0, -1.0, -1.0, -1.0) }
     // r14 verdict #2 (intake-drain adjudication experiment): when
     // SPARK_GRAFT_INTAKE_FRESH=1, drain ONCE on this fresh post-warmup
@@ -1146,64 +1157,27 @@ object Bench {
         val terms = rareTerm +: graft.operators.Retrieval.QueryTerms
         val postings = graft.streaming.LiveIndex
           .matchedPostingsCount(spark, idx, terms).toDouble
-        val qes = new java.util.concurrent.ConcurrentLinkedQueue[
-          org.apache.spark.sql.execution.QueryExecution]()
-        val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit = { qes.add(qe); () }
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              exception: Exception): Unit = ()
-        }
         val priorExcluded = spark.conf.getOption(
           "spark.sql.adaptive.optimizer.excludedRules")
         spark.conf.set("spark.sql.adaptive.optimizer.excludedRules",
           "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
-        spark.listenerManager.register(listener)
         try {
-          // the execution listener is async on the shared bus — require
-          // THREE consecutive quiet 250 ms windows before reading the
-          // captured set (r16 advice: under load a single quiet window
-          // can elapse while onSuccess events are still queued on the
-          // bus, silently undercounting maxscore_rows — the metric the
-          // pruning claim rests on)
-          def quiesce(): Unit = {
-            var last = -1
-            var quiet = 0
-            while (quiet < 3) {
-              Thread.sleep(250)
-              if (qes.size == last) quiet += 1 else { quiet = 0; last = qes.size }
-            }
+          val (_, qes) = captureExecutions {
+            graft.streaming.LiveIndex.bm25(spark, idx, terms, 10).collect()
           }
-          // Straggler drain BEFORE the serve (round 17 — the growth
-          // gate's first live session caught this as a maxscore_rows
-          // fire): the shared bus delivers to listeners present at
-          // DELIVERY time, so events from executions that COMPLETED
-          // before registration (the matchedPostingsCount denominator
-          // above, the term timings' noop saves) can still land in this
-          // capture when the bus is backlogged — the 4×/16× points read
-          // rows ≈ pruned + postings, i.e. the naive count scan leaked
-          // in. Quiesce first, then discard everything that arrived.
-          quiesce()
-          qes.clear()
-          graft.streaming.LiveIndex.bm25(spark, idx, terms, 10).collect()
-          quiesce()
-          import scala.jdk.CollectionConverters._
           // postings scans ONLY (doclens/aux reads are candidate-pushed
           // and bounded; the claim under measurement is about posting
           // lists) — at toy store sizes the candidate machinery's
           // repeated point-reads can exceed the naive read (pruning
           // pays when postings ≫ candidates), so the SLOPE vs the
           // postings curve is the signal, not the intercept
-          val rows = qes.asScala.toSeq
+          val rows = qes
             .map(qe => storeScanStats(qe.executedPlan, s"$root/idx/postings")._3).sum
           Seq(s"maxscore_rows_at_${n}x" -> rows,
             s"maxscore_postings_at_${n}x" -> postings,
             s"maxscore_cands_at_${n}x" ->
               graft.operators.Retrieval.lastServeCands.toDouble)
         } finally {
-          spark.listenerManager.unregister(listener)
           priorExcluded match {
             case Some(v) => spark.conf.set(
               "spark.sql.adaptive.optimizer.excludedRules", v)

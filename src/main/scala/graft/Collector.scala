@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.sinks.JdbcTxnSink
+import graft.sinks.JdbcSink
 
 /** Container entrypoint: the reference image's CMD chains database
   * bootstrap → storage bootstrap → polling collector in one process
@@ -33,7 +33,7 @@ object Collector {
   def run(spark: SparkSession, env: Map[String, String]): Int = {
     val sink = Deploy.sink(env)
     sink match {
-      case j: JdbcTxnSink => j.ensureSchema() // build_database parity
+      case j: JdbcSink => j.ensureSchema() // build_database parity
       case _ => () // file-layout sink: no DDL; the selfTest probe covers it
     }
     // ONE sink instance flows through the whole chain (a stateful sink —

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.pipeline.ExtractConfig
-import graft.sinks.{CheckpointSink, JdbcTxnSink, PartitionedFileSink}
+import graft.sinks.{CheckpointSink, JdbcLayout, JdbcSink, PartitionedFileSink}
 import graft.streaming.{AlertTransport, ArchiveTail, IngestAlerts, Transports, ValidatingAlerts}
 
 /** docker-compose parity: build the whole collector from the reference's
@@ -27,13 +27,18 @@ object Deploy {
     * file:// fixtures and local smoke tests plug in).
     */
   def archiveRoot(env: Map[String, String]): String = {
-    val bucket = env("BUCKET_NAME")
-    val base = if (bucket.contains("://")) bucket.stripSuffix("/") else s"s3a://$bucket"
+    val base = bucketUri(env("BUCKET_NAME"))
     env.getOrElse("CORE_DIRECTORY", "").stripSuffix("/") match {
       case "" => base
       case core => s"$base/$core"
     }
   }
+
+  /** A bucket setting as a URI: a bare bucket name maps to `s3a://`, a
+    * value containing a scheme is taken verbatim.
+    */
+  private def bucketUri(bucket: String): String =
+    if (bucket.contains("://")) bucket.stripSuffix("/") else s"s3a://$bucket"
 
   /** KIN_ISSUER + optional APP_ID (absent and empty both mean "no app
     * filter", like os.environ.get at python/main.py:44). A present
@@ -74,7 +79,7 @@ object Deploy {
   def sink(env: Map[String, String]): CheckpointSink =
     env.get("S3_STORAGE_BUCKET").filter(_.nonEmpty) match {
       case Some(bucket) =>
-        val base = if (bucket.contains("://")) bucket.stripSuffix("/") else s"s3a://$bucket"
+        val base = bucketUri(bucket)
         val root = env.getOrElse("S3_STORAGE_KEY_PREFIX", "").stripSuffix("/") match {
           case "" => base
           case prefix => s"$base/$prefix"
@@ -83,8 +88,9 @@ object Deploy {
       case None =>
         val host = env("POSTGRES_HOST")
         val pass = env("PYTHON_PASSWORD")
-        new JdbcTxnSink(() =>
-          java.sql.DriverManager.getConnection(s"jdbc:postgresql://$host/kin", "python", pass))
+        new JdbcSink(() =>
+          java.sql.DriverManager.getConnection(s"jdbc:postgresql://$host/kin", "python", pass),
+          JdbcLayout.Unified)
     }
 
   /** Alert legs from the same optional env the reference reads
@@ -178,7 +184,7 @@ object Deploy {
     if (!signed && root.startsWith("s3a://")) {
       val bucket = root.stripPrefix("s3a://").takeWhile(_ != '/')
       val sinkBucket = env.get("S3_STORAGE_BUCKET").filter(_.nonEmpty).map { b =>
-        val base = if (b.contains("://")) b.stripSuffix("/") else s"s3a://$b"
+        val base = bucketUri(b)
         if (base.startsWith("s3a://")) base.stripPrefix("s3a://").takeWhile(_ != '/')
         else "" // non-s3a sink URIs can't collide with an s3a archive bucket
       }.filter(_.nonEmpty)

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.sql.Connection
+import java.sql.{Connection, Statement}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
@@ -50,7 +50,6 @@ trait CheckpointSink {
   * would silently only ever work on local disk.
   */
 final class PartitionedFileSink(root: String) extends CheckpointSink {
-  private def seqStr(seq: Long) = f"$seq%08x"
   private val rootPath = new HPath(root)
   private val markers = new HPath(rootPath, "completed_ledgers")
   private val lastFile = new HPath(rootPath, "last_file")
@@ -84,7 +83,7 @@ final class PartitionedFileSink(root: String) extends CheckpointSink {
   }
 
   override def save(ops: DataFrame, seq: Long): Unit = {
-    val s = seqStr(seq)
+    val s = Archive.seqString(seq)
     val f = fs
     // One job: the write counts its own rows, and an empty checkpoint's
     // partition is removed after it. The `ledger` value lives ONLY in the
@@ -143,184 +142,87 @@ final class PartitionedFileSink(root: String) extends CheckpointSink {
   }
 }
 
-/** The JDBC sinks' offset read: the single-row `lastfile` pointer. */
-private[sinks] object LastFile {
-  // None means exactly "no offset committed yet" (lastfile exists and
-  // is empty). A FAILED read — missing table, lock timeout, revoked
-  // SELECT — propagates instead of masquerading as None: the save
-  // guard would otherwise re-insert a committed checkpoint and the
-  // tail would silently restart from the beginning (run
-  // ensureSchema/bootstrap before first use; the Collector chain
-  // does).
-  def read(connect: () => Connection): Option[Long] = {
-    val c = connect()
-    try {
-      val rs = c.createStatement().executeQuery("SELECT name FROM lastfile")
-      if (rs.next()) Some(java.lang.Long.parseLong(rs.getString(1), 16)) else None
-    } finally c.close()
+/** One table of a [[JdbcSink]]'s layout: its name, its columns as
+  * `name -> SQL type` (NOT NULL spelled in the type), and the `type`
+  * value whose rows it takes (`None`: every row).
+  */
+final case class JdbcTable(name: String, takes: Option[String], columns: Seq[(String, String)]) {
+  def accepts(kind: String): Boolean = takes.forall(_ == kind)
+  def columnNames: Seq[String] = columns.map(_._1)
+  def insertSql: String =
+    s"INSERT INTO $name (${columnNames.mkString(", ")}) VALUES (${columnNames.map(_ => "?").mkString(", ")})"
+}
+
+/** The two table layouts a [[JdbcSink]] writes a checkpoint's rows into. */
+object JdbcLayout {
+  /** One `operations` table with a `type` discriminator: the canonical
+    * layout (SURVEY §1.2 documents the canonicalization).
+    */
+  val Unified: Seq[JdbcTable] = Seq(JdbcTable("operations", None, Seq(
+    "type" -> "VARCHAR(8)", "source" -> "VARCHAR(56)", "destination" -> "VARCHAR(56)",
+    "amount" -> "DOUBLE PRECISION", "starting_balance" -> "DOUBLE PRECISION",
+    "memo_text" -> "VARCHAR(28)", "fee" -> "INT", "fee_charged" -> "INT",
+    "operation_index" -> "INT", "tx_status" -> "TEXT", "op_status" -> "TEXT",
+    "hash" -> "VARCHAR(64)", "time" -> "TIMESTAMP")))
+
+  /** The reference adapter's own shape: payment rows in `payments`,
+    * creation rows in `creations`, with its per-table columns
+    * (python/adapters/postgres_storage_adapter.py:90-130), so reference
+    * SQL pointed at the sink sees the tables it expects.
+    */
+  val TwoTable: Seq[JdbcTable] = {
+    def table(name: String, kind: String, amount: String) = JdbcTable(name, Some(kind), Seq(
+      "source" -> "VARCHAR(56) NOT NULL", "destination" -> "VARCHAR(56) NOT NULL",
+      amount -> "DOUBLE PRECISION NOT NULL", "memo_text" -> "VARCHAR(28)",
+      "fee" -> "INT NOT NULL", "fee_charged" -> "INT NOT NULL",
+      "operation_index" -> "INT NOT NULL", "tx_status" -> "TEXT", "op_status" -> "TEXT",
+      "hash" -> "VARCHAR(64) NOT NULL", "time" -> "TIMESTAMP NOT NULL"))
+    Seq(table("payments", "payment", "amount"),
+      table("creations", "creation", "starting_balance"))
   }
 }
 
-/** Transactional JDBC sink (K1/K2): one database transaction inserts the
-  * checkpoint's rows and upserts the `lastfile` pointer, then commits —
-  * the reference's exactly-once contract
+/** Transactional JDBC sink (K1/K2/K8): one database transaction inserts
+  * the checkpoint's rows into the layout's tables, routed by their
+  * `type`, and writes the `lastfile` pointer, then commits — the
+  * reference's exactly-once contract
   * (python/adapters/postgres_storage_adapter.py:28-54). Idempotent on
-  * replay: a checkpoint ≤ the committed `lastfile` is skipped.
+  * replay: a checkpoint older than the committed `lastfile` is skipped.
+  * `save` expects the unified extract (`Schemas.operations`).
   *
   * Row delivery happens on the driver via `collect()` by design: a
   * checkpoint is ≤64 ledgers of extracted ops (bounded small); for bulk
   * backfills use [[PartitionedFileSink]] or
   * `df.write.format("jdbc").option("batchsize", …)` instead.
   */
-final class JdbcTxnSink(
-    connect: () => Connection,
-    table: String = "operations") extends CheckpointSink {
+final class JdbcSink(connect: () => Connection, val layout: Seq[JdbcTable]) extends CheckpointSink {
 
-  def ensureSchema(): Unit = {
-    val c = connect()
-    try {
-      // autocommit: DDL is self-committing; an explicit commit() on a
-      // fresh (autocommit-on) connection throws on Postgres
-      c.setAutoCommit(true)
-      val st = c.createStatement()
-      st.execute(
-        s"""CREATE TABLE IF NOT EXISTS $table (
-           |  type VARCHAR(8), source VARCHAR(56), destination VARCHAR(56),
-           |  amount DOUBLE PRECISION, starting_balance DOUBLE PRECISION,
-           |  memo_text VARCHAR(28), fee INT, fee_charged INT,
-           |  operation_index INT, tx_status TEXT, op_status TEXT,
-           |  hash VARCHAR(64), time TIMESTAMP)""".stripMargin)
-      st.execute("CREATE TABLE IF NOT EXISTS lastfile (name VARCHAR(8))")
-    } finally c.close()
-  }
-
-  private val columns = Seq("type", "source", "destination", "amount",
-    "starting_balance", "memo_text", "fee", "fee_charged",
-    "operation_index", "tx_status", "op_status", "hash", "time")
-
-  override def save(ops: DataFrame, seq: Long): Unit = {
-    // STRICTLY-older checkpoints are committed replays and skip; lastfile
-    // == seq is AMBIGUOUS — the reference's build_database seeds lastfile
-    // with FIRST_FILE meaning "not yet ingested" (main.py:247 processes
-    // it), while a restart right after this checkpoint's commit means
-    // "fully ingested" — so the == case runs as an OVERWRITE: this
-    // batch's row identities (hash, operation_index) are deleted in the
-    // same transaction before the insert, making either reading land the
-    // data exactly once. (The reference itself double-inserts in this
-    // window; the overwrite keeps its semantics without its bug.)
-    val last = lastSequence
-    if (last.exists(_ > seq)) return // replay: already committed
-    val rows = ops.select(columns.map(col): _*).collect()
-    val hashIdx = columns.indexOf("hash")
-    val opIdx = columns.indexOf("operation_index")
-    val c = connect()
-    try {
-      c.setAutoCommit(false)
-      if (last.contains(seq) && rows.nonEmpty) {
-        val del = c.prepareStatement(
-          s"DELETE FROM $table WHERE hash = ? AND operation_index = ?")
-        rows.foreach { r =>
-          del.setObject(1, r.get(hashIdx)); del.setObject(2, r.get(opIdx))
-          del.addBatch()
-        }
-        del.executeBatch()
-      }
-      val ps = c.prepareStatement(
-        s"INSERT INTO $table (${columns.mkString(", ")}) VALUES (${columns.map(_ => "?").mkString(", ")})")
-      rows.foreach { r =>
-        columns.indices.foreach(i => ps.setObject(i + 1, r.get(i)))
-        ps.addBatch()
-      }
-      ps.executeBatch()
-      val st = c.createStatement()
-      st.execute("DELETE FROM lastfile")
-      st.execute(s"INSERT INTO lastfile (name) VALUES ('${f"$seq%08x"}')")
-      c.commit() // data + offset atomically (K2)
-    } catch {
-      case e: Throwable =>
-        // a rollback on a broken connection must not mask the original
-        // failure (the selfTest methods already guard theirs)
-        try c.rollback() catch { case _: Throwable => () }
-        throw e
-    } finally c.close()
-  }
-
-  override def lastSequence: Option[Long] = LastFile.read(connect)
-
-  /** Insert/select/delete probe inside one rolled-back transaction: the
-    * reference's canned creation row (s3_storage_adapter.py:180-188),
-    * written, read back, deleted, then the whole transaction rolled back
-    * so no trace remains even on a partially-permissioned database.
+  /** Creates the layout's tables and `lastfile`; existing tables are
+    * left as they are.
     */
-  override def selfTest(): Unit = {
-    val probeHash = "a17aa64d4f0ae434dceb16501dd1d2217a59e42d555e24fdf7e17fffa13a1331"
-    val row: Seq[Any] = Seq(
-      "creation",
-      "GCQTAWULBNFLBAEQLEN6FDGGCPYTVZ3Y55AB4F7HSTMQKNX3HZINMQJM",
-      "GDDFYG3OSTSHADS7SP6TZ4XM62EQ522CI7UYJSNAETGJJCGOX66TP5Q5",
-      null, 10.0, null, 100, 100, 0,
-      "txFAILED", "CREATE_ACCOUNT_LOW_RESERVE",
-      probeHash, java.sql.Timestamp.valueOf("2018-06-20 12:47:21"))
-    val c = connect()
-    try {
-      c.setAutoCommit(false)
-      val ps = c.prepareStatement(
-        s"INSERT INTO $table (${columns.mkString(", ")}) VALUES (${columns.map(_ => "?").mkString(", ")})")
-      row.zipWithIndex.foreach { case (v, i) => ps.setObject(i + 1, v) }
-      ps.addBatch()
-      ps.executeBatch()
-      val rs = c.createStatement().executeQuery(
-        s"SELECT hash FROM $table WHERE hash = '$probeHash'")
-      if (!rs.next()) throw new IllegalStateException("probe row did not round-trip")
-      c.createStatement().execute(s"DELETE FROM $table WHERE hash = '$probeHash'")
-      c.rollback() // leave no trace
-    } catch {
-      case e: Throwable =>
-        try c.rollback() catch { case _: Throwable => () }
-        throw new IllegalStateException(
-          s"jdbc sink self-test failed for table $table (requires insert/select/delete)", e)
-    } finally c.close()
+  def ensureSchema(): Unit = autocommit(connect) { st =>
+    layout.foreach(t => st.execute(s"CREATE TABLE IF NOT EXISTS ${t.name} (" +
+      t.columns.map { case (n, ty) => s"$n $ty" }.mkString(", ") + ")"))
+    st.execute("CREATE TABLE IF NOT EXISTS lastfile (name VARCHAR(8) NOT NULL)")
   }
-}
-
-/** Reference-fidelity two-table JDBC sink: payment rows land in
-  * `payments`, creation rows in `creations`, with the exact per-table
-  * column sets of the reference's Postgres adapter
-  * (python/adapters/postgres_storage_adapter.py:90-130) — one database
-  * transaction per checkpoint inserts both batches and UPDATEs the
-  * seeded single-row `lastfile` pointer
-  * (postgres_storage_adapter.py:49-52), then commits.
-  *
-  * [[JdbcTxnSink]]'s unified `operations` table remains the canonical
-  * layout (SURVEY §1.2 documents the canonicalization); this variant
-  * exists so a consumer pointing reference SQL at the sink sees the
-  * reference's own shape. `save` expects the unified extract (the
-  * `type`-discriminated union from Extract.operations) and routes rows
-  * by discriminator.
-  *
-  * [[bootstrap]] mirrors build_database.py:30-83: skip if the database
-  * is already seeded, validate the first file sequence
-  * (`(seq+1) % 64 == 0` — checkpoints close at 64-ledger boundaries),
-  * create database/user/tables, seed `lastfile` with the first file, and
-  * grant the ingest user its minimal INSERT/SELECT/UPDATE set.
-  */
-final class JdbcTwoTableSink(connect: () => Connection) extends CheckpointSink {
-  private val paymentCols = Seq("source", "destination", "amount", "memo_text",
-    "fee", "fee_charged", "operation_index", "tx_status", "op_status", "hash", "time")
-  private val creationCols = Seq("source", "destination", "starting_balance", "memo_text",
-    "fee", "fee_charged", "operation_index", "tx_status", "op_status", "hash", "time")
 
   /** One-time database bootstrap (build_database.py:30-83). Returns false
     * without touching anything if `lastfile` is already seeded (the
-    * reference's "using existing database" path).
+    * reference's "using existing database" path). Otherwise it validates
+    * the first file sequence (`(seq+1) % 64 == 0` — checkpoints close at
+    * 64-ledger boundaries), creates database, user and tables, grants
+    * the ingest user INSERT/SELECT on the layout's tables and
+    * INSERT/SELECT/UPDATE on `lastfile`, and seeds `lastfile` with the
+    * first file.
     *
     * Connection semantics mirror the reference's two-phase connect: the
-    * server-level CREATE DATABASE / CREATE USER run on `adminConnect`
-    * when provided (build_database.py connects to the postgres admin DB
-    * first, then RECONNECTS to /kin for the table DDL, :17-22, :63-64);
-    * everything else runs on the sink's own `connect`, which must point
-    * at the destination database. All statements run in autocommit mode
-    * — DDL is self-committing on Postgres and an explicit commit() on an
+    * server-level CREATE DATABASE / CREATE USER and the grants run only
+    * when `adminConnect` is given (build_database.py connects to the
+    * postgres admin DB first, then RECONNECTS to /kin for the table DDL,
+    * :17-22, :63-64), the former on `adminConnect`; everything else runs
+    * on the sink's own `connect`, which must point at the destination
+    * database. All statements run in autocommit mode — DDL is
+    * self-committing on Postgres and an explicit commit() on an
     * autocommit connection throws there.
     */
   def bootstrap(firstFile: String, adminConnect: Option[() => Connection] = None): Boolean = {
@@ -335,34 +237,15 @@ final class JdbcTwoTableSink(connect: () => Connection) extends CheckpointSink {
     if (!Archive.isCheckpoint(seq))
       throw new IllegalArgumentException(
         s"first file $firstFile is not a checkpoint boundary ((seq+1) % 64 != 0)")
-    adminConnect.foreach { ac =>
-      val a = ac()
-      try {
-        a.setAutoCommit(true) // CREATE DATABASE cannot run in a txn block
-        val st = a.createStatement()
-        st.execute("CREATE DATABASE kin")
-        st.execute("CREATE USER python")
-      } finally a.close()
-    }
-    val c = connect()
-    try {
-      c.setAutoCommit(true)
-      val st = c.createStatement()
-      def ddl(tbl: String, amountCol: String): Unit =
-        st.execute(s"""CREATE TABLE IF NOT EXISTS $tbl (
-          |  source VARCHAR(56) NOT NULL, destination VARCHAR(56) NOT NULL,
-          |  $amountCol DOUBLE PRECISION NOT NULL, memo_text VARCHAR(28),
-          |  fee INT NOT NULL, fee_charged INT NOT NULL, operation_index INT NOT NULL,
-          |  tx_status TEXT, op_status TEXT, hash VARCHAR(64) NOT NULL,
-          |  time TIMESTAMP NOT NULL)""".stripMargin)
-      ddl("payments", "amount")
-      ddl("creations", "starting_balance")
-      st.execute("CREATE TABLE IF NOT EXISTS lastfile (name VARCHAR(8) NOT NULL)")
+    adminConnect.foreach(autocommit(_) { st =>
+      st.execute("CREATE DATABASE kin") // cannot run in a txn block
+      st.execute("CREATE USER python")
+    })
+    ensureSchema()
+    autocommit(connect) { st =>
       if (adminConnect.isDefined) {
-        for {
-          tbl <- Seq("payments", "creations")
-          g <- Seq("INSERT", "SELECT")
-        } st.execute(s"GRANT $g ON $tbl TO python")
+        for (t <- layout; g <- Seq("INSERT", "SELECT"))
+          st.execute(s"GRANT $g ON ${t.name} TO python")
         Seq("INSERT", "SELECT", "UPDATE").foreach(g =>
           st.execute(s"GRANT $g ON lastfile TO python"))
       }
@@ -372,56 +255,97 @@ final class JdbcTwoTableSink(connect: () => Connection) extends CheckpointSink {
       // make every retry return false at the seeded check above while
       // the ingest user permanently lacked its grants
       st.execute(s"INSERT INTO lastfile VALUES ('${firstFile.trim}')")
-      true
-    } finally c.close()
+    }
+    true
   }
 
   override def save(ops: DataFrame, seq: Long): Unit = {
-    // same first-file/replay adjudication as JdbcTxnSink.save: strictly
-    // older → skip; == seq → overwrite this batch's row identities in
-    // the same transaction (the bootstrap-seeded lastfile names a file
-    // the reference considers NOT yet ingested)
+    // STRICTLY-older checkpoints are committed replays and skip; lastfile
+    // == seq is AMBIGUOUS — the reference's build_database seeds lastfile
+    // with FIRST_FILE meaning "not yet ingested" (main.py:247 processes
+    // it), while a restart right after this checkpoint's commit means
+    // "fully ingested" — so the == case runs as an OVERWRITE: this
+    // batch's row identities (hash, operation_index) are deleted in the
+    // same transaction before the insert, making either reading land the
+    // data exactly once. (The reference itself double-inserts in this
+    // window; the overwrite keeps its semantics without its bug.)
     val last = lastSequence
     if (last.exists(_ > seq)) return // replay: already committed
-    val unified = Seq("type", "source", "destination", "amount", "starting_balance",
-      "memo_text", "fee", "fee_charged", "operation_index", "tx_status", "op_status",
-      "hash", "time")
-    val rows = ops.select(unified.map(col): _*).collect()
-    val byName = unified.zipWithIndex.toMap
+    val names = ("type" +: layout.flatMap(_.columnNames)).distinct
+    val at = names.zipWithIndex.toMap
+    val rows = ops.select(names.map(col): _*).collect().toSeq
+    transaction { c =>
+      layout.foreach { t =>
+        val batch = rows.filter(r => t.accepts(r.getString(at("type"))))
+        if (last.contains(seq))
+          executeBatch(c, s"DELETE FROM ${t.name} WHERE hash = ? AND operation_index = ?",
+            batch.map(r => Seq(r.get(at("hash")), r.get(at("operation_index")))))
+        executeBatch(c, t.insertSql, batch.map(r => t.columnNames.map(n => r.get(at(n)))))
+      }
+      // UPDATE keeps the bootstrap-seeded single row; on an unseeded
+      // lastfile it touches 0 rows and the offset would never advance
+      // (infinite re-ingest), so it falls back to INSERT
+      val s = Archive.seqString(seq)
+      val st = c.createStatement()
+      if (st.executeUpdate(s"UPDATE lastfile SET name = '$s'") == 0)
+        st.execute(s"INSERT INTO lastfile VALUES ('$s')")
+      c.commit() // data + offset atomically (K2)
+    }
+  }
+
+  // None means exactly "no offset committed yet" (lastfile exists and
+  // is empty). A FAILED read — missing table, lock timeout, revoked
+  // SELECT — propagates instead of masquerading as None: the save
+  // guard would otherwise re-insert a committed checkpoint and the
+  // tail would silently restart from the beginning (run
+  // ensureSchema/bootstrap before first use; the Collector chain
+  // does).
+  override def lastSequence: Option[Long] = {
+    val c = connect()
+    try {
+      val rs = c.createStatement().executeQuery("SELECT name FROM lastfile")
+      if (rs.next()) Some(java.lang.Long.parseLong(rs.getString(1), 16)) else None
+    } finally c.close()
+  }
+
+  /** Insert/select/delete probe inside one rolled-back transaction: the
+    * reference's canned creation row (s3_storage_adapter.py:180-188),
+    * projected into the table that takes creations, written, read back
+    * by hash, deleted, then the whole transaction rolled back so no
+    * trace remains even on a partially-permissioned database.
+    */
+  override def selfTest(): Unit = {
+    val t = layout.find(_.accepts("creation")).get
+    val probeHash = "a17aa64d4f0ae434dceb16501dd1d2217a59e42d555e24fdf7e17fffa13a1331"
+    val row = Map[String, Any](
+      "type" -> "creation",
+      "source" -> "GCQTAWULBNFLBAEQLEN6FDGGCPYTVZ3Y55AB4F7HSTMQKNX3HZINMQJM",
+      "destination" -> "GDDFYG3OSTSHADS7SP6TZ4XM62EQ522CI7UYJSNAETGJJCGOX66TP5Q5",
+      "starting_balance" -> 10.0, "fee" -> 100, "fee_charged" -> 100, "operation_index" -> 0,
+      "tx_status" -> "txFAILED", "op_status" -> "CREATE_ACCOUNT_LOW_RESERVE",
+      "hash" -> probeHash, "time" -> java.sql.Timestamp.valueOf("2018-06-20 12:47:21"))
+    try transaction { c =>
+      executeBatch(c, t.insertSql, Seq(t.columnNames.map(row.getOrElse(_, null))))
+      val rs = c.createStatement().executeQuery(
+        s"SELECT hash FROM ${t.name} WHERE hash = '$probeHash'")
+      if (!rs.next()) throw new IllegalStateException("probe row did not round-trip")
+      c.createStatement().execute(s"DELETE FROM ${t.name} WHERE hash = '$probeHash'")
+      c.rollback() // leave no trace
+    } catch {
+      case e: Throwable => throw new IllegalStateException(
+        s"jdbc sink self-test failed for table ${t.name} (requires insert/select/delete)", e)
+    }
+  }
+
+  /** Runs `body`, which ends the transaction itself, on a fresh
+    * connection with autocommit off. Any throwable rolls back and is
+    * rethrown: a rollback on a broken connection must not mask it.
+    */
+  private def transaction(body: Connection => Unit): Unit = {
     val c = connect()
     try {
       c.setAutoCommit(false)
-      def insert(tbl: String, cols: Seq[String], kind: String): Unit = {
-        val batch = rows.filter(_.getString(byName("type")) == kind)
-        if (batch.nonEmpty) {
-          if (last.contains(seq)) {
-            val del = c.prepareStatement(
-              s"DELETE FROM $tbl WHERE hash = ? AND operation_index = ?")
-            batch.foreach { r =>
-              del.setObject(1, r.get(byName("hash")))
-              del.setObject(2, r.get(byName("operation_index")))
-              del.addBatch()
-            }
-            del.executeBatch()
-          }
-          val ps = c.prepareStatement(
-            s"INSERT INTO $tbl (${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})")
-          batch.foreach { r =>
-            cols.zipWithIndex.foreach { case (cn, i) => ps.setObject(i + 1, r.get(byName(cn))) }
-            ps.addBatch()
-          }
-          ps.executeBatch()
-        }
-      }
-      insert("payments", paymentCols, "payment")
-      insert("creations", creationCols, "creation")
-      // UPDATE assumes the bootstrap-seeded single row; on an unseeded
-      // lastfile it would silently touch 0 rows and the offset would
-      // never advance (infinite re-ingest), so fall back to INSERT
-      val st = c.createStatement()
-      if (st.executeUpdate(s"UPDATE lastfile SET name = '${f"$seq%08x"}'") == 0)
-        st.execute(s"INSERT INTO lastfile VALUES ('${f"$seq%08x"}')")
-      c.commit() // both tables + offset atomically (K2)
+      body(c)
     } catch {
       case e: Throwable =>
         try c.rollback() catch { case _: Throwable => () }
@@ -429,38 +353,23 @@ final class JdbcTwoTableSink(connect: () => Connection) extends CheckpointSink {
     } finally c.close()
   }
 
-  override def lastSequence: Option[Long] = LastFile.read(connect)
-
-  /** Canned creation row written to `creations`, read back, deleted, all
-    * inside one rolled-back transaction (the reference's probe uses a
-    * creation row too, s3_storage_adapter.py:180-188).
-    */
-  override def selfTest(): Unit = {
-    val probeHash = "a17aa64d4f0ae434dceb16501dd1d2217a59e42d555e24fdf7e17fffa13a1331"
-    val row: Seq[Any] = Seq(
-      "GCQTAWULBNFLBAEQLEN6FDGGCPYTVZ3Y55AB4F7HSTMQKNX3HZINMQJM",
-      "GDDFYG3OSTSHADS7SP6TZ4XM62EQ522CI7UYJSNAETGJJCGOX66TP5Q5",
-      10.0, null, 100, 100, 0,
-      "txFAILED", "CREATE_ACCOUNT_LOW_RESERVE",
-      probeHash, java.sql.Timestamp.valueOf("2018-06-20 12:47:21"))
+  // autocommit: DDL is self-committing; an explicit commit() on a
+  // fresh (autocommit-on) connection throws on Postgres
+  private def autocommit(connect: () => Connection)(body: Statement => Unit): Unit = {
     val c = connect()
     try {
-      c.setAutoCommit(false)
-      val ps = c.prepareStatement(
-        s"INSERT INTO creations (${creationCols.mkString(", ")}) VALUES (${creationCols.map(_ => "?").mkString(", ")})")
-      row.zipWithIndex.foreach { case (v, i) => ps.setObject(i + 1, v) }
-      ps.addBatch()
-      ps.executeBatch()
-      val rs = c.createStatement().executeQuery(
-        s"SELECT hash FROM creations WHERE hash = '$probeHash'")
-      if (!rs.next()) throw new IllegalStateException("probe row did not round-trip")
-      c.createStatement().execute(s"DELETE FROM creations WHERE hash = '$probeHash'")
-      c.rollback() // leave no trace
-    } catch {
-      case e: Throwable =>
-        try c.rollback() catch { case _: Throwable => () }
-        throw new IllegalStateException(
-          "jdbc two-table self-test failed (requires insert/select/delete on creations)", e)
+      c.setAutoCommit(true)
+      body(c.createStatement())
     } finally c.close()
   }
+
+  private def executeBatch(c: Connection, sql: String, rows: Seq[Seq[Any]]): Unit =
+    if (rows.nonEmpty) {
+      val ps = c.prepareStatement(sql)
+      rows.foreach { r =>
+        r.zipWithIndex.foreach { case (v, i) => ps.setObject(i + 1, v) }
+        ps.addBatch()
+      }
+      ps.executeBatch()
+    }
 }

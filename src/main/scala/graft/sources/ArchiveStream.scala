@@ -19,11 +19,11 @@ import graft.Engine
   * natively and restarts resume exactly-once.
   *
   * The source carries offsets only: each emitted row is the `seq` of
-  * one available checkpoint, and its reader opens no file. Consumers
-  * read the triple through [[graft.Engine.extract]], one binaryFile
-  * task that gunzips, decodes and joins it on an executor under the
-  * session's Hadoop conf — the same read
-  * [[graft.streaming.ArchiveTail]] commits.
+  * one available checkpoint, and its reader opens no file.
+  * [[ArchiveStreamRunner]] commits each one through
+  * [[graft.streaming.ArchiveTail.commit]], which reads the triple
+  * through [[graft.Engine.extract]]: one binaryFile task that gunzips,
+  * decodes and joins it on an executor under the session's Hadoop conf.
   *
   * Usage:
   * {{{
@@ -149,33 +149,41 @@ object ArchiveReaderFactory extends PartitionReaderFactory {
 }
 
 /** Driver for the custom source: per micro-batch, only the batch's
-  * checkpoint sequences reach the driver (a handful of longs); each
-  * checkpoint is then read, decoded and joined in one executor task by
-  * `Engine.extract` — the same per-checkpoint read
-  * [[graft.streaming.ArchiveTail]] commits — and committed through a
-  * [[graft.sinks.CheckpointSink]] in strict sequence order (replays are
-  * idempotent per seq; Spark's offset log provides resume). With the
+  * checkpoint sequences reach the driver (a handful of longs); each is
+  * committed, in sequence order, by [[graft.streaming.ArchiveTail.commit]]
+  * — the collector's own commit step: one executor task reads, decodes
+  * and joins the checkpoint, and the sink saves it (replays are
+  * idempotent per seq; Spark's offset log provides resume). The run's
+  * tail is built before the query starts, so its constructor's sink
+  * probe (K6) fails a misconfigured sink before any batch. With the
   * file sink each checkpoint costs one Spark job, its write.
   */
 object ArchiveStreamRunner {
-  import org.apache.spark.sql.streaming.Trigger
+  import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   import graft.pipeline.ExtractConfig
   import graft.sinks.CheckpointSink
+  import graft.streaming.ArchiveTail
 
-  /** Extract + commit one micro-batch (the shared foreachBatch body of
-    * both runners): one `save` per checkpoint, in sequence order.
-    */
-  private def drainBatch(batch: DataFrame, root: String, passphrase: String,
-      cfg: ExtractConfig, sink: CheckpointSink): Unit =
-    batch.select("seq").as[Long](Encoders.scalaLong).collect().sorted.foreach(seq =>
-      sink.save(graft.Engine.extract(batch.sparkSession, root, seq, passphrase, cfg), seq))
-
-  private def stream(spark: SparkSession, root: String, firstSeq: Long): DataFrame =
+  private[graft] def stream(spark: SparkSession, root: String, firstSeq: Long): DataFrame =
     spark.readStream
       .format("graft.sources.ArchiveStreamProvider")
       .option("root", root)
       .option("firstSeq", firstSeq.toString)
       .load()
+
+  private def start(spark: SparkSession, root: String, passphrase: String, cfg: ExtractConfig,
+      sink: CheckpointSink, checkpointDir: String, firstSeq: Long,
+      trigger: Trigger): StreamingQuery = {
+    val tail = new ArchiveTail(spark, root, passphrase, cfg, sink, firstSeq)
+    // commit, not processOne: a sequence the source offered whose files
+    // are gone must fail the batch, not be skipped past in the offset log
+    stream(spark, root, firstSeq).writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch((batch: DataFrame, _: Long) =>
+        batch.select("seq").as[Long](Encoders.scalaLong).collect().sorted.foreach(tail.commit))
+      .start()
+  }
 
   def runAvailableNow(
       spark: SparkSession,
@@ -184,14 +192,9 @@ object ArchiveStreamRunner {
       cfg: ExtractConfig,
       sink: CheckpointSink,
       checkpointDir: String,
-      firstSeq: Long = 0x3fL): Unit = {
-    val q = stream(spark, root, firstSeq).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch((batch: DataFrame, _: Long) => drainBatch(batch, root, passphrase, cfg, sink))
-      .start()
-    q.awaitTermination()
-  }
+      firstSeq: Long = 0x3fL): Unit =
+    start(spark, root, passphrase, cfg, sink, checkpointDir, firstSeq, Trigger.AvailableNow())
+      .awaitTermination()
 
   /** Live tail on the DSv2 source (the reference's continuous main loop,
     * python/main.py:254-309, as a ProcessingTime streaming query): polls
@@ -209,10 +212,7 @@ object ArchiveStreamRunner {
       sink: CheckpointSink,
       checkpointDir: String,
       firstSeq: Long = 0x3fL,
-      intervalMs: Long = 1000L): org.apache.spark.sql.streaming.StreamingQuery =
-    stream(spark, root, firstSeq).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(intervalMs))
-      .foreachBatch((batch: DataFrame, _: Long) => drainBatch(batch, root, passphrase, cfg, sink))
-      .start()
+      intervalMs: Long = 1000L): StreamingQuery =
+    start(spark, root, passphrase, cfg, sink, checkpointDir, firstSeq,
+      Trigger.ProcessingTime(intervalMs))
 }

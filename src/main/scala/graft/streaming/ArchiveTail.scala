@@ -17,12 +17,13 @@ import graft.sources.Archive
   * (poll + retry, :88-105); the sink's `save(df, seq)` is the atomic
   * commit (K2/K4).
   *
-  * Scale: each iteration reads its triple through `Engine.extract` —
-  * one task gunzips, decodes and joins the three files on an executor,
-  * the same per-checkpoint read the Structured Streaming runners commit
-  * — so a checkpoint costs one Spark job, the sink's own. The tail
-  * itself is inherently sequential because the reference's offset
-  * contract (one `lastfile` pointer) is.
+  * Scale: [[commit]] reads a triple through `Engine.extract` — one task
+  * gunzips, decodes and joins the three files on an executor — so a
+  * checkpoint costs one Spark job, the sink's own. [[commit]] is also
+  * the step the Structured Streaming runners
+  * ([[graft.sources.ArchiveStreamRunner]]) call for each sequence their
+  * source offers. The tail itself is inherently sequential because the
+  * reference's offset contract (one `lastfile` pointer) is.
   */
 final class ArchiveTail(
     spark: SparkSession,
@@ -77,6 +78,15 @@ final class ArchiveTail(
   /** Process exactly one checkpoint if its triple is present. */
   def processOne(seq: Long): Boolean = {
     if (!Archive.available(fs, root, seq)) return false
+    commit(seq)
+    true
+  }
+
+  /** Extract checkpoint `seq` and commit it through the sink: the one
+    * commit step of every ingest runner. A triple that is missing fails
+    * the extract's read.
+    */
+  def commit(seq: Long): Unit = {
     // per-commit counts (hc_storage_adapter.py:47-58 logging parity),
     // observed on the job the sink's save runs. A sink that runs no job
     // (a JDBC sink skipping a committed seq) leaves them unset, so they
@@ -89,7 +99,6 @@ final class ArchiveTail(
       .filter(_.length == 2).map(r => (r.getLong(0), r.getLong(1))).getOrElse((0L, 0L))
     metrics.onCommit(seq, payments, creations)
     firstSeqSeeded = false // the pointer now reflects a real commit
-    true
   }
 
   /** Drain every currently available checkpoint in order; returns how many

@@ -188,11 +188,7 @@ object LivePipeline {
         org.apache.spark.sql.streaming.Trigger.AvailableNow(),
       index: Option[LiveIndex.Config] = None,
       monitor: Option[AdmissionMonitor] = None): StreamingQuery = {
-    val raw = spark.readStream
-      .format("graft.sources.ArchiveStreamProvider")
-      .option("root", archiveRoot)
-      .option("firstSeq", firstSeq.toString)
-      .load()
+    val raw = graft.sources.ArchiveStreamRunner.stream(spark, archiveRoot, firstSeq)
     val fn: (DataFrame, Long) => Unit = { (batch, id) =>
       import spark.implicits._
       val txPaths = batch.select("seq").as[Long].collect().toSeq

@@ -43,7 +43,7 @@ class ArchiveStreamSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft-stream-jdbc-ckpt").toString
     writeCheckpoint(archive, 0x3fL)
     val db = new FakeDb
-    val sink = new graft.sinks.JdbcTxnSink(() => db.connection())
+    val sink = new graft.sinks.JdbcSink(() => db.connection(), graft.sinks.JdbcLayout.Unified)
     ArchiveStreamRunner.runAvailableNow(spark, archive, Passphrase, cfg, sink, ckpt)
     assert(db.ops.size === 1)
     assert(db.lastfile === Some("0000003f"))
@@ -52,6 +52,20 @@ class ArchiveStreamSpec extends AnyFunSuite {
     val ckpt2 = Files.createTempDirectory("graft-stream-jdbc-ckpt2").toString
     ArchiveStreamRunner.runAvailableNow(spark, archive, Passphrase, cfg, sink, ckpt2)
     assert(db.ops.size === 1)
+  }
+
+  test("the streaming runner probes its sink before the query starts (K6)") {
+    val archive = Files.createTempDirectory("graft-stream-probe").toString
+    val ckpt = Files.createTempDirectory("graft-stream-probe-ckpt").toString
+    writeCheckpoint(archive, 0x3fL)
+    val db = new FakeDb
+    db.failBatch = true
+    val sink = new graft.sinks.JdbcSink(() => db.connection(), graft.sinks.JdbcLayout.Unified)
+    intercept[IllegalStateException](
+      ArchiveStreamRunner.runAvailableNow(spark, archive, Passphrase, cfg, sink, ckpt))
+    assert(db.ops.isEmpty)
+    assert(db.lastfile === None)
+    assert(Option(Paths.get(ckpt, "offsets").toFile.list()).forall(_.isEmpty))
   }
 
   test("AvailableNow drains multiple paced micro-batches under the start snapshot") {

@@ -5,7 +5,7 @@ import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline._
-import graft.sinks.{JdbcTwoTableSink, JdbcTxnSink, PartitionedFileSink}
+import graft.sinks.{JdbcLayout, JdbcSink, PartitionedFileSink}
 import graft.sources.Archive
 import graft.streaming.ArchiveTail
 import graft.xdr.{Stellar, StellarWriter}
@@ -125,7 +125,7 @@ class IngestSpec extends AnyFunSuite {
     // adapter branch: no S3 bucket → the Postgres sink (main.py:369-390)
     val pg = Deploy.sink(env - "S3_STORAGE_BUCKET" +
       ("POSTGRES_HOST" -> "db", "PYTHON_PASSWORD" -> "secret"))
-    assert(pg.isInstanceOf[JdbcTxnSink])
+    assert(pg match { case j: JdbcSink => j.layout == JdbcLayout.Unified; case _ => false })
     // no alert env → Noop; a webhook var → validating fan-out (probed)
     assert(Deploy.alerts(env) === graft.streaming.IngestAlerts.Noop)
     assert(Deploy.transports(env).isEmpty)
@@ -716,7 +716,7 @@ class IngestSpec extends AnyFunSuite {
 
     // jdbc sink: canned row round-trips inside one rolled-back transaction
     val db = new FakeDb
-    val sink = new JdbcTxnSink(() => db.connection())
+    val sink = new JdbcSink(() => db.connection(), JdbcLayout.Unified)
     sink.selfTest()
     assert(db.ops.isEmpty && db.commits === 0 && db.rollbacks === 1)
 
@@ -733,7 +733,7 @@ class IngestSpec extends AnyFunSuite {
     writeCheckpoint(archive, 0x3fL, 2)
     writeCheckpoint(archive, 0x7fL, 1)
     val db = new FakeDb
-    val sink = new JdbcTxnSink(() => db.connection())
+    val sink = new JdbcSink(() => db.connection(), JdbcLayout.Unified)
     val tail = new ArchiveTail(spark, archive, Passphrase, cfg, sink)
     assert(db.rollbacks === 1) // construction self-test probe, rolled back
 
@@ -800,9 +800,28 @@ class IngestSpec extends AnyFunSuite {
     assert(seen === Vector((0x3fL, 2L, 0L), (0x7fL, 1L, 1L)))
   }
 
+  test("both JDBC layouts commit the same rows from one mixed checkpoint") {
+    val archive = Files.createTempDirectory("graft-arch-layouts").toString
+    writeMixedCheckpoint(archive, 0x3fL)
+    val unified = new FakeDb
+    val twoTable = new FakeDb
+    for ((db, layout) <- Seq(unified -> JdbcLayout.Unified, twoTable -> JdbcLayout.TwoTable))
+      assert(new ArchiveTail(spark, archive, Passphrase, cfg,
+        new JdbcSink(() => db.connection(), layout)).runOnce() === 1)
+    val opCols = JdbcLayout.Unified.head.columnNames
+    for (t <- JdbcLayout.TwoTable) {
+      val projected = unified.ops.filter(_.head == t.takes.get)
+        .map(r => t.columnNames.map(c => r(opCols.indexOf(c))))
+      assert(projected.nonEmpty)
+      assert(projected === twoTable.tables(t.name), t.name)
+    }
+    assert(unified.lastfile === Some("0000003f"))
+    assert(unified.lastfile === twoTable.lastfile)
+  }
+
   test("two-table sink bootstraps reference DDL and routes rows by type (fidelity)") {
     val db = new FakeDb
-    val sink = new JdbcTwoTableSink(() => db.connection())
+    val sink = new JdbcSink(() => db.connection(), JdbcLayout.TwoTable)
 
     // bootstrap parity (build_database.py:30-83): invalid first file rejected
     intercept[IllegalArgumentException](sink.bootstrap("00000040"))
@@ -864,7 +883,7 @@ class IngestSpec extends AnyFunSuite {
     // would touch 0 rows and the offset would never advance (silent
     // re-ingest forever); the sink falls back to INSERT
     val db = new FakeDb
-    val sink = new JdbcTwoTableSink(() => db.connection())
+    val sink = new JdbcSink(() => db.connection(), JdbcLayout.TwoTable)
     val archive = Files.createTempDirectory("graft-arch-2t-unseeded").toString
     writeMixedCheckpoint(archive, 0x3fL)
     val tail = new ArchiveTail(spark, archive, Passphrase, cfg, sink)
