@@ -264,16 +264,20 @@ object Extract {
   * ordering the reference omits.
   */
 object Serve {
+  /** Payments in served order `(time, hash, operation_index)`, with a
+    * `date` column: `time` as the sample's `yyyy-MM-dd` strftime
+    * (sample/main.py:31,45). The one spelling of both, shared by the
+    * per-key queries below and by [[graft.serve.HttpServe]]'s index.
+    */
+  def ordered(payments: DataFrame): DataFrame =
+    payments.withColumn("date", date_format(col("time"), "yyyy-MM-dd"))
+      .orderBy(col("time"), col("hash"), col("operation_index"))
+
   /** GET /payments?source=&limit= (sample/main.py:25). */
   def paymentsBySource(payments: DataFrame, source: String, limit: Int = 20): DataFrame =
-    payments.filter(col("source") === source)
-      .withColumn("date", date_format(col("time"), "yyyy-MM-dd"))
-      .orderBy(col("time"), col("hash"), col("operation_index"))
-      .limit(limit)
+    ordered(payments.filter(col("source") === source)).limit(limit)
 
   /** GET /tx?id= (sample/main.py:42). */
   def txByHash(payments: DataFrame, hash: String): DataFrame =
-    payments.filter(col("hash") === hash)
-      .withColumn("date", date_format(col("time"), "yyyy-MM-dd"))
-      .orderBy(col("operation_index"))
+    ordered(payments.filter(col("hash") === hash)).orderBy(col("operation_index"))
 }

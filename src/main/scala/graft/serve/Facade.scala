@@ -1,18 +1,33 @@
 package graft.serve
 
-import java.net.URLDecoder
-import com.sun.net.httpserver.HttpExchange
-import org.apache.spark.sql.{DataFrame, Encoders}
+import java.net.{InetSocketAddress, URLDecoder}
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** The request/response plumbing shared by the HTTP facades
   * ([[HttpServe]], [[IntakeServe]]): query-param parsing, the
   * try→200/400/500 dispatch with JSON content type and the wildcard
-  * CORS grant, JSON string escaping, and the plain JSON-array body
-  * rendering. One place, so a fix to any of it (error mapping,
-  * headers, escaping) cannot silently diverge between facades.
+  * CORS grant, JSON string escaping, the plain JSON-array body
+  * rendering, and the server itself. One place, so a fix to any of it
+  * (error mapping, headers, escaping) cannot silently diverge between
+  * facades.
   */
-private[serve] object Facade {
+private[graft] object Facade {
+
+  /** A JDK HttpServer on loopback `port` (0: an ephemeral one), with
+    * TCP_NODELAY on its sockets unless the operator set the property
+    * already. The JDK server sends headers and body as two writes, so
+    * Nagle's algorithm plus the client's delayed ACK holds every
+    * response about 40 ms. `sun.net.httpserver.nodelay` is the JDK's
+    * only switch for it and is read once per JVM, when the first
+    * server is created, so it is set before the create.
+    */
+  def server(port: Int): HttpServer = {
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  }
 
   def params(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&").toSeq
@@ -66,16 +81,17 @@ private[serve] object Facade {
     try os.write(bytes) finally os.close()
   }
 
-  /** Rows as one well-formed JSON array. Null-valued fields are KEPT
+  /** Each row of `df` as one JSON object. Null-valued fields are KEPT
     * (`"quality_score":null`) — Spark's to_json drops them by default,
     * which made a field's presence depend on its value and broke
     * clients indexing into the object (and diverged from the
     * hand-rendered endpoints, which emit explicit nulls).
     */
+  def jsonRow(df: DataFrame): Column =
+    to_json(struct(df.columns.map(col): _*),
+      java.util.Collections.singletonMap("ignoreNullFields", "false"))
+
+  /** Rows as one well-formed JSON array of [[jsonRow]] objects. */
   def arrayJson(df: DataFrame): String =
-    df.select(to_json(struct(df.columns.map(col): _*),
-        java.util.Collections.singletonMap("ignoreNullFields", "false")))
-      .as[String](Encoders.STRING)
-      .collect()
-      .mkString("[", ",", "]")
+    df.select(jsonRow(df)).as[String](Encoders.STRING).collect().mkString("[", ",", "]")
 }

@@ -1,8 +1,7 @@
 package graft.serve
 
-import java.net.InetSocketAddress
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.DataFrame
+import com.sun.net.httpserver.HttpExchange
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.pipeline.Serve
 
@@ -25,19 +24,72 @@ import graft.pipeline.Serve
   * library adds no dependency — this is the demo-serving tier (the
   * reference's equivalent is a Flask dev server); production serving
   * belongs behind a real gateway reading the same collected table.
+  *
+  * The served rows are fixed when the server is built. The constructor
+  * runs one Spark job over [[Serve.ordered]], renders every row's body
+  * once, and keeps two maps: source → bodies in served order, and hash
+  * → bodies by `operation_index` (nulls first, ties in served order).
+  * A request runs no Spark code. Rows written to the table later are
+  * served by the next server built over it; a file-backed frame already
+  * fixed its file listing when it was created, so this extends that
+  * snapshot to the rows, JDBC-backed frames included. The build brings
+  * the whole table to the driver, so `spark.driver.maxResultSize`
+  * bounds it: past that the constructor fails. The sockets run with
+  * TCP_NODELAY ([[Facade.server]]).
   */
 final class HttpServe(payments: DataFrame, port: Int = 0,
     referenceShape: Boolean = false) {
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  import HttpServe.{pretty, Keyed}
+
+  private val (bySource, byHash) = {
+    // one partition: the global sort then needs no range-partition
+    // exchange, whose sampling and shuffle would be jobs of their own
+    val shaped = Serve.ordered(payments.coalesce(1))
+      .withColumn("time", col("date")).drop("date")
+    val cols = shaped.columns
+    val body = if (referenceShape) struct(cols.map(col): _*) else Facade.jsonRow(shaped)
+    val rows = shaped
+      .select(col("source"), col("hash"), col("operation_index").cast("long"), body)
+      .collect().map { r =>
+        Keyed(r.getString(0), r.getString(1), Option(r.getAs[java.lang.Long](2)).map(_.longValue),
+          if (referenceShape) pretty(cols, r.getStruct(3)) else r.getString(3))
+      }
+    (rows.groupMap(_.source)(_.body),
+      rows.groupBy(_.hash).view.mapValues(_.sortBy(_.opIndex).map(_.body)).toMap)
+  }
+
+  private val server = Facade.server(port)
 
   /** Actual bound port (pass port=0 for an ephemeral one). */
   def boundPort: Int = server.getAddress.getPort
 
-  private def rowsJson(df: DataFrame): String = {
-    val shaped = df.withColumn("time", col("date")).drop("date")
-    if (referenceShape) prettyConcat(shaped) else Facade.arrayJson(shaped)
-  }
+  /** A response body: a JSON array of the rows, or in the reference
+    * shape the rows concatenated with NO separator (sample/main.py:28-34).
+    */
+  private def join(bodies: Array[String]): String =
+    if (referenceShape) bodies.mkString else bodies.mkString("[", ",", "]")
+
+  server.createContext("/payments", (ex: HttpExchange) => Facade.handle(ex) { p =>
+    val limit = p.getOrElse("limit", "20").toInt
+    // validated HERE so a negative limit is a 400 like any other
+    // badly-shaped param, not an empty body
+    require(limit >= 0, s"limit must be >= 0, got $limit")
+    join(bySource.getOrElse(p("source"), Array.empty[String]).take(limit))
+  })
+  server.createContext("/tx", (ex: HttpExchange) => Facade.handle(ex) { p =>
+    join(byHash.getOrElse(p("id"), Array.empty[String]))
+  })
+
+  def start(): Unit = server.start()
+  def stop(): Unit = server.stop(0)
+}
+
+object HttpServe {
+  /** One served row: its two lookup keys, its order within a tx, and
+    * its rendered body.
+    */
+  private final case class Keyed(source: String, hash: String, opIndex: Option[Long], body: String)
 
   /** CPython `json.dumps` escaping for the byte-fidelity path —
     * distinct from [[graft.Jsons.escape]] because the sample's default
@@ -60,47 +112,23 @@ final class HttpServe(payments: DataFrame, port: Int = 0,
     case c => c.toString
   }
 
-  import HttpServe.pyDouble
-
-  /** The sample's response body verbatim: each row rendered as
-    * `json.dumps(result, indent=2)` — two-space indent, keys in column
-    * order (RealDictCursor preserves SELECT * order) — and concatenated
-    * with NO separator (sample/main.py:28-34). Doubles go through
-    * [[pyDouble]] so large/small magnitudes keep Python's spelling.
+  /** One row as the sample renders it: `json.dumps(result, indent=2)`
+    * — two-space indent, keys in column order (RealDictCursor preserves
+    * SELECT * order). Doubles go through [[pyDouble]] so large/small
+    * magnitudes keep Python's spelling.
     */
-  private def prettyConcat(shaped: DataFrame): String = {
-    val cols = shaped.columns
-    shaped.collect().map { r =>
-      cols.zipWithIndex.map { case (c, i) =>
-        val v = r.get(i) match {
-          case null => "null"
-          case s: String => "\"" + jsonEscape(s) + "\""
-          case d: java.lang.Double => pyDouble(d)
-          case f: java.lang.Float => pyDouble(f.toDouble)
-          case x => x.toString
-        }
-        s"""  "$c": $v"""
-      }.mkString("{\n", ",\n", "\n}")
-    }.mkString("")
-  }
+  private[graft] def pretty(cols: Array[String], r: Row): String =
+    cols.zipWithIndex.map { case (c, i) =>
+      val v = r.get(i) match {
+        case null => "null"
+        case s: String => "\"" + jsonEscape(s) + "\""
+        case d: java.lang.Double => pyDouble(d)
+        case f: java.lang.Float => pyDouble(f.toDouble)
+        case x => x.toString
+      }
+      s"""  "$c": $v"""
+    }.mkString("{\n", ",\n", "\n}")
 
-  server.createContext("/payments", (ex: HttpExchange) => Facade.handle(ex) { p =>
-    val limit = p.getOrElse("limit", "20").toInt
-    // validated HERE so a negative limit is a 400 like any other
-    // badly-shaped param — unchecked it reaches Dataset.limit(), whose
-    // AnalysisException would surface as a 500 server fault
-    require(limit >= 0, s"limit must be >= 0, got $limit")
-    rowsJson(Serve.paymentsBySource(payments, p("source"), limit))
-  })
-  server.createContext("/tx", (ex: HttpExchange) => Facade.handle(ex) { p =>
-    rowsJson(Serve.txByHash(payments, p("id")))
-  })
-
-  def start(): Unit = server.start()
-  def stop(): Unit = server.stop(0)
-}
-
-object HttpServe {
   /** Render a double exactly like CPython's `float.__repr__` (what
     * `json.dumps` emits): shortest round-trip digits, fixed notation for
     * decimal exponents in [-4, 16), otherwise `1e+16`-style scientific

@@ -1,7 +1,6 @@
 package graft.serve
 
-import java.net.InetSocketAddress
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.LivePipeline
@@ -76,10 +75,11 @@ import graft.streaming.LivePipeline
   *    pruned model), one row per word position with its pieces and
   *    piece count — x58's accounting, served per request.
   *
-  * Built like [[HttpServe]] (JDK HttpServer, no dependency, JSON
-  * array bodies, wildcard CORS) and, like it, a DEMO-serving tier:
-  * each request runs one bounded Spark job. The queries it runs are
-  * the scale-safe spellings — the fate lookup is a point predicate
+  * Built on the same JDK HttpServer as [[HttpServe]] (no dependency,
+  * JSON array bodies, wildcard CORS), and a DEMO-serving tier: unlike
+  * HttpServe, which answers from an index built once, each request
+  * runs one bounded Spark job. The queries it runs are the scale-safe
+  * spellings — the fate lookup is a point predicate
   * over the doc_id-monotone audit partitions (parquet min/max stats
   * prune to ~one row group), the dashboard is one combinable
   * aggregate over 1-row-per-doc audit records, and the progress read
@@ -106,7 +106,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
     localEps: Double = 1.0,
     tokenizer: Option[String] = None) {
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server = Facade.server(port)
 
   def boundPort: Int = server.getAddress.getPort
 

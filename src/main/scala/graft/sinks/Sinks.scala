@@ -211,7 +211,9 @@ final class JdbcSink(connect: () => Connection, val layout: Seq[JdbcTable]) exte
     * reference's "using existing database" path). Otherwise it validates
     * the first file sequence (`(seq+1) % 64 == 0` — checkpoints close at
     * 64-ledger boundaries), creates database, user and tables, grants
-    * the ingest user INSERT/SELECT on the layout's tables and
+    * the ingest user INSERT/SELECT/DELETE on the layout's tables (the
+    * reference grants INSERT/SELECT; [[selfTest]] and [[save]]'s
+    * overwrite also delete) and
     * INSERT/SELECT/UPDATE on `lastfile`, and seeds `lastfile` with the
     * first file.
     *
@@ -244,7 +246,9 @@ final class JdbcSink(connect: () => Connection, val layout: Seq[JdbcTable]) exte
     ensureSchema()
     autocommit(connect) { st =>
       if (adminConnect.isDefined) {
-        for (t <- layout; g <- Seq("INSERT", "SELECT"))
+        // DELETE too: the self-test probe and the lastfile == seq
+        // overwrite both delete from the data tables
+        for (t <- layout; g <- Seq("INSERT", "SELECT", "DELETE"))
           st.execute(s"GRANT $g ON ${t.name} TO python")
         Seq("INSERT", "SELECT", "UPDATE").foreach(g =>
           st.execute(s"GRANT $g ON lastfile TO python"))

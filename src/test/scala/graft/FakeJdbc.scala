@@ -15,8 +15,12 @@ final class FakeDb {
   var lastfile: Option[String] = None
   /** CREATE DATABASE/USER, ALTER, GRANT statements seen (bootstrap log). */
   val ddl: mutable.Buffer[String] = mutable.Buffer.empty
+  /** Every SQL text run or prepared, in order. */
+  val statements: mutable.Buffer[String] = mutable.Buffer.empty
   /** when set, executeBatch throws — fault injection for rollback tests */
   @volatile var failBatch: Boolean = false
+  /** when set, only INSERT batches throw: a failure after a staged DELETE */
+  @volatile var failInserts: Boolean = false
   var commits: Int = 0
   var rollbacks: Int = 0
 
@@ -30,14 +34,30 @@ private final class FakeConn(db: FakeDb) {
   private val staged: mutable.Map[String, Vector[Seq[Any]]] =
     mutable.Map.empty.withDefaultValue(Vector.empty)
   private var stagedLast: Option[Option[String]] = None
+  /** prepared DELETEs of this txn: per table, the parameter rows whose
+    * committed matches go on commit
+    */
+  private val stagedDeletes: mutable.Map[String, Vector[Seq[Any]]] =
+    mutable.Map.empty.withDefaultValue(Vector.empty)
   // JDBC default: autocommit on — each statement flushes immediately;
   // sinks opt into transactions with setAutoCommit(false)
   private var autoCommit: Boolean = true
 
+  // a fake-fidelity positional match on the DELETE's (hash, op_index)
+  // parameter values
+  private def deleted(tbl: String)(row: Seq[Any]): Boolean =
+    stagedDeletes(tbl).exists(_.forall(p => row.contains(p)))
+
+  /** What this connection sees of `tbl`: committed rows less its staged
+    * deletes, plus its staged inserts.
+    */
+  private def visible(tbl: String): Vector[Seq[Any]] =
+    db.tables(tbl).filterNot(deleted(tbl)) ++ staged(tbl)
+
   private def flush(): Unit = {
-    staged.foreach { case (tbl, rows) => db.tables(tbl) = db.tables(tbl) ++ rows }
+    (stagedDeletes.keySet ++ staged.keySet).foreach(tbl => db.tables(tbl) = visible(tbl))
     stagedLast.foreach(v => db.lastfile = v)
-    staged.clear(); stagedLast = None
+    staged.clear(); stagedDeletes.clear(); stagedLast = None
   }
 
   private def maybeAutoFlush(): Unit = if (autoCommit) flush()
@@ -71,6 +91,7 @@ private final class FakeConn(db: FakeDb) {
 
   private def exec(sql: String): AnyRef = {
     val s = sql.trim
+    db.statements += s
     if (s.startsWith("CREATE TABLE")) java.lang.Boolean.TRUE
     else if (s.startsWith("CREATE") || s.startsWith("GRANT") || s.startsWith("ALTER")) {
       db.ddl += s; java.lang.Boolean.TRUE // bootstrap DDL: accept and log
@@ -93,7 +114,7 @@ private final class FakeConn(db: FakeDb) {
       // this txn) whose any column equals the quoted hash
       val tbl = hashTableRe.findFirstMatchIn(s).get.group(1)
       val h = "'([0-9a-f]{64})'".r.findFirstMatchIn(s).get.group(1)
-      resultSet((db.tables(tbl) ++ staged(tbl)).filter(_.contains(h)).map(_ => Seq[Any](h)))
+      resultSet(visible(tbl).filter(_.contains(h)).map(_ => Seq[Any](h)))
     } else if (s.startsWith("DELETE FROM")) {
       val tbl = hashTableRe.findFirstMatchIn(s).get.group(1)
       val h = "'([0-9a-f]{64})'".r.findFirstMatchIn(s).map(_.group(1))
@@ -122,6 +143,7 @@ private final class FakeConn(db: FakeDb) {
   }
 
   private def prepared(sql: String): PreparedStatement = {
+    db.statements += sql.trim
     val isDelete = sql.trim.startsWith("DELETE FROM")
     val tbl =
       if (isDelete) hashTableRe.findFirstMatchIn(sql).map(_.group(1)).getOrElse("operations")
@@ -133,17 +155,14 @@ private final class FakeConn(db: FakeDb) {
       case ("addBatch", _) =>
         batch += (1 to current.keys.max).map(current.getOrElse(_, null)); current.clear(); null
       case ("executeBatch", _) =>
-        if (db.failBatch) throw new java.sql.SQLException("injected failure")
+        if (db.failBatch || (db.failInserts && !isDelete))
+          throw new java.sql.SQLException("injected failure")
         if (isDelete) {
           // prepared DELETE ... WHERE hash = ? AND operation_index = ?
-          // (the sinks' first-file overwrite path): drop matching rows
-          // from the committed table and this txn's staged rows — a
-          // fake-fidelity positional match on (hash, op_index) values
-          batch.foreach { params =>
-            def hit(row: Seq[Any]) = params.forall(p => row.contains(p))
-            db.tables(tbl) = db.tables(tbl).filterNot(hit)
-            staged(tbl) = staged(tbl).filterNot(hit)
-          }
+          // (the sinks' first-file overwrite path): this txn's staged
+          // rows go now, the committed ones on commit
+          stagedDeletes(tbl) = stagedDeletes(tbl) ++ batch.toVector
+          staged(tbl) = staged(tbl).filterNot(deleted(tbl))
           batch.clear()
         } else {
           staged(tbl) = staged(tbl) ++ batch.toVector; batch.clear()
@@ -162,7 +181,7 @@ private final class FakeConn(db: FakeDb) {
       flush()
       db.commits += 1; null
     case ("rollback", _) =>
-      staged.clear(); stagedLast = None; db.rollbacks += 1; null
+      staged.clear(); stagedDeletes.clear(); stagedLast = None; db.rollbacks += 1; null
     case ("close", _) => null
   }
 }

@@ -3,7 +3,12 @@ package graft
 import java.net.{HttpURLConnection, URI}
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
-import graft.serve.HttpServe
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import graft.pipeline.Serve
+import graft.serve.{Facade, HttpServe}
 
 /** Drives the HTTP facade end-to-end against an in-memory payments table:
   * the reference's sample API surface (sample/main.py:19-53) — /payments
@@ -65,8 +70,7 @@ class HttpServeSpec extends AnyFunSuite {
       assert(c3 === 400 && err.contains("missing parameter"))
 
       // a negative limit is the caller's input, not a server fault:
-      // 400 from the handler's own validation, never Dataset.limit's
-      // AnalysisException surfacing as a 500
+      // 400 from the handler's own validation, not an empty body
       val (cneg, errNeg) = get(s"$base/payments?source=SRC_A&limit=-1")
       assert(cneg === 400 && errNeg.contains("bad request"),
         s"negative limit must be a client error: $errNeg")
@@ -100,6 +104,116 @@ class HttpServeSpec extends AnyFunSuite {
       val (c2, tx) = get(s"$base/tx?id=${"b" * 64}")
       assert(c2 === 200 && tx.startsWith("{\n  \"source\": \"SRC_A\"") && tx.endsWith("\n}"))
     } finally srv.stop()
+  }
+
+  /** Payments whose served order and bodies are easy to get wrong:
+    * null memo and destination, a non-ASCII memo, equal times broken
+    * by hash, and a hash of four ops (one with a null index) listed out
+    * of index order.
+    */
+  private def awkwardPayments: DataFrame = {
+    import spark.implicits._
+    val t0 = Timestamp.valueOf("2018-10-20 12:47:21")
+    val t1 = Timestamp.valueOf("2018-10-21 01:00:00")
+    Seq[(String, String, Double, String, String, Option[Int], Timestamp)](
+      ("SRC_A", "DST_1", 21.0, null, "b" * 64, Some(0), t0),
+      ("SRC_A", null, 2.5e7, "1-kit-\u00e9t\u00e9 \u2603", "a" * 64, Some(2), t0),
+      ("SRC_B", "DST_2", 0.5, "1-kit-\"q\"", "a" * 64, Some(1), t0),
+      ("SRC_A", "DST_3", 3.0, "1-kit-z", "a" * 64, None, t0),
+      ("SRC_A", "DST_4", 4.0, "1-kit-w", "a" * 64, Some(0), t0),
+      ("SRC_B", "DST_5", 1e-5, null, "c" * 64, Some(0), t1)
+    ).toDF("source", "destination", "amount", "memo_text", "hash", "operation_index", "time")
+  }
+
+  /** A served frame with `time` as the sample renders it. */
+  private def shaped(df: DataFrame): DataFrame =
+    df.withColumn("time", col("date")).drop("date")
+
+  test("the prebuilt index serves bodies byte-equal to the Spark queries, both shapes") {
+    val pays = awkwardPayments
+    val n = pays.count().toInt
+    def pretty(df: DataFrame): String = {
+      val s = shaped(df)
+      s.collect().map(r => HttpServe.pretty(s.columns, r)).mkString
+    }
+    for (reference <- Seq(false, true)) {
+      val render: DataFrame => String =
+        if (reference) pretty else df => Facade.arrayJson(shaped(df))
+      val srv = new HttpServe(pays, referenceShape = reference)
+      srv.start()
+      try {
+        val base = s"http://127.0.0.1:${srv.boundPort}"
+        for (src <- Seq("SRC_A", "SRC_B", "SRC_NONE"); limit <- Seq(0, 1, 2, n + 1)) {
+          val (code, body) = get(s"$base/payments?source=$src&limit=$limit")
+          assert(code === 200)
+          assert(body === render(Serve.paymentsBySource(pays, src, limit)),
+            s"/payments source=$src limit=$limit reference=$reference")
+        }
+        for (h <- Seq("a", "b", "c", "d").map(_ * 64)) {
+          val (code, body) = get(s"$base/tx?id=$h")
+          assert(code === 200)
+          assert(body === render(Serve.txByHash(pays, h)), s"/tx $h reference=$reference")
+        }
+      } finally srv.stop()
+    }
+    // the four-op tx in index order, the null index first
+    val srv = new HttpServe(pays)
+    srv.start()
+    try {
+      val (_, tx) = get(s"http://127.0.0.1:${srv.boundPort}/tx?id=${"a" * 64}")
+      val order = Seq("\"DST_3\"", "\"DST_4\"", "\"DST_2\"", "\"destination\":null")
+        .map(d => tx.indexOf(d))
+      assert(order.forall(_ >= 0) && order === order.sorted, tx)
+    } finally srv.stop()
+  }
+
+  test("building the server runs one Spark job; a request runs none") {
+    val pays = awkwardPayments
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val srv = new HttpServe(pays)
+      TestBus.drain(sc)
+      assert(jobs.get === 1, "the build")
+      srv.start()
+      try {
+        val base = s"http://127.0.0.1:${srv.boundPort}"
+        Seq("/payments?source=SRC_A", "/payments?source=SRC_B&limit=1",
+          "/payments?source=SRC_NONE", s"/tx?id=${"a" * 64}", s"/tx?id=${"d" * 64}")
+          .foreach(path => assert(get(base + path)._1 === 200, path))
+        TestBus.drain(sc)
+        assert(jobs.get === 1, "requests ran Spark jobs")
+      } finally srv.stop()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a server serves the rows of its build: a later partition waits for the next server") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-serve-snapshot").toString
+    def write(ledger: Int, src: String, hash: String): Unit =
+      Seq((src, "DST", 1.0, hash, 0, Timestamp.valueOf("2018-10-20 12:47:21")))
+        .toDF("source", "destination", "amount", "hash", "operation_index", "time")
+        .write.csv(s"$dir/ledger=$ledger")
+    val schema = "source STRING, destination STRING, amount DOUBLE, hash STRING, " +
+      "operation_index INT, time TIMESTAMP"
+    def read(): DataFrame = spark.read.schema(schema).csv(dir)
+    write(1, "SRC_OLD", "e" * 64)
+    val srv = new HttpServe(read())
+    write(2, "SRC_NEW", "f" * 64)
+    val fresh = new HttpServe(read())
+    srv.start(); fresh.start()
+    try {
+      def payments(s: HttpServe, src: String): String =
+        get(s"http://127.0.0.1:${s.boundPort}/payments?source=$src")._2
+      assert(payments(srv, "SRC_OLD").contains("e" * 64))
+      assert(payments(srv, "SRC_NEW") === "[]", "a row written after the build")
+      assert(payments(fresh, "SRC_NEW").contains("f" * 64))
+    } finally { srv.stop(); fresh.stop() }
   }
 
   test("IntakeServe answers fate lookups, the admissions dashboard, and pack progress") {

@@ -831,7 +831,7 @@ class IngestSpec extends AnyFunSuite {
     assert(db.lastfile === Some("0000003f"))
     assert(db.ddl.exists(_.startsWith("CREATE DATABASE")))
     assert(db.ddl.exists(_.startsWith("CREATE USER")))
-    assert(db.ddl.count(_.startsWith("GRANT")) === 7) // 2×(payments,creations) + 3×lastfile
+    assert(db.ddl.count(_.startsWith("GRANT")) === 9) // 3×(payments,creations) + 3×lastfile
     // second bootstrap: existing database → untouched no-op
     assert(!sink.bootstrap("0000003f"))
 
@@ -891,5 +891,45 @@ class IngestSpec extends AnyFunSuite {
     assert(db.lastfile === Some("0000003f"))
     assert(tail.runOnce() === 0) // offset advanced: no re-ingest
     assert(db.tables("payments").size === 1)
+  }
+
+  test("bootstrap grants the ingest user every statement the sink then runs") {
+    val archive = Files.createTempDirectory("graft-arch-grants").toString
+    writeMixedCheckpoint(archive, 0x3fL)
+    for (layout <- Seq(JdbcLayout.Unified, JdbcLayout.TwoTable)) {
+      val db = new FakeDb
+      val sink = new JdbcSink(() => db.connection(), layout)
+      assert(sink.bootstrap("0000003f", adminConnect = Some(() => db.connection())))
+      db.statements.clear()
+      // the K6 probe, the seeded first checkpoint, then its overwrite
+      val tail = new ArchiveTail(spark, archive, Passphrase, cfg, sink)
+      assert(tail.runOnce() === 1 && tail.processOne(0x3fL))
+      // a statement's verb and its table: the word after INTO/FROM, or
+      // the verb's object (UPDATE lastfile)
+      val target = "^(\\w+)(?: .*?(?:INTO|FROM))? (\\w+)".r
+      val needed = db.statements.map(s => target.findFirstMatchIn(s).get)
+        .map(m => s"GRANT ${m.group(1)} ON ${m.group(2)} TO python").toSet
+      assert(needed.exists(_.startsWith("GRANT DELETE")), needed)
+      assert(needed.subsetOf(db.ddl.toSet), s"${layout.map(_.name)}: ${needed -- db.ddl}")
+    }
+  }
+
+  test("a lastfile == seq overwrite whose insert fails rolls back its deletes too") {
+    val archive = Files.createTempDirectory("graft-arch-overwrite").toString
+    writeCheckpoint(archive, 0x3fL, 2)
+    val db = new FakeDb
+    val sink = new JdbcSink(() => db.connection(), JdbcLayout.Unified)
+    val tail = new ArchiveTail(spark, archive, Passphrase, cfg, sink)
+    assert(tail.processOne(0x3fL))
+    val committed = db.ops
+    assert(committed.size === 2 && db.lastfile === Some("0000003f"))
+    // lastfile == seq: the save deletes this batch's rows, then inserts
+    db.failInserts = true
+    intercept[java.sql.SQLException](tail.processOne(0x3fL))
+    assert(db.statements.exists(_.startsWith("DELETE FROM operations WHERE hash = ?")))
+    assert(db.ops === committed && db.lastfile === Some("0000003f"))
+    db.failInserts = false
+    assert(tail.processOne(0x3fL))
+    assert(db.ops.toSet === committed.toSet && db.ops.size === 2)
   }
 }
