@@ -198,7 +198,7 @@ object Ivf {
     * `vec_id % k` partition means (no labels required — the gate's n6
     * store seeds from the corpus's 16 labels instead, which pins its
     * oracle; this form is the production lever where k must track
-    * corpus growth, k ≈ √n — see Engine.kmeansCells and PLANS.md).
+    * corpus growth, k ≈ √n — see PLANS.md §"Choosing IVF k").
     * Returns the final (`vec_id`, `cell`) assignment. Per-round state
     * through the driver is k×dims centroid values — bounded planning
     * state, never corpus-shaped.

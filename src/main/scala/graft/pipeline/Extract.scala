@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import java.util.regex.Pattern
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's procedural per-file loop (python/main.py:126-199)
   * re-expressed as one declarative Catalyst plan:
@@ -13,7 +14,7 @@ import org.apache.spark.sql.functions._
   *        ──▶ ⋈ broadcast(exploded results on hash, left)
   *        ──▶ [app-id memo filter]
   *        ──▶ posexplode(arrays_zip(ops, op_results)) + zip-truncation filter
-  *        ──▶ per-type filters + projections ──▶ unionByName
+  *        ──▶ per-type when() projections, one row per payment/creation
   * }}}
   *
   * Scale notes: this plan is the batch and SQL surface's spelling, for
@@ -39,7 +40,7 @@ import org.apache.spark.sql.functions._
 object Extract {
 
   /** Exploded (tx × op) rows with joined close-time and result columns —
-    * the shared trunk of [[payments]] and [[creations]].
+    * the trunk of [[operations]].
     */
   private[pipeline] def opRows(
       txs: Dataset[TxHistoryEntry],
@@ -91,50 +92,28 @@ object Extract {
         col("col.res").as("res"))
   }
 
-  /** KIN payments (python/main.py:160-181). */
+  /** KIN payments (python/main.py:160-181): the payment rows of
+    * [[operations]], projected to [[Schemas.payments]].
+    */
   def payments(
       txs: Dataset[TxHistoryEntry],
       ledgers: Dataset[LedgerEntry],
       results: Dataset[TxResultEntry],
       cfg: ExtractConfig): DataFrame =
-    opRows(txs, ledgers, results, cfg)
-      .filter(col("op.body.opType") === 1 &&
-        col("op.body.paymentOp.asset.alphaNum4").isNotNull &&
-        col("op.body.paymentOp.asset.alphaNum4.assetCode") === cfg.assetCode &&
-        col("op.body.paymentOp.asset.alphaNum4.issuer.ed25519") === cfg.assetIssuer)
-      .select(
-        col("src").as("source"),
-        col("op.body.paymentOp.destination.ed25519").as("destination"),
-        col("op.body.paymentOp.amount").as("amount"),
-        col("memo_text"),
-        col("fee"),
-        col("fee_charged"),
-        col("operation_index"),
-        col("tx_status"),
-        col("res.tr.paymentResult").as("op_status"),
-        col("hash"),
-        timestamp_seconds(col("closeTime")).as("time"))
+    ofType(operations(txs, ledgers, results, cfg), "payment", Schemas.payments)
 
-  /** Account creations (python/main.py:184-199). */
+  /** Account creations (python/main.py:184-199): the creation rows of
+    * [[operations]], projected to [[Schemas.creations]].
+    */
   def creations(
       txs: Dataset[TxHistoryEntry],
       ledgers: Dataset[LedgerEntry],
       results: Dataset[TxResultEntry],
       cfg: ExtractConfig): DataFrame =
-    opRows(txs, ledgers, results, cfg)
-      .filter(col("op.body.opType") === 0)
-      .select(
-        col("src").as("source"),
-        col("op.body.createAccountOp.destination.ed25519").as("destination"),
-        col("op.body.createAccountOp.startingBalance").as("starting_balance"),
-        col("memo_text"),
-        col("fee"),
-        col("fee_charged"),
-        col("operation_index"),
-        col("tx_status"),
-        col("res.tr.createAccountResult").as("op_status"),
-        col("hash"),
-        timestamp_seconds(col("closeTime")).as("time"))
+    ofType(operations(txs, ledgers, results, cfg), "creation", Schemas.creations)
+
+  private def ofType(ops: DataFrame, kind: String, schema: StructType): DataFrame =
+    ops.filter(col("type") === kind).select(schema.fieldNames.map(col).toSeq: _*)
 
   /** Discriminated union of both op kinds — the S3 adapter's single
     * per-ledger table (python/adapters/s3_storage_adapter.py:57-62), with
@@ -146,12 +125,11 @@ object Extract {
       ledgers: Dataset[LedgerEntry],
       results: Dataset[TxResultEntry],
       cfg: ExtractConfig): DataFrame = {
-    // ONE opRows trunk, branched per row with when() — the
-    // payments/creations union spelling built the whole decode + joins
+    // ONE opRows trunk, branched per row with when() — a
+    // payments/creations union would build the whole decode + joins
     // + explodes subtree TWICE (Catalyst does not dedup a union's
-    // independent legs), so every checkpoint paid gunzip + XDR decode
-    // double on the hot ingest path. The per-type predicates and
-    // projections below are exactly [[payments]]'/[[creations]]'.
+    // independent legs). The per-type predicates and projections are
+    // spelled here only; [[payments]] and [[creations]] select from it.
     val isPayment = col("op.body.opType") === 1 &&
       col("op.body.paymentOp.asset.alphaNum4").isNotNull &&
       col("op.body.paymentOp.asset.alphaNum4.assetCode") === cfg.assetCode &&

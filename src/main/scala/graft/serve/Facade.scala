@@ -4,6 +4,7 @@ import java.net.{InetSocketAddress, URLDecoder}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import graft.Jsons
 
 /** The request/response plumbing shared by the HTTP facades
   * ([[HttpServe]], [[IntakeServe]]): query-param parsing, the
@@ -37,11 +38,6 @@ private[graft] object Facade {
         URLDecoder.decode(k, "UTF-8") -> URLDecoder.decode(v, "UTF-8")
       }.toMap
 
-  /** The shared escaper ([[graft.Jsons.escape]]) under the facade's
-    * local name — every hand-rendered body here routes through it.
-    */
-  def jsonEscape(s: String): String = graft.Jsons.escape(s)
-
   def handle(ex: HttpExchange)(body: Map[String, String] => String): Unit = {
     val (code, bytes) =
       try (200, body(params(ex)).getBytes("UTF-8"))
@@ -51,10 +47,10 @@ private[graft] object Facade {
         // invalid %-encoding (URLDecoder) are all the caller's input,
         // not a server fault
         case e: NoSuchElementException =>
-          (400, s"""{"error":"missing parameter: ${jsonEscape(
+          (400, s"""{"error":"missing parameter: ${Jsons.escape(
             Option(e.getMessage).getOrElse(""))}"}""".getBytes("UTF-8"))
         case e @ (_: NumberFormatException | _: IllegalArgumentException) =>
-          (400, s"""{"error":"bad request: ${jsonEscape(
+          (400, s"""{"error":"bad request: ${Jsons.escape(
             Option(e.getMessage).getOrElse(e.getClass.getSimpleName))}"}"""
             .getBytes("UTF-8"))
         // a DP budget refusal (DpLedger.charge, the charge-then-release
@@ -66,10 +62,10 @@ private[graft] object Facade {
         // fault) still reads as the 500 it is, and a refusal-message
         // rewording cannot silently break the 429 contract.
         case e: graft.operators.DpLedger.BudgetRefused =>
-          (429, s"""{"error":"${jsonEscape(
+          (429, s"""{"error":"${Jsons.escape(
             Option(e.getMessage).getOrElse("refused"))}"}""".getBytes("UTF-8"))
         case e: Exception =>
-          (500, s"""{"error":"${jsonEscape(e.getClass.getSimpleName)}"}"""
+          (500, s"""{"error":"${Jsons.escape(e.getClass.getSimpleName)}"}"""
             .getBytes("UTF-8"))
       }
     ex.getResponseHeaders.set("Content-Type", "application/json")

@@ -110,12 +110,9 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
 
   def boundPort: Int = server.getAddress.getPort
 
-  private def rowsJson(df: org.apache.spark.sql.DataFrame): String =
-    Facade.arrayJson(df)
-
   server.createContext("/fate", (ex: HttpExchange) => Facade.handle(ex) { p =>
     val id = p("doc_id").toLong
-    rowsJson(LivePipeline.auditOutput(spark, cfg)
+    Facade.arrayJson(LivePipeline.auditOutput(spark, cfg)
       .filter(col("doc_id") === id)
       .select("doc_id", "fate", "quality_score", "batch"))
   })
@@ -131,7 +128,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
       case Some(id) => LivePipeline.auditBatchServed(spark, cfg, id)
       case None => LivePipeline.auditOutput(spark, cfg)
     }
-    rowsJson(scoped
+    Facade.arrayJson(scoped
       .groupBy("fate").agg(count(lit(1)).as("n_docs"))
       .orderBy(col("fate")))
   })
@@ -143,11 +140,11 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
     val scoped = p.get("doc_id").map(id => rows.filter(col("doc_id") === id.toLong))
       .orElse(p.get("batch").map(b => rows.filter(col("batch") === b.toLong)))
       .getOrElse(rows)
-    rowsJson(scoped.orderBy(col("batch").desc, col("doc_id"))
+    Facade.arrayJson(scoped.orderBy(col("batch").desc, col("doc_id"))
       .limit(p.getOrElse("limit", "100").toInt))
   })
   server.createContext("/progress", (ex: HttpExchange) => Facade.handle(ex) { _ =>
-    rowsJson(LivePipeline.packProgress(spark, cfg)
+    Facade.arrayJson(LivePipeline.packProgress(spark, cfg)
       .orderBy(col("lang"), col("shard")))
   })
   // keyword search over the curated corpus, when the intake runs the
@@ -157,7 +154,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
     server.createContext("/search", (ex: HttpExchange) => Facade.handle(ex) { p =>
       val terms = p("q").split("\\s+").toSeq.filter(_.nonEmpty)
       val k = p.getOrElse("k", "10").toInt
-      rowsJson(graft.streaming.LiveIndex.bm25(spark, idx, terms, k))
+      Facade.arrayJson(graft.streaming.LiveIndex.bm25(spark, idx, terms, k))
     })
   }
   // ANN over the live vector store (LiveVectors.topK): the query
@@ -168,7 +165,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
       val q = p("q").split(",").map(_.trim.toFloat)
       val k = p.getOrElse("k", "10").toInt
       val probes = p.getOrElse("probes", "1").toInt
-      rowsJson(graft.streaming.LiveVectors.topK(spark, vcfg, q, k, probes))
+      Facade.arrayJson(graft.streaming.LiveVectors.topK(spark, vcfg, q, k, probes))
     })
   }
   // recent per-trigger throughput/latency from the listener-bus ring
@@ -182,9 +179,9 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
       // shape-safe TODAY, which is exactly when an unescaped
       // interpolation slips through review
       m.snapshot.map { b =>
-        s"""{"query_id":"${Facade.jsonEscape(b.queryId)}","batch_id":${b.batchId},""" +
+        s"""{"query_id":"${graft.Jsons.escape(b.queryId)}","batch_id":${b.batchId},""" +
           s""""input_rows":${b.inputRows},"trigger_ms":${b.triggerMs},""" +
-          s""""timestamp":"${Facade.jsonEscape(b.timestamp)}"}"""
+          s""""timestamp":"${graft.Jsons.escape(b.timestamp)}"}"""
       }.mkString("[", ",", "]")
     })
   }
@@ -200,7 +197,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
     val vec = vectors.toSeq.flatMap(v => LivePipeline
       .storeStatusOf(spark, v.root, Seq("sigs", "tombstones")).map("vectors" -> _))
     (intake ++ idx ++ vec).map { case (plane, st) =>
-      s"""{"plane":"$plane","store":"${Facade.jsonEscape(st.store)}",""" +
+      s"""{"plane":"$plane","store":"${graft.Jsons.escape(st.store)}",""" +
         s""""n_partitions":${st.nPartitions},""" +
         s""""last_batch":${st.lastBatch.fold("null")(_.toString)},""" +
         s""""pending_fold":${st.pendingFold},""" +
@@ -245,7 +242,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
         s"window $window outside the served windows " +
           s"{${releaseWindows.mkString(", ")}}")
       val asOf = p.get("as_of").map(_.toLong).getOrElse(Long.MaxValue)
-      rowsJson(graft.streaming.LiveRelease.release(spark, rcfg,
+      Facade.arrayJson(graft.streaming.LiveRelease.release(spark, rcfg,
         window = window, seeded = releaseSeeded, ledger = releaseLedger,
         asOf = asOf))
     })
@@ -263,7 +260,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
     // thresholds would turn budget charges into a free parameter sweep.
     server.createContext("/alert", (ex: HttpExchange) => Facade.handle(ex) { p =>
       val asOf = p.get("as_of").map(_.toLong).getOrElse(Long.MaxValue)
-      rowsJson(graft.streaming.LiveRelease.aboveThreshold(spark, rcfg,
+      Facade.arrayJson(graft.streaming.LiveRelease.aboveThreshold(spark, rcfg,
         threshold = alertThreshold, seeded = releaseSeeded,
         ledger = releaseLedger, releaseId = "svt|http", asOf = asOf))
     })
@@ -282,7 +279,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
       val unit = p.getOrElse("unit", "event")
       require(unit == "event" || unit == "user",
         s"unit must be 'event' or 'user', got '$unit'")
-      rowsJson(
+      Facade.arrayJson(
         if (unit == "user")
           graft.streaming.LiveRelease.userHistogram(spark, rcfg,
             seeded = releaseSeeded, capCells = histogramCapCells,
@@ -310,7 +307,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
       val mech = p.getOrElse("mech", "laplace")
       require(mech == "laplace" || mech == "gauss",
         s"mech must be 'laplace' or 'gauss', got '$mech'")
-      rowsJson(
+      Facade.arrayJson(
         if (mech == "gauss") rdpAccountant match {
           case Some(acc) =>
             graft.streaming.LiveRelease.subsampledGaussianRdp(spark, rcfg,
@@ -335,7 +332,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
     // selling point vs 94 /release-shaped charges).
     server.createContext("/range", (ex: HttpExchange) => Facade.handle(ex) { p =>
       val asOf = p.get("as_of").map(_.toLong).getOrElse(Long.MaxValue)
-      rowsJson(graft.streaming.LiveRelease.rangeRelease(spark, rcfg,
+      Facade.arrayJson(graft.streaming.LiveRelease.rangeRelease(spark, rcfg,
         seeded = releaseSeeded, ledger = releaseLedger,
         releaseId = "range_tree|http", asOf = asOf))
     })
@@ -351,7 +348,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
     if (localDomain.nonEmpty)
       server.createContext("/local", (ex: HttpExchange) => Facade.handle(ex) { p =>
         val asOf = p.get("as_of").map(_.toLong).getOrElse(Long.MaxValue)
-        rowsJson(graft.streaming.LiveRelease.localFrequency(spark, rcfg,
+        Facade.arrayJson(graft.streaming.LiveRelease.localFrequency(spark, rcfg,
           localDomain, localEps, asOf = asOf))
       })
   }
@@ -364,7 +361,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
   // already-charged releases releases nothing new (post-processing).
   rdpAccountant.foreach { acc =>
     server.createContext("/rdp", (ex: HttpExchange) => Facade.handle(ex) { _ =>
-      rowsJson(acc.registry(spark)
+      Facade.arrayJson(acc.registry(spark)
         .withColumn("eps_budget", lit(acc.epsBudget.toDouble))
         .withColumn("delta_target", lit(acc.deltaTarget))
         .withColumn("eps_spent", lit(acc.spentEpsilon)))
@@ -387,7 +384,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
       val model = p.getOrElse("model", "refit")
       require(model == "refit" || model == "pruned",
         s"model must be 'refit' or 'pruned', got '$model'")
-      rowsJson(graft.operators.Unigram.encodeText(spark, tdir, p("text"),
+      Facade.arrayJson(graft.operators.Unigram.encodeText(spark, tdir, p("text"),
         pruned = model == "pruned"))
     })
   }
@@ -395,7 +392,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
     // what a training run pinned at ?as_of=<batch> would read: doc and
     // token totals per lang — the reproducible-corpus manifest
     val asOf = p.get("as_of").map(_.toLong).getOrElse(Long.MaxValue)
-    rowsJson(LivePipeline.packedOutput(spark, cfg, asOf = asOf)
+    Facade.arrayJson(LivePipeline.packedOutput(spark, cfg, asOf = asOf)
       .groupBy("lang").agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"))
       .orderBy(col("lang")))

@@ -21,8 +21,6 @@ import java.util.Base64
   * SMTP socket).
   */
 object Transports {
-  private def jsonEscape(s: String): String = graft.Jsons.escape(s)
-
   /** Generic webhook: POSTs `{"text": <message>}` to `url`.
     *
     * `probe()` issues a HEAD to the same URL and passes on ANY HTTP
@@ -78,7 +76,7 @@ object Transports {
       c.setDoOutput(true)
       c.setRequestProperty("Content-Type", "application/json; charset=utf-8")
       try {
-        val body = s"""{"text":"${jsonEscape(message)}"}""".getBytes(UTF_8)
+        val body = s"""{"text":"${graft.Jsons.escape(message)}"}""".getBytes(UTF_8)
         val out = c.getOutputStream
         try out.write(body) finally out.close()
         val status = c.getResponseCode

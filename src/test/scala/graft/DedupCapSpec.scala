@@ -48,14 +48,14 @@ class DedupCapSpec extends AnyFunSuite {
       // viral block: 70 same-prefix same-length-bucket docs > maxBlock=64
       Seq.tabulate(70)(i => (100L + i, f"boilerplate prefix shared by all docs $i%02d")))
       .toDF("doc_id", "text")
-    val pairs = Engine.fuzzyPairs(docs).collect()
+    val pairs = operators.Dedup.fuzzyPairs(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(pairs.toSeq === Seq((1L, 2L, 3L)),
       s"expected only the true in-block pair (viral block capped, prefix edit " +
         s"out of block): ${pairs.toSeq}")
     // the cap is the only reason the viral block is silent: lifting it
     // (maxBlock = 128) exposes its 70·69/2 near-identical pairs
-    val uncapped = Engine.fuzzyPairs(docs, maxBlock = 128L).count()
+    val uncapped = operators.Dedup.fuzzyPairs(docs, maxBlock = 128L).count()
     assert(uncapped === 70L * 69L / 2L + 1L, s"uncapped must pair the viral block: $uncapped")
   }
 
@@ -68,14 +68,14 @@ class DedupCapSpec extends AnyFunSuite {
       // all their postings leave before pairing
       Seq.tabulate(50)(i => (100L + i, "shared banner text repeated across the whole corpus here")))
       .toDF("doc_id", "text")
-    val pairs = Engine.containmentPairs(docs, shingleWords = 4).collect()
+    val pairs = operators.Dedup.containmentPairs(docs, shingleWords = 4).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(5)))
     assert(pairs.length === 1 && pairs(0)._1 === 1L && pairs(0)._2 === 2L,
       s"only the true subset pair survives the df cap: ${pairs.toSeq}")
     assert(pairs(0)._3 === 1.0,
       s"doc 2 is a verbatim prefix of doc 1 → containment 1.0: ${pairs(0)._3}")
     // lifting the cap exposes the banner block's 50·49/2 pairs
-    val uncapped = Engine.containmentPairs(docs, shingleWords = 4, maxDf = 64L).count()
+    val uncapped = operators.Dedup.containmentPairs(docs, shingleWords = 4, maxDf = 64L).count()
     assert(uncapped === 50L * 49L / 2L + 1L, s"uncapped banner block must pair: $uncapped")
   }
 

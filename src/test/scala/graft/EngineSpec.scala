@@ -3,16 +3,16 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The Engine facade's training-data-pipeline surface with NON-default
-  * parameters — proves the operators are a parameterized library API, not
-  * gate-constant one-offs.
+/** The training-data-pipeline operators (`graft.operators.*`) with
+  * NON-default parameters — proves the operators are a parameterized
+  * library API, not gate-constant one-offs.
   */
 class EngineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val d = "/root/testdata/sf0.001"
 
   test("packSequences honors blockSize and shard count") {
-    val rows = Engine.packSequences(
+    val rows = operators.TextAnalysis.packTokens(
       Tables.documents(spark, d).select(col("doc_id"), col("lang"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens")),
       blockSize = 16, shards = 2).collect()
@@ -28,11 +28,11 @@ class EngineSpec extends AnyFunSuite {
 
   test("bm25 accepts arbitrary query terms and k1/b") {
     val docs = Tables.documents(spark, d)
-    val top = Engine.bm25(docs, Seq("vector", "stream"), n = 5).collect()
+    val top = operators.Retrieval.bm25(docs, Seq("vector", "stream"), n = 5).collect()
     assert(top.length === 5 && top.forall(_.getDouble(1) > 0))
     // b = 0 disables length normalization: score depends on tf only, so a
     // doc with equal tf but shorter length no longer outranks
-    val noNorm = Engine.bm25(docs, Seq("vector", "stream"), n = 5, b = 0.0).collect()
+    val noNorm = operators.Retrieval.bm25(docs, Seq("vector", "stream"), n = 5, b = 0.0).collect()
     assert(noNorm.length === 5)
     assert(!top.map(_.getLong(0)).sameElements(noNorm.map(_.getLong(0))) ||
       top.map(_.getDouble(1)).zip(noNorm.map(_.getDouble(1))).exists {
@@ -43,7 +43,7 @@ class EngineSpec extends AnyFunSuite {
   test("kAnonymize floors any quasi-identifier set at any k") {
     val ev = Tables.events(spark, d)
       .withColumn("day", date_trunc("day", col("ts")))
-    val k5 = Engine.kAnonymize(ev, Seq("event_type", "day"), k = 5).collect()
+    val k5 = operators.Privacy.kAnonymize(ev, Seq("event_type", "day"), k = 5).collect()
     assert(k5.nonEmpty)
     val sizes = k5.groupBy(r =>
       (r.getAs[String]("event_type"), r.getAs[java.sql.Timestamp]("day")))
@@ -62,9 +62,9 @@ class EngineSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
     val docs = spark.read.parquet(s"$out/documents.parquet")
-    val g3 = Engine.substringDupStats(docs, gramWords = 3).collect()
+    val g3 = operators.Dedup.substringDupStats(docs, gramWords = 3).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val g6 = Engine.substringDupStats(docs, gramWords = 6).collect()
+    val g6 = operators.Dedup.substringDupStats(docs, gramWords = 6).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(g3(1L) === 1L && g3(2L) === 1L, s"3-gram should find the shared span: $g3")
     assert(g6(1L) === 0L && g6(2L) === 0L, s"6-gram must not: $g6")
@@ -84,14 +84,16 @@ class EngineSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$out/documents.parquet")
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getBoolean(4))
-    val uncapped = Engine.substringDupStats(docs).orderBy("doc_id").collect().map(key)
-    val capped = Engine.substringDupStats(docs, maxGramDf = 3)
+    val uncapped = operators.Dedup.substringDupStats(docs, gramWords = 5)
+      .orderBy("doc_id").collect().map(key)
+    val capped = operators.Dedup.substringDupStats(docs, gramWords = 5, maxGramDf = 3)
       .orderBy("doc_id").collect().map(key)
     assert(capped.toSeq === uncapped.toSeq,
       "over-cap grams are dup by definition — capping must not change the answer")
     // stride=2 samples every other position: fewer grams, never more
-    val strided = Engine.substringDupStats(docs, stride = 2).orderBy("doc_id").collect()
-    val full = Engine.substringDupStats(docs).orderBy("doc_id").collect()
+    val strided = operators.Dedup.substringDupStats(docs, gramWords = 5, stride = 2)
+      .orderBy("doc_id").collect()
+    val full = operators.Dedup.substringDupStats(docs, gramWords = 5).orderBy("doc_id").collect()
     strided.zip(full).foreach { case (s2, s1) =>
       assert(s2.getLong(1) <= s1.getLong(1) && s2.getLong(1) > 0,
         s"stride must reduce positions: ${s2.getLong(1)} vs ${s1.getLong(1)}")
@@ -114,7 +116,7 @@ class EngineSpec extends AnyFunSuite {
       (3L, Array(0.0f, 1.0f), 1.0, 0),
       (4L, Array(1.0f, 0.0f), 1.0, 1))
       .toDF("vec_id", "embedding", "norm", "cell")
-    val v = Engine.semanticDedup(vecs, threshold = 0.9)
+    val v = operators.Dedup.semanticDedupVerdicts(vecs, threshold = 0.9)
       .orderBy("vec_id").collect()
       .map(r => r.getLong(0) -> (r.getBoolean(3), Option(r.get(2)).map(_.asInstanceOf[Long])))
       .toMap
@@ -134,7 +136,7 @@ class EngineSpec extends AnyFunSuite {
       (3L, "p q r s"),
       (4L, "a b c d"))
       .toDF("doc_id", "text")
-    val r = Engine.segmentDedup(docs, segWords = 4, minDf = 2L)
+    val r = operators.Dedup.segmentDedup(docs, segWords = 4, minDf = 2L)
       .orderBy("doc_id").collect()
       .map(x => x.getLong(0) -> ((x.getLong(1), x.getLong(2), x.getString(3)))).toMap
     assert(r(1L) === ((2L, 1L, "e f g h")))
@@ -144,7 +146,7 @@ class EngineSpec extends AnyFunSuite {
     // a tail shorter than segWords is its own segment, deduped like any
     val tails = Seq((1L, "a b c d e"), (2L, "z z z a b c d e"), (3L, "e"))
       .toDF("doc_id", "text")
-    val t = Engine.segmentDedup(tails, segWords = 4, minDf = 2L)
+    val t = operators.Dedup.segmentDedup(tails, segWords = 4, minDf = 2L)
       .orderBy("doc_id").collect()
       .map(x => x.getLong(0) -> x.getString(3)).toMap
     assert(t(1L) === "a b c d", "short tail 'e' is shared with doc 3 → dropped")
@@ -173,7 +175,7 @@ class EngineSpec extends AnyFunSuite {
         id -> ((segs.size.toLong, segs.count(hot).toLong,
           segs.filterNot(hot).mkString(" ")))
       }.toMap
-      val got = Engine.segmentDedup(corpus.toDF("doc_id", "text"), 4, 2L)
+      val got = operators.Dedup.segmentDedup(corpus.toDF("doc_id", "text"), 4, 2L)
         .collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3))))
         .toMap
@@ -201,12 +203,12 @@ class EngineSpec extends AnyFunSuite {
     val counts = docs.groupBy("lang").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val targets = counts.map { case (l, n) => l -> math.max(1L, n / 2) }
-    val mixed = Engine.domainMix(docs, "lang", targets).collect()
+    val mixed = operators.TextAnalysis.domainMix(docs, "lang", targets).collect()
     val got = mixed.groupBy(_.getAs[String]("lang")).view.mapValues(_.length.toLong).toMap
     assert(got === targets, s"expected $targets got $got")
     assert(mixed.forall(_.getAs[Long]("replica") === 0L), "downsample must not replicate")
     // deterministic: selected set is the rank-prefix, so re-running is identical
-    val again = Engine.domainMix(docs, "lang", targets).collect()
+    val again = operators.TextAnalysis.domainMix(docs, "lang", targets).collect()
     assert(mixed.map(_.getAs[Long]("doc_id")).sorted.toSeq ===
       again.map(_.getAs[Long]("doc_id")).sorted.toSeq)
   }
@@ -218,7 +220,7 @@ class EngineSpec extends AnyFunSuite {
     val lang = counts.keys.min
     val n = counts(lang)
     val target = n * 2 + 3 // forces uneven replica counts
-    val mixed = Engine.domainMix(docs, "lang", Map(lang -> target)).collect()
+    val mixed = operators.TextAnalysis.domainMix(docs, "lang", Map(lang -> target)).collect()
     assert(mixed.length.toLong === target, s"expected exactly $target rows")
     assert(mixed.forall(_.getAs[String]("lang") === lang), "other domains must drop")
     val perDoc = mixed.groupBy(_.getAs[Long]("doc_id")).view.mapValues(_.length.toLong).toMap
@@ -264,7 +266,7 @@ class EngineSpec extends AnyFunSuite {
       Seq.tabulate(20)(i => (100L + i, "xx yy zz xx yy", "de")) ++
       Seq((201L, "aa bb cc", "de"), (202L, "xx yy zz", "de")))
       .toDF("doc_id", "text", "lang")
-    val w = Engine.dsirWeights(docs, col("lang") === "en")
+    val w = operators.TextAnalysis.dsirWeights(docs, col("lang") === "en")
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(w(201L) > w(202L),
       s"target-vocabulary doc must outweigh off-target: ${w(201L)} vs ${w(202L)}")
@@ -393,8 +395,8 @@ class EngineSpec extends AnyFunSuite {
 
   test("containmentPairs honors shingle width, df cap, and threshold") {
     val docs = Tables.documents(spark, d)
-    val loose = Engine.containmentPairs(docs, shingleWords = 4, minContainment = 0.3)
-    val tight = Engine.containmentPairs(docs, shingleWords = 4, minContainment = 0.9)
+    val loose = operators.Dedup.containmentPairs(docs, shingleWords = 4, minContainment = 0.3)
+    val tight = operators.Dedup.containmentPairs(docs, shingleWords = 4, minContainment = 0.9)
     val nLoose = loose.count(); val nTight = tight.count()
     assert(nLoose >= nTight, "raising the containment bar cannot add pairs")
     assert(nLoose > 0)
@@ -404,15 +406,17 @@ class EngineSpec extends AnyFunSuite {
   test("anomalyZscores: wider frame and lower bar flag at least as much") {
     val ev = Tables.events(spark, d)
     val ord = Seq(col("ts"), col("event_id"))
-    val strict = Engine.anomalyZscores(ev, "user_id", "value", ord, threshold = 3.5).count()
-    val lax = Engine.anomalyZscores(ev, "user_id", "value", ord, threshold = 1.5).count()
+    val strict = operators.EventAnalytics.anomalyZscores(
+      ev, "user_id", "value", ord, threshold = 3.5).count()
+    val lax = operators.EventAnalytics.anomalyZscores(
+      ev, "user_id", "value", ord, threshold = 1.5).count()
     assert(lax >= strict && lax > 0, s"threshold monotone: lax=$lax strict=$strict")
   }
 
   test("olsTrend on a synthetic exact line recovers slope/intercept, r2 = 1") {
     import spark.implicits._
     val line = (1 to 50).map(i => ("g", i.toDouble, 3.0 * i + 7.0)).toDF("g", "x", "y")
-    val r = Engine.olsTrend(line, "g", col("x"), col("y")).collect()(0)
+    val r = operators.EventAnalytics.olsTrend(line, "g", col("x"), col("y")).collect()(0)
     assert(math.abs(r.getDouble(2) - 3.0) < 1e-9)
     assert(math.abs(r.getDouble(3) - 7.0) < 1e-9)
     assert(math.abs(r.getDouble(4) - 1.0) < 1e-9)
@@ -420,7 +424,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("pmiCollocations: support floor and k are honored") {
     val docs = Tables.documents(spark, d)
-    val top = Engine.pmiCollocations(docs, minSupport = 10L, topK = 7).collect()
+    val top = operators.TextAnalysis.pmiCollocations(docs, minSupport = 10L, topK = 7).collect()
     assert(top.length === 7)
     top.foreach(r => assert(r.getLong(2) >= 10))
   }

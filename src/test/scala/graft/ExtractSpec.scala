@@ -178,7 +178,7 @@ class ExtractSpec extends AnyFunSuite {
       Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(),
         cfg.copy(appId = Some("ab^d"), legacyAzClass = legacy)).count()
     assert(count(legacy = true) === 1)  // reference fidelity: [A-z] admits '^'
-    assert(count(legacy = false) === 0) // sane default rejects it
+    assert(count(legacy = false) === 0) // the opt-in [A-Za-z] class rejects it
     Seq(true, false).foreach { legacy =>
       assertParity(txs, results, cfg.copy(appId = Some("ab^d"), legacyAzClass = legacy))
     }
@@ -198,38 +198,46 @@ class ExtractSpec extends AnyFunSuite {
   }
 
   test("in-task join of an encoded archive triple equals the plan (Engine.extract)") {
-    // XdrSpec's round-trip triple, read back through both per-checkpoint spellings
+    // XdrSpec's round-trip triple, read back through both per-checkpoint
+    // spellings; a second checkpoint checks the batch read over both
     def addr(seed: Int): String =
       Stellar.strkeyEncode(Array.tabulate(32)(i => ((seed * 31 + i) & 0xff).toByte))
     val issuer = addr(1)
-    val ops = Seq(
-      Operation(Seq(Ed25519(addr(5))),
-        OpBody(1, Some(PaymentOp(Asset(Some(AssetAlphaNum4("KIN", Ed25519(issuer)))), Ed25519(addr(3)), 1250000.0)), None)),
-      Operation(Nil, OpBody(0, None, Some(CreateAccountOp(Ed25519(addr(4)), 500.0)))))
-    val seq = 127L
-    val txGz = Archive.gzip(StellarWriter.encodeTxEntry(TxHistoryEntry(seq, TxSet(Seq(
-      TxWithHash("", TxCore(Some("1-abcd-test"), 100, Ed25519(addr(2)), ops)))))))
-    val hash = Stellar.decodeTxEntries(Archive.gunzip(txGz), "Test Net").head.txSet.txs.head.hash
-    val resEntry = TxResultEntry(TxResultSet(Seq(
-      TxResultPair(hash, TxResultOuter(90, TxResultInner("txSUCCESS", Some(Seq(
-        OpResult(OpResultTr(Some("PAYMENT_SUCCESS"), None)),
-        OpResult(OpResultTr(None, Some("CREATE_ACCOUNT_SUCCESS")))))))))))
+    def kin(dest: Int, amount: Double) =
+      OpBody(1, Some(PaymentOp(Asset(Some(AssetAlphaNum4("KIN", Ed25519(issuer)))), Ed25519(addr(dest)), amount)), None)
     val dir = Files.createTempDirectory("graft-parity").toString
-    def put(cat: String, bytes: Array[Byte]): String = {
-      val p = Paths.get(Archive.pathFor(dir, cat, seq))
-      Files.createDirectories(p.getParent)
-      Files.write(p, bytes).toString
+    // checkpoint `seq` as one tx of `ops`, every op succeeding: its three file paths
+    def checkpoint(seq: Long, closeTime: Long, ops: Seq[Operation]): Seq[String] = {
+      val txGz = Archive.gzip(StellarWriter.encodeTxEntry(TxHistoryEntry(seq, TxSet(Seq(
+        TxWithHash("", TxCore(Some("1-abcd-test"), 100, Ed25519(addr(2)), ops)))))))
+      val hash = Stellar.decodeTxEntries(Archive.gunzip(txGz), "Test Net").head.txSet.txs.head.hash
+      val legs = ops.map(op =>
+        if (op.body.opType == 1) OpResult(OpResultTr(Some("PAYMENT_SUCCESS"), None))
+        else OpResult(OpResultTr(None, Some("CREATE_ACCOUNT_SUCCESS"))))
+      val resEntry = TxResultEntry(TxResultSet(Seq(
+        TxResultPair(hash, TxResultOuter(90, TxResultInner("txSUCCESS", Some(legs)))))))
+      def put(cat: String, bytes: Array[Byte]): String = {
+        val p = Paths.get(Archive.pathFor(dir, cat, seq))
+        Files.createDirectories(p.getParent)
+        Files.write(p, bytes).toString
+      }
+      Seq(put("transactions", txGz),
+        put("ledger", Archive.gzip(StellarWriter.encodeLedgerEntry(
+          LedgerEntry(LedgerHeader(seq, ScpValue(closeTime)))))),
+        put("results", Archive.gzip(StellarWriter.encodeResultEntry(resEntry, seq))))
     }
-    val paths = Seq(put("transactions", txGz),
-      put("ledger", Archive.gzip(StellarWriter.encodeLedgerEntry(
-        LedgerEntry(LedgerHeader(seq, ScpValue(1535594286L)))))),
-      put("results", Archive.gzip(StellarWriter.encodeResultEntry(resEntry, seq))))
+    val first = checkpoint(127L, 1535594286L, Seq(
+      Operation(Seq(Ed25519(addr(5))), kin(3, 1250000.0)),
+      Operation(Nil, OpBody(0, None, Some(CreateAccountOp(Ed25519(addr(4)), 500.0))))))
+    val second = checkpoint(191L, 1535594600L, Seq(Operation(Nil, kin(6, 42.0))))
     val xcfg = ExtractConfig(assetIssuer = issuer, appId = Some("abcd"))
-    val inTask = Engine.extract(spark, dir, seq, "Test Net", xcfg).collect().toSeq
-    val plan = Engine.extract(spark, Seq(paths(0)), Seq(paths(1)), Seq(paths(2)),
-      "Test Net", xcfg).collect().toSeq
-    assert(inTask.length === 2)
-    assert(bag(inTask) === bag(plan))
+    def inTask(seq: Long) = Engine.extract(spark, dir, seq, "Test Net", xcfg).collect().toSeq
+    def batch(triples: Seq[String]*) = Engine.extract(spark, triples.map(_(0)),
+      triples.map(_(1)), triples.map(_(2)), "Test Net", xcfg).collect().toSeq
+    val (inTask1, inTask2) = (inTask(127L), inTask(191L))
+    assert(inTask1.length === 2 && inTask2.length === 1)
+    assert(bag(inTask1) === bag(batch(first)))
+    assert(bag(batch(first, second)) === bag(inTask1 ++ inTask2))
   }
 
   test("Kin3 decimal amounts: quarks → exact DECIMAL(20,5) whole units") {

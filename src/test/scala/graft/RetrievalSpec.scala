@@ -85,11 +85,11 @@ class RetrievalSpec extends AnyFunSuite {
       .toDF("vec_id", "cos", "embedding")
     // λ=0.5: round 2 scores v2 at 0.5·0.98 − 0.5·1.0 < 0 but v3 at
     // 0.5·0.5 − 0.5·0 = 0.25 → diversity wins over the near-dup
-    val diverse = Engine.mmrRerank(spark, cand, k = 2).collect()
+    val diverse = graft.operators.Retrieval.mmrRerank(spark, cand, k = 2, lambda = 0.5).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(diverse === Map(1L -> 1L, 2L -> 3L), s"got $diverse")
     // λ=1: redundancy penalty off → plain relevance order
-    val plain = Engine.mmrRerank(spark, cand, k = 2, lambda = 1.0).collect()
+    val plain = graft.operators.Retrieval.mmrRerank(spark, cand, k = 2, lambda = 1.0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(plain === Map(1L -> 1L, 2L -> 2L), s"got $plain")
   }
