@@ -2,7 +2,9 @@ package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.SparkConf
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 import graft.pipeline.{Extract, ExtractConfig, Schemas}
 import graft.sinks.CheckpointSink
 import graft.sources.Archive
@@ -87,38 +89,64 @@ object Engine {
     backfilled + (if (tailIterations > 0) tail.run(tailIterations) else 0)
   }
 
-  /** Batch extraction over explicit archive files (no sink/offsets). */
+  /** Extraction over explicit archive files (no sink/offsets), grouped
+    * into whole checkpoint triples by category and hex sequence and read
+    * by the per-checkpoint body below. The reference joins within one
+    * downloaded triple (python/main.py:108-123), so a sequence that
+    * lacks a file, or has two of one category, throws an
+    * `IllegalArgumentException` naming it.
+    */
   def extract(
       spark: SparkSession,
       txPaths: Seq[String],
       ledgerPaths: Seq[String],
       resultPaths: Seq[String],
       passphrase: String,
-      cfg: ExtractConfig): DataFrame =
-    Extract.operations(
-      Archive.transactions(spark, txPaths, passphrase),
-      Archive.ledgers(spark, ledgerPaths),
-      Archive.results(spark, resultPaths),
-      cfg)
+      cfg: ExtractConfig): DataFrame = {
+    val triples = (txPaths ++ ledgerPaths ++ resultPaths).groupBy(Archive.hexSeq).toSeq
+      .sortBy(_._1).map { case (hex, files) =>
+        val byCategory = files.groupBy(Archive.category)
+        Archive.Categories.map(c => byCategory.getOrElse(c, Nil) match {
+          case Seq(path) => path
+          case found => throw new IllegalArgumentException(
+            s"checkpoint $hex needs one $c file, got ${found.size}: ${files.mkString(", ")}")
+        })
+      }
+    extract(spark, triples, hadoopConf(spark), passphrase, cfg)
+  }
 
-  /** Extraction over checkpoint `seq` of the archive at `root`: the one
-    * per-checkpoint read both ingest runners commit. One task reads the
-    * three files of the triple, gunzips and decodes them, and joins them
-    * in memory ([[Extract.checkpointRows]]), so committing a checkpoint
-    * costs its sink one Spark job over a flat plan of
-    * [[graft.pipeline.Schemas.operations]] rows.
+  /** Extraction over checkpoint `seq` of the archive at `root`, read by
+    * the per-checkpoint body below.
     */
   def extract(spark: SparkSession, root: String, seq: Long, passphrase: String,
       cfg: ExtractConfig): DataFrame =
-    spark.read.format("binaryFile").load(Archive.triple(root, seq): _*)
-      .select("path", "content").coalesce(1)
-      .mapPartitions { files =>
-        val raw = files.map(f =>
-          Archive.category(f.getString(0)) -> Archive.gunzip(f.getAs[Array[Byte]](1))).toMap
+    extract(spark, Seq(Archive.triple(root, seq)), hadoopConf(spark), passphrase, cfg)
+
+  /** The session's Hadoop conf, broadcast once for task-side reads. */
+  private[graft] def hadoopConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+
+  /** The one extract body: one task per checkpoint triple (transactions,
+    * ledger, results paths). Each task opens its three files through
+    * `conf`, gunzips and decodes them, and joins them in memory
+    * ([[Extract.checkpointRows]]), so a caller's sink runs one Spark job
+    * over a flat plan of [[graft.pipeline.Schemas.operations]] rows, with
+    * no file listing or scan to plan on the driver. A missing file fails
+    * the task with `FileNotFoundException`. [[ArchiveTail]] broadcasts
+    * `conf` once per tail; the public overloads once per call.
+    */
+  private[graft] def extract(spark: SparkSession, triples: Seq[Seq[String]],
+      conf: Broadcast[SerializableConfiguration], passphrase: String,
+      cfg: ExtractConfig): DataFrame = {
+    val rows = spark.sparkContext.parallelize(triples, math.max(1, triples.size)).flatMap {
+      case Seq(tx, ledger, results) =>
+        def read(path: String) = Archive.readGunzipped(path, conf.value.value)
         Extract.checkpointRows(
-          Stellar.decodeTxEntries(raw("transactions"), passphrase),
-          Stellar.decodeLedgerEntries(raw("ledger")),
-          Stellar.decodeResultEntries(raw("results")),
+          Stellar.decodeTxEntries(read(tx), passphrase),
+          Stellar.decodeLedgerEntries(read(ledger)),
+          Stellar.decodeResultEntries(read(results)),
           cfg)
-      }(Encoders.row(Schemas.operations))
+    }
+    spark.createDataFrame(rows, Schemas.operations)
+  }
 }

@@ -166,8 +166,6 @@ final class DpLedger private (val dir: String, val budget: BigDecimal,
     */
   def spentDelta: BigDecimal = synchronized(spentDeltaV)
 
-  def remainingDelta: BigDecimal = synchronized(deltaBudget - spentDeltaV)
-
   /** Charge the (`value` in `chargeCurrency`, `delta`) pair against
     * the two budgets: true = admitted (row durably appended, both
     * spends updated), false = refused because EITHER coordinate would

@@ -141,9 +141,6 @@ final class RdpAccountant private (val dir: String,
     if (charges.isEmpty) 0.0 else epsilonAt(totals, deltaTarget)
   }
 
-  def remainingEpsilon: BigDecimal =
-    synchronized(epsBudget - BigDecimal(spentEpsilon))
-
   /** Charge one subsampled-Gaussian release (sampling rate `q`, noise
     * `sigma`): true = admitted (row durably appended, totals updated),
     * false = refused because the ε readout at [[deltaTarget]] would

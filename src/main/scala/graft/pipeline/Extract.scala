@@ -2,167 +2,38 @@ package graft.pipeline
 
 import java.sql.Timestamp
 import java.util.regex.Pattern
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-/** The reference's procedural per-file loop (python/main.py:126-199)
-  * re-expressed as one declarative Catalyst plan:
-  *
-  * {{{
-  *   txs  ──explode txSet.txs──▶ ⋈ broadcast(ledgers on ledgerSeq, left)
-  *        ──▶ ⋈ broadcast(exploded results on hash, left)
-  *        ──▶ [app-id memo filter]
-  *        ──▶ posexplode(arrays_zip(ops, op_results)) + zip-truncation filter
-  *        ──▶ per-type when() projections, one row per payment/creation
-  * }}}
-  *
-  * Scale notes: this plan is the batch and SQL surface's spelling, for
-  * inputs of any size: the dimension joins broadcast and the plan is
-  * otherwise one narrow pipeline, with the nested schema pruned to the
-  * ~15 consumed paths. The ingest runners commit one checkpoint at a
-  * time, whose three files are small, so they read it through
-  * [[checkpointRows]] instead: the same rows from in-task lookups, with
-  * no exchange and no nested plan to build per checkpoint.
+/** The reference's procedural per-file loop (python/main.py:126-199):
+  * one checkpoint's decoded triple to its payment and creation rows,
+  * joined in memory by [[checkpointRows]]. Every ingest runner and the
+  * explicit-files extract run it inside one task per checkpoint
+  * ([[graft.Engine.extract]]), so a checkpoint has no exchange and no
+  * nested plan to build. The specs keep the same extract spelled as a
+  * Catalyst plan (`ExtractPlan`) as its parity reference.
   *
   * Fidelity decisions (SURVEY.md §7.4):
   *  - zip truncation: `zip(ops, results.get('results', []))`
   *    (python/main.py:155) emits no rows when the result list is missing
-  *    and truncates to the shorter side — reproduced with
-  *    `pos < least(size(ops), size(op_results))`;
+  *    and truncates to the shorter side;
   *  - `result_operation` falsy guard (:157,169,188): a present-but-null
   *    result element yields NULL op_status;
-  *  - op-level source override (:172-176):
-  *    `coalesce(element_at(op.sourceAccount, 1).ed25519, tx.sourceAccount)`;
+  *  - op-level source override (:172-176): the op's `sourceAccount`,
+  *    else the tx's;
   *  - missing ledger/result rows survive as NULLs (dict `.get` semantics)
   *    instead of the reference's KeyError on a missing result (:152).
   */
 object Extract {
 
-  /** Exploded (tx × op) rows with joined close-time and result columns —
-    * the trunk of [[operations]].
-    */
-  private[pipeline] def opRows(
-      txs: Dataset[TxHistoryEntry],
-      ledgers: Dataset[LedgerEntry],
-      results: Dataset[TxResultEntry],
-      cfg: ExtractConfig): DataFrame = {
-    val ledgerDim = ledgers.select(
-      col("header.ledgerSeq").as("lseq"),
-      col("header.scpValue.closeTime").as("closeTime"))
-    val resultDim = results
-      .select(explode(col("txResultSet.results")).as("r"))
-      .select(
-        col("r.transactionHash").as("rhash"),
-        col("r.result.feeCharged").as("fee_charged"),
-        col("r.result.result.code").as("tx_status"),
-        col("r.result.result.results").as("op_results"))
-
-    val base = txs
-      .select(col("ledgerSeq"), explode(col("txSet.txs")).as("t"))
-      .join(broadcast(ledgerDim), col("ledgerSeq") === col("lseq"), "left")
-      .join(broadcast(resultDim), col("t.hash") === col("rhash"), "left")
-
-    val appFiltered = cfg.appId match {
-      case Some(app) =>
-        // get() instead of (1): Catalyst may evaluate both conjuncts, and
-        // ANSI-mode array indexing throws on a dash-less memo.
-        base.filter(col("t.tx.memoText").rlike(cfg.appIdRegex) &&
-          get(split(col("t.tx.memoText"), "-"), lit(1)) === app)
-      case None => base
-    }
-
-    appFiltered
-      .select(col("ledgerSeq"), col("t"), col("closeTime"),
-        col("fee_charged"), col("tx_status"), col("op_results"),
-        posexplode(arrays_zip(
-          col("t.tx.operations").as("op"), col("op_results").as("res"))))
-      .filter(col("pos") < least(size(col("t.tx.operations")), size(col("op_results"))))
-      .select(col("ledgerSeq"), col("closeTime"), col("fee_charged"),
-        col("tx_status"),
-        col("t.hash").as("hash"),
-        col("t.tx.memoText").as("memo_text"),
-        col("t.tx.fee").as("fee"),
-        col("pos").as("operation_index"),
-        // get() (0-based) is OOB-null-safe even under ANSI mode, matching
-        // the reference's KeyError/IndexError fallback (:173-176).
-        coalesce(get(col("col.op.sourceAccount"), lit(0)).getField("ed25519"),
-          col("t.tx.sourceAccount.ed25519")).as("src"),
-        col("col.op").as("op"),
-        col("col.res").as("res"))
-  }
-
-  /** KIN payments (python/main.py:160-181): the payment rows of
-    * [[operations]], projected to [[Schemas.payments]].
-    */
-  def payments(
-      txs: Dataset[TxHistoryEntry],
-      ledgers: Dataset[LedgerEntry],
-      results: Dataset[TxResultEntry],
-      cfg: ExtractConfig): DataFrame =
-    ofType(operations(txs, ledgers, results, cfg), "payment", Schemas.payments)
-
-  /** Account creations (python/main.py:184-199): the creation rows of
-    * [[operations]], projected to [[Schemas.creations]].
-    */
-  def creations(
-      txs: Dataset[TxHistoryEntry],
-      ledgers: Dataset[LedgerEntry],
-      results: Dataset[TxResultEntry],
-      cfg: ExtractConfig): DataFrame =
-    ofType(operations(txs, ledgers, results, cfg), "creation", Schemas.creations)
-
-  private def ofType(ops: DataFrame, kind: String, schema: StructType): DataFrame =
-    ops.filter(col("type") === kind).select(schema.fieldNames.map(col).toSeq: _*)
-
-  /** Discriminated union of both op kinds — the S3 adapter's single
-    * per-ledger table (python/adapters/s3_storage_adapter.py:57-62), with
-    * the column-order drift quirk fixed by a deterministic select
-    * (SURVEY.md §7.4).
-    */
-  def operations(
-      txs: Dataset[TxHistoryEntry],
-      ledgers: Dataset[LedgerEntry],
-      results: Dataset[TxResultEntry],
-      cfg: ExtractConfig): DataFrame = {
-    // ONE opRows trunk, branched per row with when() — a
-    // payments/creations union would build the whole decode + joins
-    // + explodes subtree TWICE (Catalyst does not dedup a union's
-    // independent legs). The per-type predicates and projections are
-    // spelled here only; [[payments]] and [[creations]] select from it.
-    val isPayment = col("op.body.opType") === 1 &&
-      col("op.body.paymentOp.asset.alphaNum4").isNotNull &&
-      col("op.body.paymentOp.asset.alphaNum4.assetCode") === cfg.assetCode &&
-      col("op.body.paymentOp.asset.alphaNum4.issuer.ed25519") === cfg.assetIssuer
-    val isCreation = col("op.body.opType") === 0
-    opRows(txs, ledgers, results, cfg)
-      .filter(isPayment || isCreation)
-      .select(
-        when(isPayment, lit("payment")).otherwise(lit("creation")).as("type"),
-        col("src").as("source"),
-        when(isPayment, col("op.body.paymentOp.destination.ed25519"))
-          .otherwise(col("op.body.createAccountOp.destination.ed25519")).as("destination"),
-        when(isPayment, col("op.body.paymentOp.amount")).as("amount"),
-        when(!isPayment, col("op.body.createAccountOp.startingBalance"))
-          .as("starting_balance"),
-        col("memo_text"),
-        col("fee"),
-        col("fee_charged"),
-        col("operation_index"),
-        col("tx_status"),
-        when(isPayment, col("res.tr.paymentResult"))
-          .otherwise(col("res.tr.createAccountResult")).as("op_status"),
-        col("hash"),
-        timestamp_seconds(col("closeTime")).as("time"))
-  }
-
-  /** One checkpoint's [[operations]] rows, joined in memory: the
+  /** One checkpoint's rows in [[Schemas.operations]], the discriminated
+    * union of both op kinds (the S3 adapter's single per-ledger table,
+    * python/adapters/s3_storage_adapter.py:57-62), joined in memory: the
     * reference's close-time and tx-result dicts (python/main.py:108-123)
     * as multimaps, so a duplicate ledger or tx hash multiplies rows
-    * exactly as the left joins of [[operations]] do. Rows follow
-    * [[Schemas.operations]]; every fidelity decision above holds:
+    * exactly as a left join does. Every fidelity decision above holds:
     *  - a tx without a result row, or whose result has no op list,
-    *    emits nothing (the NULL zip of the plan);
+    *    emits nothing (a zip over no list);
     *  - ops and result legs zip to the shorter side;
     *  - a null result leg yields NULL op_status;
     *  - a missing ledger row leaves `time` NULL.

@@ -148,7 +148,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
       .orderBy(col("lang"), col("shard")))
   })
   // keyword search over the curated corpus, when the intake runs the
-  // composed stack (LivePipeline.startWithIndex): only ADMITTED docs
+  // composed stack (LivePipeline.stepWithIndex): only ADMITTED docs
   // are indexed, so a result here implies the doc is in the pack
   index.foreach { idx =>
     server.createContext("/search", (ex: HttpExchange) => Facade.handle(ex) { p =>

@@ -1,26 +1,27 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
-import graft.pipeline.{LedgerEntry, TxHistoryEntry, TxResultEntry}
+import graft.pipeline.TxHistoryEntry
 import graft.xdr.Stellar
 
 /** History-archive source: the reference's S3 layout and offset model
-  * (SURVEY.md §2.1 S1-S5) on top of Spark's binaryFile source.
+  * (SURVEY.md §2.1 S1-S5) over Hadoop FileSystem paths.
   *
   * Layout: `<root>/<cat>/XX/YY/ZZ/<cat>-<hexseq>.xdr.gz` where
   * `hexseq` is the 8-hex-digit checkpoint sequence (stride 64) and
   * XX/YY/ZZ are its first three nibble pairs (python/main.py:76-105).
   *
   * Scale: gunzip and decode run on the executors, never on the driver;
-  * sequence math is driver-side planning only. The category readers
-  * below read one input split per archive file; an ingest runner reads
-  * a checkpoint's whole triple in one task instead
-  * ([[graft.Engine.extract]]), since its three files are small and
-  * joined to each other.
+  * sequence math is driver-side planning only. Extraction reads a
+  * checkpoint's whole triple in one task ([[graft.Engine.extract]]),
+  * since its three files are small and joined to each other: the task
+  * opens them through [[readGunzipped]]. [[transactions]] alone, the
+  * live store's document source, reads one binaryFile split per file.
   */
 object Archive {
 
@@ -31,8 +32,10 @@ object Archive {
     bos.toByteArray
   }
 
-  def gunzip(b: Array[Byte]): Array[Byte] = {
-    val in = new GZIPInputStream(new ByteArrayInputStream(b))
+  def gunzip(b: Array[Byte]): Array[Byte] = gunzip(new ByteArrayInputStream(b))
+
+  private def gunzip(raw: InputStream): Array[Byte] = {
+    val in = new GZIPInputStream(raw, 65536)
     val out = new ByteArrayOutputStream()
     val buf = new Array[Byte](65536)
     var n = in.read(buf)
@@ -57,15 +60,33 @@ object Archive {
     s"$root/$category/${s.substring(0, 2)}/${s.substring(2, 4)}/${s.substring(4, 6)}/$category-$s.xdr.gz"
   }
 
+  /** A checkpoint's file categories, in the order of [[triple]]. */
+  val Categories: Seq[String] = Seq("transactions", "ledger", "results")
+
   /** Checkpoint `seq`'s three files: transactions, ledger, results. */
-  def triple(root: String, seq: Long): Seq[String] =
-    Seq("transactions", "ledger", "results").map(pathFor(root, _, seq))
+  def triple(root: String, seq: Long): Seq[String] = Categories.map(pathFor(root, _, seq))
 
   /** The category of an archive file path: its name up to the first `-`
     * ("transactions", "ledger" or "results").
     */
-  def category(path: String): String =
-    path.substring(path.lastIndexOf('/') + 1).takeWhile(_ != '-')
+  def category(path: String): String = fileName(path).takeWhile(_ != '-')
+
+  /** The hex sequence an archive file's name carries after its category
+    * (`ledger-0000003f.xdr.gz` → `0000003f`).
+    */
+  def hexSeq(path: String): String =
+    fileName(path).dropWhile(_ != '-').drop(1).takeWhile(_ != '.')
+
+  private def fileName(path: String): String = path.substring(path.lastIndexOf('/') + 1)
+
+  /** The gunzipped bytes of the archive file at `path`, opened through
+    * `conf`: the task-side read of [[graft.Engine.extract]].
+    */
+  def readGunzipped(path: String, conf: Configuration): Array[Byte] = {
+    val p = new HPath(path)
+    val in = p.getFileSystem(conf).open(p)
+    try gunzip(in) finally in.close()
+  }
 
   /** A checkpoint is readable once all three of its files exist; every
     * ingest runner stops at the first checkpoint that is not.
@@ -73,27 +94,11 @@ object Archive {
   def available(fs: FileSystem, root: String, seq: Long): Boolean =
     triple(root, seq).forall(p => fs.exists(new HPath(p)))
 
-  private def binary(spark: SparkSession, paths: Seq[String]): Dataset[Array[Byte]] = {
-    implicit val enc = Encoders.BINARY
-    spark.read.format("binaryFile").load(paths: _*)
-      .select(col("content")).as[Array[Byte]]
-  }
-
-  /** Decoded `ledger-*` category over the given archive files. */
-  def ledgers(spark: SparkSession, paths: Seq[String]): Dataset[LedgerEntry] = {
-    implicit val enc = Encoders.product[LedgerEntry]
-    binary(spark, paths).mapPartitions(_.flatMap(b => Stellar.decodeLedgerEntries(gunzip(b))))
-  }
-
-  /** Decoded `transactions-*` category (hashes with the network id). */
-  def transactions(spark: SparkSession, paths: Seq[String], passphrase: String): Dataset[TxHistoryEntry] = {
-    implicit val enc = Encoders.product[TxHistoryEntry]
-    binary(spark, paths).mapPartitions(_.flatMap(b => Stellar.decodeTxEntries(gunzip(b), passphrase)))
-  }
-
-  /** Decoded `results-*` category. */
-  def results(spark: SparkSession, paths: Seq[String]): Dataset[TxResultEntry] = {
-    implicit val enc = Encoders.product[TxResultEntry]
-    binary(spark, paths).mapPartitions(_.flatMap(b => Stellar.decodeResultEntries(gunzip(b))))
-  }
+  /** Decoded `transactions-*` category (hashes with the network id),
+    * one binaryFile split per file.
+    */
+  def transactions(spark: SparkSession, paths: Seq[String], passphrase: String): Dataset[TxHistoryEntry] =
+    spark.read.format("binaryFile").load(paths: _*).select(col("content")).as(Encoders.BINARY)
+      .mapPartitions(_.flatMap(b => Stellar.decodeTxEntries(gunzip(b), passphrase)))(
+        Encoders.product[TxHistoryEntry])
 }

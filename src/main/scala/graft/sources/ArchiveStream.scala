@@ -22,8 +22,9 @@ import graft.Engine
   * one available checkpoint, and its reader opens no file.
   * [[ArchiveStreamRunner]] commits each one through
   * [[graft.streaming.ArchiveTail.commit]], which reads the triple
-  * through [[graft.Engine.extract]]: one binaryFile task that gunzips,
-  * decodes and joins it on an executor under the session's Hadoop conf.
+  * through [[graft.Engine.extract]]: one task that opens, gunzips,
+  * decodes and joins it on an executor, through the session Hadoop conf
+  * the runner's tail broadcast when it was built.
   *
   * Usage:
   * {{{

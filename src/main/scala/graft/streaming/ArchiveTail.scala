@@ -18,9 +18,11 @@ import graft.sources.Archive
   * commit (K2/K4).
   *
   * Scale: [[commit]] reads a triple through `Engine.extract` — one task
-  * gunzips, decodes and joins the three files on an executor — so a
-  * checkpoint costs one Spark job, the sink's own. [[commit]] is also
-  * the step the Structured Streaming runners
+  * opens, gunzips, decodes and joins the three files on an executor —
+  * so a checkpoint costs one Spark job, the sink's own. The session's
+  * Hadoop conf is resolved once, when the tail is built: its
+  * driver-side probes use it, and its tasks read through one broadcast
+  * of it. [[commit]] is also the step the Structured Streaming runners
   * ([[graft.sources.ArchiveStreamRunner]]) call for each sequence their
   * source offers. The tail itself is inherently sequential because the
   * reference's offset contract (one `lastfile` pointer) is.
@@ -47,6 +49,7 @@ final class ArchiveTail(
   sink.selfTest()
 
   private val fs = Engine.fileSystem(spark, new Path(root))
+  private val hadoopConf = Engine.hadoopConf(spark)
 
   /** Next sequence to process (offset recovery, S5). `lastfile ==
     * firstSeq` resumes AT firstSeq, not past it — the reference's
@@ -83,11 +86,11 @@ final class ArchiveTail(
   }
 
   /** Extract checkpoint `seq` and commit it through the sink: the one
-    * commit step of every ingest runner. A triple that is missing fails
-    * the extract's read.
+    * commit step of every ingest runner. A triple file that is missing
+    * fails the sink's job, and nothing is committed.
     */
   def commit(seq: Long): Unit = {
-    val ops = Engine.extract(spark, root, seq, passphrase, cfg)
+    val ops = Engine.extract(spark, Seq(Archive.triple(root, seq)), hadoopConf, passphrase, cfg)
     // without a metrics hook the counts have no reader, and observing
     // them cost about 10 ms a save (4-core VM)
     if (metrics eq IngestMetrics.Noop) sink.save(ops, seq)

@@ -257,20 +257,6 @@ object LivePipeline {
       stepWithIndex(existing, -1L, cfg, idx)
   }
 
-  /** [[start]] with the composed intake+index step. */
-  def startWithIndex(docs: DataFrame, cfg: Config,
-      idx: LiveIndex.Config,
-      monitor: Option[AdmissionMonitor] = None): StreamingQuery = {
-    val fn: (DataFrame, Long) => Unit = { (b, id) =>
-      stepWithIndex(b, id, cfg, idx)
-      monitor.foreach(_.observe(b.sparkSession, cfg, id))
-    }
-    docs.writeStream
-      .option("checkpointLocation", s"${cfg.root}/_checkpoint")
-      .foreachBatch(fn)
-      .start()
-  }
-
   /** Seed the stores from an EXISTING corpus (the d13 "existing" side)
     * by running the same step as pseudo-batch −1 — one code path for
     * seed and stream, so the existing corpus is curated, deduped, and

@@ -7,10 +7,12 @@ import graft.pipeline._
 import graft.sources.Archive
 import graft.xdr.{Stellar, StellarWriter}
 
-/** Extraction-plan semantics against the edge-case fixtures of
-  * FIXTURES.md §3 (reference behavior: python/main.py:126-199). Every
-  * fixture also runs through the ingest runners' in-task join,
-  * [[Extract.checkpointRows]], which must give the plan's rows.
+/** Extract semantics against the edge-case fixtures of FIXTURES.md §3
+  * (reference behavior: python/main.py:126-199), spelled by the
+  * test-side Catalyst plan [[ExtractPlan]]. Every fixture also runs
+  * through the in-task join, [[Extract.checkpointRows]], and encoded
+  * archive triples through [[Engine.extract]]'s task-side read: both
+  * must give the plan's rows.
   */
 class ExtractSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -45,11 +47,11 @@ class ExtractSpec extends AnyFunSuite {
     rows.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
 
   /** [[Extract.checkpointRows]] gives the row multiset of
-    * [[Extract.operations]] on the same input; returns that row count.
+    * [[ExtractPlan.operations]] on the same input; returns that row count.
     */
   private def assertParity(txs: Seq[TxHistoryEntry], results: Seq[TxResultEntry],
       c: ExtractConfig = cfg, leds: Seq[LedgerEntry] = ledgers): Int = {
-    val plan = Extract.operations(txs.toDS(), leds.toDS(), results.toDS(), c).collect().toSeq
+    val plan = ExtractPlan.operations(txs.toDS(), leds.toDS(), results.toDS(), c).collect().toSeq
     assert(bag(Extract.checkpointRows(txs, leds, results, c).toSeq) === bag(plan))
     plan.length
   }
@@ -66,7 +68,7 @@ class ExtractSpec extends AnyFunSuite {
         payLeg("PAYMENT_SUCCESS"), payLeg("PAYMENT_SUCCESS"),
         createLeg("CREATE_ACCOUNT_SUCCESS"), OpResult(OpResultTr(None, None)))))))))
 
-    val out = Extract.operations(txs.toDS(), ledgers.toDS(), results.toDS(), cfg)
+    val out = ExtractPlan.operations(txs.toDS(), ledgers.toDS(), results.toDS(), cfg)
       .orderBy("operation_index").collect()
     assert(out.length === 2)
     val p = out(0); val c = out(1)
@@ -91,7 +93,7 @@ class ExtractSpec extends AnyFunSuite {
     val txs = Seq(TxHistoryEntry(100L, TxSet(Seq(
       tx("h2", None, Seq(kinPay("GD1", 5.0), create("GD2", 1.0)))))))
     val results = Seq(TxResultEntry(TxResultSet(Seq(res("h2", "txFAILED", None)))))
-    assert(Extract.operations(txs.toDS(), ledgers.toDS(), results.toDS(), cfg).count() === 0)
+    assert(ExtractPlan.operations(txs.toDS(), ledgers.toDS(), results.toDS(), cfg).count() === 0)
     assert(assertParity(txs, results) === 0)
   }
 
@@ -100,7 +102,7 @@ class ExtractSpec extends AnyFunSuite {
       tx("h3", None, Seq(kinPay("GD1", 1.0), kinPay("GD2", 2.0)))))))
     val results = Seq(TxResultEntry(TxResultSet(Seq(
       res("h3", "txSUCCESS", Some(Seq(payLeg("PAYMENT_SUCCESS"))))))))
-    val out = Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg).collect()
+    val out = ExtractPlan.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg).collect()
     assert(out.map(_.getAs[String]("destination")).toSeq === Seq("GD1"))
     assert(assertParity(txs, results) === 1)
   }
@@ -109,7 +111,7 @@ class ExtractSpec extends AnyFunSuite {
     val txs = Seq(TxHistoryEntry(100L, TxSet(Seq(tx("h5", None, Seq(kinPay("GD1", 1.0)))))))
     val results = Seq(TxResultEntry(TxResultSet(Seq(
       res("h5", "txSUCCESS", Some(Seq(null.asInstanceOf[OpResult])))))))
-    val out = Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg).collect()
+    val out = ExtractPlan.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg).collect()
     assert(out.length === 1)
     assert(out(0).getAs[String]("op_status") === null)
     assert(out(0).getAs[String]("tx_status") === "txSUCCESS")
@@ -121,7 +123,7 @@ class ExtractSpec extends AnyFunSuite {
       tx("h4", None, Seq(kinPay("GD1", 1.0, opSrc = Some("GOVERRIDE")), kinPay("GD2", 2.0)))))))
     val results = Seq(TxResultEntry(TxResultSet(Seq(
       res("h4", "txSUCCESS", Some(Seq(payLeg("ok"), payLeg("ok"))))))))
-    val out = Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg)
+    val out = ExtractPlan.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg)
       .orderBy("operation_index").collect()
     assert(out.map(_.getAs[String]("source")).toSeq === Seq("GOVERRIDE", "GSRC"))
     assert(assertParity(txs, results) === 2)
@@ -131,7 +133,7 @@ class ExtractSpec extends AnyFunSuite {
     val txs = Seq(TxHistoryEntry(999L, TxSet(Seq(tx("h6", None, Seq(kinPay("GD1", 1.0)))))))
     val results = Seq(TxResultEntry(TxResultSet(Seq(
       res("h6", "txSUCCESS", Some(Seq(payLeg("ok"))))))))
-    val out = Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg).collect()
+    val out = ExtractPlan.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg).collect()
     assert(out.length === 1)
     assert(out(0).getAs[java.sql.Timestamp]("time") === null)
     assert(assertParity(txs, results) === 1)
@@ -151,7 +153,7 @@ class ExtractSpec extends AnyFunSuite {
       res("m3", "txSUCCESS", Some(Seq(payLeg("ok")))),
       res("m4", "txSUCCESS", Some(Seq(payLeg("ok")))),
       res("m5", "txSUCCESS", Some(Seq(payLeg("ok"))))))))
-    val out = Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(), appCfg).collect()
+    val out = ExtractPlan.payments(txs.toDS(), ledgers.toDS(), results.toDS(), appCfg).collect()
     assert(out.map(_.getAs[String]("destination")).toSeq === Seq("GD1"))
     assert(assertParity(txs, results, appCfg) === 1)
   }
@@ -161,7 +163,7 @@ class ExtractSpec extends AnyFunSuite {
     val results = Seq(TxResultEntry(TxResultSet(Seq(
       res("h9", "txSUCCESS", Some(Seq(payLeg("ok"))))))))
     val out = Extract.toS3Naming(
-      Extract.operations(txs.toDS(), ledgers.toDS(), results.toDS(), cfg))
+      ExtractPlan.operations(txs.toDS(), ledgers.toDS(), results.toDS(), cfg))
     assert(out.columns.toSeq === Seq("type", "source", "destination", "amount",
       "starting_balance", "memo", "tx_fee", "tx_charged_fee", "op_index",
       "tx_status", "op_status", "tx_hash", "timestamp"))
@@ -175,7 +177,7 @@ class ExtractSpec extends AnyFunSuite {
     val results = Seq(TxResultEntry(TxResultSet(Seq(
       res("hz", "txSUCCESS", Some(Seq(payLeg("ok"))))))))
     def count(legacy: Boolean): Long =
-      Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(),
+      ExtractPlan.payments(txs.toDS(), ledgers.toDS(), results.toDS(),
         cfg.copy(appId = Some("ab^d"), legacyAzClass = legacy)).count()
     assert(count(legacy = true) === 1)  // reference fidelity: [A-z] admits '^'
     assert(count(legacy = false) === 0) // the opt-in [A-Za-z] class rejects it
@@ -198,8 +200,9 @@ class ExtractSpec extends AnyFunSuite {
   }
 
   test("in-task join of an encoded archive triple equals the plan (Engine.extract)") {
-    // XdrSpec's round-trip triple, read back through both per-checkpoint
-    // spellings; a second checkpoint checks the batch read over both
+    // XdrSpec's round-trip triple, read back by the task-side body and
+    // by the plan over the same files; a second checkpoint checks the
+    // explicit-files read over both
     def addr(seed: Int): String =
       Stellar.strkeyEncode(Array.tabulate(32)(i => ((seed * 31 + i) & 0xff).toByte))
     val issuer = addr(1)
@@ -232,12 +235,26 @@ class ExtractSpec extends AnyFunSuite {
     val second = checkpoint(191L, 1535594600L, Seq(Operation(Nil, kin(6, 42.0))))
     val xcfg = ExtractConfig(assetIssuer = issuer, appId = Some("abcd"))
     def inTask(seq: Long) = Engine.extract(spark, dir, seq, "Test Net", xcfg).collect().toSeq
-    def batch(triples: Seq[String]*) = Engine.extract(spark, triples.map(_(0)),
+    def files(triples: Seq[String]*) = Engine.extract(spark, triples.map(_(0)),
+      triples.map(_(1)), triples.map(_(2)), "Test Net", xcfg).collect().toSeq
+    def plan(triples: Seq[String]*) = ExtractPlan.operations(spark, triples.map(_(0)),
       triples.map(_(1)), triples.map(_(2)), "Test Net", xcfg).collect().toSeq
     val (inTask1, inTask2) = (inTask(127L), inTask(191L))
     assert(inTask1.length === 2 && inTask2.length === 1)
-    assert(bag(inTask1) === bag(batch(first)))
-    assert(bag(batch(first, second)) === bag(inTask1 ++ inTask2))
+    assert(bag(inTask1) === bag(plan(first)))
+    assert(bag(inTask2) === bag(plan(second)))
+    assert(bag(files(first, second)) === bag(plan(first, second)))
+  }
+
+  test("explicit-files extract rejects a checkpoint that is not a whole triple") {
+    // the reference joins within one triple; files of two checkpoints
+    // are grouped by sequence, and one lacking its results file throws
+    // on the driver, before any file is opened
+    val Seq(tx, ledger, _) = Archive.triple("/archive", 0x7fL)
+    val whole = Archive.triple("/archive", 0xbfL)
+    val e = intercept[IllegalArgumentException](Engine.extract(spark,
+      Seq(tx, whole(0)), Seq(ledger, whole(1)), Seq(whole(2)), "Test Net", cfg))
+    assert(e.getMessage.contains("checkpoint 0000007f") && e.getMessage.contains("results"))
   }
 
   test("Kin3 decimal amounts: quarks → exact DECIMAL(20,5) whole units") {
@@ -246,7 +263,7 @@ class ExtractSpec extends AnyFunSuite {
     val results = Seq(TxResultEntry(TxResultSet(Seq(
       res("hk", "txSUCCESS", Some(Seq(payLeg("ok"))))))))
     val out = Extract.withDecimalAmounts(
-      Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg)).collect()
+      ExtractPlan.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg)).collect()
     val amt = out(0).getAs[java.math.BigDecimal]("amount")
     assert(amt.compareTo(new java.math.BigDecimal("1234.56789")) === 0)
   }
@@ -258,7 +275,7 @@ class ExtractSpec extends AnyFunSuite {
     val results = Seq(TxResultEntry(TxResultSet(Seq(
       res("s1", "txSUCCESS", Some(Seq(payLeg("ok")))),
       res("s2", "txSUCCESS", Some(Seq(payLeg("ok"))))))))
-    val pays = Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg)
+    val pays = ExtractPlan.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg)
     val bySrc = Serve.paymentsBySource(pays, "GSRC").collect()
     assert(bySrc.map(_.getAs[String]("hash")).toSeq === Seq("s1"))
     assert(bySrc(0).getAs[String]("date") === "2018-08-30")

@@ -8,7 +8,7 @@ import graft.xdr.Stellar
 /** Golden end-to-end fixtures replicating the reference sample's
   * documented serving outputs (reference sample/README.md:20-65): three
   * payments from one source with memos `1-kit-…`, amounts 21/13/10, date
-  * 2018-10-20 — driven through encode→decode→Extract→Serve with the
+  * 2018-10-20 — driven through encode→decode→ExtractPlan→Serve with the
   * README's real addresses (their strkey checksums validate our codec).
   * Tx hashes necessarily differ (the originals hashed real network
   * envelopes), asserted 64-hex instead.
@@ -58,14 +58,14 @@ class GoldenSpec extends AnyFunSuite {
     val (txs, ledgers, results) = fixture()
     val cfg = ExtractConfig(assetIssuer = Issuer, appId = Some("kit"))
     import spark.implicits._
-    assert(Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg).count() === 0)
+    assert(ExtractPlan.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg).count() === 0)
   }
 
   test("golden /payments output: fields match the documented README rows") {
     val (txs, ledgers, results) = fixture()
     // unfiltered, like the demo (see quirk test above)
     val cfg = ExtractConfig(assetIssuer = Issuer)
-    val pays = Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg)
+    val pays = ExtractPlan.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg)
     val served = Serve.paymentsBySource(pays, Src, limit = 3)
       .select(to_json(struct(
         col("destination"), col("memo_text"), col("date").as("time"),
@@ -90,7 +90,7 @@ class GoldenSpec extends AnyFunSuite {
   test("golden /tx output: lookup by hash returns the single payment") {
     val (txs, ledgers, results) = fixture()
     val cfg = ExtractConfig(assetIssuer = Issuer)
-    val pays = Extract.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg)
+    val pays = ExtractPlan.payments(txs.toDS(), ledgers.toDS(), results.toDS(), cfg)
     val one = Serve.txByHash(pays, f"${0}%064x").collect()
     assert(one.length === 1)
     assert(one(0).getAs[String]("destination") === Dests.head)

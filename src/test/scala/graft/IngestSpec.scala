@@ -196,8 +196,9 @@ class IngestSpec extends AnyFunSuite {
     // Register the stub for the s3a scheme; resolution happens through
     // the same hadoopConfiguration lookup production uses, so the whole
     // chain — bare BUCKET_NAME → s3a:// mapping, CORE_DIRECTORY key
-    // join, pathFor fan-out, the tail's existence probes, binaryFile
-    // reads, and the sink's side files — runs against s3a-schemed URIs.
+    // join, pathFor fan-out, the tail's existence probes, the extract
+    // tasks' triple reads, and the sink's side files — runs against
+    // s3a-schemed URIs.
     val hconf = spark.sparkContext.hadoopConfiguration
     // snapshot the two keys we mutate: the config is shared session
     // state, and leaking a stub FS binding into later tests would make
@@ -233,7 +234,8 @@ class IngestSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(out, "etl", "completed_ledgers")))
     assert(Files.exists(Paths.get(out, "etl", "last_file")))
     // the streaming runner over the same s3a:// root: its availability
-    // probes and binaryFile reads both take the session's Hadoop conf
+    // probes and its tasks' triple reads both take the session's Hadoop
+    // conf
     val streamed = Files.createTempDirectory("graft-s3a-stream").toString
     val streamSink = new PartitionedFileSink(streamed)
     graft.sources.ArchiveStreamRunner.runAvailableNow(spark, Deploy.archiveRoot(env),
@@ -245,6 +247,65 @@ class IngestSpec extends AnyFunSuite {
       prevCommitter.fold(hconf.unset("mapreduce.outputcommitter.factory.scheme.s3a"))(
         hconf.set("mapreduce.outputcommitter.factory.scheme.s3a", _))
     }
+  }
+
+  test("a session-level fs binding reaches the extract tasks' triple reads") {
+    // bound with spark.conf.set alone, so only the session conf the tail
+    // broadcasts carries it; the shared hadoopConfiguration does not.
+    // Disabling the FileSystem cache for the scheme makes each task
+    // resolve the stub from the conf it was handed, not from an instance
+    // the driver's probes cached; the bucket is one no other test uses.
+    spark.conf.set("fs.s3a.impl", classOf[StubS3aFileSystem].getName)
+    spark.conf.set("fs.s3a.impl.disable.cache", "true")
+    try {
+      val local = Files.createTempDirectory("graft-s3a-task-read").toString
+      writeCheckpoint(local, 0x3fL, 2)
+      writeCheckpoint(local, 0x7fL, 1)
+      val root = s"s3a://graft-task-read-bucket$local"
+      val out = Files.createTempDirectory("graft-s3a-task-out").toString
+      val sink = new PartitionedFileSink(out)
+      assert(new ArchiveTail(spark, root, Passphrase, cfg, sink).runOnce() === 2)
+      assert(spark.read.csv(s"$out/ledgers").count() === 3)
+      val streamed = Files.createTempDirectory("graft-s3a-task-stream").toString
+      val streamSink = new PartitionedFileSink(streamed)
+      graft.sources.ArchiveStreamRunner.runAvailableNow(spark, root, Passphrase, cfg,
+        streamSink, Files.createTempDirectory("graft-s3a-task-ckpt").toString)
+      assert(streamSink.completed === Seq("0000003f", "0000007f"))
+      assert(spark.read.csv(s"$streamed/ledgers").count() === 3)
+    } finally {
+      spark.conf.unset("fs.s3a.impl")
+      spark.conf.unset("fs.s3a.impl.disable.cache")
+    }
+  }
+
+  test("a triple file that vanishes after the probe fails the commit; a replay lands it") {
+    val archive = Files.createTempDirectory("graft-vanish-arch").toString
+    writeCheckpoint(archive, 0x3fL, 1)
+    writeCheckpoint(archive, 0x7fL, 2)
+    val clean = Files.createTempDirectory("graft-vanish-clean").toString
+    assert(new ArchiveTail(spark, archive, Passphrase, cfg, new PartitionedFileSink(clean))
+      .runOnce() === 2)
+
+    val out = Files.createTempDirectory("graft-vanish-out").toString
+    val sink = new PartitionedFileSink(out)
+    val tail = new ArchiveTail(spark, archive, Passphrase, cfg, sink)
+    assert(tail.processOne(0x3fL))
+    val results = Paths.get(Archive.pathFor(archive, "results", 0x7fL))
+    val bytes = Files.readAllBytes(results)
+    Files.delete(results)
+    val e = intercept[Exception](tail.commit(0x7fL))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException]), e)
+    assert(sink.completed === Seq("0000003f"))
+    assert(sink.lastSequence === Some(0x3fL))
+    // the failed write may leave an empty `ledger=0000007f` directory,
+    // as any failed file-sink write does; with no marker it is not
+    // committed, and the replay below overwrites it
+    Files.write(results, bytes)
+    tail.commit(0x7fL)
+    assert(sink.completed === Seq("0000003f", "0000007f"))
+    def rows(root: String) = spark.read.csv(s"$root/ledgers").collect().map(_.toSeq).sortBy(_.toString)
+    assert(rows(out).toSeq === rows(clean).toSeq)
   }
 
   test("s3a:// store root: a real store family builds and serves through the stub FS") {

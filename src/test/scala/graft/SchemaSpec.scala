@@ -18,9 +18,9 @@ class SchemaSpec extends AnyFunSuite {
     val txs = empty(Seq.empty[TxHistoryEntry])
     val ledgers = empty(Seq.empty[LedgerEntry])
     val results = empty(Seq.empty[TxResultEntry])
-    assert(Extract.payments(txs, ledgers, results, cfg).schema === Schemas.payments)
-    assert(Extract.creations(txs, ledgers, results, cfg).schema === Schemas.creations)
-    assert(Extract.operations(txs, ledgers, results, cfg).schema === Schemas.operations)
+    assert(ExtractPlan.payments(txs, ledgers, results, cfg).schema === Schemas.payments)
+    assert(ExtractPlan.creations(txs, ledgers, results, cfg).schema === Schemas.creations)
+    assert(ExtractPlan.operations(txs, ledgers, results, cfg).schema === Schemas.operations)
   }
 
   test("the per-checkpoint Engine.extract emits exactly the operations schema") {

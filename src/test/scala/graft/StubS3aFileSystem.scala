@@ -18,7 +18,7 @@ import org.apache.hadoop.util.Progressable
   * Registered per-test via `fs.s3a.impl`, this drives the collector's
   * REAL code paths — `Deploy.archiveRoot`'s bare-bucket → `s3a://`
   * mapping, `Archive.pathFor` key fan-out, `ArchiveTail`'s existence
-  * probes, Spark's binaryFile reads, the sink's FS-agnostic side
+  * probes, the extract tasks' triple reads, the sink's FS-agnostic side
   * files, and the live stores' (`LivePipeline`, `LiveIndex`,
   * `LiveVectors`) listings, markers, renames and tombstone shelf — all
   * resolved through `Engine.fileSystem` — through an s3a-schemed URI

@@ -116,11 +116,8 @@ class XdrSpec extends AnyFunSuite {
     val ledPath = write("ledger", Archive.gzip(StellarWriter.encodeLedgerEntry(ledger)))
     val resPath = write("results", Archive.gzip(StellarWriter.encodeResultEntry(res, seq)))
 
-    val out = Extract.operations(
-      Archive.transactions(spark, Seq(txPath), "Test Net"),
-      Archive.ledgers(spark, Seq(ledPath)),
-      Archive.results(spark, Seq(resPath)),
-      ExtractConfig(assetIssuer = issuer)).collect()
+    val out = ExtractPlan.operations(spark, Seq(txPath), Seq(ledPath), Seq(resPath),
+      "Test Net", ExtractConfig(assetIssuer = issuer)).collect()
     assert(out.length === 1)
     val row = out(0)
     assert(row.getAs[String]("type") === "payment")
