@@ -340,7 +340,7 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
     // `localDomain`) — the x62 debiased frequency estimate from the
     // live report store. CHARGE-FREE BY DESIGN, the local model's
     // accounting on the wire: the ε was spent per record at the
-    // ingest-time coin ([[graft.streaming.LiveRelease.startLocal]]),
+    // ingest-time coin (the [[graft.streaming.LiveRelease.local]] family),
     // the store holds only ε-locally-private reports, and any reading
     // of them is post-processing — there is no budget left to refuse.
     // Domain and ε are SERVER config and must match the collector's

@@ -4,10 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions.col
-import graft.pipeline.TxHistoryEntry
-import graft.xdr.Stellar
 
 /** History-archive source: the reference's S3 layout and offset model
   * (SURVEY.md §2.1 S1-S5) over Hadoop FileSystem paths.
@@ -20,8 +16,9 @@ import graft.xdr.Stellar
   * sequence math is driver-side planning only. Extraction reads a
   * checkpoint's whole triple in one task ([[graft.Engine.extract]]),
   * since its three files are small and joined to each other: the task
-  * opens them through [[readGunzipped]]. [[transactions]] alone, the
-  * live store's document source, reads one binaryFile split per file.
+  * opens them through [[readGunzipped]], as the live store's document
+  * source ([[graft.streaming.LivePipeline.fromArchive]]) does for a
+  * batch's `transactions` files.
   */
 object Archive {
 
@@ -80,7 +77,8 @@ object Archive {
   private def fileName(path: String): String = path.substring(path.lastIndexOf('/') + 1)
 
   /** The gunzipped bytes of the archive file at `path`, opened through
-    * `conf`: the task-side read of [[graft.Engine.extract]].
+    * `conf`: the task-side read of [[graft.Engine.extract]] and
+    * [[graft.streaming.LivePipeline.fromArchive]].
     */
   def readGunzipped(path: String, conf: Configuration): Array[Byte] = {
     val p = new HPath(path)
@@ -93,12 +91,4 @@ object Archive {
     */
   def available(fs: FileSystem, root: String, seq: Long): Boolean =
     triple(root, seq).forall(p => fs.exists(new HPath(p)))
-
-  /** Decoded `transactions-*` category (hashes with the network id),
-    * one binaryFile split per file.
-    */
-  def transactions(spark: SparkSession, paths: Seq[String], passphrase: String): Dataset[TxHistoryEntry] =
-    spark.read.format("binaryFile").load(paths: _*).select(col("content")).as(Encoders.BINARY)
-      .mapPartitions(_.flatMap(b => Stellar.decodeTxEntries(gunzip(b), passphrase)))(
-        Encoders.product[TxHistoryEntry])
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -18,10 +17,17 @@ import org.apache.spark.sql.types._
   * corpus-wide totals are `groupBy(key).sum(n)` over the committed
   * partitions — associativity means per-batch partials plus one
   * re-aggregation ARE the batch answer, bit-for-bit for integer
-  * counts. [[compact]] folds history by the same re-aggregation
-  * (crash-safe staged roll-forward, [[LiveVectors.compact]]'s
-  * discipline — the batch dir's `_SUCCESS` is the commit marker, so
-  * an uncommitted dir is invisible to the fold by construction).
+  * counts. [[Family.compact]] folds history by the same
+  * re-aggregation (crash-safe staged roll-forward,
+  * [[LiveVectors.compact]]'s discipline — the batch dir's `_SUCCESS`
+  * is the commit marker, so an uncommitted dir is invisible to the
+  * fold by construction).
+  *
+  * Every count store is a [[Family]]: its subdirectory under a config
+  * root plus the observation transform that turns a micro-batch into
+  * `(key)` rows. [[plain]] takes pre-exploded keys; [[LiveNb]] and
+  * [[LiveRelease]] declare theirs next to the key decode that reads
+  * them back.
   *
   * This is how the batch-built model tables the stateless streaming
   * operators ship as literals (d12's hot-segment list, x10/x17's LM
@@ -35,113 +41,120 @@ import org.apache.spark.sql.types._
   */
 object LiveCounts {
 
-  final case class Config(root: String)
-
   private val CountSchema = StructType(Seq(
     StructField("key", StringType),
-    StructField("n", LongType),
-    StructField("batch", LongType)))
+    StructField("n", LongType)))
 
-  /** Start the continuous intake over a streaming frame: `prep` maps
-    * each micro-batch to its `(key)` observation rows (identity when
-    * the caller pre-explodes — words, segments, n-grams...), and each
-    * batch commits its partial counts. The wiring lives HERE, once:
-    * derived intakes ([[LiveNb]]) pass their observation transform
-    * instead of re-plumbing writeStream/checkpoint/foreachBatch, so
-    * checkpoint and replay behavior cannot drift between the count
-    * stores.
+  /** One count store's layout: it lives at `<root>/<subdir>` (`root`
+    * itself when `subdir` is empty), partials under `counts/`, the
+    * streaming checkpoint under `_checkpoint/`, and `prep` maps each
+    * micro-batch to its `(key)` observation rows. The writeStream /
+    * checkpoint / foreachBatch wiring lives HERE, once, so checkpoint
+    * and replay behavior cannot drift between the count stores.
     */
-  def start(keys: DataFrame, cfg: Config,
-      prep: DataFrame => DataFrame = identity): StreamingQuery = {
-    val fn: (DataFrame, Long) => Unit = (b, id) => step(prep(b), id, cfg)
-    keys.writeStream
-      .option("checkpointLocation", s"${cfg.root}/_checkpoint")
-      .foreachBatch(fn)
-      .start()
+  final case class Family(subdir: String, prep: DataFrame => DataFrame = identity) {
+
+    private def home(root: String) = if (subdir.isEmpty) root else s"$root/$subdir"
+    private def dir(root: String) = s"${home(root)}/counts"
+
+    /** Start the continuous intake over a streaming frame: each batch
+      * commits its partial counts through [[step]].
+      */
+    def start(rows: DataFrame, root: String): StreamingQuery = {
+      val fn: (DataFrame, Long) => Unit = (b, id) => step(b, id, root)
+      rows.writeStream
+        .option("checkpointLocation", s"${home(root)}/_checkpoint")
+        .foreachBatch(fn)
+        .start()
+    }
+
+    /** One incremental step (the foreachBatch body, callable directly in
+      * tests and backfills): the batch's partial aggregate, committed as
+      * its own partition (replay overwrites it — exactly-once).
+      */
+    def step(rows: DataFrame, batchId: Long, root: String): Unit = {
+      val s = rows.sparkSession
+      // writer-side fold recovery (single maintenance owner)
+      BatchParts.recoverFold(s, dir(root))
+      if (BatchParts.isCommittedIn(BatchParts.effectiveParts(s, dir(root)), batchId)) return
+      val obs = prep(rows)
+      if (obs.isEmpty) return
+      obs.groupBy("key").agg(count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"${dir(root)}/batch=$batchId")
+    }
+
+    /** Corpus-wide `(key, n)` totals: one re-aggregation over the
+      * committed partials. Associative, so folded and unfolded state sum
+      * to the same batch answer. Reader-side: ONE listing of the
+      * effective parts (the newest committed fold plus the batches past
+      * its horizon — [[BatchParts.effectiveParts]]), one multi-path
+      * relation, never an N-ary union. Safe under concurrent maintenance
+      * because a fold commits by rename and its superseded sources are
+      * only GC'd from the next writer op — every dir this listing names
+      * outlives the read.
+      */
+    def totals(s: SparkSession, root: String, asOf: Long = Long.MaxValue): DataFrame = {
+      val parts = BatchParts.effectiveParts(s, dir(root))
+      // as-of pins the statistics at a commit point (the model-rebuild
+      // sibling of LivePipeline.packedOutput's snapshot read: "the d12
+      // hot list as of commit N"). Counts are ADDITIVE state and a fold
+      // deliberately collapses history, so an as-of OLDER than the
+      // newest fold horizon is unrecoverable — fail loudly instead of
+      // silently serving partial totals; compaction cadence bounds how
+      // far back a snapshot can reach.
+      val folded = parts.collect { case (h, _, true) if h > asOf => h }
+      require(folded.isEmpty,
+        s"as-of $asOf predates fold horizon ${folded.mkString(",")}: folded " +
+          "count history is collapsed (bound compaction cadence to keep older snapshots)")
+      totalsFrom(s, parts.filter(_._1 <= asOf).map(_._2))
+    }
+
+    /** Fold committed partials into one partition (the re-aggregation is
+      * the merge), staged-roll-forward crash-safe via [[BatchParts]].
+      */
+    def compact(s: SparkSession, root: String): Unit = {
+      BatchParts.recoverFold(s, dir(root))
+      val parts = BatchParts.effectiveParts(s, dir(root))
+      if (parts.length > 1) {
+        val h = parts.last._1
+        val gen = BatchParts.nextFoldGen(s, dir(root))
+        totalsFrom(s, parts.map(_._2))
+          .write.mode("overwrite").parquet(BatchParts.stagingPath(dir(root), h, gen))
+        BatchParts.commitFold(s, dir(root), h, gen)
+      }
+    }
   }
 
-  /** One incremental step: the batch's partial aggregate, committed as
-    * its own partition (replay overwrites it — exactly-once).
+  /** The store over pre-exploded `(key)` rows (words, segments,
+    * n-grams...), at the config root itself.
     */
-  def step(batch: DataFrame, batchId: Long, cfg: Config): Unit = {
-    val s = batch.sparkSession
-    // writer-side fold recovery (single maintenance owner)
-    BatchParts.recoverFold(s, s"${cfg.root}/counts")
-    if (BatchParts.isCommittedIn(
-        BatchParts.effectiveParts(s, s"${cfg.root}/counts"), batchId)) return
-    if (batch.isEmpty) return
-    batch.groupBy("key").agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"${cfg.root}/counts/batch=$batchId")
-  }
-
-  /** Corpus-wide totals: one re-aggregation over the committed
-    * partials. Associative, so folded and unfolded state sum to the
-    * same batch answer. Reader-side: ONE listing of the effective
-    * parts (the newest committed fold plus the batches past its
-    * horizon — [[BatchParts.effectiveParts]]), one multi-path
-    * relation, never an N-ary union. Safe under concurrent
-    * maintenance because a fold commits by rename and its superseded
-    * sources are only GC'd from the next writer op — every dir this
-    * listing names outlives the read.
-    */
-  def totals(s: SparkSession, cfg: Config, asOf: Long = Long.MaxValue): DataFrame = {
-    val parts = BatchParts.effectiveParts(s, s"${cfg.root}/counts")
-    // as-of pins the statistics at a commit point (the model-rebuild
-    // sibling of LivePipeline.packedOutput's snapshot read: "the d12
-    // hot list as of commit N"). Counts are ADDITIVE state and a fold
-    // deliberately collapses history, so an as-of OLDER than the
-    // newest fold horizon is unrecoverable — fail loudly instead of
-    // silently serving partial totals; compaction cadence bounds how
-    // far back a snapshot can reach.
-    val folded = parts.collect { case (h, _, true) if h > asOf => h }
-    require(folded.isEmpty,
-      s"as-of $asOf predates fold horizon ${folded.mkString(",")}: folded " +
-        "count history is collapsed (bound compaction cadence to keep older snapshots)")
-    totalsFrom(s, parts.filter(_._1 <= asOf).map(_._2))
-  }
+  val plain: Family = Family("")
 
   /** The re-aggregation over a given dir snapshot — shared by
-    * [[totals]] and [[compact]] so the fold is PROVABLY the same
-    * associative recombination the serve path computes.
+    * [[Family.totals]] and [[Family.compact]] so the fold is PROVABLY
+    * the same associative recombination the serve path computes.
     */
   private def totalsFrom(s: SparkSession, dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty) s.createDataFrame(s.sparkContext.emptyRDD[Row],
-      StructType(CountSchema.dropRight(1)))
-    else s.read.schema(StructType(CountSchema.dropRight(1))).parquet(dirs: _*)
+    if (dirs.isEmpty) s.createDataFrame(s.sparkContext.emptyRDD[Row], CountSchema)
+    else s.read.schema(CountSchema).parquet(dirs: _*)
       .groupBy("key").agg(sum(col("n")).as("n"))
 
-  /** The d12 hot-segment list derived from the LIVE totals: keys with
-    * df ≥ `minDf`, md5-hashed to match [[graft.operators.Dedup
-    * .hotSegments]]' shape, ready to ship into [[StreamDemos
-    * .scrubBoilerplate]] — the model-refresh loop closed: the stream
-    * maintains the dfs, the scrub re-reads this at index cadence
-    * instead of rescanning the corpus. Driver-collected because the
-    * hot list is boilerplate-sized by construction (only df ≥ minDf
+  /** The d12 hot-segment list derived from the [[plain]] store's LIVE
+    * totals: keys with df ≥ `minDf`, md5-hashed to match
+    * [[graft.operators.Dedup.hotSegments]]' shape, ready to ship into
+    * [[StreamDemos.scrubBoilerplate]] — the model-refresh loop closed:
+    * the stream maintains the dfs, the scrub re-reads this at index
+    * cadence instead of rescanning the corpus. Driver-collected because
+    * the hot list is boilerplate-sized by construction (only df ≥ minDf
     * keys survive), exactly like the batch builder's consumer.
     */
-  def hotKeys(s: SparkSession, cfg: Config, minDf: Long): Seq[String] = {
+  def hotKeys(s: SparkSession, root: String, minDf: Long): Seq[String] = {
     // same guard as Dedup.hotSegments: with minDf <= 1 EVERY observed
     // key is "hot" and a streaming scrub built on this list silently
     // empties all documents
     require(minDf >= 2, s"minDf must be >= 2, got $minDf")
-    totals(s, cfg).filter(col("n") >= minDf)
+    plain.totals(s, root).filter(col("n") >= minDf)
       .select(md5(col("key")).as("h")).collect().map(_.getString(0)).toSeq
-  }
-
-  /** Fold committed partials into one partition (the re-aggregation is
-    * the merge), staged-roll-forward crash-safe via [[BatchParts]].
-    */
-  def compact(s: SparkSession, cfg: Config): Unit = {
-    val dir = s"${cfg.root}/counts"
-    BatchParts.recoverFold(s, dir)
-    val parts = BatchParts.effectiveParts(s, dir)
-    if (parts.length > 1) {
-      val h = parts.last._1
-      val gen = BatchParts.nextFoldGen(s, dir)
-      totalsFrom(s, parts.map(_._2))
-        .write.mode("overwrite").parquet(BatchParts.stagingPath(dir, h, gen))
-      BatchParts.commitFold(s, dir, h, gen)
-    }
   }
 }
 
@@ -171,9 +184,7 @@ object LiveCounts {
   */
 object LiveNb {
 
-  final case class Config(root: String) {
-    private[streaming] def counts: LiveCounts.Config = LiveCounts.Config(root)
-  }
+  final case class Config(root: String)
 
   /** One observation row per token plus one per doc, for a labeled
     * `(doc_id, text, pos)` batch — the exact observations the batch
@@ -181,28 +192,20 @@ object LiveNb {
     * INCLUDED, matching [[graft.operators.Curation.nbClassifier]]'s
     * tokenization verbatim).
     */
-  private[streaming] def observations(labeled: DataFrame): DataFrame =
+  private def observations(labeled: DataFrame): DataFrame =
     labeled
       .select(col("pos"), explode(split(col("text"), " ")).as("word"))
       .select(concat(when(col("pos"), "p").otherwise("n"), lit("|"), col("word")).as("key"))
       .unionByName(labeled.select(when(col("pos"), "P").otherwise("N").as("key")))
 
-  /** Start the continuous intake over a streaming labeled frame —
-    * [[LiveCounts.start]] with the NB observation transform as the
-    * per-batch prep, so the two intakes share one writeStream wiring.
+  /** The NB count store at the config root: labeled `(doc_id, text,
+    * pos)` batches in, through [[observations]].
     */
-  def start(labeled: DataFrame, cfg: Config): StreamingQuery =
-    LiveCounts.start(labeled, cfg.counts, observations)
-
-  /** One incremental step: the batch's observation partial, committed
-    * through the [[LiveCounts]] store (its replay/fold discipline).
-    */
-  def step(batch: DataFrame, batchId: Long, cfg: Config): Unit =
-    LiveCounts.step(observations(batch), batchId, cfg.counts)
+  val counts: LiveCounts.Family = LiveCounts.Family("", observations)
 
   /** The model's count tables rebuilt from the live totals. */
   def byClass(s: SparkSession, cfg: Config): DataFrame =
-    LiveCounts.totals(s, cfg.counts)
+    counts.totals(s, cfg.root)
       .filter(length(col("key")) >= 2 && substring(col("key"), 2, 1) === "|")
       .select(substring(col("key"), 1, 1).as("cls"),
         expr("substring(key, 3)").as("word"), col("n"))
@@ -211,7 +214,7 @@ object LiveNb {
         sum(when(col("cls") === "n", col("n")).otherwise(0L)).as("c_neg"))
 
   def prior(s: SparkSession, cfg: Config): DataFrame =
-    LiveCounts.totals(s, cfg.counts)
+    counts.totals(s, cfg.root)
       .filter(col("key").isin("P", "N"))
       .agg(sum(when(col("key") === "P", col("n")).otherwise(0L)).as("n_pos"),
         sum(when(col("key") === "N", col("n")).otherwise(0L)).as("n_neg"))
@@ -230,8 +233,4 @@ object LiveNb {
     val prLit = s.createDataFrame(Seq(prRow).asJava, prRow.schema)
     graft.operators.Curation.nbScoreWith(docs, byClass(s, cfg), prLit)
   }
-
-  /** Maintenance: fold the underlying counts store. */
-  def compact(s: SparkSession, cfg: Config): Unit =
-    LiveCounts.compact(s, cfg.counts)
 }

@@ -173,8 +173,10 @@ object LivePipeline {
     * the DSv2 archive stream (`ArchiveStreamProvider`, the S1/S2
     * surface) become documents and flow through the same curate→dedup→
     * pack step — the collector and the training-data engine joined end
-    * to end. Per micro-batch, the batch's `transactions` files are read
-    * and decoded executor-side by `Archive.transactions`; `doc_id =
+    * to end. Per micro-batch, one task per sequence reads and decodes
+    * its `transactions` file ([[graft.sources.Archive.readGunzipped]]
+    * through the session's Hadoop conf, broadcast once per query — the
+    * read [[graft.Engine.extract]] does); `doc_id =
     * (ledger_seq << 12) | tx_index` is monotone with arrival, so the
     * ordered-intake packing contract holds across batches. Memos are
     * 28-byte-class texts, far under x11's corpus-calibrated bar — set
@@ -189,23 +191,26 @@ object LivePipeline {
       index: Option[LiveIndex.Config] = None,
       monitor: Option[AdmissionMonitor] = None): StreamingQuery = {
     val raw = graft.sources.ArchiveStreamRunner.stream(spark, archiveRoot, firstSeq)
+    val conf = graft.Engine.hadoopConf(spark)
     val fn: (DataFrame, Long) => Unit = { (batch, id) =>
       import spark.implicits._
-      val txPaths = batch.select("seq").as[Long].collect().toSeq
-        .map(graft.sources.Archive.pathFor(archiveRoot, "transactions", _))
-      val docs = graft.sources.Archive.transactions(batch.sparkSession, txPaths, passphrase)
-        .flatMap { e =>
-          // 12 bits of tx index: overflow would collide with the next
-          // ledger's doc_ids and break monotonicity — fail loudly,
-          // never silently shadow a document
-          require(e.txSet.txs.size <= (1 << 12),
-            s"ledger ${e.ledgerSeq}: tx-set of ${e.txSet.txs.size} exceeds the 12-bit doc_id index")
-          e.txSet.txs.zipWithIndex.collect {
-            case (tx, i) if tx.tx.memoText.exists(_.nonEmpty) =>
-              ((e.ledgerSeq << 12) | i.toLong, "memo", tx.tx.memoText.get)
+      val seqs = batch.select("seq").as[Long].collect().toSeq
+      val docs = spark.sparkContext.parallelize(seqs, math.max(1, seqs.size)).flatMap { seq =>
+        val path = graft.sources.Archive.pathFor(archiveRoot, "transactions", seq)
+        graft.xdr.Stellar.decodeTxEntries(
+            graft.sources.Archive.readGunzipped(path, conf.value.value), passphrase)
+          .flatMap { e =>
+            // 12 bits of tx index: overflow would collide with the next
+            // ledger's doc_ids and break monotonicity — fail loudly,
+            // never silently shadow a document
+            require(e.txSet.txs.size <= (1 << 12),
+              s"ledger ${e.ledgerSeq}: tx-set of ${e.txSet.txs.size} exceeds the 12-bit doc_id index")
+            e.txSet.txs.zipWithIndex.collect {
+              case (tx, i) if tx.tx.memoText.exists(_.nonEmpty) =>
+                ((e.ledgerSeq << 12) | i.toLong, "memo", tx.tx.memoText.get)
+            }
           }
-        }
-        .toDF("doc_id", "lang", "text")
+      }.toDF("doc_id", "lang", "text")
       index match {
         case Some(idx) => stepWithIndex(docs, id, cfg, idx)
         case None => step(docs, id, cfg)

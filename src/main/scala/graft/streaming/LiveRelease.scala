@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.{DpLedger, Privacy}
 
 /** The STREAMING twin of the x47 continual release — the tree
@@ -24,6 +23,15 @@ import graft.operators.{DpLedger, Privacy}
   * the same records, clamped integer for clamped integer
   * (StreamingSpec pins the equivalence, plus replay idempotence and
   * the as-of prefix view).
+  *
+  * Each store is one [[LiveCounts.Family]] under the config root:
+  * [[days]] at the root itself, [[cells]], [[userCells]] and
+  * [[valueBins]] in their subdirectories, and the three whose
+  * observation depends on ingest parameters built by [[subsampled]],
+  * [[subsampledGauss]] and [[local]]. Ingest drives a family's
+  * `start`/`step`/`compact` with `cfg.root`; each release def reads
+  * its store through the same family, and each key format is decoded
+  * once, next to the transform that encodes it.
   *
   * Privacy accounting is unchanged: ε is charged per WINDOW through
   * the [[DpLedger]] charge-then-release wrapper at RELEASE time, not
@@ -54,38 +62,12 @@ object LiveRelease {
 
   final case class Config(root: String)
 
-  private def ccfg(cfg: Config) = LiveCounts.Config(cfg.root)
-
-  // sibling stores under the same root for the δ-licensed releases
-  // (x54/x55): the stability histograms need (event_type, day) cell
-  // counts and the distinct (user_id, event_type, day) user-cell set,
-  // neither derivable from the day-keyed store. Keys lead with the
-  // fixed-width ISO day (10 chars) so parsing never depends on the
-  // payload being separator-free.
-  private def cellCfg(cfg: Config) = LiveCounts.Config(s"${cfg.root}/cells")
-  private def userCellCfg(cfg: Config) = LiveCounts.Config(s"${cfg.root}/ucells")
-
-  /** One `(key = ISO day)` observation row per event — LiveCounts'
-    * observation transform. String keys so the store stays in the
-    * shared counts schema; [[release]] parses them back to dates.
+  /** The day store, at the config root: one `(key = ISO day)`
+    * observation per event. String keys so the store stays in the
+    * shared counts schema; [[dailyCounts]] parses them back to dates.
     */
-  private def prep(events: DataFrame): DataFrame =
-    events.select(to_date(col("ts")).cast("string").as("key"))
-
-  /** Continuous intake over a streaming events frame. */
-  def start(events: DataFrame, cfg: Config): StreamingQuery =
-    LiveCounts.start(events, ccfg(cfg), prep)
-
-  /** One incremental step (the foreachBatch body, callable directly in
-    * tests and backfills) — exactly-once per batchId by partition
-    * overwrite, [[LiveCounts.step]]'s contract.
-    */
-  def step(events: DataFrame, batchId: Long, cfg: Config): Unit =
-    LiveCounts.step(prep(events), batchId, ccfg(cfg))
-
-  /** Fold committed partials ([[LiveCounts.compact]]). */
-  def compact(s: SparkSession, cfg: Config): Unit =
-    LiveCounts.compact(s, ccfg(cfg))
+  val days: LiveCounts.Family =
+    LiveCounts.Family("", _.select(to_date(col("ts")).cast("string").as("key")))
 
   /** The tree-mechanism release from the live store's totals as of a
     * commit point (default: the live frontier). Same output schema,
@@ -160,59 +142,71 @@ object LiveRelease {
     Privacy.dpRangeFromDaily(dailyCounts(s, cfg, asOf), seeded, ledger, releaseId)
 
   private def dailyCounts(s: SparkSession, cfg: Config, asOf: Long): DataFrame =
-    LiveCounts.totals(s, ccfg(cfg), asOf)
+    days.totals(s, cfg.root, asOf)
       .select(to_date(col("key")).as("day"), col("n").as("cnt"))
 
   // ---- the δ-licensed twins (x54/x55) ----------------------------------
 
+  // sibling stores under the same root for the δ-licensed releases
+  // (x54/x55): the stability histograms need (event_type, day) cell
+  // counts and the distinct (user_id, event_type, day) user-cell set,
+  // neither derivable from the day-keyed store. Keys lead with the
+  // fixed-width ISO day (10 chars) so parsing never depends on the
+  // payload being separator-free.
   /** One `(key = ISO-day|event_type)` observation per event — the cell
-    * store's transform. Day first and fixed-width, so the type may
-    * contain anything.
+    * key of every cell-shaped store (full, kept-subsample, local
+    * report). Day first and fixed-width, so the type may contain
+    * anything.
     */
-  private def prepCells(events: DataFrame): DataFrame =
+  private def cellKey(events: DataFrame): DataFrame =
     events.select(concat(to_date(col("ts")).cast("string"), lit("|"),
       col("event_type")).as("key"))
 
-  /** One `(key = ISO-day|<ulen>|<user><event_type>)` observation per
-    * event. The user id is LENGTH-PREFIXED rather than delimited
-    * (r19 review): a delimiter-split spelling silently mis-parses any
-    * deployment whose user ids are non-numeric or contain the
-    * delimiter — merging distinct users before the per-user cap, which
-    * voids the x55 user-level sensitivity claim without an error. The
-    * decimal length can contain no `|`, so `<ulen>` bounds the user
-    * field exactly and BOTH remaining fields may contain anything.
-    * (Null user ids null the whole key — pre-filter them; the batch
-    * spelling's contract is the same.)
+  /** [[cellKey]] inverted: a cell store's totals as the FromCells
+    * `(day, event_type, true_n)` schema.
     */
-  private def prepUserCells(events: DataFrame): DataFrame =
-    events.select(concat(to_date(col("ts")).cast("string"), lit("|"),
+  private def cellRows(totals: DataFrame): DataFrame =
+    totals.select(to_timestamp(substring(col("key"), 1, 10)).as("day"),
+      expr("substring(key, 12)").as("event_type"), col("n").as("true_n"))
+
+  /** The cell-count store under `cells/`, for [[stableHistogram]]. */
+  val cells: LiveCounts.Family = LiveCounts.Family("cells", cellKey)
+
+  /** The user-cell store under `ucells/`, for [[userHistogram]]: one
+    * `(key = ISO-day|<ulen>|<user><event_type>)` observation per event.
+    * The user id is LENGTH-PREFIXED rather than delimited (r19 review):
+    * a delimiter-split spelling silently mis-parses any deployment
+    * whose user ids are non-numeric or contain the delimiter — merging
+    * distinct users before the per-user cap, which voids the x55
+    * user-level sensitivity claim without an error. The decimal length
+    * can contain no `|`, so `<ulen>` bounds the user field exactly and
+    * BOTH remaining fields may contain anything. (Null user ids null
+    * the whole key — pre-filter them; the batch spelling's contract is
+    * the same.) The store holds per-(day, user, type) EVENT counts; the
+    * releases use only key PRESENCE (n ≥ 1 ⇔ the user touched the
+    * cell), which is what makes the distinct user-cell set
+    * idempotent-union additive across batches — replay and fold cannot
+    * change membership.
+    */
+  val userCells: LiveCounts.Family = LiveCounts.Family("ucells",
+    _.select(concat(to_date(col("ts")).cast("string"), lit("|"),
       length(col("user_id").cast("string")).cast("string"), lit("|"),
-      col("user_id").cast("string"), col("event_type")).as("key"))
+      col("user_id").cast("string"), col("event_type")).as("key")))
 
-  /** Continuous cell-count intake for [[stableHistogram]]. */
-  def startCells(events: DataFrame, cfg: Config): StreamingQuery =
-    LiveCounts.start(events, cellCfg(cfg), prepCells)
-
-  def stepCells(events: DataFrame, batchId: Long, cfg: Config): Unit =
-    LiveCounts.step(prepCells(events), batchId, cellCfg(cfg))
-
-  def compactCells(s: SparkSession, cfg: Config): Unit =
-    LiveCounts.compact(s, cellCfg(cfg))
-
-  /** Continuous user-cell intake for [[userHistogram]]. The store
-    * holds per-(day, user, type) EVENT counts; the release uses only
-    * key PRESENCE (n ≥ 1 ⇔ the user touched the cell), which is what
-    * makes the distinct user-cell set idempotent-union additive across
-    * batches — replay and fold cannot change membership.
+  /** The [[userCells]] key inverted to `(day, user_id, event_type)`.
+    * user_id stays a STRING (the mechanisms use it only as a grouping
+    * key — the cap orders by (day, event_type) — so the releases are
+    * identical to the batch spellings over typed ids).
     */
-  def startUserCells(events: DataFrame, cfg: Config): StreamingQuery =
-    LiveCounts.start(events, userCellCfg(cfg), prepUserCells)
-
-  def stepUserCells(events: DataFrame, batchId: Long, cfg: Config): Unit =
-    LiveCounts.step(prepUserCells(events), batchId, userCellCfg(cfg))
-
-  def compactUserCells(s: SparkSession, cfg: Config): Unit =
-    LiveCounts.compact(s, userCellCfg(cfg))
+  private def userCellRows(totals: DataFrame): DataFrame =
+    totals.select(to_timestamp(substring(col("key"), 1, 10)).as("day"),
+        expr("substring(key, 12)").as("_rest"))
+      .withColumn("_ulen", split(col("_rest"), "\\|", 2).getItem(0))
+      .select(col("day"),
+        expr("substring(_rest, length(_ulen) + 2, cast(_ulen as int))")
+          .as("user_id"),
+        expr("substring(_rest, length(_ulen) + 2 + cast(_ulen as int))")
+          .as("event_type"))
 
   /** The x54 stability histogram from the live cell-count store — the
     * δ-licensed release regime's streaming twin (r18 verdict #3: every
@@ -230,10 +224,7 @@ object LiveRelease {
       delta: Double = 1e-6, ledger: Option[DpLedger] = None,
       releaseId: String = "stable_hist",
       asOf: Long = Long.MaxValue): DataFrame =
-    Privacy.dpStableHistogramFromCells(
-      LiveCounts.totals(s, cellCfg(cfg), asOf)
-        .select(to_timestamp(substring(col("key"), 1, 10)).as("day"),
-          expr("substring(key, 12)").as("event_type"), col("n").as("true_n")),
+    Privacy.dpStableHistogramFromCells(cellRows(cells.totals(s, cfg.root, asOf)),
       seeded, delta, ledger, releaseId)
 
   /** The x55 user-level stability histogram from the live user-cell
@@ -246,84 +237,53 @@ object LiveRelease {
       capCells: Int = 4, delta: Double = 1e-6,
       ledger: Option[DpLedger] = None, releaseId: String = "user_hist",
       asOf: Long = Long.MaxValue): DataFrame =
-    Privacy.dpUserHistogramFromUserCells(
-      // invert prepUserCells' length-prefix encoding. user_id stays a
-      // STRING here (the mechanism uses it only as a grouping key —
-      // the cap orders by (day, event_type) — so the release is
-      // identical to the batch spelling over typed ids)
-      LiveCounts.totals(s, userCellCfg(cfg), asOf)
-        .select(to_timestamp(substring(col("key"), 1, 10)).as("day"),
-          expr("substring(key, 12)").as("_rest"))
-        .withColumn("_ulen", split(col("_rest"), "\\|", 2).getItem(0))
-        .select(col("day"),
-          expr("substring(_rest, length(_ulen) + 2, cast(_ulen as int))")
-            .as("user_id"),
-          expr("substring(_rest, length(_ulen) + 2 + cast(_ulen as int))")
-            .as("event_type")),
+    Privacy.dpUserHistogramFromUserCells(userCellRows(userCells.totals(s, cfg.root, asOf)),
       seeded, capCells, delta, ledger, releaseId)
 
   // ---- the subsampled twins (x56/x60) -----------------------------------
 
-  // sibling KEPT-subsample stores: one per sample domain ('dpss|' for
-  // the Laplace release, 'dpsg|' for the Gaussian — x60's independence
-  // contract: running both releases must not correlate their
-  // subsamples), keyed like the full-cell store
-  private def subCellCfg(cfg: Config) = LiveCounts.Config(s"${cfg.root}/subcells")
-  private def subgCellCfg(cfg: Config) = LiveCounts.Config(s"${cfg.root}/subgcells")
-
   /** The full-cell store's event types as the twins' vocabulary source
     * (the release set must derive from the FULL corpus, never the
     * sample — [[graft.operators.Privacy.dpSubsampledCountFromCells]]'s
-    * contract), so a deployment running [[startCells]] gets the batch
-    * default's semantics; one that doesn't must pass a public
+    * contract), so a deployment running the [[cells]] intake gets the
+    * batch default's semantics; one that doesn't must pass a public
     * `vocabulary` (the honest production spelling anyway).
     */
   private def cellTypes(s: SparkSession, cfg: Config, asOf: Long): DataFrame =
-    LiveCounts.totals(s, cellCfg(cfg), asOf)
-      .select(expr("substring(key, 12)").as("event_type"))
+    cellRows(cells.totals(s, cfg.root, asOf)).select("event_type")
 
-  private def prepSub(tag: String, samplingSalt: String, q: Double)(
-      events: DataFrame): DataFrame =
-    prepCells(events.filter(Privacy.subsampleKeep(tag, samplingSalt, q)))
-
-  /** Continuous KEPT-subsample intake for [[subsampledCount]]. The
-    * SAMPLING salt is deployment config fixed at ingest time (the
-    * sample must be one draw across the stream's whole life — a salt
-    * that changed between batches would splice two different samples
-    * into one store); the default empty salt is the seeded/test
-    * spelling, publicly recomputable like every seeded release, and
-    * the amplification claim is vacuous under it
+  /** The KEPT-subsample store under `subcells/`, for
+    * [[subsampledCount]]: the 'dpss|' sample of the events at rate `q`,
+    * keyed like [[cells]]. The SAMPLING salt is deployment config fixed
+    * at ingest time (the sample must be one draw across the stream's
+    * whole life — a salt that changed between batches would splice two
+    * different samples into one store); the default empty salt is the
+    * seeded/test spelling, publicly recomputable like every seeded
+    * release, and the amplification claim is vacuous under it
     * ([[graft.operators.Privacy.releaseSalt]]'s contract). Release-time
     * NOISE salts stay per-release draws exactly as in batch — in the
     * streaming spelling the two randomness sources are independent
-    * secrets.
+    * secrets. A `q` outside (0, 1) is refused here, as every
+    * subsampled release refuses it, so no store is written that could
+    * never be released.
     */
-  def startSubsampled(events: DataFrame, cfg: Config, q: Double = 0.5,
-      samplingSalt: String = ""): StreamingQuery =
-    LiveCounts.start(events, subCellCfg(cfg), prepSub("dpss|", samplingSalt, q))
+  def subsampled(q: Double = 0.5, samplingSalt: String = ""): LiveCounts.Family =
+    keptCells("subcells", "dpss|", q, samplingSalt)
 
-  def stepSubsampled(events: DataFrame, batchId: Long, cfg: Config,
-      q: Double = 0.5, samplingSalt: String = ""): Unit =
-    LiveCounts.step(prepSub("dpss|", samplingSalt, q)(events), batchId,
-      subCellCfg(cfg))
-
-  def compactSubsampled(s: SparkSession, cfg: Config): Unit =
-    LiveCounts.compact(s, subCellCfg(cfg))
-
-  /** Continuous KEPT-subsample intake for [[subsampledGaussian]] — its
-    * own store under the independent 'dpsg|' sample domain.
+  /** The KEPT-subsample store under `subgcells/`, for
+    * [[subsampledGaussian]]: [[subsampled]]'s sibling under the
+    * independent 'dpsg|' sample domain (x60's independence contract:
+    * running both releases must not correlate their subsamples).
     */
-  def startSubsampledGaussian(events: DataFrame, cfg: Config,
-      q: Double = 0.5, samplingSalt: String = ""): StreamingQuery =
-    LiveCounts.start(events, subgCellCfg(cfg), prepSub("dpsg|", samplingSalt, q))
+  def subsampledGauss(q: Double = 0.5, samplingSalt: String = ""): LiveCounts.Family =
+    keptCells("subgcells", "dpsg|", q, samplingSalt)
 
-  def stepSubsampledGaussian(events: DataFrame, batchId: Long, cfg: Config,
-      q: Double = 0.5, samplingSalt: String = ""): Unit =
-    LiveCounts.step(prepSub("dpsg|", samplingSalt, q)(events), batchId,
-      subgCellCfg(cfg))
-
-  def compactSubsampledGaussian(s: SparkSession, cfg: Config): Unit =
-    LiveCounts.compact(s, subgCellCfg(cfg))
+  private def keptCells(subdir: String, tag: String, q: Double,
+      samplingSalt: String): LiveCounts.Family = {
+    require(q > 0 && q < 1, s"need 0 < q < 1, got $q")
+    LiveCounts.Family(subdir,
+      events => cellKey(events.filter(Privacy.subsampleKeep(tag, samplingSalt, q))))
+  }
 
   /** The x56 subsampled count release from the live kept-cell store —
     * the amplification regime's streaming twin (after which EVERY
@@ -341,7 +301,7 @@ object LiveRelease {
       vocabulary: Option[Seq[String]] = None,
       asOf: Long = Long.MaxValue): DataFrame =
     Privacy.dpSubsampledCountFromCells(
-      subCells(s, subCellCfg(cfg), asOf), cellTypes(s, cfg, asOf),
+      cellRows(subsampled(q).totals(s, cfg.root, asOf)), cellTypes(s, cfg, asOf),
       q, seeded, ledger, releaseId, vocabulary)
 
   /** The x60 subsampled GAUSSIAN release from its live kept-cell
@@ -355,7 +315,7 @@ object LiveRelease {
       vocabulary: Option[Seq[String]] = None,
       asOf: Long = Long.MaxValue): DataFrame =
     Privacy.dpSubsampledGaussianFromCells(
-      subCells(s, subgCellCfg(cfg), asOf), cellTypes(s, cfg, asOf),
+      cellRows(subsampledGauss(q).totals(s, cfg.root, asOf)), cellTypes(s, cfg, asOf),
       q, seeded, ledger, releaseId, vocabulary)
 
   /** [[subsampledGaussian]] under the [[graft.operators.RdpAccountant]]
@@ -370,7 +330,7 @@ object LiveRelease {
       vocabulary: Option[Seq[String]] = None,
       asOf: Long = Long.MaxValue): DataFrame =
     Privacy.dpSubsampledGaussianRdpFromCells(
-      subCells(s, subgCellCfg(cfg), asOf), cellTypes(s, cfg, asOf),
+      cellRows(subsampledGauss(q).totals(s, cfg.root, asOf)), cellTypes(s, cfg, asOf),
       accountant, q, seeded, releaseId, vocabulary)
 
   // ---- the dense-count twins (x40/x49) ----------------------------------
@@ -384,10 +344,7 @@ object LiveRelease {
       ledger: Option[DpLedger] = None, releaseId: String = "count",
       vocabulary: Option[Seq[String]] = None,
       asOf: Long = Long.MaxValue): DataFrame =
-    Privacy.dpCountFromCells(
-      LiveCounts.totals(s, cellCfg(cfg), asOf)
-        .select(to_timestamp(substring(col("key"), 1, 10)).as("day"),
-          expr("substring(key, 12)").as("event_type"), col("n").as("true_n")),
+    Privacy.dpCountFromCells(cellRows(cells.totals(s, cfg.root, asOf)),
       cellTypes(s, cfg, asOf), seeded, ledger, releaseId, vocabulary)
 
   /** The x49 user-level count release from the live user-cell store
@@ -399,17 +356,7 @@ object LiveRelease {
       releaseId: String = "user_count",
       vocabulary: Option[Seq[String]] = None,
       asOf: Long = Long.MaxValue): DataFrame =
-    Privacy.dpUserCountFromUserCells(
-      // invert prepUserCells' length-prefix encoding (the x55 parse)
-      LiveCounts.totals(s, userCellCfg(cfg), asOf)
-        .select(to_timestamp(substring(col("key"), 1, 10)).as("day"),
-          expr("substring(key, 12)").as("_rest"))
-        .withColumn("_ulen", split(col("_rest"), "\\|", 2).getItem(0))
-        .select(col("day"),
-          expr("substring(_rest, length(_ulen) + 2, cast(_ulen as int))")
-            .as("user_id"),
-          expr("substring(_rest, length(_ulen) + 2 + cast(_ulen as int))")
-            .as("event_type")),
+    Privacy.dpUserCountFromUserCells(userCellRows(userCells.totals(s, cfg.root, asOf)),
       cellTypes(s, cfg, asOf), seeded, capCells, ledger, releaseId, vocabulary)
 
   // ---- the selection-family twins (x43/x44/x64) -------------------------
@@ -425,34 +372,22 @@ object LiveRelease {
       ledger: Option[DpLedger] = None, releaseId: String = "argmax",
       vocabulary: Option[Seq[String]] = None,
       asOf: Long = Long.MaxValue): DataFrame =
-    Privacy.dpArgmaxFromCells(
-      LiveCounts.totals(s, cellCfg(cfg), asOf)
-        .select(to_timestamp(substring(col("key"), 1, 10)).as("day"),
-          expr("substring(key, 12)").as("event_type"), col("n").as("true_n")),
+    Privacy.dpArgmaxFromCells(cellRows(cells.totals(s, cfg.root, asOf)),
       cellTypes(s, cfg, asOf), seeded, ledger, releaseId, vocabulary)
 
-  // value-bin store for the median/quantile twins: key = zero-padded
-  // two-digit public bin FIRST (fixed width, so the type may contain
-  // anything), assigned at ingest by the SAME Privacy.valueBin
-  // spelling the batch releases use
-  private def binCellCfg(cfg: Config) = LiveCounts.Config(s"${cfg.root}/valuebins")
+  /** The value-bin store under `valuebins/`, for the median/quantile
+    * twins: key = zero-padded two-digit public bin FIRST (fixed width,
+    * so the type may contain anything), assigned at ingest by the SAME
+    * Privacy.valueBin spelling the batch releases use.
+    */
+  val valueBins: LiveCounts.Family = LiveCounts.Family("valuebins",
+    _.select(concat(lpad(Privacy.valueBin.cast("string"), 2, "0"),
+      lit("|"), col("event_type")).as("key")))
 
-  private def prepValueBins(events: DataFrame): DataFrame =
-    events.select(concat(lpad(Privacy.valueBin.cast("string"), 2, "0"),
-      lit("|"), col("event_type")).as("key"))
-
-  def startValueBins(events: DataFrame, cfg: Config): StreamingQuery =
-    LiveCounts.start(events, binCellCfg(cfg), prepValueBins)
-
-  def stepValueBins(events: DataFrame, batchId: Long, cfg: Config): Unit =
-    LiveCounts.step(prepValueBins(events), batchId, binCellCfg(cfg))
-
-  def compactValueBins(s: SparkSession, cfg: Config): Unit =
-    LiveCounts.compact(s, binCellCfg(cfg))
-
+  /** The [[valueBins]] key inverted to `(event_type, bin, c)`. */
   private def binnedFromStore(s: SparkSession, cfg: Config,
       asOf: Long): DataFrame =
-    LiveCounts.totals(s, binCellCfg(cfg), asOf)
+    valueBins.totals(s, cfg.root, asOf)
       .select(expr("substring(key, 4)").as("event_type"),
         substring(col("key"), 1, 2).cast("int").as("bin"),
         col("n").as("c"))
@@ -480,9 +415,8 @@ object LiveRelease {
 
   // ---- the LOCAL-DP twin (x62) ------------------------------------------
 
-  private def lrrCellCfg(cfg: Config) = LiveCounts.Config(s"${cfg.root}/lrrcells")
-
-  /** One `(key = ISO-day|reported)` observation per RANDOMIZED record —
+  /** The report store under `lrrcells/`, for [[localFrequency]]: one
+    * `(key = ISO-day|reported)` observation per RANDOMIZED record —
     * the k-RR coin runs HERE, at ingest, which is what the local model
     * means operationally: the store (and everything downstream) only
     * ever holds ε-locally-private reports, never a true type. The
@@ -492,28 +426,25 @@ object LiveRelease {
     * would splice two mechanisms into one store); the default empty
     * salt is the seeded/test spelling, publicly recomputable like
     * every seeded release ([[graft.operators.Privacy.releaseSalt]]).
+    * `eps <= 0` or a domain of fewer than two types is refused here, as
+    * the estimator refuses it, so no store is written that could never
+    * be released.
     */
-  private def prepLocal(domain: Seq[String], eps: Double, salt: String)(
-      events: DataFrame): DataFrame =
-    prepCells(Privacy.localRandomize(events, eps, salt, domain.distinct.sorted)
-      .select(col("ts"), col("reported").as("event_type")))
-
-  def startLocal(events: DataFrame, cfg: Config, domain: Seq[String],
-      eps: Double = 1.0, samplingSalt: String = ""): StreamingQuery =
-    LiveCounts.start(events, lrrCellCfg(cfg), prepLocal(domain, eps, samplingSalt))
-
-  def stepLocal(events: DataFrame, batchId: Long, cfg: Config,
-      domain: Seq[String], eps: Double = 1.0,
-      samplingSalt: String = ""): Unit =
-    LiveCounts.step(prepLocal(domain, eps, samplingSalt)(events), batchId,
-      lrrCellCfg(cfg))
-
-  def compactLocal(s: SparkSession, cfg: Config): Unit =
-    LiveCounts.compact(s, lrrCellCfg(cfg))
+  def local(domain: Seq[String], eps: Double = 1.0,
+      samplingSalt: String = ""): LiveCounts.Family = {
+    require(eps > 0, s"need eps > 0, got $eps")
+    val ts = domain.distinct.sorted
+    require(ts.size >= 2,
+      s"randomized response needs a response domain of >= 2 types, got $ts")
+    LiveCounts.Family("lrrcells", events => cellKey(
+      Privacy.localRandomize(events, eps, samplingSalt, ts)
+        .select(col("ts"), col("reported").as("event_type"))))
+  }
 
   /** The x62 debiased frequency estimate from the live report store —
     * pure post-processing of already-ε-locally-private reports (no
-    * ledger: the ε was spent per record at [[startLocal]]'s coin).
+    * ledger: the ε was spent per record at the [[local]] family's
+    * ingest coin).
     * `domain`/`eps` must match the collector's config
     * ([[graft.operators.Privacy.localFrequencyFromReports]] carries
     * the unit-error warning); live == batch with the same domain and
@@ -522,15 +453,6 @@ object LiveRelease {
   def localFrequency(s: SparkSession, cfg: Config, domain: Seq[String],
       eps: Double = 1.0, asOf: Long = Long.MaxValue): DataFrame =
     Privacy.localFrequencyFromReports(
-      LiveCounts.totals(s, lrrCellCfg(cfg), asOf)
-        .select(to_timestamp(substring(col("key"), 1, 10)).as("day"),
-          expr("substring(key, 12)").as("reported"), col("n")),
+      cellRows(local(domain, eps).totals(s, cfg.root, asOf)).toDF("day", "reported", "n"),
       eps, domain)
-
-  /** A kept-subsample store's totals in the FromCells cell schema. */
-  private def subCells(s: SparkSession, ccfg: LiveCounts.Config,
-      asOf: Long): DataFrame =
-    LiveCounts.totals(s, ccfg, asOf)
-      .select(to_timestamp(substring(col("key"), 1, 10)).as("day"),
-        expr("substring(key, 12)").as("event_type"), col("n").as("true_n"))
 }

@@ -364,8 +364,8 @@ class HttpServeSpec extends AnyFunSuite {
     val rroot = java.nio.file.Files.createTempDirectory("graft-intake-release").toString
     val rcfg = graft.streaming.LiveRelease.Config(rroot)
     val evAll = Tables.events(spark, d)
-    (0 until 2).foreach(i => graft.streaming.LiveRelease.step(
-      evAll.filter(col("event_id") % 2 === i), i.toLong, rcfg))
+    (0 until 2).foreach(i => graft.streaming.LiveRelease.days.step(
+      evAll.filter(col("event_id") % 2 === i), i.toLong, rcfg.root))
     val expected = graft.operators.Privacy.dpContinualRelease(evAll, seeded = true)
       .collect().map(_.getAs[Long]("released_cum")).toSeq
     // budget 1: exactly one release is EVER admitted over this API
@@ -417,7 +417,7 @@ class HttpServeSpec extends AnyFunSuite {
     val rroot = java.nio.file.Files.createTempDirectory("graft-intake-alert").toString
     val rcfg = graft.streaming.LiveRelease.Config(rroot)
     val evAll = Tables.events(spark, d)
-    graft.streaming.LiveRelease.step(evAll, 0L, rcfg)
+    graft.streaming.LiveRelease.days.step(evAll, 0L, rcfg.root)
     val expected = graft.operators.Privacy
       .dpAboveThresholdRelease(evAll, threshold = 5.0, seeded = true).collect()
       .map(r => (r.getTimestamp(0), r.getBoolean(1))).toSeq
@@ -467,8 +467,8 @@ class HttpServeSpec extends AnyFunSuite {
         "event_id", "ts", "user_id", "event_type", "value", "props")
       Tables.events(spark, d).unionByName(hot)
     }
-    graft.streaming.LiveRelease.stepCells(evAll, 0L, rcfg)
-    graft.streaming.LiveRelease.stepUserCells(evAll, 0L, rcfg)
+    graft.streaming.LiveRelease.cells.step(evAll, 0L, rcfg.root)
+    graft.streaming.LiveRelease.userCells.step(evAll, 0L, rcfg.root)
     val expected = graft.operators.Privacy
       .dpStableHistogramRelease(evAll, seeded = true).collect()
       .map(_.getAs[Long]("released_n")).toSeq
@@ -525,9 +525,9 @@ class HttpServeSpec extends AnyFunSuite {
     val rroot = java.nio.file.Files.createTempDirectory("graft-intake-sub").toString
     val rcfg = graft.streaming.LiveRelease.Config(rroot)
     val ev = Tables.events(spark, d)
-    graft.streaming.LiveRelease.stepSubsampled(ev, 0L, rcfg)
-    graft.streaming.LiveRelease.stepSubsampledGaussian(ev, 0L, rcfg)
-    graft.streaming.LiveRelease.stepCells(ev, 0L, rcfg) // vocabulary source
+    graft.streaming.LiveRelease.subsampled().step(ev, 0L, rcfg.root)
+    graft.streaming.LiveRelease.subsampledGauss().step(ev, 0L, rcfg.root)
+    graft.streaming.LiveRelease.cells.step(ev, 0L, rcfg.root) // vocabulary source
     val expLap = graft.operators.Privacy
       .dpSubsampledCountRelease(ev, seeded = true).collect()
       .map(_.getAs[Long]("released_n")).toSeq
@@ -618,8 +618,8 @@ class HttpServeSpec extends AnyFunSuite {
     val ev = Tables.events(spark, d)
     val domain = ev.select("event_type").distinct()
       .collect().map(_.getString(0)).toSeq.sorted
-    graft.streaming.LiveRelease.step(ev, 0L, rcfg) // day store (/range)
-    graft.streaming.LiveRelease.stepLocal(ev, 0L, rcfg, domain) // reports
+    graft.streaming.LiveRelease.days.step(ev, 0L, rcfg.root) // day store (/range)
+    graft.streaming.LiveRelease.local(domain).step(ev, 0L, rcfg.root) // reports
     val expRange = graft.operators.Privacy.dpRangeRelease(ev, seeded = true)
       .collect().map(_.getAs[Long]("released_range")).toSeq
     val expLocal = graft.operators.Privacy

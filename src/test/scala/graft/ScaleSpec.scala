@@ -420,8 +420,8 @@ class ScaleSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-twin-plan").toString
     val cfg = graft.streaming.LiveRelease.Config(root)
     val ev = graft.Tables.events(spark, "/root/testdata/sf0.001")
-    graft.streaming.LiveRelease.stepCells(ev, 0L, cfg)
-    graft.streaming.LiveRelease.stepUserCells(ev, 0L, cfg)
+    graft.streaming.LiveRelease.cells.step(ev, 0L, cfg.root)
+    graft.streaming.LiveRelease.userCells.step(ev, 0L, cfg.root)
     val p54 = graft.streaming.LiveRelease.stableHistogram(spark, cfg, seeded = true)
       .queryExecution.executedPlan.toString
     assert(!p54.contains("CartesianProduct") &&

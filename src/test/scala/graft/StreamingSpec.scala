@@ -1224,7 +1224,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("graft-live-counts").toString
-    val cfg = graft.streaming.LiveCounts.Config(root)
+    val counts = graft.streaming.LiveCounts.plain
     // d12's segment-df corpus: hotSegments counts DISTINCT docs per
     // 4-word segment; the stream carries distinct (doc, segment) pairs
     // (each doc arrives once, so per-doc-distinct IS additive df)
@@ -1238,13 +1238,13 @@ class StreamingSpec extends AnyFunSuite {
       .select("key").collect().map(_.getString(0))
     // stream observation keys in 2 batches + a replayed slice
     val ms = MemoryStream[String]
-    val q = graft.streaming.LiveCounts.start(ms.toDS().toDF("key"), cfg)
+    val q = counts.start(ms.toDS().toDF("key"), root)
     try {
       val (b1, b2) = segs.splitAt(segs.length / 2)
       ms.addData(b1.toIndexedSeq: _*); q.processAllAvailable()
       ms.addData(b2.toIndexedSeq: _*); q.processAllAvailable()
     } finally q.stop()
-    def totalMap = graft.streaming.LiveCounts.totals(spark, cfg).collect()
+    def totalMap = counts.totals(spark, root).collect()
       .map(r => r.getAs[String]("key") -> r.getAs[Long]("n")).toMap
     val batchCounts = segs.groupBy(identity).map { case (k, v) => k -> v.length.toLong }
     assert(totalMap === batchCounts)
@@ -1253,17 +1253,17 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSet
     // hotKeys is the shipping shape: md5'd like the batch builder, and
     // drops straight into StreamDemos.scrubBoilerplate
-    assert(graft.streaming.LiveCounts.hotKeys(spark, cfg, minDf = 2L).toSet === hotBatch,
+    assert(graft.streaming.LiveCounts.hotKeys(spark, root, minDf = 2L).toSet === hotBatch,
       "live df totals must rebuild the d12 hot list")
     // compact commits one fold dir; sources survive until the next
     // writer op (deferred GC); totals unchanged; replay no-op
-    graft.streaming.LiveCounts.compact(spark, cfg)
+    counts.compact(spark, root)
     def countDirs(prefix: String): Set[String] = new java.io.File(s"$root/counts")
       .listFiles().map(_.getName).filter(_.startsWith(prefix)).toSet
     assert(countDirs("fold=").size === 1)
     assert(countDirs("batch=").nonEmpty, "a fold commit must not delete its sources")
     assert(totalMap === batchCounts)
-    graft.streaming.LiveCounts.step(Seq("a b c d").toDF("key"), 1L, cfg)
+    counts.step(Seq("a b c d").toDF("key"), 1L, root)
     assert(totalMap === batchCounts,
       "replay of a FOLDED batch id is a no-op even after GC drops its dir")
     assert(countDirs("batch=").isEmpty, "the next writer op GCs the fold's sources")
@@ -1271,15 +1271,15 @@ class StreamingSpec extends AnyFunSuite {
     // and the commit rename) is invisible to totals — no staging
     // reads, no mutation from the serve path, and the state it would
     // supersede is all still present
-    graft.streaming.LiveCounts.step(Seq("zzz extra").toDF("key"), 2L, cfg)
+    counts.step(Seq("zzz extra").toDF("key"), 2L, root)
     val expected2 = batchCounts + ("zzz extra" -> 1L)
-    graft.streaming.LiveCounts.totals(spark, cfg)
+    counts.totals(spark, root)
       .write.parquet(s"$root/counts/.compact-2-1")
     assert(totalMap === expected2, "reads stay complete with a pending staging")
     assert(new java.io.File(s"$root/counts/.compact-2-1").exists,
       "reads must not complete or delete a pending fold")
     // the next WRITER step commits the staging
-    graft.streaming.LiveCounts.step(Seq("one more").toDF("key"), 3L, cfg)
+    counts.step(Seq("one more").toDF("key"), 3L, root)
     assert(!new java.io.File(s"$root/counts/.compact-2-1").exists)
     assert(new java.io.File(s"$root/counts/fold=2-1").exists,
       "recovery commits the crashed staging under its fold= name")
@@ -1287,7 +1287,7 @@ class StreamingSpec extends AnyFunSuite {
     // as-of pins the statistics at a commit point; an as-of older than
     // the fold horizon fails loudly (folded history is collapsed)
     def totalsAsOf(asOf: Long) =
-      graft.streaming.LiveCounts.totals(spark, cfg, asOf).collect()
+      counts.totals(spark, root, asOf).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(totalsAsOf(2L) === expected2, "as-of at the fold horizon")
     assert(totalsAsOf(3L) === expected2 + ("one more" -> 1L))
@@ -1311,7 +1311,7 @@ class StreamingSpec extends AnyFunSuite {
     val evAll = graft.Tables.events(spark, d)
     val slices = (0 until 3).map(i => evAll.filter(col("event_id") % 3 === i))
     slices.zipWithIndex.foreach { case (s, i) =>
-      graft.streaming.LiveRelease.step(s, i.toLong, cfg) }
+      graft.streaming.LiveRelease.days.step(s, i.toLong, cfg.root) }
     def live(asOf: Long = Long.MaxValue) = graft.streaming.LiveRelease
       .release(spark, cfg, seeded = true, asOf = asOf).collect().toSeq
     val frontier = live()
@@ -1325,10 +1325,10 @@ class StreamingSpec extends AnyFunSuite {
       slices(0).unionByName(slices(1)), seeded = true).collect().toSeq
     assert(live(asOf = 1L) === batchPrefix)
     // replay of a committed batch id must not double-count
-    graft.streaming.LiveRelease.step(slices(0), 0L, cfg)
+    graft.streaming.LiveRelease.days.step(slices(0), 0L, cfg.root)
     assert(live() === frontier, "replayed batch id is a no-op")
     // compaction folds the partials; the release cannot tell
-    graft.streaming.LiveRelease.compact(spark, cfg)
+    graft.streaming.LiveRelease.days.compact(spark, cfg.root)
     assert(live() === frontier, "a fold must be invisible to the release")
     // the ledger meters live releases like batch ones: ε=1 per window,
     // a second release of the same window refused once spent
@@ -1406,7 +1406,7 @@ class StreamingSpec extends AnyFunSuite {
     // a LATER day exists in the store, so every spike batch here
     // carries a 1-event day-close marker after it.
     // quiet days: arming charges epsilon 1; no page
-    graft.streaming.LiveRelease.step(batch(1 -> 1, 2 -> 1), 0L, cfg)
+    graft.streaming.LiveRelease.days.step(batch(1 -> 1, 2 -> 1), 0L, cfg.root)
     assert(mon.check(spark) === None && stub.sent.isEmpty)
     assert(led.spent === BigDecimal(1), "arming the episode is the charge")
     // a re-check of the SAME episode is a re-read: no new charge
@@ -1414,7 +1414,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(led.spent === BigDecimal(1), "checks of an armed episode are free")
     // the spike (day 4's marker closes day 3): page ONCE, with the
     // released alert day in the message
-    graft.streaming.LiveRelease.step(batch(3 -> 2000, 4 -> 1), 1L, cfg)
+    graft.streaming.LiveRelease.days.step(batch(3 -> 2000, 4 -> 1), 1L, cfg.root)
     val alert = mon.check(spark)
     assert(alert.map(_.toLocalDateTime.toLocalDate) === Some(day(3)))
     assert(stub.sent.size === 1 && stub.sent.head.contains("1000"),
@@ -1428,7 +1428,7 @@ class StreamingSpec extends AnyFunSuite {
       "an empty re-arm schedule defers the charge, not just the page")
     // a second spike (day 6 closes day 5): the next check arms the new
     // episode (fresh epsilon) and pages
-    graft.streaming.LiveRelease.step(batch(5 -> 2000, 6 -> 1), 2L, cfg)
+    graft.streaming.LiveRelease.days.step(batch(5 -> 2000, 6 -> 1), 2L, cfg.root)
     assert(mon.check(spark).map(_.toLocalDateTime.toLocalDate) === Some(day(5)))
     assert(stub.sent.size === 2 && led.spent === BigDecimal(2),
       "re-arm is a new epsilon-charged stream")
@@ -1439,7 +1439,7 @@ class StreamingSpec extends AnyFunSuite {
     // budget gone: once days become askable again, the third arm is
     // refused BEFORE any frame exists — the monitor latches dark and a
     // later spike pages nothing
-    graft.streaming.LiveRelease.step(batch(7 -> 2000, 8 -> 1), 3L, cfg)
+    graft.streaming.LiveRelease.days.step(batch(7 -> 2000, 8 -> 1), 3L, cfg.root)
     assert(mon.check(spark) === None)
     assert(mon.budgetExhausted, "a refused arm must latch the monitor dark")
     assert(mon.check(spark) === None && stub.sent.size === 2)
@@ -1477,13 +1477,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(mon.check(spark) === None && led.spent === BigDecimal(0))
     // the spike lands on the OPEN frontier day: silence, by design —
     // its question is not yet in the schedule
-    graft.streaming.LiveRelease.step(batch(1 -> 1, 3 -> 2000), 0L, cfg)
+    graft.streaming.LiveRelease.days.step(batch(1 -> 1, 3 -> 2000), 0L, cfg.root)
     assert(mon.check(spark) === None && stub.sent.isEmpty,
       "a mid-day spike must not page while its day is still open")
     assert(led.spent === BigDecimal(1), "the episode is armed and charged once")
     // day 4's first event closes day 3: the SAME episode (no new
     // charge) now asks day 3's question of its final count and pages
-    graft.streaming.LiveRelease.step(batch(4 -> 1), 1L, cfg)
+    graft.streaming.LiveRelease.days.step(batch(4 -> 1), 1L, cfg.root)
     assert(mon.check(spark).map(_.toLocalDateTime.toLocalDate) === Some(day(3)))
     assert(stub.sent.size === 1 && led.spent === BigDecimal(1))
     led.close()
@@ -1495,7 +1495,7 @@ class StreamingSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("graft-svt-eager").toString)
     val mon2 = new graft.streaming.SvtMonitor(Seq(stub2), cfg2,
       threshold = 1000.0, seeded = true, completedDaysOnly = false)
-    graft.streaming.LiveRelease.step(batch(1 -> 1, 3 -> 2000), 0L, cfg2)
+    graft.streaming.LiveRelease.days.step(batch(1 -> 1, 3 -> 2000), 0L, cfg2.root)
     assert(mon2.check(spark).map(_.toLocalDateTime.toLocalDate) === Some(day(3)))
     assert(stub2.sent.size === 1)
   }
@@ -1526,7 +1526,7 @@ class StreamingSpec extends AnyFunSuite {
       threshold = 1000.0, ledger = Some(led), seeded = true)
     // instance A arms episode 0 on a quiet store (one charge)
     val sA = new Stub
-    graft.streaming.LiveRelease.step(batch(1 -> 1, 2 -> 1), 0L, cfg)
+    graft.streaming.LiveRelease.days.step(batch(1 -> 1, 2 -> 1), 0L, cfg.root)
     assert(mon(sA).check(spark) === None && led.spent === BigDecimal(1))
     // restart while ARMED: instance B resumes the same episode — same
     // salt, no second charge, and the spike pages through B normally
@@ -1535,7 +1535,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(b.episode === 1, "the restarted monitor resumes the armed episode")
     assert(b.check(spark) === None && led.spent === BigDecimal(1),
       "a restart must not re-charge an episode that was already paid for")
-    graft.streaming.LiveRelease.step(batch(3 -> 2000, 4 -> 1), 1L, cfg)
+    graft.streaming.LiveRelease.days.step(batch(3 -> 2000, 4 -> 1), 1L, cfg.root)
     assert(b.check(spark).map(_.toLocalDateTime.toLocalDate) === Some(day(3)))
     assert(sB.sent.size === 1 && led.spent === BigDecimal(1))
     // restart AFTER the alert: instance C must not re-page day 3 — its
@@ -1546,7 +1546,7 @@ class StreamingSpec extends AnyFunSuite {
       "an old spike must never re-page after a restart")
     assert(led.spent === BigDecimal(1),
       "the re-arm defers its charge while the post-alert schedule is empty")
-    graft.streaming.LiveRelease.step(batch(5 -> 2000, 6 -> 1), 2L, cfg)
+    graft.streaming.LiveRelease.days.step(batch(5 -> 2000, 6 -> 1), 2L, cfg.root)
     assert(c.check(spark).map(_.toLocalDateTime.toLocalDate) === Some(day(5)))
     assert(led.spent === BigDecimal(2), "the re-arm is the normal fresh charge")
     assert(sC.sent.size === 1)
@@ -1576,8 +1576,8 @@ class StreamingSpec extends AnyFunSuite {
     }
     val slices = (0 until 3).map(i => evAll.filter(col("event_id") % 3 === i))
     slices.zipWithIndex.foreach { case (s, i) =>
-      graft.streaming.LiveRelease.stepCells(s, i.toLong, cfg)
-      graft.streaming.LiveRelease.stepUserCells(s, i.toLong, cfg)
+      graft.streaming.LiveRelease.cells.step(s, i.toLong, cfg.root)
+      graft.streaming.LiveRelease.userCells.step(s, i.toLong, cfg.root)
     }
     def liveHist() = graft.streaming.LiveRelease
       .stableHistogram(spark, cfg, seeded = true).collect().toSeq
@@ -1606,12 +1606,12 @@ class StreamingSpec extends AnyFunSuite {
         .dpUserCountRelease(evAll, seeded = true).collect().toSeq,
       "the live x49 must be bit-identical to batch")
     // replay idempotence + fold invisibility, both stores
-    graft.streaming.LiveRelease.stepCells(slices(0), 0L, cfg)
-    graft.streaming.LiveRelease.stepUserCells(slices(0), 0L, cfg)
+    graft.streaming.LiveRelease.cells.step(slices(0), 0L, cfg.root)
+    graft.streaming.LiveRelease.userCells.step(slices(0), 0L, cfg.root)
     assert(liveHist() === batchHist && liveUser() === batchUser,
       "replayed batch ids are no-ops")
-    graft.streaming.LiveRelease.compactCells(spark, cfg)
-    graft.streaming.LiveRelease.compactUserCells(spark, cfg)
+    graft.streaming.LiveRelease.cells.compact(spark, cfg.root)
+    graft.streaming.LiveRelease.userCells.compact(spark, cfg.root)
     assert(liveHist() === batchHist && liveUser() === batchUser,
       "a fold must be invisible to the releases")
     // the (ε, δ) pair, metered live: δ budget 2e-6 admits exactly two
@@ -1648,9 +1648,9 @@ class StreamingSpec extends AnyFunSuite {
     val evAll = graft.Tables.events(spark, d)
     val slices = (0 until 3).map(i => evAll.filter(col("event_id") % 3 === i))
     slices.zipWithIndex.foreach { case (s, i) =>
-      graft.streaming.LiveRelease.stepSubsampled(s, i.toLong, cfg)
-      graft.streaming.LiveRelease.stepSubsampledGaussian(s, i.toLong, cfg)
-      graft.streaming.LiveRelease.stepCells(s, i.toLong, cfg) // vocabulary source
+      graft.streaming.LiveRelease.subsampled().step(s, i.toLong, cfg.root)
+      graft.streaming.LiveRelease.subsampledGauss().step(s, i.toLong, cfg.root)
+      graft.streaming.LiveRelease.cells.step(s, i.toLong, cfg.root) // vocabulary source
     }
     def liveCount() = graft.streaming.LiveRelease
       .subsampledCount(spark, cfg, seeded = true).collect().toSeq
@@ -1668,20 +1668,18 @@ class StreamingSpec extends AnyFunSuite {
     // the two stores sample INDEPENDENT domains: the Laplace twin fed
     // from the Gaussian store would be a different kept set — guard the
     // store wiring by checking the kept-cell totals differ
-    val ss = graft.streaming.LiveCounts.totals(spark,
-      graft.streaming.LiveCounts.Config(s"$root/subcells"), Long.MaxValue)
+    val ss = graft.streaming.LiveRelease.subsampled().totals(spark, root)
       .agg(org.apache.spark.sql.functions.sum("n")).head().getLong(0)
-    val sg = graft.streaming.LiveCounts.totals(spark,
-      graft.streaming.LiveCounts.Config(s"$root/subgcells"), Long.MaxValue)
+    val sg = graft.streaming.LiveRelease.subsampledGauss().totals(spark, root)
       .agg(org.apache.spark.sql.functions.sum("n")).head().getLong(0)
     assert(ss !== sg, s"independent 'dpss|'/'dpsg|' samples should differ ($ss vs $sg)")
     // replay idempotence + fold invisibility
-    graft.streaming.LiveRelease.stepSubsampled(slices(0), 0L, cfg)
-    graft.streaming.LiveRelease.stepSubsampledGaussian(slices(0), 0L, cfg)
+    graft.streaming.LiveRelease.subsampled().step(slices(0), 0L, cfg.root)
+    graft.streaming.LiveRelease.subsampledGauss().step(slices(0), 0L, cfg.root)
     assert(liveCount() === batchCount && liveGauss() === batchGauss,
       "replayed batch ids are no-ops")
-    graft.streaming.LiveRelease.compactSubsampled(spark, cfg)
-    graft.streaming.LiveRelease.compactSubsampledGaussian(spark, cfg)
+    graft.streaming.LiveRelease.subsampled().compact(spark, cfg.root)
+    graft.streaming.LiveRelease.subsampledGauss().compact(spark, cfg.root)
     assert(liveCount() === batchCount && liveGauss() === batchGauss,
       "a fold must be invisible to the releases")
     // a deployment that does NOT run the full-cell intake passes a
@@ -1723,8 +1721,8 @@ class StreamingSpec extends AnyFunSuite {
     val evAll = graft.Tables.events(spark, d)
     val slices = (0 until 3).map(i => evAll.filter(col("event_id") % 3 === i))
     slices.zipWithIndex.foreach { case (s, i) =>
-      graft.streaming.LiveRelease.stepCells(s, i.toLong, cfg)
-      graft.streaming.LiveRelease.stepValueBins(s, i.toLong, cfg)
+      graft.streaming.LiveRelease.cells.step(s, i.toLong, cfg.root)
+      graft.streaming.LiveRelease.valueBins.step(s, i.toLong, cfg.root)
     }
     def liveArgmax() = graft.streaming.LiveRelease
       .argmaxRelease(spark, cfg, seeded = true).collect().toSeq
@@ -1743,10 +1741,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(liveMedian() === batchMedian, "median twin diverged")
     assert(liveQuant() === batchQuant, "quantile twin diverged")
     // replay idempotence + fold invisibility on the new store
-    graft.streaming.LiveRelease.stepValueBins(slices(0), 0L, cfg)
+    graft.streaming.LiveRelease.valueBins.step(slices(0), 0L, cfg.root)
     assert(liveMedian() === batchMedian && liveQuant() === batchQuant,
       "replayed batch ids are no-ops")
-    graft.streaming.LiveRelease.compactValueBins(spark, cfg)
+    graft.streaming.LiveRelease.valueBins.compact(spark, cfg.root)
     assert(liveMedian() === batchMedian && liveQuant() === batchQuant,
       "a fold must be invisible to the releases")
     // live charges mirror batch: each selection frame costs one epsilon
@@ -1779,7 +1777,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSeq.sorted
     val slices = (0 until 3).map(i => evAll.filter(col("event_id") % 3 === i))
     slices.zipWithIndex.foreach { case (s, i) =>
-      graft.streaming.LiveRelease.stepLocal(s, i.toLong, cfg, domain)
+      graft.streaming.LiveRelease.local(domain).step(s, i.toLong, cfg.root)
     }
     def live() = graft.streaming.LiveRelease
       .localFrequency(spark, cfg, domain).collect().toSeq
@@ -1790,9 +1788,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(live() === batch,
       "the live estimate must be bit-identical to batch on the same records")
     // replay idempotence + fold invisibility
-    graft.streaming.LiveRelease.stepLocal(slices(0), 0L, cfg, domain)
+    graft.streaming.LiveRelease.local(domain).step(slices(0), 0L, cfg.root)
     assert(live() === batch, "replayed batch ids are no-ops")
-    graft.streaming.LiveRelease.compactLocal(spark, cfg)
+    graft.streaming.LiveRelease.local(domain).compact(spark, cfg.root)
     assert(live() === batch, "a fold must be invisible to the estimate")
     // an estimator run under a different domain than the collector's is
     // the documented unit error — k enters (p, q); guard the API shape
@@ -1801,6 +1799,61 @@ class StreamingSpec extends AnyFunSuite {
       .localFrequency(spark, cfg, domain :+ "phantom").collect()
     assert(wrongK.head.getAs[Double]("q") !== batch.head.getAs[Double]("q"),
       "a larger claimed domain must visibly change the mechanism params")
+  }
+
+  test("count-store families refuse the ingest parameters their releases refuse and commit nothing") {
+    import spark.implicits._
+    // a store ingested under a q outside (0, 1), eps <= 0 or a one-type
+    // domain could never be released: dpSubsampled*FromCells and
+    // localFrequencyFromReports refuse those parameters, so the family
+    // refuses them before anything is written
+    val root = java.nio.file.Files.createTempDirectory("graft-family-bounds").toString
+    val ev = Seq((1L, Timestamp.valueOf("2024-01-01 00:00:00"), 7L, "click", 1.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val lr = graft.streaming.LiveRelease
+    for (q <- Seq(0.0, 1.0, 1.5)) {
+      intercept[IllegalArgumentException](lr.subsampled(q).step(ev, 0L, root))
+      intercept[IllegalArgumentException](lr.subsampledGauss(q).step(ev, 0L, root))
+    }
+    intercept[IllegalArgumentException](lr.local(Seq("click", "view"), eps = 0.0).step(ev, 0L, root))
+    intercept[IllegalArgumentException](lr.local(Seq("click", "click")).step(ev, 0L, root))
+    assert(new java.io.File(root).list().isEmpty, "a refused family must write no store")
+  }
+
+  test("count-store families keep their on-disk layout; a family's start equals its step") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    // a renamed subdirectory would pass every release spec and orphan a
+    // deployed store: pin where each family commits
+    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
+    val rows = (0 until 40).map(i => (i.toLong,
+      Timestamp.valueOf(s"2024-01-0${1 + i % 3} 0${i % 10}:00:00"),
+      100L + i % 5, if (i % 2 == 0) "click" else "view", 8.0 * i))
+    val ev = rows.toDF(cols: _*)
+    val root = java.nio.file.Files.createTempDirectory("graft-family-layout").toString
+    val lr = graft.streaming.LiveRelease
+    val families = Seq("counts" -> lr.days, "cells" -> lr.cells, "ucells" -> lr.userCells,
+      "subcells" -> lr.subsampled(), "subgcells" -> lr.subsampledGauss(),
+      "valuebins" -> lr.valueBins, "lrrcells" -> lr.local(Seq("click", "view")))
+    for ((dir, family) <- families) {
+      family.step(ev, 0L, root)
+      val counts = if (dir == "counts") dir else s"$dir/counts"
+      assert(new java.io.File(s"$root/$counts/batch=0/_SUCCESS").exists, s"store moved from $counts")
+    }
+    assert(new java.io.File(root).list().toSet === families.map(_._1).toSet)
+    val nbRoot = java.nio.file.Files.createTempDirectory("graft-family-nb").toString
+    graft.streaming.LiveNb.counts.step(Seq(NDoc(1L, "a b", true)).toDF(), 0L, nbRoot)
+    assert(new java.io.File(s"$nbRoot/counts/batch=0/_SUCCESS").exists)
+    // the streaming intake commits through the same step: one
+    // MemoryStream batch lands the totals a direct step lands
+    val streamed = java.nio.file.Files.createTempDirectory("graft-family-start").toString
+    val ms = MemoryStream[(Long, Timestamp, Long, String, Double)]
+    val q = lr.userCells.start(ms.toDS().toDF(cols: _*), streamed)
+    try { ms.addData(rows: _*); q.processAllAvailable() } finally q.stop()
+    assert(new java.io.File(s"$streamed/ucells/_checkpoint").isDirectory)
+    def totals(r: String) = lr.userCells.totals(spark, r).collect()
+      .map(t => t.getString(0) -> t.getLong(1)).toMap
+    assert(totals(streamed).nonEmpty && totals(streamed) === totals(root))
   }
 
   test("live NB: streamed class-count partials rebuild the batch x24 classifier bit-for-bit") {
@@ -1814,7 +1867,7 @@ class StreamingSpec extends AnyFunSuite {
       .sortBy(_.doc_id)
     val batches = all.grouped((all.length + 2) / 3).toSeq
     batches.zipWithIndex.foreach { case (b, i) =>
-      graft.streaming.LiveNb.step(b.toSeq.toDF(), i.toLong, cfg)
+      graft.streaming.LiveNb.counts.step(b.toSeq.toDF(), i.toLong, root)
     }
     def scored(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double, Boolean)] =
       df.collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_tokens"),
@@ -1826,10 +1879,10 @@ class StreamingSpec extends AnyFunSuite {
     // pass: counts are exact integers, the derivation is shared code
     assert(scored(graft.streaming.LiveNb.score(spark, cfg, docs)) === expected)
     // a replayed committed batch id must not double-count
-    graft.streaming.LiveNb.step(batches.head.toSeq.toDF(), 0L, cfg)
+    graft.streaming.LiveNb.counts.step(batches.head.toSeq.toDF(), 0L, root)
     assert(scored(graft.streaming.LiveNb.score(spark, cfg, docs)) === expected)
     // compaction is the merge; the model survives it unchanged
-    graft.streaming.LiveNb.compact(spark, cfg)
+    graft.streaming.LiveNb.counts.compact(spark, root)
     assert(scored(graft.streaming.LiveNb.score(spark, cfg, docs)) === expected)
   }
 

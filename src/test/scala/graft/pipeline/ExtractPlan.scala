@@ -148,7 +148,8 @@ object ExtractPlan {
       spark.read.format("binaryFile").load(paths: _*).select(col("content"))
         .as(Encoders.BINARY).flatMap(b => decode(Archive.gunzip(b)))
     operations(
-      Archive.transactions(spark, txPaths, passphrase),
+      decoded(txPaths, Stellar.decodeTxEntries(_, passphrase))(
+        Encoders.product[TxHistoryEntry]),
       decoded(ledgerPaths, Stellar.decodeLedgerEntries)(Encoders.product[LedgerEntry]),
       decoded(resultPaths, Stellar.decodeResultEntries)(Encoders.product[TxResultEntry]),
       cfg)
