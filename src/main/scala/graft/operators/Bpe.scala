@@ -66,9 +66,8 @@ object Bpe {
       .agg(sum(col("wc")).as("pair_count"))
 
   /** One non-overlapping left-to-right merge pass of (l, r) → l+r over
-    * a space-joined symbol sequence — the shared fold at the heart of
-    * both training (vocab rewrite per round) and live encoding
-    * (StreamDemos.bpeTokenCounts): merge when the accumulator's
+    * a space-joined symbol sequence — the fold at the heart of
+    * training (vocab rewrite per round): merge when the accumulator's
     * TRAILING SYMBOL is exactly `l` (the preceding-space check makes
     * "x aa" not match l = "a") and the next symbol is `r`; the merged
     * symbol never re-merges with a following `r` in the same pass.
@@ -122,16 +121,6 @@ object Bpe {
       }
     }
     (vocab, learned.result(), seed)
-  }
-
-  /** The learned rules alone, in merge order — the model a live encoder
-    * ships (3 rules, not the vocabulary): see
-    * StreamDemos.bpeTokenCounts.
-    */
-  def learnedMerges(docs: DataFrame, rounds: Int = Rounds): Seq[(String, String)] = {
-    val (_, learned, seed) = train(docs, rounds)
-    seed.unpersist(false)
-    learned.map(t => (t._2, t._3))
   }
 
   /** The learned merge table: `rounds` rows of

@@ -71,9 +71,8 @@ object Curation {
   }
 
   /** The x16 admission verdict as a standalone boolean Column over
-    * `text` — a pure per-row expression, so it drops into streaming
-    * plans (see `StreamDemos.admissionCounts`) or any projection
-    * without the full measures output.
+    * `text` — a pure per-row expression, so it drops into any
+    * projection without the full measures output.
     */
   def qualityVerdict(r: QualityRules = QualityRules()): Column = {
     val (n, meanLen, stopFrac, distinctFrac) = ruleMeasures

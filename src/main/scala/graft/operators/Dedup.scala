@@ -791,9 +791,8 @@ object Dedup {
 
   /** The d12 hot list on its own: md5 hashes (`gh`) of segments appearing
     * in ≥ `minDf` distinct documents. Built at ingest/index cadence;
-    * boilerplate-sized, so it collects/broadcasts — the model a
-    * STREAMING scrub applies map-side (StreamDemos.scrubBoilerplate),
-    * since a stream cannot see corpus-wide df.
+    * boilerplate-sized, so it collects/broadcasts into
+    * [[segmentDedup]]'s scrub.
     */
   def hotSegments(docs: DataFrame, segWords: Int = 4, minDf: Long = 2L): DataFrame = {
     // minDf >= 2 guards the public model-builder itself, not just

@@ -27,9 +27,8 @@ object EventAnalytics {
     * history) yields NO flag — the z-score is undefined there, and
     * this operator reports z-scores, not generic change-points. A
     * spike after a flat history needs a different detector (or an
-    * epsilon floor on the variance); the streaming spelling
-    * ([[graft.streaming.StreamDemos.anomalyZscores]]) and the DuckDB
-    * oracle share this exact filter, so all three engines agree.
+    * epsilon floor on the variance); the DuckDB oracle shares this
+    * exact filter, so both engines agree.
     */
   def anomalyZscores(events: DataFrame, keyCol: String, valueCol: String,
       orderBy: Seq[Column], frame: Int = 8, minHistory: Int = 4,

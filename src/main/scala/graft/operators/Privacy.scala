@@ -655,33 +655,8 @@ object Privacy {
     ledger.foreach(_.charge(releaseId, "laplace_count", BigDecimal(1)))
     val salt = releaseSalt(seeded)
     val grp = windowedGroup(events).agg(count(lit(1)).as("true_n"))
-    countCore(events, grp, salt, vocabulary)
-  }
-
-  /** [[dpCountRelease]] from pre-aggregated `(event_type, day, true_n)`
-    * cells — the streaming-twin entry ([[graft.streaming.LiveRelease
-    * .countRelease]], one more consumer of the x54 cell store): cell
-    * counts are additive, the grid/noise/clamp tail deterministic
-    * given them ⇒ live == batch. `vocabSource` per [[denseCellsFrom]].
-    */
-  def dpCountFromCells(cells: DataFrame, vocabSource: DataFrame,
-      seeded: Boolean = false, ledger: Option[DpLedger] = None,
-      releaseId: String = "count",
-      vocabulary: Option[Seq[String]] = None): DataFrame = {
-    ledger.foreach(_.charge(releaseId, "laplace_count", BigDecimal(1)))
-    val salt = releaseSalt(seeded)
-    countCore(vocabSource, cells.filter(inPublicWindow(col("day"))),
-      salt, vocabulary)
-  }
-
-  /** x40's dense-grid Laplace(1/ε) tail, shared by the batch and
-    * FromCells entries so the two spellings cannot drift.
-    */
-  private def countCore(vocabSource: DataFrame, grp: DataFrame,
-      salt: String, vocabulary: Option[Seq[String]]): DataFrame = {
     val b = 1.0 // Laplace scale = sensitivity / epsilon = 1 / 1
-    val counts = denseCellsFrom(vocabSource, grp,
-      Seq("true_n" -> lit(0L)), vocabulary)
+    val counts = denseCells(events, grp, "true_n", vocabulary)
     // only the clamped integer ships: releasing noise or noisy_n beside
     // it would reconstruct true_n exactly and void the mechanism
     counts.withColumn("noisy_n",
@@ -878,44 +853,17 @@ object Privacy {
       threshold: Double = 100.0, seeded: Boolean = false,
       ledger: Option[DpLedger] = None, releaseId: String = "svt"): DataFrame = {
     ledger.foreach(_.charge(releaseId, "above_threshold_svt", BigDecimal(1)))
-    aboveThresholdSalted(dailyCounts, threshold, releaseSalt(seeded), None)
+    aboveThresholdSalted(dailyCounts, threshold, releaseSalt(seeded))
   }
 
-  /** The salted/scoped AboveThreshold core — the episode engine behind
-    * both the public entry above and [[graft.streaming.SvtMonitor]]'s
-    * re-armed episodes. `salt` is the episode's noise domain (a fixed
-    * per-episode salt makes every re-read of the SAME episode derive
-    * the same draws — the monitor's checks are re-reads, not new
-    * releases, so they charge nothing); `resumeAfter` scopes the
-    * question schedule to days strictly after a previously RELEASED
-    * alert day (a public value, so the scoping is post-processing —
-    * the x48 stitching argument). Charging is the CALLER's job: the
-    * public entry charges per stream, the monitor charges per episode
-    * at arm time.
-    *
-    * `completedDaysOnly` (the monitor's day-close discipline, r18
-    * verdict #3 — default OFF here; the monitor defaults it ON)
-    * excludes the newest day PRESENT in `dailyCounts` from the
-    * question schedule: that day's count may still be growing, and
-    * asking its question mid-day then re-asking at close answers two
-    * different queries under one noise draw. The frontier day is part
-    * of the store (the same trust domain as the counts), and scoping
-    * the schedule by it releases nothing — the verdicts that DO ship
-    * still ride the public calendar grid. Cost: one extra max over the
-    * day-sized dailies (broadcast 1-row). PRECONDITION the caller owns:
-    * "newest day present" marks earlier days final only under
-    * day-MONOTONE ingest (this repo's archive tail is ledger-ordered,
-    * so the intake provides it); under event-time disorder a late
-    * arrival for a "closed" day re-opens the documented
-    * two-queries-one-draw slack for that day — a deployment with
-    * disorder should gate its checks on its own watermark instead
-    * (scope the store, not this flag).
+  /** The salted AboveThreshold core behind the public entry above:
+    * `salt` is the noise domain, so distinct salts draw independent
+    * noise and the same salt re-derives the same verdicts. Charging is
+    * the caller's job.
     */
   private[graft] def aboveThresholdSalted(dailyCounts: DataFrame,
-      threshold: Double, salt: String,
-      resumeAfter: Option[java.sql.Timestamp],
-      completedDaysOnly: Boolean = false): DataFrame = {
-    val grid = questionSchedule(dailyCounts, resumeAfter, completedDaysOnly)
+      threshold: Double, salt: String): DataFrame = {
+    val grid = publicDayGrid(dailyCounts.sparkSession)
     val cells = grid.join(dailyCounts, Seq("day"), "left")
       .select(col("day"), coalesce(col("cnt"), lit(0L)).as("cnt"))
     // T̂ drawn ONCE (day-independent seed tag); per-day noise at scale 4
@@ -935,44 +883,6 @@ object Privacy {
       .orderBy("day")
   }
 
-  /** The episode's question schedule — grid days strictly after the
-    * resume boundary, and (under the day-close discipline) strictly
-    * before the newest day present in the store. ONE spelling, shared
-    * by [[aboveThresholdSalted]] and the monitor's arm-time emptiness
-    * probe so the two can never disagree about what is askable.
-    */
-  private def questionSchedule(dailyCounts: DataFrame,
-      resumeAfter: Option[java.sql.Timestamp],
-      completedDaysOnly: Boolean): DataFrame = {
-    val grid0 = publicDayGrid(dailyCounts.sparkSession)
-    val grid1 = resumeAfter.fold(grid0)(ts => grid0.filter(col("day") > lit(ts)))
-    if (!completedDaysOnly) grid1
-    else {
-      // an empty store has no closed days: max(day) is null, the
-      // comparison is null, and the schedule is empty — correct
-      val frontier = dailyCounts.agg(max(col("day")).as("_open_day"))
-      grid1.crossJoin(broadcast(frontier))
-        .filter(col("day") < col("_open_day")).drop("_open_day")
-    }
-  }
-
-  /** True iff an episode armed now would have at least one question to
-    * ask — the monitor's CHARGE GUARD: arming charges real ε, and an
-    * episode whose schedule is currently empty would spend it on
-    * silence (an alert on the grid's last askable day, or a resume
-    * boundary at the day-close frontier). The schedule is structural
-    * (public grid × resume boundary × store frontier), so probing its
-    * emptiness draws no noise and releases nothing. Subsumes the old
-    * static window-end guard: past the grid's last day no schedule can
-    * ever be non-empty — and because the boundary is evaluated through
-    * the grid's own Spark spelling, the session-vs-JVM timezone skew
-    * the static Timestamp guard carried (r18 advice) cannot recur.
-    */
-  private[graft] def hasAskableQuestion(dailyCounts: DataFrame,
-      resumeAfter: Option[java.sql.Timestamp],
-      completedDaysOnly: Boolean): Boolean =
-    !questionSchedule(dailyCounts, resumeAfter, completedDaysOnly).isEmpty
-
   /** x53: the NUMERIC SPARSE extension of x51 — SVT with up to `c`
     * alerts for one total ε (Dwork–Roth Alg. 2, "Sparse"): run
     * AboveThreshold with ε′ = ε/c, and after each ⊤ RESTART it — a
@@ -980,8 +890,8 @@ object Privacy {
     * Lap(4c/ε) — halting for good after the c-th ⊤ or the window end.
     * x51 answers "has the volume crossed yet" ONCE per budget; a
     * monitoring pipeline that must keep paging after the first episode
-    * either re-charges per alert (the [[graft.streaming.SvtMonitor]]
-    * re-arm spelling — c unknown in advance, pay as you go) or fixes c
+    * either re-charges per alert (a fresh x51 release per episode —
+    * c unknown in advance, pay as you go) or fixes c
     * up front and pays ε once for all c alerts (this spelling —
     * sequential composition over c AboveThreshold runs at ε/c each,
     * Dwork–Roth Thm. 3.25). Which wins is a deployment choice: for
@@ -1768,47 +1678,13 @@ object Privacy {
     val salt = releaseSalt(seeded)
     val userCells =
       windowedDays(events).select("user_id", "event_type", "day").distinct()
-    userCountCore(events, userCells, capCells, salt, vocabulary)
-  }
-
-  /** [[dpUserCountRelease]] from the pre-aggregated distinct
-    * `(user_id, event_type, day)` user-cell set — the streaming-twin
-    * entry ([[graft.streaming.LiveRelease.userCountRelease]], one more
-    * consumer of the x55 user-cell store): only key PRESENCE feeds the
-    * mechanism, and the distinct set is idempotent-union additive
-    * across batches (the x55 twin argument verbatim), so live equals
-    * batch. The window filter is applied here like every FromCells
-    * entry; `user_id` may arrive as any type — the cap orders by
-    * (day, event_type), so a string-typed id from the store releases
-    * identically to the typed batch column.
-    */
-  def dpUserCountFromUserCells(userCells: DataFrame, vocabSource: DataFrame,
-      seeded: Boolean = false, capCells: Int = 4,
-      ledger: Option[DpLedger] = None, releaseId: String = "user_count",
-      vocabulary: Option[Seq[String]] = None): DataFrame = {
-    require(capCells >= 1, s"capCells must be >= 1, got $capCells")
-    ledger.foreach(_.charge(releaseId, "laplace_user_count", BigDecimal(1)))
-    val salt = releaseSalt(seeded)
-    userCountCore(vocabSource,
-      userCells.filter(inPublicWindow(col("day")))
-        .select("user_id", "event_type", "day").distinct(),
-      capCells, salt, vocabulary)
-  }
-
-  /** x49's cap/count/grid/noise tail, shared by the batch and
-    * FromUserCells entries so the two spellings cannot drift.
-    */
-  private def userCountCore(vocabSource: DataFrame, userCells: DataFrame,
-      capCells: Int, salt: String,
-      vocabulary: Option[Seq[String]]): DataFrame = {
     val b = capCells / 1.0 // Laplace scale = user-level sensitivity / epsilon
     val w = Window.partitionBy("user_id").orderBy("day", "event_type")
     val kept = userCells.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= capCells)
     val grp = kept.groupBy("event_type", "day")
       .agg(count(lit(1)).as("true_users"))
-    val counts = denseCellsFrom(vocabSource, grp,
-      Seq("true_users" -> lit(0L)), vocabulary)
+    val counts = denseCells(events, grp, "true_users", vocabulary)
     counts.withColumn("noisy",
         col("true_users").cast("double") + laplace(b, seededUnif("dpu|", salt)))
       .select(col("event_type"), col("day"),
@@ -1934,34 +1810,7 @@ object Privacy {
     ledger.foreach(_.charge(releaseId, "exp_argmax", BigDecimal(1)))
     val salt = releaseSalt(seeded)
     val grp = windowedGroup(events).agg(count(lit(1)).as("true_n"))
-    argmaxCore(events, grp, salt, vocabulary)
-  }
-
-  /** [[dpArgmaxRelease]] from pre-aggregated `(event_type, day, true_n)`
-    * cells — the streaming-twin entry ([[graft.streaming.LiveRelease
-    * .argmaxRelease]], riding the SAME cell store as the x54 twin):
-    * cell counts are additive and the Gumbel selection is
-    * deterministic given the cells, so live equals batch on the same
-    * records. `vocabSource` carries the full-corpus types like the
-    * subsampled twins' ([[denseCellsFrom]]).
-    */
-  def dpArgmaxFromCells(cells: DataFrame, vocabSource: DataFrame,
-      seeded: Boolean = false, ledger: Option[DpLedger] = None,
-      releaseId: String = "argmax",
-      vocabulary: Option[Seq[String]] = None): DataFrame = {
-    ledger.foreach(_.charge(releaseId, "exp_argmax", BigDecimal(1)))
-    val salt = releaseSalt(seeded)
-    argmaxCore(vocabSource, cells.filter(inPublicWindow(col("day"))),
-      salt, vocabulary)
-  }
-
-  /** x43's dense-grid Gumbel selection, shared by the batch and
-    * FromCells entries so the two spellings cannot drift.
-    */
-  private def argmaxCore(vocabSource: DataFrame, grp: DataFrame,
-      salt: String, vocabulary: Option[Seq[String]]): DataFrame = {
-    val counts = denseCellsFrom(vocabSource, grp,
-      Seq("true_n" -> lit(0L)), vocabulary)
+    val counts = denseCells(events, grp, "true_n", vocabulary)
       .select(col("day"), col("event_type"), col("true_n"))
     val scored = counts.withColumn("score",
       col("true_n").cast("double") / lit(2.0) + gumbel(seededUnif("dpx|", salt)))
@@ -2016,31 +1865,7 @@ object Privacy {
       s"quantiles must lie strictly in (0, 1), got $quantiles")
     ledger.foreach(_.charge(releaseId, "exp_quantiles", BigDecimal(1)))
     val salt = releaseSalt(seeded)
-    quantileCore(binnedValues(events), salt, qs)
-  }
-
-  /** [[dpQuantileRelease]] from pre-aggregated `(event_type, bin, c)`
-    * value-bin counts — the streaming-twin entry
-    * ([[graft.streaming.LiveRelease.quantileRelease]]);
-    * [[dpMedianFromBinned]]'s twin argument and null-`value`
-    * precondition verbatim.
-    */
-  def dpQuantilesFromBinned(binned: DataFrame, seeded: Boolean = false,
-      ledger: Option[DpLedger] = None, releaseId: String = "quantiles",
-      quantiles: Seq[Double] = Seq(0.25, 0.5, 0.75, 0.9)): DataFrame = {
-    val qs = quantiles.distinct.sorted
-    require(qs.nonEmpty && qs.forall(q => q > 0 && q < 1),
-      s"quantiles must lie strictly in (0, 1), got $quantiles")
-    ledger.foreach(_.charge(releaseId, "exp_quantiles", BigDecimal(1)))
-    val salt = releaseSalt(seeded)
-    quantileCore(binned, salt, qs)
-  }
-
-  /** x64's score/selection/monotonize tail, shared by the batch and
-    * FromBinned entries so the two spellings cannot drift.
-    */
-  private def quantileCore(binned: DataFrame, salt: String,
-      qs: Seq[Double]): DataFrame = {
+    val binned = binnedValues(events)
     val bins = 64
     val hi = 512.0
     val w = hi / bins // 8.0, exact in binary
@@ -2110,44 +1935,7 @@ object Privacy {
     // composition, ε=1 for the frame, charged once
     ledger.foreach(_.charge(releaseId, "exp_median", BigDecimal(1)))
     val salt = releaseSalt(seeded)
-    medianCore(binnedValues(events), salt)
-  }
-
-  /** [[dpMedianRelease]] from pre-aggregated `(event_type, bin, c)`
-    * value-bin counts — the streaming-twin entry
-    * ([[graft.streaming.LiveRelease.medianRelease]]): the bin
-    * assignment is per-record ([[valueBin]], ONE spelling shared with
-    * the ingest transform), bin counts are additive, and the
-    * candidate/score/selection tail is deterministic given them —
-    * live equals batch on the same records. Precondition: non-null
-    * `value` (a null bins to null and silently leaves the frame in
-    * BOTH spellings — the x55 null-id contract).
-    */
-  def dpMedianFromBinned(binned: DataFrame, seeded: Boolean = false,
-      ledger: Option[DpLedger] = None,
-      releaseId: String = "median"): DataFrame = {
-    ledger.foreach(_.charge(releaseId, "exp_median", BigDecimal(1)))
-    val salt = releaseSalt(seeded)
-    medianCore(binned, salt)
-  }
-
-  /** The public [0, 512]/64 value-bin assignment (x44/x64 and their
-    * streaming twins — one spelling, so batch and ingest cannot bin
-    * differently).
-    */
-  private[graft] def valueBin: Column =
-    least(lit(63),
-      floor(least(greatest(col("value"), lit(0.0)), lit(512.0)) / lit(8.0))
-        .cast("int"))
-
-  private def binnedValues(events: DataFrame): DataFrame =
-    events.select(col("event_type"), valueBin.as("bin"))
-      .groupBy("event_type", "bin").agg(count(lit(1)).as("c"))
-
-  /** x44's candidate/score/selection tail, shared by the batch and
-    * FromBinned entries so the two spellings cannot drift.
-    */
-  private def medianCore(binned: DataFrame, salt: String): DataFrame = {
+    val binned = binnedValues(events)
     val bins = 64
     val hi = 512.0
     val w = hi / bins // 8.0, exact in binary
@@ -2176,6 +1964,16 @@ object Privacy {
         lit(1.0).as("epsilon"), lit(0.0).as("lo"), lit(hi).as("hi"))
       .orderBy("event_type")
   }
+
+  /** `(event_type, bin, c)` counts over the public [0, 512]/64 value
+    * bins x44 and x64 select from — one spelling, so the two releases
+    * cannot bin differently.
+    */
+  private def binnedValues(events: DataFrame): DataFrame =
+    events.select(col("event_type"), least(lit(63),
+        floor(least(greatest(col("value"), lit(0.0)), lit(512.0)) / lit(8.0))
+          .cast("int")).as("bin"))
+      .groupBy("event_type", "bin").agg(count(lit(1)).as("c"))
 
   /** x47's binary-tree-mechanism CONTINUAL count release (Chan–Shi–Song
     * 2011 / Dwork–Naor–Pitassi–Rothblum 2010): release the RUNNING

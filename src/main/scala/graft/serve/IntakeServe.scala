@@ -253,11 +253,10 @@ final class IntakeServe(spark: SparkSession, cfg: LivePipeline.Config,
     // request = one AboveThreshold STREAM = one ε charged through the
     // same ledger/429 contract as /release (64 questions for that one
     // ε — the reason a monitoring endpoint wants SVT and not 64 count
-    // releases). The push-based sibling with episode semantics and
-    // re-arm accounting is [[graft.streaming.SvtMonitor]]; this is the
-    // pull spelling for dashboards and probes. The threshold is SERVER
-    // config (public, like the calendar epoch) — client-supplied
-    // thresholds would turn budget charges into a free parameter sweep.
+    // releases). This is the pull spelling for dashboards and probes.
+    // The threshold is SERVER config (public, like the calendar epoch) —
+    // client-supplied thresholds would turn budget charges into a free
+    // parameter sweep.
     server.createContext("/alert", (ex: HttpExchange) => Facade.handle(ex) { p =>
       val asOf = p.get("as_of").map(_.toLong).getOrElse(Long.MaxValue)
       Facade.arrayJson(graft.streaming.LiveRelease.aboveThreshold(spark, rcfg,

@@ -109,21 +109,3 @@ final class ValidatingAlerts(transports: Seq[AlertTransport]) extends IngestAler
     AlertTransport.fanOut(transports,
       f"Reached retry limit. Quitting. (ledger $seq%08x after $attempts attempts)")
 }
-
-/** Per-commit ingest observability, the hook form of the reference's
-  * post-save logging ("Successfully stored the data of file: X",
-  * python/adapters/hc_storage_adapter.py:47-58 — which also knows how
-  * many payments/creations it just stored). Bound to Noop by default,
-  * which observes nothing. Otherwise the counts are observed on the
-  * job the sink's save runs, so they cost no extra pass; a save that runs no job (a JDBC sink skipping an
-  * already-committed checkpoint) reports 0 and 0.
-  */
-trait IngestMetrics {
-  /** A checkpoint committed: `seq` plus its payment/creation row counts. */
-  def onCommit(seq: Long, nPayments: Long, nCreations: Long): Unit = ()
-}
-
-object IngestMetrics {
-  /** Default: no metrics bound. */
-  object Noop extends IngestMetrics
-}

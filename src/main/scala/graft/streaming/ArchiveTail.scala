@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count_if}
+import org.apache.spark.sql.SparkSession
 import graft.Engine
 import graft.pipeline.ExtractConfig
 import graft.sinks.CheckpointSink
@@ -37,8 +36,7 @@ final class ArchiveTail(
     maxRetries: Int = 5,
     pollMillis: Long = 180000L,
     sleeper: Long => Unit = Thread.sleep,
-    alerts: IngestAlerts = IngestAlerts.Noop,
-    metrics: IngestMetrics = IngestMetrics.Noop) {
+    alerts: IngestAlerts = IngestAlerts.Noop) {
 
   // a non-checkpoint start would poll for files that never exist
   require(Archive.isCheckpoint(firstSeq), s"firstSeq $firstSeq must satisfy (seq+1)%64==0")
@@ -91,22 +89,7 @@ final class ArchiveTail(
     */
   def commit(seq: Long): Unit = {
     val ops = Engine.extract(spark, Seq(Archive.triple(root, seq)), hadoopConf, passphrase, cfg)
-    // without a metrics hook the counts have no reader, and observing
-    // them cost about 10 ms a save (4-core VM)
-    if (metrics eq IngestMetrics.Noop) sink.save(ops, seq)
-    else {
-      // per-commit counts (hc_storage_adapter.py:47-58 logging parity),
-      // observed on the job the sink's save runs. A sink that runs no
-      // job (a JDBC sink skipping a committed seq) leaves them unset, so
-      // they are read without waiting and report 0.
-      val counts = Observation()
-      sink.save(ops.observe(counts,
-        count_if(col("type") === "payment").as("payments"),
-        count_if(col("type") === "creation").as("creations")), seq)
-      val (payments, creations) = counts.future.value.flatMap(_.toOption)
-        .filter(_.length == 2).map(r => (r.getLong(0), r.getLong(1))).getOrElse((0L, 0L))
-      metrics.onCommit(seq, payments, creations)
-    }
+    sink.save(ops, seq)
     firstSeqSeeded = false // the pointer now reflects a real commit
   }
 

@@ -14,10 +14,10 @@ import graft.operators.{Dedup, TextAnalysis}
   * incremental-dedup store as its state (round-11 directive #7 — the
   * north-star path made live end to end).
   *
-  * Unlike the StreamDemos operators, whose state lives in Spark's
-  * watermark-bounded state store, this pipeline's state is the engine's
-  * OWN materialized stores — the same parquet tables the batch operators
-  * serve from — because its state is corpus-lifetime, not
+  * Unlike a stateful Structured Streaming operator, whose state lives
+  * in Spark's watermark-bounded state store, this pipeline's state is
+  * the engine's OWN materialized stores — the same parquet tables the
+  * batch operators serve from — because its state is corpus-lifetime, not
   * horizon-bounded: a duplicate may arrive years after its canonical,
   * so neither a watermark nor an executor-local state store can hold
   * the dedup side. Each micro-batch is one incremental step of the

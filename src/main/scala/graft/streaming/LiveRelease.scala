@@ -25,13 +25,13 @@ import graft.operators.{DpLedger, Privacy}
   * the as-of prefix view).
   *
   * Each store is one [[LiveCounts.Family]] under the config root:
-  * [[days]] at the root itself, [[cells]], [[userCells]] and
-  * [[valueBins]] in their subdirectories, and the three whose
-  * observation depends on ingest parameters built by [[subsampled]],
-  * [[subsampledGauss]] and [[local]]. Ingest drives a family's
-  * `start`/`step`/`compact` with `cfg.root`; each release def reads
-  * its store through the same family, and each key format is decoded
-  * once, next to the transform that encodes it.
+  * [[days]] at the root itself, [[cells]] and [[userCells]] in their
+  * subdirectories, and the three whose observation depends on ingest
+  * parameters built by [[subsampled]], [[subsampledGauss]] and
+  * [[local]]. Ingest drives a family's `start`/`step`/`compact` with
+  * `cfg.root`; each release def reads its store through the same
+  * family, and each key format is decoded once, next to the transform
+  * that encodes it.
   *
   * Privacy accounting is unchanged: ε is charged per WINDOW through
   * the [[DpLedger]] charge-then-release wrapper at RELEASE time, not
@@ -39,16 +39,13 @@ import graft.operators.{DpLedger, Privacy}
   * private infrastructure, never shipped; only [[release]]'s clamped
   * integers leave. Re-releasing the same window with fresh salted
   * noise is a new ε charge the ledger meters (the composed-release
-  * attack spec's cap applies verbatim). Deterministic re-DERIVATION of
-  * an already-charged release (same salt ⇒ bit-identical draws ⇒ the
-  * same release, no new information) is how [[SvtMonitor]] re-checks
-  * its armed episode without re-charging; the HTTP tier deliberately
-  * does NOT offer that path — every /release and /alert request
-  * charges, even under the server's seeded test config where bodies
-  * repeat bit-identically (r17 advice). Over-charging is the safe
-  * direction; an uncharged re-read would need the server to prove the
-  * request byte-equivalent to a prior charged one — caching's job,
-  * not the ledger's.
+  * attack spec's cap applies verbatim). The HTTP tier offers no
+  * uncharged re-read of an already-charged release — every /release
+  * and /alert request charges, even under the server's seeded test
+  * config where bodies repeat bit-identically (r17 advice).
+  * Over-charging is the safe direction; an uncharged re-read would
+  * need the server to prove the request byte-equivalent to a prior
+  * charged one — caching's job, not the ledger's.
   *
   * 100 TB shape: per micro-batch cost is one combinable day-count
   * partial (batch-sized); release-time cost is one re-aggregation over
@@ -95,34 +92,9 @@ object LiveRelease {
     Privacy.dpAboveThresholdFromDaily(dailyCounts(s, cfg, asOf),
       threshold, seeded, ledger, releaseId)
 
-  /** [[graft.operators.Privacy.aboveThresholdSalted]] over the live
-    * store — the episode engine [[SvtMonitor]] re-reads at every
-    * check (fixed per-episode salt ⇒ same draws ⇒ a re-read, not a
-    * new release; the monitor does its own per-episode charging).
-    */
-  private[graft] def aboveThresholdEpisode(s: SparkSession, cfg: Config,
-      threshold: Double, salt: String,
-      resumeAfter: Option[java.sql.Timestamp],
-      asOf: Long = Long.MaxValue,
-      completedDaysOnly: Boolean = false): DataFrame =
-    Privacy.aboveThresholdSalted(dailyCounts(s, cfg, asOf),
-      threshold, salt, resumeAfter, completedDaysOnly)
-
-  /** [[graft.operators.Privacy.hasAskableQuestion]] over the live
-    * store — the monitor's arm-time charge guard (arming charges ε;
-    * an episode with a currently empty question schedule would spend
-    * it on silence).
-    */
-  private[graft] def canArmEpisode(s: SparkSession, cfg: Config,
-      resumeAfter: Option[java.sql.Timestamp],
-      asOf: Long = Long.MaxValue,
-      completedDaysOnly: Boolean = false): Boolean =
-    Privacy.hasAskableQuestion(dailyCounts(s, cfg, asOf),
-      resumeAfter, completedDaysOnly)
-
   /** The numeric-sparse twin (x53): up to `c` alerts for one ε from
     * the live store's totals — the fixed-alert-budget alternative to
-    * [[graft.streaming.SvtMonitor]]'s pay-per-episode re-arm
+    * re-charging [[aboveThreshold]] per episode
     * ([[Privacy.dpSparseFromDaily]] carries the trade-off).
     */
   def sparse(s: SparkSession, cfg: Config, threshold: Double = 100.0,
@@ -332,86 +304,6 @@ object LiveRelease {
     Privacy.dpSubsampledGaussianRdpFromCells(
       cellRows(subsampledGauss(q).totals(s, cfg.root, asOf)), cellTypes(s, cfg, asOf),
       accountant, q, seeded, releaseId, vocabulary)
-
-  // ---- the dense-count twins (x40/x49) ----------------------------------
-
-  /** The x40 dense-grid count release from the live cell store (one
-    * more consumer of the x54 store: additive cell counts +
-    * deterministic grid/noise/clamp ⇒ live == batch). Vocabulary
-    * contract per [[subsampledCount]].
-    */
-  def countRelease(s: SparkSession, cfg: Config, seeded: Boolean = false,
-      ledger: Option[DpLedger] = None, releaseId: String = "count",
-      vocabulary: Option[Seq[String]] = None,
-      asOf: Long = Long.MaxValue): DataFrame =
-    Privacy.dpCountFromCells(cellRows(cells.totals(s, cfg.root, asOf)),
-      cellTypes(s, cfg, asOf), seeded, ledger, releaseId, vocabulary)
-
-  /** The x49 user-level count release from the live user-cell store
-    * (one more consumer of the x55 store: only key PRESENCE feeds the
-    * mechanism, idempotent-union additive ⇒ live == batch).
-    */
-  def userCountRelease(s: SparkSession, cfg: Config, seeded: Boolean = false,
-      capCells: Int = 4, ledger: Option[DpLedger] = None,
-      releaseId: String = "user_count",
-      vocabulary: Option[Seq[String]] = None,
-      asOf: Long = Long.MaxValue): DataFrame =
-    Privacy.dpUserCountFromUserCells(userCellRows(userCells.totals(s, cfg.root, asOf)),
-      cellTypes(s, cfg, asOf), seeded, capCells, ledger, releaseId, vocabulary)
-
-  // ---- the selection-family twins (x43/x44/x64) -------------------------
-
-  /** The x43 exponential-mechanism argmax from the live cell store —
-    * the same store the x54 twin reads (cell counts are additive; the
-    * dense grid × vocabulary and the Gumbel selection are
-    * deterministic given them ⇒ live == batch). Vocabulary contract
-    * per [[subsampledCount]]: the full-cell store's types, or an
-    * explicit public list.
-    */
-  def argmaxRelease(s: SparkSession, cfg: Config, seeded: Boolean = false,
-      ledger: Option[DpLedger] = None, releaseId: String = "argmax",
-      vocabulary: Option[Seq[String]] = None,
-      asOf: Long = Long.MaxValue): DataFrame =
-    Privacy.dpArgmaxFromCells(cellRows(cells.totals(s, cfg.root, asOf)),
-      cellTypes(s, cfg, asOf), seeded, ledger, releaseId, vocabulary)
-
-  /** The value-bin store under `valuebins/`, for the median/quantile
-    * twins: key = zero-padded two-digit public bin FIRST (fixed width,
-    * so the type may contain anything), assigned at ingest by the SAME
-    * Privacy.valueBin spelling the batch releases use.
-    */
-  val valueBins: LiveCounts.Family = LiveCounts.Family("valuebins",
-    _.select(concat(lpad(Privacy.valueBin.cast("string"), 2, "0"),
-      lit("|"), col("event_type")).as("key")))
-
-  /** The [[valueBins]] key inverted to `(event_type, bin, c)`. */
-  private def binnedFromStore(s: SparkSession, cfg: Config,
-      asOf: Long): DataFrame =
-    valueBins.totals(s, cfg.root, asOf)
-      .select(expr("substring(key, 4)").as("event_type"),
-        substring(col("key"), 1, 2).cast("int").as("bin"),
-        col("n").as("c"))
-
-  /** The x44 median from the live value-bin store (bin assignment at
-    * ingest via the shared spelling, additive bin counts,
-    * deterministic selection tail ⇒ live == batch).
-    */
-  def medianRelease(s: SparkSession, cfg: Config, seeded: Boolean = false,
-      ledger: Option[DpLedger] = None, releaseId: String = "median",
-      asOf: Long = Long.MaxValue): DataFrame =
-    Privacy.dpMedianFromBinned(binnedFromStore(s, cfg, asOf),
-      seeded, ledger, releaseId)
-
-  /** The x64 quantile set from the same value-bin store —
-    * [[medianRelease]]'s sibling with the monotonized public-set
-    * output.
-    */
-  def quantileRelease(s: SparkSession, cfg: Config, seeded: Boolean = false,
-      ledger: Option[DpLedger] = None, releaseId: String = "quantiles",
-      quantiles: Seq[Double] = Seq(0.25, 0.5, 0.75, 0.9),
-      asOf: Long = Long.MaxValue): DataFrame =
-    Privacy.dpQuantilesFromBinned(binnedFromStore(s, cfg, asOf),
-      seeded, ledger, releaseId, quantiles)
 
   // ---- the LOCAL-DP twin (x62) ------------------------------------------
 

@@ -845,22 +845,6 @@ class IngestSpec extends AnyFunSuite {
     put("results", Archive.gzip(StellarWriter.encodeResultEntry(resSet, seq)))
   }
 
-  test("metrics hook reports per-commit payment/creation counts") {
-    val archive = Files.createTempDirectory("graft-metrics").toString
-    val out = Files.createTempDirectory("graft-metrics-out").toString
-    writeCheckpoint(archive, 0x3fL, 2)
-    writeMixedCheckpoint(archive, 0x7fL)
-    var seen = Vector.empty[(Long, Long, Long)]
-    val rec = new graft.streaming.IngestMetrics {
-      override def onCommit(seq: Long, nPay: Long, nCre: Long): Unit =
-        seen :+= ((seq, nPay, nCre))
-    }
-    val tail = new ArchiveTail(spark, archive, Passphrase, cfg,
-      new PartitionedFileSink(out), metrics = rec)
-    assert(tail.runOnce() === 2)
-    assert(seen === Vector((0x3fL, 2L, 0L), (0x7fL, 1L, 1L)))
-  }
-
   test("both JDBC layouts commit the same rows from one mixed checkpoint") {
     val archive = Files.createTempDirectory("graft-arch-layouts").toString
     writeMixedCheckpoint(archive, 0x3fL)

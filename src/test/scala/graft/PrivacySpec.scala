@@ -1381,11 +1381,11 @@ class PrivacySpec extends AnyFunSuite {
 
   test("episode salts draw independent SVT noise: e0| and e1| domains differ on a knife-edge stream") {
     import spark.implicits._
-    // the r18 review finding, executable: SvtMonitor's re-armed
-    // episodes prefix the salt with the episode index so that even the
-    // seeded spelling (releaseSalt(true) == \"\" for every arm) derives
-    // INDEPENDENT draws per episode — billing the ledger twice for
-    // bit-identical noise would void the sequential-composition claim.
+    // distinct salts must derive INDEPENDENT draws: under the seeded
+    // spelling (releaseSalt(true) == \"\" for every run) a caller that
+    // re-runs SVT per alert episode separates the episodes only by a
+    // salt prefix, and billing the ledger twice for bit-identical noise
+    // would void the sequential-composition claim.
     // Knife-edge fixture: every day's count sits exactly AT the
     // threshold, so the verdicts are pure noise; two episode domains
     // agreeing on all 64 coin-ish verdicts (and the halting point)
@@ -1394,7 +1394,7 @@ class PrivacySpec extends AnyFunSuite {
     val daily = (0 until 64).map(i =>
       (java.sql.Timestamp.valueOf(epoch.plusDays(i.toLong).atStartOfDay()), 100L))
       .toDF("day", "cnt")
-    def run(salt: String) = Privacy.aboveThresholdSalted(daily, 100.0, salt, None)
+    def run(salt: String) = Privacy.aboveThresholdSalted(daily, 100.0, salt)
       .collect().map(r => (r.getTimestamp(0), r.getBoolean(1))).toSeq
     val e0 = run("e0|"); val e1 = run("e1|")
     assert(e0 !== e1, "episode domains must draw independent noise")

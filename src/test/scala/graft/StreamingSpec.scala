@@ -4,425 +4,9 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.StreamDemos
-import graft.streaming.StreamDemos.Ev
 
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  private def ts(minutes: Long): Timestamp = new Timestamp(minutes * 60000L)
-
-  final case class REv(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
-  final case class RDoc(ts: Timestamp, text: String, source: String)
-
-  test("windowed counts finalize once the watermark passes") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[REv]
-    val q = StreamDemos.windowedCounts(ms.toDF())
-      .writeStream.format("memory").queryName("win_out").outputMode("append").start()
-    try {
-      ms.addData(
-        REv(1, ts(5), 1, "click", 1.5),
-        REv(2, ts(10), 1, "click", 2.5),
-        REv(3, ts(20), 2, "buy", 4.0))
-      q.processAllAvailable()
-      // advance event time beyond hour 0 + watermark → finalizes hour 0
-      ms.addData(REv(4, ts(200), 1, "click", 1.0))
-      q.processAllAvailable()
-      ms.addData(REv(5, ts(400), 1, "click", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("win_out").collect()
-        .map(r => (r.getAs[Timestamp]("hour_start").getTime / 60000, r.getAs[String]("event_type"),
-          r.getAs[Long]("n"), r.getAs[Double]("sum_value"))).toSet
-      assert(rows.contains((0L, "click", 2L, 4.0)))
-      assert(rows.contains((0L, "buy", 1L, 4.0)))
-    } finally q.stop()
-  }
-
-  test("streaming admission filter counts pass/fail per source window") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    // clears x16's default thresholds: 22 words, 21 distinct, 2 stopwords
-    val good = "the a " + (1 to 20).map(i => s"word$i").mkString(" ")
-    val ms = MemoryStream[RDoc]
-    val q = StreamDemos.admissionCounts(ms.toDF())
-      .writeStream.format("memory").queryName("adm_out").outputMode("append").start()
-    try {
-      ms.addData(
-        RDoc(ts(5), good, "web"), RDoc(ts(10), good, "web"),
-        RDoc(ts(15), "tiny doc", "web"), RDoc(ts(20), good, "books"))
-      q.processAllAvailable()
-      ms.addData(RDoc(ts(200), good, "web")) // event time beyond hour 0 + watermark
-      q.processAllAvailable()
-      ms.addData(RDoc(ts(400), good, "web")) // second push finalizes hour 0
-      q.processAllAvailable()
-      val rows = spark.table("adm_out").collect()
-        .filter(_.getAs[Timestamp]("hour_start").getTime == 0L)
-        .map(r => (r.getAs[String]("source"), r.getAs[Boolean]("pass"), r.getAs[Long]("n")))
-        .toSet
-      assert(rows === Set(("web", true, 2L), ("web", false, 1L), ("books", true, 1L)))
-    } finally q.stop()
-  }
-
-  test("streaming boilerplate scrub applies the batch-built d12 hot list statelessly") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    // hot list from a BATCH corpus: "a b c d" shared by two documents
-    val corpus = Seq((1L, "a b c d e f g h"), (2L, "a b c d x y z w"))
-      .toDF("doc_id", "text")
-    val hot = graft.operators.Dedup.hotSegments(corpus, segWords = 4, minDf = 2L)
-      .collect().map(_.getString(0)).toSeq
-    assert(hot.length === 1)
-    // live docs scrubbed map-side against the inlined hot set
-    val ms = MemoryStream[RDoc]
-    val q = StreamDemos.scrubBoilerplate(ms.toDF(), hot)
-      .writeStream.format("memory").queryName("scrub_out").outputMode("append").start()
-    try {
-      ms.addData(
-        RDoc(ts(1), "a b c d k l m n", "web"), // boilerplate prefix dropped
-        RDoc(ts(2), "k l m n o p q r", "web"), // untouched
-        RDoc(ts(3), "a b c d", "web"))         // fully boilerplate
-      q.processAllAvailable()
-      val rows = spark.table("scrub_out").collect()
-        .map(r => r.getAs[String]("text") ->
-          ((r.getAs[Long]("n_segs"), r.getAs[Long]("n_dropped"), r.getAs[String]("clean_text"))))
-        .toMap
-      assert(rows("a b c d k l m n") === ((2L, 1L, "k l m n")))
-      assert(rows("k l m n o p q r") === ((2L, 0L, "k l m n o p q r")))
-      assert(rows("a b c d") === ((1L, 1L, "")))
-      // stateless: no state store rows, nothing watermark-bounded
-      assert(q.lastProgress == null ||
-        Option(q.lastProgress.stateOperators).forall(_.isEmpty))
-    } finally q.stop()
-    // parity with the batch rewrite on the same corpus
-    val batch = graft.operators.Dedup.segmentDedup(corpus, 4, 2L)
-      .orderBy("doc_id").collect().map(_.getString(3))
-    val streamed = StreamDemos.scrubBoilerplate(
-        corpus.withColumnRenamed("doc_id", "id"), hot)
-      .orderBy("id").collect().map(_.getAs[String]("clean_text"))
-    assert(batch.toSeq === streamed.toSeq)
-  }
-
-  test("streaming BPE token counts match the batch encode rule-for-rule") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    // rules trained on a BATCH corpus (pair counts need corpus-wide view)
-    val corpus = Seq((1L, "abc abc abc abd"), (2L, "abc cab")).toDF("doc_id", "text")
-    val rules = graft.operators.Bpe.learnedMerges(corpus, rounds = 2)
-    assert(rules === Seq(("a", "b"), ("ab", "c"))) // (a,b)=6 then (ab,c)=4
-    // live docs encoded map-side under the shipped rules — zero state
-    val ms = MemoryStream[RDoc]
-    val q = StreamDemos.bpeTokenCounts(ms.toDF(), rules)
-      .writeStream.format("memory").queryName("bpe_out").outputMode("append").start()
-    try {
-      ms.addData(RDoc(ts(1), "abc abd cab", "web"))
-      q.processAllAvailable()
-      val r = spark.table("bpe_out").collect().head
-      // abc->[abc]=1, abd->[ab,d]=2, cab->[c,ab]=2
-      assert((r.getAs[Long]("n_words"), r.getAs[Long]("n_bpe_tokens")) === ((3L, 5L)))
-      assert(q.lastProgress == null ||
-        Option(q.lastProgress.stateOperators).forall(_.isEmpty))
-    } finally q.stop()
-    // parity with the batch encode over the training corpus itself
-    val batch = graft.operators.Bpe.encode(corpus, rounds = 2)
-      .orderBy("doc_id").collect().map(r => (r.getLong(1), r.getLong(2)))
-    val streamed = StreamDemos.bpeTokenCounts(corpus, rules)
-      .select(col("doc_id"), col("n_words"), col("n_bpe_tokens"))
-      .orderBy("doc_id").collect().map(r => (r.getLong(1), r.getLong(2)))
-    assert(batch.toSeq === streamed.toSeq)
-  }
-
-  test("streaming CMS cells match the batch sketch build") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[REv]
-    val q = StreamDemos.cmsCells(ms.toDF(), depth = 2, width = 8)
-      .writeStream.format("memory").queryName("cms_out").outputMode("append").start()
-    try {
-      val evs = (1 to 30).map(i => REv(i.toLong, ts(i.toLong), (i % 5).toLong, "e", 0.0))
-      ms.addData(evs: _*)
-      q.processAllAvailable()
-      ms.addData(REv(98, ts(200), 0, "e", 0.0))
-      q.processAllAvailable()
-      ms.addData(REv(99, ts(400), 0, "e", 0.0))
-      q.processAllAvailable()
-      val cells = spark.table("cms_out").collect()
-        .filter(_.getAs[Timestamp]("hour_start").getTime == 0L)
-        .map(r => (r.getAs[Int]("h"), r.getAs[Long]("b")) -> r.getAs[Long]("c")).toMap
-      // cell mass per hash row equals the window's event count
-      assert(cells.filter(_._1._1 == 0).values.sum === 30L)
-      assert(cells.filter(_._1._1 == 1).values.sum === 30L)
-      // and the streaming build agrees cell-for-cell with the batch spelling
-      val batch = evs.map(e => Tuple1(e.user_id)).toDF("user_id")
-        .select(graft.operators.Curation.cmsProbe(col("user_id"), 2, 8).as("hb"))
-        .groupBy(col("hb.h").as("h"), col("hb.b").as("b")).count()
-        .collect().map(r => (r.getAs[Int]("h"), r.getAs[Long]("b")) -> r.getAs[Long]("count")).toMap
-      assert(cells === batch)
-    } finally q.stop()
-  }
-
-  test("session windows merge events within the gap") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[REv]
-    val q = StreamDemos.sessionCounts(ms.toDF())
-      .writeStream.format("memory").queryName("sess_out").outputMode("append").start()
-    try {
-      ms.addData(
-        REv(1, ts(0), 1, "a", 0), REv(2, ts(10), 1, "a", 0), // one session
-        REv(3, ts(100), 1, "a", 0))                          // second session
-      q.processAllAvailable()
-      ms.addData(REv(4, ts(500), 2, "a", 0)) // watermark push
-      q.processAllAvailable()
-      ms.addData(REv(5, ts(900), 2, "a", 0))
-      q.processAllAvailable()
-      val sessions = spark.table("sess_out").collect()
-        .filter(_.getAs[Long]("user_id") == 1L)
-        .map(r => (r.getAs[Timestamp]("session_start").getTime / 60000, r.getAs[Long]("n_events"))).toSet
-      assert(sessions === Set((0L, 2L), (100L, 1L)))
-    } finally q.stop()
-  }
-
-  test("streaming dedup drops same-id replays, keeps arbitrarily late new ids") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[REv]
-    val q = StreamDemos.dedupByEventId(ms.toDF())
-      .writeStream.format("memory").queryName("dedup_out").outputMode("append").start()
-    try {
-      ms.addData(REv(1, ts(0), 1, "a", 0), REv(1, ts(1), 1, "a", 0), REv(2, ts(2), 1, "a", 0))
-      q.processAllAvailable()
-      ms.addData(REv(1, ts(3), 1, "a", 0), REv(3, ts(4), 1, "a", 0))
-      q.processAllAvailable()
-      assert(spark.table("dedup_out").select("event_id").collect().map(_.getLong(0)).sorted.toSeq
-        === Seq(1L, 2L, 3L))
-      // a genuinely NEW id arriving arbitrarily late is still kept:
-      // the lifetime-exact contract declares NO watermark, so there is
-      // no late-drop gate in front of the dedup state (a watermark
-      // here would evict nothing — ts is not in the key set — but
-      // WOULD silently discard late input rows)
-      ms.addData(REv(4, ts(-7200), 1, "a", 0))
-      q.processAllAvailable()
-      assert(spark.table("dedup_out").select("event_id").collect().map(_.getLong(0)).sorted.toSeq
-        === Seq(1L, 2L, 3L, 4L))
-    } finally q.stop()
-  }
-
-  test("dropDuplicatesWithinWatermark dedups replays and evicts expired keys") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[REv]
-    val q = StreamDemos.dedupWithinWatermark(ms.toDF())
-      .writeStream.format("memory").queryName("dedup_wm_out").outputMode("append").start()
-    try {
-      val B = 40000L
-      ms.addData(REv(1, ts(B), 1, "a", 0), REv(1, ts(B + 1), 1, "a", 0)) // replay within window
-      q.processAllAvailable()
-      // advance the watermark far past id 1's eviction horizon…
-      ms.addData(REv(2, ts(B + 600), 1, "a", 0))
-      q.processAllAvailable()
-      ms.addData(REv(3, ts(B + 1200), 1, "a", 0))
-      q.processAllAvailable()
-      // …then id 1 arrives again: its state was evicted, so it re-emits —
-      // the bounded-replay contract (state is O(horizon), not O(keys))
-      ms.addData(REv(1, ts(B + 1250), 1, "a", 0))
-      q.processAllAvailable()
-      val ids = spark.table("dedup_wm_out").select("event_id").collect().map(_.getLong(0)).sorted
-      assert(ids.toSeq === Seq(1L, 1L, 2L, 3L))
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join matches purchases to recent signups") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[REv]
-    val q = StreamDemos.purchasesWithRecentSignup(ms.toDF())
-      .writeStream.format("memory").queryName("ssj_out").outputMode("append").start()
-    try {
-      val B = 20000L
-      ms.addData(
-        REv(1, ts(B), 1, "signup", 0),
-        REv(2, ts(B + 30), 1, "purchase", 5.0),   // joined: signup 30 min before
-        REv(3, ts(B + 200), 2, "purchase", 1.0),  // no signup → dropped (inner)
-        REv(4, ts(B + 300), 1, "purchase", 2.0))  // signup 5h before → outside interval
-      q.processAllAvailable()
-      ms.addData(REv(5, ts(B + 1000), 3, "signup", 0)) // advance watermark
-      q.processAllAvailable()
-      val rows = spark.table("ssj_out").collect()
-        .map(r => (r.getAs[Long]("p_id"), r.getAs[Long]("s_id"))).toSet
-      assert(rows === Set((2L, 1L)))
-    } finally q.stop()
-  }
-
-  test("stream-stream as-of join picks the latest in-horizon signup (batch j8 parity)") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val B = 30000L
-    val fixture = Seq(
-      REv(1, ts(B), 1, "signup", 0),
-      REv(2, ts(B + 30), 1, "signup", 0),       // later signup — the as-of winner
-      REv(3, ts(B + 40), 1, "purchase", 5.0),
-      REv(4, ts(B + 50), 2, "purchase", 1.0),   // no signup → dropped (inner)
-      REv(5, ts(B + 10), 3, "signup", 0),
-      REv(6, ts(B + 100), 3, "purchase", 2.0))  // signup 90 min prior → outside horizon
-    val ms = MemoryStream[REv]
-    val q = StreamDemos.asOfRecentSignup(ms.toDF())
-      .writeStream.format("memory").queryName("asof_out").outputMode("append").start()
-    try {
-      ms.addData(fixture: _*)
-      q.processAllAvailable()
-      // advance BOTH sides' watermarks past the purchases so the chained
-      // join → aggregation finalizes (disjoint users: no join output)
-      ms.addData(REv(7, ts(B + 1000), 8, "purchase", 0), REv(8, ts(B + 1000), 9, "signup", 0))
-      q.processAllAvailable()
-      ms.addData(REv(9, ts(B + 2000), 8, "purchase", 0), REv(10, ts(B + 2000), 9, "signup", 0))
-      q.processAllAvailable()
-      val got = spark.table("asof_out").collect()
-        .filter(_.getAs[Long]("user_id") < 8L)
-        .map(r => (r.getAs[Long]("p_id"), r.getAs[Timestamp]("asof_signup_ts").getTime / 60000))
-        .toSet
-
-      // batch j8 shape (window-function as-of) restricted to the same
-      // 1-hour horizon, on the same fixture
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-      val expected = fixture.map(e => (e.event_id, e.ts, e.user_id, e.event_type))
-        .toDF("event_id", "ts", "user_id", "event_type")
-        .withColumn("prior_signup_ts",
-          last(when(col("event_type") === "signup", col("ts")), ignoreNulls = true).over(w))
-        .filter(col("event_type") === "purchase" &&
-          col("prior_signup_ts") >= col("ts") - expr("INTERVAL 1 HOUR"))
-        .select(col("event_id"), col("prior_signup_ts"))
-        .collect()
-        .map(r => (r.getAs[Long]("event_id"), r.getAs[Timestamp]("prior_signup_ts").getTime / 60000))
-        .toSet
-      assert(expected === Set((3L, B + 30)))
-      assert(got === expected)
-    } finally q.stop()
-  }
-
-  test("streaming z-score matches batch w14 row-for-row across a batch boundary") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val d = "/root/testdata/sf0.001"
-    val all = Tables.events(spark, d)
-      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      .collect()
-      .map(r => StreamDemos.ZEv(r.getLong(0), r.getLong(1), r.getTimestamp(2), r.getDouble(3)))
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    // split at a time boundary so batch 2 is strictly later — state must
-    // carry each user's trailing window across the micro-batch boundary
-    val cut = all(all.length / 2).ts.getTime
-    val (b1, b2) = all.partition(_.ts.getTime < cut)
-    assert(b1.nonEmpty && b2.nonEmpty)
-    val ms = MemoryStream[StreamDemos.ZEv]
-    val q = StreamDemos.anomalyZscores(ms.toDS())
-      .writeStream.format("memory").queryName("z_out").outputMode("append").start()
-    try {
-      ms.addData(b1.toIndexedSeq: _*); q.processAllAvailable()
-      ms.addData(b2.toIndexedSeq: _*); q.processAllAvailable()
-      val got = spark.table("z_out").collect()
-        .map(r => (r.getAs[Long]("event_id"),
-          BigDecimal(r.getAs[Double]("mu")).setScale(9, BigDecimal.RoundingMode.HALF_UP),
-          BigDecimal(r.getAs[Double]("z")).setScale(9, BigDecimal.RoundingMode.HALF_UP)))
-        .toSet
-      val expected = SparkEntry.queries("w14_anomaly_zscore")(spark, d).collect()
-        .map(r => (r.getAs[Long]("event_id"),
-          BigDecimal(r.getAs[Double]("mu")).setScale(9, BigDecimal.RoundingMode.HALF_UP),
-          BigDecimal(r.getAs[Double]("z")).setScale(9, BigDecimal.RoundingMode.HALF_UP)))
-        .toSet
-      assert(expected.nonEmpty)
-      assert(got === expected, "stream/batch z-score parity")
-    } finally q.stop()
-  }
-
-  test("streaming rolling median/MAD equals batch w15 EXACTLY across a batch boundary") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val d = "/root/testdata/sf0.001"
-    val all = Tables.events(spark, d)
-      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      .collect()
-      .map(r => StreamDemos.ZEv(r.getLong(0), r.getLong(1), r.getTimestamp(2), r.getDouble(3)))
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    val cut = all(all.length / 2).ts.getTime
-    val (b1, b2) = all.partition(_.ts.getTime < cut)
-    assert(b1.nonEmpty && b2.nonEmpty)
-    val ms = MemoryStream[StreamDemos.ZEv]
-    val q = StreamDemos.rollingMedians(ms.toDS())
-      .writeStream.format("memory").queryName("med_out").outputMode("append").start()
-    try {
-      ms.addData(b1.toIndexedSeq: _*); q.processAllAvailable()
-      ms.addData(b2.toIndexedSeq: _*); q.processAllAvailable()
-      // raw-double equality — no libm in either path, so not even a
-      // 9-digit rounding concession is needed
-      val got = spark.table("med_out").collect()
-        .map(r => (r.getAs[Long]("event_id"), r.getAs[Int]("n_window"),
-          r.getAs[Double]("roll_med"), r.getAs[Double]("roll_mad"),
-          r.getAs[Boolean]("is_outlier")))
-        .toSet
-      val expected = SparkEntry.queries("w15_rolling_median")(spark, d).collect()
-        .map(r => (r.getAs[Long]("event_id"), r.getAs[Int]("n_window"),
-          r.getAs[Double]("roll_med"), r.getAs[Double]("roll_mad"),
-          r.getAs[Boolean]("is_outlier")))
-        .toSet
-      assert(expected.nonEmpty)
-      assert(got === expected, "stream/batch rolling-median parity must be exact")
-    } finally q.stop()
-  }
-
-  test("streaming z-score orders same-millisecond events by full timestamp precision") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    def at(ms0: Long, nanos: Int): Timestamp = {
-      val t = new Timestamp(ms0); t.setNanos(nanos); t
-    }
-    // two events in the SAME millisecond whose microsecond order
-    // OPPOSES their event_id order: e9 is earlier by micros, e3 later.
-    // getTime alone (millisecond-truncated) would score e3 first and
-    // diverge from the batch window's ORDER BY ts, event_id.
-    val warm = (1 to 4).map(i =>
-      StreamDemos.ZEv(i.toLong, 7L, at(1000L * i, 0), i.toDouble))
-    val e9 = StreamDemos.ZEv(9L, 7L, at(10123L, 123400000), 100.0)
-    val e3 = StreamDemos.ZEv(3L, 7L, at(10123L, 123900000), 200.0)
-    val src = MemoryStream[StreamDemos.ZEv]
-    val q = StreamDemos.anomalyZscores(src.toDS())
-      .writeStream.format("memory").queryName("z_us_out").outputMode("append").start()
-    try {
-      src.addData((warm :+ e9 :+ e3).toIndexedSeq: _*); q.processAllAvailable()
-      val mus = spark.table("z_us_out").collect()
-        .map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("mu")).toMap
-      assert(mus.keySet === Set(9L, 3L))
-      assert(mus(9L) === 2.5, "e9 (earlier by micros) scores against 1..4")
-      assert(mus(3L) === 22.0, "e3 then sees e9's value in its trailing window")
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState emits sessions on gap or timeout") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    val q = StreamDemos.sessionize(ms.toDS())
-      .writeStream.format("memory").queryName("fmgws_out").outputMode("append").start()
-    try {
-      // base offset: an event exactly at the initial watermark (epoch 0)
-      // would be dropped as late
-      val B = 10000L
-      ms.addData(Ev(1, ts(B), 1.0), Ev(1, ts(B + 5), 2.0), Ev(1, ts(B + 60), 3.0)) // gap closes first
-      q.processAllAvailable()
-      ms.addData(Ev(2, ts(B + 300), 0.0)) // watermark → times out user 1's open session
-      q.processAllAvailable()
-      ms.addData(Ev(2, ts(B + 600), 0.0))
-      q.processAllAvailable()
-      val sessions = spark.table("fmgws_out").collect()
-        .filter(_.getAs[Long]("user_id") == 1L)
-        .map(r => (r.getAs[Timestamp]("session_start").getTime / 60000 - B, r.getAs[Int]("n_events"))).toSet
-      assert(sessions === Set((0L, 2), (60L, 1)))
-    } finally q.stop()
-  }
 
   private def packKey(r: org.apache.spark.sql.Row) =
     (r.getAs[Long]("doc_id"), r.getAs[String]("lang"), r.getAs[Long]("n_tokens"),
@@ -1224,7 +808,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("graft-live-counts").toString
-    val counts = graft.streaming.LiveCounts.plain
+    val counts = graft.streaming.LiveCounts.Family("")
     // d12's segment-df corpus: hotSegments counts DISTINCT docs per
     // 4-word segment; the stream carries distinct (doc, segment) pairs
     // (each doc arrives once, so per-doc-distinct IS additive df)
@@ -1248,13 +832,6 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => r.getAs[String]("key") -> r.getAs[Long]("n")).toMap
     val batchCounts = segs.groupBy(identity).map { case (k, v) => k -> v.length.toLong }
     assert(totalMap === batchCounts)
-    // hot-segment derivation (df >= 2) matches the batch d12 builder
-    val hotBatch = graft.operators.Dedup.hotSegments(corpus, segWords = 4, minDf = 2L)
-      .collect().map(_.getString(0)).toSet
-    // hotKeys is the shipping shape: md5'd like the batch builder, and
-    // drops straight into StreamDemos.scrubBoilerplate
-    assert(graft.streaming.LiveCounts.hotKeys(spark, root, minDf = 2L).toSet === hotBatch,
-      "live df totals must rebuild the d12 hot list")
     // compact commits one fold dir; sources survive until the next
     // writer op (deferred GC); totals unchanged; replay no-op
     counts.compact(spark, root)
@@ -1371,188 +948,6 @@ class StreamingSpec extends AnyFunSuite {
       "range twin diverged")
   }
 
-  test("SvtMonitor: page once per episode, re-arm charges fresh epsilon, exhausted budget alerts nothing") {
-    import spark.implicits._
-    // the r17 verdict #4 habitat: SVT wired into episode alerting. One
-    // ε arms an episode and covers EVERY check of it (fixed
-    // per-episode noise — checks are re-reads, not releases); the
-    // first ⊤ pages once through the transports; re-arm is a NEW
-    // ε-charged stream resuming after the released alert day; a
-    // refused arm latches the monitor dark — quietly, permanently.
-    final class Stub extends graft.streaming.AlertTransport {
-      def name = "stub"
-      val sent = scala.collection.mutable.Buffer.empty[String]
-      var probed = false
-      override def probe(): Unit = { probed = true }
-      def send(m: String): Unit = { sent += m; () }
-    }
-    val stub = new Stub
-    val root = java.nio.file.Files.createTempDirectory("graft-svt-mon").toString
-    val cfg = graft.streaming.LiveRelease.Config(root)
-    val led = graft.operators.DpLedger.open(
-      java.nio.file.Files.createTempDirectory("graft-svt-mon-ledger").toString,
-      budget = BigDecimal(2))
-    val mon = new graft.streaming.SvtMonitor(Seq(stub), cfg,
-      threshold = 1000.0, ledger = Some(led), seeded = true)
-    assert(stub.probed, "transports are probed at construction (fail-fast)")
-    def day(dd: Int) = java.time.LocalDate.parse("2024-01-01").plusDays(dd - 1L)
-    def batch(counts: (Int, Int)*) = counts.flatMap { case (dd, n) =>
-      (0 until n).map(r => Tuple1(
-        java.sql.Timestamp.valueOf(day(dd).atTime(r % 24, 0))))
-    }.toDF("ts")
-    // margins force every verdict for any seed: |Lap(4)| <= 92 per day,
-    // the noisy threshold moves by |Lap(2)| <= 46 around 1000.
-    // completedDaysOnly (the default) asks a day's question only once
-    // a LATER day exists in the store, so every spike batch here
-    // carries a 1-event day-close marker after it.
-    // quiet days: arming charges epsilon 1; no page
-    graft.streaming.LiveRelease.days.step(batch(1 -> 1, 2 -> 1), 0L, cfg.root)
-    assert(mon.check(spark) === None && stub.sent.isEmpty)
-    assert(led.spent === BigDecimal(1), "arming the episode is the charge")
-    // a re-check of the SAME episode is a re-read: no new charge
-    assert(mon.check(spark) === None)
-    assert(led.spent === BigDecimal(1), "checks of an armed episode are free")
-    // the spike (day 4's marker closes day 3): page ONCE, with the
-    // released alert day in the message
-    graft.streaming.LiveRelease.days.step(batch(3 -> 2000, 4 -> 1), 1L, cfg.root)
-    val alert = mon.check(spark)
-    assert(alert.map(_.toLocalDateTime.toLocalDate) === Some(day(3)))
-    assert(stub.sent.size === 1 && stub.sent.head.contains("1000"),
-      s"one page, naming the threshold: ${stub.sent}")
-    assert(led.spent === BigDecimal(1), "the page itself charges nothing new")
-    // next check: the re-arm is DEFERRED — resuming after day 3 with
-    // the frontier at day 4 leaves nothing askable yet, and an empty
-    // schedule must not charge (arm = charge)
-    assert(mon.check(spark) === None && stub.sent.size === 1)
-    assert(led.spent === BigDecimal(1),
-      "an empty re-arm schedule defers the charge, not just the page")
-    // a second spike (day 6 closes day 5): the next check arms the new
-    // episode (fresh epsilon) and pages
-    graft.streaming.LiveRelease.days.step(batch(5 -> 2000, 6 -> 1), 2L, cfg.root)
-    assert(mon.check(spark).map(_.toLocalDateTime.toLocalDate) === Some(day(5)))
-    assert(stub.sent.size === 2 && led.spent === BigDecimal(2),
-      "re-arm is a new epsilon-charged stream")
-    // empty schedule again after the alert: silent AND uncharged —
-    // deferral is not exhaustion
-    assert(mon.check(spark) === None && !mon.budgetExhausted)
-    assert(led.spent === BigDecimal(2))
-    // budget gone: once days become askable again, the third arm is
-    // refused BEFORE any frame exists — the monitor latches dark and a
-    // later spike pages nothing
-    graft.streaming.LiveRelease.days.step(batch(7 -> 2000, 8 -> 1), 3L, cfg.root)
-    assert(mon.check(spark) === None)
-    assert(mon.budgetExhausted, "a refused arm must latch the monitor dark")
-    assert(mon.check(spark) === None && stub.sent.size === 2)
-    assert(led.spent === BigDecimal(2), "an exhausted monitor never charges again")
-    led.close()
-  }
-
-  test("SvtMonitor completedDaysOnly: a frontier-day spike pages only after the day closes; the opt-out pages mid-day") {
-    import spark.implicits._
-    // the r18 verdict #3 enforcement: an episode's per-day noise is
-    // fixed, so a mid-day check must not answer the growing frontier
-    // day's question (it would be re-answered at close under the same
-    // draw). Default ON: the newest day present in the store is
-    // excluded from the schedule until a later day's data closes it.
-    final class Stub extends graft.streaming.AlertTransport {
-      def name = "stub"
-      val sent = scala.collection.mutable.Buffer.empty[String]
-      def send(m: String): Unit = { sent += m; () }
-    }
-    def day(dd: Int) = java.time.LocalDate.parse("2024-01-01").plusDays(dd - 1L)
-    def batch(counts: (Int, Int)*) = counts.flatMap { case (dd, n) =>
-      (0 until n).map(r => Tuple1(
-        java.sql.Timestamp.valueOf(day(dd).atTime(r % 24, 0))))
-    }.toDF("ts")
-    val stub = new Stub
-    val cfg = graft.streaming.LiveRelease.Config(
-      java.nio.file.Files.createTempDirectory("graft-svt-close").toString)
-    val led = graft.operators.DpLedger.open(
-      java.nio.file.Files.createTempDirectory("graft-svt-close-led").toString,
-      budget = BigDecimal(1))
-    val mon = new graft.streaming.SvtMonitor(Seq(stub), cfg,
-      threshold = 1000.0, ledger = Some(led), seeded = true)
-    // an empty store has no closed days: nothing askable, and the arm
-    // (= the charge) is deferred, not wasted on a silent episode
-    assert(mon.check(spark) === None && led.spent === BigDecimal(0))
-    // the spike lands on the OPEN frontier day: silence, by design —
-    // its question is not yet in the schedule
-    graft.streaming.LiveRelease.days.step(batch(1 -> 1, 3 -> 2000), 0L, cfg.root)
-    assert(mon.check(spark) === None && stub.sent.isEmpty,
-      "a mid-day spike must not page while its day is still open")
-    assert(led.spent === BigDecimal(1), "the episode is armed and charged once")
-    // day 4's first event closes day 3: the SAME episode (no new
-    // charge) now asks day 3's question of its final count and pages
-    graft.streaming.LiveRelease.days.step(batch(4 -> 1), 1L, cfg.root)
-    assert(mon.check(spark).map(_.toLocalDateTime.toLocalDate) === Some(day(3)))
-    assert(stub.sent.size === 1 && led.spent === BigDecimal(1))
-    led.close()
-    // the documented opt-out: completedDaysOnly = false restores the
-    // eager spelling for day-at-once ingest — the frontier day answers
-    // immediately
-    val stub2 = new Stub
-    val cfg2 = graft.streaming.LiveRelease.Config(
-      java.nio.file.Files.createTempDirectory("graft-svt-eager").toString)
-    val mon2 = new graft.streaming.SvtMonitor(Seq(stub2), cfg2,
-      threshold = 1000.0, seeded = true, completedDaysOnly = false)
-    graft.streaming.LiveRelease.days.step(batch(1 -> 1, 3 -> 2000), 0L, cfg2.root)
-    assert(mon2.check(spark).map(_.toLocalDateTime.toLocalDate) === Some(day(3)))
-    assert(stub2.sent.size === 1)
-  }
-
-  test("SvtMonitor state survives a restart: no re-charge for an armed episode, no re-page of an old spike") {
-    import spark.implicits._
-    // the r18 self-review hole, executable: without durable state a
-    // restarted driver forgets it already paged (re-alerting the same
-    // old spike from day 1) and re-charges a fresh epsilon for an
-    // episode that was already paid for. State persists per
-    // (root, prefix) under cfg.root/svt-monitor.
-    final class Stub extends graft.streaming.AlertTransport {
-      def name = "stub"
-      val sent = scala.collection.mutable.Buffer.empty[String]
-      def send(m: String): Unit = { sent += m; () }
-    }
-    val root = java.nio.file.Files.createTempDirectory("graft-svt-restart").toString
-    val cfg = graft.streaming.LiveRelease.Config(root)
-    val led = graft.operators.DpLedger.open(
-      java.nio.file.Files.createTempDirectory("graft-svt-restart-led").toString,
-      budget = BigDecimal(2))
-    def day(dd: Int) = java.time.LocalDate.parse("2024-01-01").plusDays(dd - 1L)
-    def batch(counts: (Int, Int)*) = counts.flatMap { case (dd, n) =>
-      (0 until n).map(r => Tuple1(
-        java.sql.Timestamp.valueOf(day(dd).atTime(r % 24, 0))))
-    }.toDF("ts")
-    def mon(stub: Stub) = new graft.streaming.SvtMonitor(Seq(stub), cfg,
-      threshold = 1000.0, ledger = Some(led), seeded = true)
-    // instance A arms episode 0 on a quiet store (one charge)
-    val sA = new Stub
-    graft.streaming.LiveRelease.days.step(batch(1 -> 1, 2 -> 1), 0L, cfg.root)
-    assert(mon(sA).check(spark) === None && led.spent === BigDecimal(1))
-    // restart while ARMED: instance B resumes the same episode — same
-    // salt, no second charge, and the spike pages through B normally
-    val sB = new Stub
-    val b = mon(sB)
-    assert(b.episode === 1, "the restarted monitor resumes the armed episode")
-    assert(b.check(spark) === None && led.spent === BigDecimal(1),
-      "a restart must not re-charge an episode that was already paid for")
-    graft.streaming.LiveRelease.days.step(batch(3 -> 2000, 4 -> 1), 1L, cfg.root)
-    assert(b.check(spark).map(_.toLocalDateTime.toLocalDate) === Some(day(3)))
-    assert(sB.sent.size === 1 && led.spent === BigDecimal(1))
-    // restart AFTER the alert: instance C must not re-page day 3 — its
-    // next check arms a fresh episode resuming strictly after it
-    val sC = new Stub
-    val c = mon(sC)
-    assert(c.check(spark) === None && sC.sent.isEmpty,
-      "an old spike must never re-page after a restart")
-    assert(led.spent === BigDecimal(1),
-      "the re-arm defers its charge while the post-alert schedule is empty")
-    graft.streaming.LiveRelease.days.step(batch(5 -> 2000, 6 -> 1), 2L, cfg.root)
-    assert(c.check(spark).map(_.toLocalDateTime.toLocalDate) === Some(day(5)))
-    assert(led.spent === BigDecimal(2), "the re-arm is the normal fresh charge")
-    assert(sC.sent.size === 1)
-    led.close()
-  }
-
   test("stability-histogram twins: live cell stores equal batch x54/x55; the ledger meters the (epsilon, delta) pair") {
     // the r18 verdict #3 directive: the δ-licensed release regime gets
     // its live twin like every other regime. Cell counts are additive
@@ -1592,19 +987,6 @@ class StreamingSpec extends AnyFunSuite {
       "the live x54 must be bit-identical to batch on the same records")
     assert(liveUser() === batchUser,
       "the live x55 must be bit-identical to batch on the same records")
-    // the dense-count twins ride the SAME two stores: x40 from the
-    // cell counts, x49 from user-cell presence (round-19 continuation
-    // — the dense one-shot regime's live spellings)
-    assert(graft.streaming.LiveRelease
-        .countRelease(spark, cfg, seeded = true).collect().toSeq ===
-      graft.operators.Privacy
-        .dpCountRelease(evAll, seeded = true).collect().toSeq,
-      "the live x40 must be bit-identical to batch")
-    assert(graft.streaming.LiveRelease
-        .userCountRelease(spark, cfg, seeded = true).collect().toSeq ===
-      graft.operators.Privacy
-        .dpUserCountRelease(evAll, seeded = true).collect().toSeq,
-      "the live x49 must be bit-identical to batch")
     // replay idempotence + fold invisibility, both stores
     graft.streaming.LiveRelease.cells.step(slices(0), 0L, cfg.root)
     graft.streaming.LiveRelease.userCells.step(slices(0), 0L, cfg.root)
@@ -1708,61 +1090,6 @@ class StreamingSpec extends AnyFunSuite {
     led.close()
   }
 
-  test("selection-family twins: live cell and value-bin stores rebuild batch x43/x44/x64 bit-for-bit") {
-    // the exponential-mechanism selections get their live spellings:
-    // argmax rides the x54 cell store (additive cell counts), median
-    // and quantiles ride a new value-bin store whose bin assignment
-    // runs at ingest through the SAME Privacy.valueBin spelling batch
-    // uses — additive bin counts + deterministic Gumbel tails ⇒ live
-    // == batch.
-    val root = java.nio.file.Files.createTempDirectory("graft-live-sel").toString
-    val cfg = graft.streaming.LiveRelease.Config(root)
-    val d = "/root/testdata/sf0.001"
-    val evAll = graft.Tables.events(spark, d)
-    val slices = (0 until 3).map(i => evAll.filter(col("event_id") % 3 === i))
-    slices.zipWithIndex.foreach { case (s, i) =>
-      graft.streaming.LiveRelease.cells.step(s, i.toLong, cfg.root)
-      graft.streaming.LiveRelease.valueBins.step(s, i.toLong, cfg.root)
-    }
-    def liveArgmax() = graft.streaming.LiveRelease
-      .argmaxRelease(spark, cfg, seeded = true).collect().toSeq
-    def liveMedian() = graft.streaming.LiveRelease
-      .medianRelease(spark, cfg, seeded = true).collect().toSeq
-    def liveQuant() = graft.streaming.LiveRelease
-      .quantileRelease(spark, cfg, seeded = true).collect().toSeq
-    val batchArgmax = graft.operators.Privacy
-      .dpArgmaxRelease(evAll, seeded = true).collect().toSeq
-    val batchMedian = graft.operators.Privacy
-      .dpMedianRelease(evAll, seeded = true).collect().toSeq
-    val batchQuant = graft.operators.Privacy
-      .dpQuantileRelease(evAll, seeded = true).collect().toSeq
-    assert(batchArgmax.nonEmpty && batchMedian.nonEmpty && batchQuant.nonEmpty)
-    assert(liveArgmax() === batchArgmax, "argmax twin diverged")
-    assert(liveMedian() === batchMedian, "median twin diverged")
-    assert(liveQuant() === batchQuant, "quantile twin diverged")
-    // replay idempotence + fold invisibility on the new store
-    graft.streaming.LiveRelease.valueBins.step(slices(0), 0L, cfg.root)
-    assert(liveMedian() === batchMedian && liveQuant() === batchQuant,
-      "replayed batch ids are no-ops")
-    graft.streaming.LiveRelease.valueBins.compact(spark, cfg.root)
-    assert(liveMedian() === batchMedian && liveQuant() === batchQuant,
-      "a fold must be invisible to the releases")
-    // live charges mirror batch: each selection frame costs one epsilon
-    val led = graft.operators.DpLedger.open(
-      java.nio.file.Files.createTempDirectory("graft-sel-ledger").toString,
-      budget = BigDecimal(2))
-    assert(graft.streaming.LiveRelease.argmaxRelease(spark, cfg,
-      seeded = true, ledger = Some(led)).collect().toSeq === batchArgmax)
-    assert(graft.streaming.LiveRelease.quantileRelease(spark, cfg,
-      seeded = true, ledger = Some(led)).collect().toSeq === batchQuant)
-    assert(led.spent === BigDecimal(2))
-    intercept[graft.operators.DpLedger.BudgetRefused] {
-      graft.streaming.LiveRelease.medianRelease(spark, cfg,
-        seeded = true, ledger = Some(led))
-    }
-    led.close()
-  }
-
   test("local-DP twin: ingest-time randomization; the live report store rebuilds the batch x62 estimate bit-for-bit") {
     // the LOCAL model run the way it is meant to run: the k-RR coin
     // fires per record AT INGEST, so the store never holds a true
@@ -1804,8 +1131,8 @@ class StreamingSpec extends AnyFunSuite {
   test("count-store families refuse the ingest parameters their releases refuse and commit nothing") {
     import spark.implicits._
     // a store ingested under a q outside (0, 1), eps <= 0 or a one-type
-    // domain could never be released: dpSubsampled*FromCells and
-    // localFrequencyFromReports refuse those parameters, so the family
+    // domain could never be released: the subsampled and local releases
+    // refuse those parameters, so the family
     // refuses them before anything is written
     val root = java.nio.file.Files.createTempDirectory("graft-family-bounds").toString
     val ev = Seq((1L, Timestamp.valueOf("2024-01-01 00:00:00"), 7L, "click", 1.0))
@@ -1834,16 +1161,13 @@ class StreamingSpec extends AnyFunSuite {
     val lr = graft.streaming.LiveRelease
     val families = Seq("counts" -> lr.days, "cells" -> lr.cells, "ucells" -> lr.userCells,
       "subcells" -> lr.subsampled(), "subgcells" -> lr.subsampledGauss(),
-      "valuebins" -> lr.valueBins, "lrrcells" -> lr.local(Seq("click", "view")))
+      "lrrcells" -> lr.local(Seq("click", "view")))
     for ((dir, family) <- families) {
       family.step(ev, 0L, root)
       val counts = if (dir == "counts") dir else s"$dir/counts"
       assert(new java.io.File(s"$root/$counts/batch=0/_SUCCESS").exists, s"store moved from $counts")
     }
     assert(new java.io.File(root).list().toSet === families.map(_._1).toSet)
-    val nbRoot = java.nio.file.Files.createTempDirectory("graft-family-nb").toString
-    graft.streaming.LiveNb.counts.step(Seq(NDoc(1L, "a b", true)).toDF(), 0L, nbRoot)
-    assert(new java.io.File(s"$nbRoot/counts/batch=0/_SUCCESS").exists)
     // the streaming intake commits through the same step: one
     // MemoryStream batch lands the totals a direct step lands
     val streamed = java.nio.file.Files.createTempDirectory("graft-family-start").toString
@@ -1854,36 +1178,6 @@ class StreamingSpec extends AnyFunSuite {
     def totals(r: String) = lr.userCells.totals(spark, r).collect()
       .map(t => t.getString(0) -> t.getLong(1)).toMap
     assert(totals(streamed).nonEmpty && totals(streamed) === totals(root))
-  }
-
-  test("live NB: streamed class-count partials rebuild the batch x24 classifier bit-for-bit") {
-    import spark.implicits._
-    val d = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files.createTempDirectory("graft-live-nb").toString
-    val cfg = graft.streaming.LiveNb.Config(root)
-    val docs = Tables.documents(spark, d).select("doc_id", "lang", "text")
-    val all = docs.collect()
-      .map(r => NDoc(r.getLong(0), r.getString(2), r.getString(1) == "en"))
-      .sortBy(_.doc_id)
-    val batches = all.grouped((all.length + 2) / 3).toSeq
-    batches.zipWithIndex.foreach { case (b, i) =>
-      graft.streaming.LiveNb.counts.step(b.toSeq.toDF(), i.toLong, root)
-    }
-    def scored(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double, Boolean)] =
-      df.collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_tokens"),
-        r.getAs[Double]("log_odds"), r.getAs[Boolean]("pred_pos"))).toSet
-    val expected = scored(graft.operators.Curation.nbClassifier(docs, col("lang") === "en"))
-    assert(expected.nonEmpty && expected.exists(_._4) && expected.exists(!_._4),
-      "fixture must produce both verdicts")
-    // the rebuilt model scores bit-for-bit like the inline training
-    // pass: counts are exact integers, the derivation is shared code
-    assert(scored(graft.streaming.LiveNb.score(spark, cfg, docs)) === expected)
-    // a replayed committed batch id must not double-count
-    graft.streaming.LiveNb.counts.step(batches.head.toSeq.toDF(), 0L, root)
-    assert(scored(graft.streaming.LiveNb.score(spark, cfg, docs)) === expected)
-    // compaction is the merge; the model survives it unchanged
-    graft.streaming.LiveNb.counts.compact(spark, root)
-    assert(scored(graft.streaming.LiveNb.score(spark, cfg, docs)) === expected)
   }
 
   test("live index: streamed BM25 postings serve the batch x14 ranking bit-for-bit") {
@@ -2180,7 +1474,6 @@ class StreamingSpec extends AnyFunSuite {
 
 /** Top-level so Seq[LDoc].toDF() can encode without an outer scope. */
 final case class LDoc(doc_id: Long, lang: String, text: String)
-final case class NDoc(doc_id: Long, text: String, pos: Boolean)
 
 /** Top-level for the same encoder reason as [[LDoc]]. */
 final case class VRow(vec_id: Long, embedding: Array[Float], label: Int)

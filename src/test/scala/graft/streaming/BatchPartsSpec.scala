@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Crash-point enumeration for the shared `batch=` store machinery
   * ([[BatchParts]]) that every live store (LivePipeline, LiveVectors,
-  * LiveCounts/LiveNb, LiveIndex) builds on. The per-store specs prove
+  * LiveCounts, LiveIndex) builds on. The per-store specs prove
   * end-to-end behavior at a few crash points; this spec walks EVERY
   * boundary of the fold and rewrite protocols on a minimal store and
   * pins the invariants the stores rely on:
