@@ -33,6 +33,14 @@ object Engine {
     * `--master`/`--conf`, a `-Dspark.*` property) keeps its preset value.
     * A rule is switched off per session with Spark's own
     * `spark.sql.optimizer.excludedRules=<rule class>`.
+    *
+    * `spark.hadoop.fs.file.impl` defaults to [[graft.sinks.NioLocalFileSystem]]:
+    * stock `LocalFileSystem` without libhadoop forks a `chmod` process
+    * per local create and mkdirs, 13 per file-sink checkpoint commit.
+    * The binding reaches every `file:` FileSystem that Hadoop builds from
+    * the session's conf. Hadoop caches FileSystems by scheme and user,
+    * not by conf, so a `file:` FileSystem the JVM built before the
+    * session keeps its class for as long as it stays cached.
     */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
     val conf = new SparkConf()
@@ -54,7 +62,8 @@ object Engine {
       // parquet (beyond the threshold Spark collapses In to a min/max
       // range — useless against uniform hash keys); the probes cap
       // their key pushdown at this value, so the two stay in step
-      "spark.sql.parquet.pushdown.inFilterThreshold" -> "1024"
+      "spark.sql.parquet.pushdown.inFilterThreshold" -> "1024",
+      "spark.hadoop.fs.file.impl" -> classOf[graft.sinks.NioLocalFileSystem].getName
     ).foreach { case (k, v) => conf.setIfMissing(k, v) }
     val s = SparkSession.builder().config(conf).getOrCreate()
     graft.functions.GraftFunctions.register(s) // same-JVM reuse safety

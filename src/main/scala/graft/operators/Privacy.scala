@@ -721,19 +721,16 @@ object Privacy {
       date_add(to_date(lit(ContinualEpoch)), col("id").cast("int"))
         .cast("timestamp").as("day"))
 
-
-  private def denseCells(events: DataFrame, grp: DataFrame,
-      fills: Seq[(String, Column)], vocabulary: Option[Seq[String]]): DataFrame =
-    denseCellsFrom(events, grp, fills, vocabulary)
-
-  /** [[denseCells]] with an explicit VOCAB SOURCE frame — any frame
-    * carrying an `event_type` column whose distinct values stand in
-    * for the corpus vocabulary when no public one is passed. The batch
-    * entries pass the raw events; the streaming twins pass the
-    * full-corpus cell store (the subsample store must never be the
-    * vocabulary source — a sample-derived release set would make cell
-    * presence depend on the sampling draw). When `vocabulary` is Some,
-    * the source frame is never referenced (no job runs against it).
+  /** The dense public day grid × vocabulary, left-joined to `grp` with
+    * each `fills` column's missing cells set to its zero. The VOCAB
+    * SOURCE frame is any frame carrying an `event_type` column whose
+    * distinct values stand in for the corpus vocabulary when no public
+    * one is passed. The batch entries pass the raw events; the
+    * streaming twins pass the full-corpus cell store (the subsample
+    * store must never be the vocabulary source — a sample-derived
+    * release set would make cell presence depend on the sampling draw).
+    * When `vocabulary` is Some, the source frame is never referenced (no
+    * job runs against it).
     */
   private def denseCellsFrom(vocabSource: DataFrame, grp: DataFrame,
       fills: Seq[(String, Column)], vocabulary: Option[Seq[String]]): DataFrame = {
@@ -757,10 +754,12 @@ object Privacy {
         fills.map { case (c, zero) => coalesce(col(c), zero).as(c) }: _*)
   }
 
-  /** [[denseCells]] for the single-LONG-count releases. */
+  /** [[denseCellsFrom]] over the raw events for the single-LONG-count
+    * releases.
+    */
   private def denseCells(events: DataFrame, grp: DataFrame,
       countCol: String, vocabulary: Option[Seq[String]]): DataFrame =
-    denseCells(events, grp, Seq(countCol -> lit(0L)), vocabulary)
+    denseCellsFrom(events, grp, Seq(countCol -> lit(0L)), vocabulary)
 
   /** x50: GAUSSIAN-mechanism count release under zCDP accounting — the
     * other canonical noise mechanism, and the accounting regime modern
@@ -1757,7 +1756,7 @@ object Privacy {
       .filter(col("rk") <= capCells)
     val grp = kept.groupBy("event_type", "day")
       .agg(sum(col("cl")).as("true_sum"), count(lit(1)).as("true_users"))
-    val cells = denseCells(events, grp,
+    val cells = denseCellsFrom(events, grp,
       Seq("true_sum" -> lit(0).cast(dec), "true_users" -> lit(0L)), vocabulary)
     cells.select(col("event_type"), col("day"),
         greatest(lit(0L), floor(col("true_sum").cast("double") +
@@ -2377,7 +2376,7 @@ object Privacy {
       least(greatest(col("contrib"), lit(0).cast(dec)), lit(clampC).cast(dec)))
     val grp = clamped.groupBy("event_type", "day")
       .agg(sum(col("cl")).as("true_sum"), count(lit(1)).as("true_users"))
-    val cells = denseCells(events, grp,
+    val cells = denseCellsFrom(events, grp,
       Seq("true_sum" -> lit(0).cast(dec), "true_users" -> lit(0L)), vocabulary)
     cells.select(col("event_type"), col("day"),
         greatest(lit(0L), floor(col("true_sum").cast("double") +

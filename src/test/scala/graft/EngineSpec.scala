@@ -482,4 +482,11 @@ class EngineSpec extends AnyFunSuite {
       assert(sorted.last.getAs[Boolean]("is_current"), s"user $u: the LAST version is open")
     }
   }
+
+  test("Engine.session binds file: to the chmod-free local filesystem") {
+    val fs = org.apache.hadoop.fs.FileSystem.newInstance(
+      java.net.URI.create("file:///"), spark.sessionState.newHadoopConf())
+    try assert(fs.getClass === classOf[sinks.NioLocalFileSystem])
+    finally fs.close()
+  }
 }

@@ -1,11 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{LocalFileSystem, Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.{FsCreateModes, FsPermission}
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline._
-import graft.sinks.{JdbcLayout, JdbcSink, PartitionedFileSink}
+import graft.sinks.{JdbcLayout, JdbcSink, NioLocalFileSystem, PartitionedFileSink}
 import graft.sources.Archive
 import graft.streaming.ArchiveTail
 import graft.xdr.{Stellar, StellarWriter}
@@ -764,6 +767,85 @@ class IngestSpec extends AnyFunSuite {
     assert(spark.read.option("header", "false").csv(s"$out/ledgers").count() === 2)
     // offset recovery reads back through the same FS
     assert(new PartitionedFileSink(out).lastSequence === Some(0x7fL))
+  }
+
+  /** Relative path → (bytes, `unix:mode`) of every file and directory
+    * under `root`, the root included; Spark's random part-file UUIDs are
+    * masked out of the names.
+    */
+  private def tree(root: java.nio.file.Path): Map[String, (Seq[Byte], Int)] = {
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+    val walk = Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator.asScala.map { p =>
+        uuid.replaceAllIn(root.relativize(p).toString, "<uuid>") ->
+          ((if (Files.isDirectory(p)) Seq.empty[Byte] else Files.readAllBytes(p).toSeq,
+            Files.getAttribute(p, "unix:mode").asInstanceOf[Int]))
+      }.toMap
+    } finally walk.close()
+  }
+
+  test("file sink commits the same names, bytes and modes as stock LocalFileSystem") {
+    val archive = Files.createTempDirectory("graft-perm-arch").toString
+    writeCheckpoint(archive, 0x3fL, 2)
+    writeCheckpoint(archive, 0x7fL, 0) // empty: marker only
+    // Hadoop caches a FileSystem by scheme and user, not by conf: with
+    // the cache off for file:, each lookup builds a new instance of the
+    // class the session conf names
+    def commit(impl: Class[_ <: LocalFileSystem]): Map[String, (Seq[Byte], Int)] = {
+      val root = Files.createTempDirectory("graft-perm-out").resolve("sink")
+      spark.conf.set("fs.file.impl", impl.getName)
+      spark.conf.set("fs.file.impl.disable.cache", "true")
+      try {
+        assert(Engine.fileSystem(spark, new HPath(root.toUri)).getClass === impl)
+        val sink = new PartitionedFileSink(root.toString)
+        assert(new ArchiveTail(spark, archive, Passphrase, cfg, sink).runOnce() === 2)
+      } finally {
+        spark.conf.unset("fs.file.impl")
+        spark.conf.unset("fs.file.impl.disable.cache")
+      }
+      tree(root)
+    }
+    val nio = commit(classOf[NioLocalFileSystem])
+    val stock = commit(classOf[LocalFileSystem])
+    assert(nio.keySet === stock.keySet)
+    val part = "ledgers/ledger=0000003f/"
+    assert(nio.keySet === Set("", "ledgers", part.init,
+      s"${part}part-00000-<uuid>-c000.csv", s"$part.part-00000-<uuid>-c000.csv.crc",
+      s"${part}_SUCCESS", s"$part._SUCCESS.crc", "completed_ledgers",
+      "completed_ledgers/0000003f", "completed_ledgers/.0000003f.crc",
+      "completed_ledgers/0000007f", "completed_ledgers/.0000007f.crc",
+      "last_file", ".last_file.crc"))
+    nio.foreach { case (k, v) => assert(v === stock(k), k) }
+  }
+
+  test("NioLocalFileSystem.Raw sets the bits stock chmod sets, sticky bit included") {
+    val conf = new Configuration()
+    conf.set("fs.permissions.umask-mode", "077")
+    def modes(fs: RawLocalFileSystem): Seq[Int] = {
+      fs.initialize(java.net.URI.create("file:///"), conf)
+      val dir = new HPath(Files.createTempDirectory("graft-raw-perm").toUri)
+      val sub = new HPath(dir, "sub")
+      val made = new HPath(sub, "made")
+      val set = new HPath(sub, "set")
+      val wide = new HPath(sub, "wide")
+      val sticky = new HPath(dir, "sticky")
+      fs.mkdirs(sub)
+      fs.create(made).close()
+      fs.create(set).close()
+      fs.setPermission(set, new FsPermission("640"))
+      fs.create(wide).close()
+      // as an HDFS-style create mode, which prints both of its modes
+      fs.setPermission(wide, FsCreateModes.create(new FsPermission("754"), new FsPermission("777")))
+      fs.mkdirs(sticky)
+      fs.setPermission(sticky, new FsPermission("1777"))
+      Seq(sub, made, set, wide, sticky).map(p =>
+        Files.getAttribute(Paths.get(p.toUri), "unix:mode").asInstanceOf[Int] & 0xfff)
+    }
+    val nio = modes(new NioLocalFileSystem.Raw)
+    assert(nio === modes(new RawLocalFileSystem))
+    assert(nio === Seq("700", "600", "640", "754", "1777").map(Integer.parseInt(_, 8)))
   }
 
   test("sink self-test probes R/W/D at startup; failure raises before any ingest (K6)") {
