@@ -34,13 +34,16 @@ object Engine {
     * A rule is switched off per session with Spark's own
     * `spark.sql.optimizer.excludedRules=<rule class>`.
     *
-    * `spark.hadoop.fs.file.impl` defaults to [[graft.sinks.NioLocalFileSystem]]:
-    * stock `LocalFileSystem` without libhadoop forks a `chmod` process
-    * per local create and mkdirs, 13 per file-sink checkpoint commit.
-    * The binding reaches every `file:` FileSystem that Hadoop builds from
-    * the session's conf. Hadoop caches FileSystems by scheme and user,
-    * not by conf, so a `file:` FileSystem the JVM built before the
-    * session keeps its class for as long as it stays cached.
+    * `spark.hadoop.fs.file.impl` defaults to [[graft.sinks.NioLocalFileSystem]]
+    * and `spark.hadoop.fs.AbstractFileSystem.file.impl` to its
+    * `FileContext` twin [[graft.sinks.NioLocalFs]]: without libhadoop the
+    * stock classes fork a `chmod` process per local create and mkdirs,
+    * 13 per file-sink checkpoint commit and 9 per streaming query's
+    * checkpoint log. The bindings reach every `file:` FileSystem and
+    * FileContext that Hadoop builds from the session's conf. Hadoop
+    * caches FileSystems by scheme and user, not by conf, so a `file:`
+    * FileSystem the JVM built before the session keeps its class for as
+    * long as it stays cached.
     */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
     val conf = new SparkConf()
@@ -63,7 +66,8 @@ object Engine {
       // range — useless against uniform hash keys); the probes cap
       // their key pushdown at this value, so the two stay in step
       "spark.sql.parquet.pushdown.inFilterThreshold" -> "1024",
-      "spark.hadoop.fs.file.impl" -> classOf[graft.sinks.NioLocalFileSystem].getName
+      "spark.hadoop.fs.file.impl" -> classOf[graft.sinks.NioLocalFileSystem].getName,
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.sinks.NioLocalFs].getName
     ).foreach { case (k, v) => conf.setIfMissing(k, v) }
     val s = SparkSession.builder().config(conf).getOrCreate()
     graft.functions.GraftFunctions.register(s) // same-JVM reuse safety

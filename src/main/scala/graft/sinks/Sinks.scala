@@ -1,10 +1,22 @@
 package graft.sinks
 
+import java.io.{IOException, OutputStreamWriter}
+import java.nio.charset.Charset
 import java.sql.{Connection, Statement}
+import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 import graft.sources.Archive
 
 /** Sink contract mirroring the reference's storage-adapter ABC
@@ -33,21 +45,35 @@ trait CheckpointSink {
   * `<root>/ledgers/ledger=<hexseq>/` part files + an empty
   * `completed_ledgers/<hexseq>` marker + `last_file` pointer.
   *
-  * Exactly-once comes from partition-overwrite idempotence: a replayed
-  * checkpoint rewrites its own `ledger=` partition (INSERT OVERWRITE
-  * semantics) before the marker lands — the manual rollback/compensating
-  * deletes of the reference (s3_storage_adapter.py:80-108) disappear.
-  * Empty checkpoints leave the marker only (P4,
-  * s3_storage_adapter.py:201-203). Part files are header-less CSV, the
-  * reference's layout.
+  * Exactly-once comes from partition-overwrite idempotence under the
+  * markers: a replayed checkpoint deletes and rewrites its own `ledger=`
+  * partition (INSERT OVERWRITE semantics) before its marker lands, and a
+  * consumer reads only partitions with a marker — the manual
+  * rollback/compensating deletes of the reference
+  * (s3_storage_adapter.py:80-108) disappear. Empty checkpoints leave the
+  * marker only (P4, s3_storage_adapter.py:201-203). Part files are
+  * header-less CSV, the reference's layout.
   *
-  * ALL I/O — the Spark partition write and the marker/pointer/probe
-  * side-files — goes through the Hadoop `FileSystem` resolved from
-  * `root`'s scheme, so the sink addresses any Hadoop-supported store
-  * uniformly: `file:///...` or a bare local path, `hdfs://...`, or an
-  * object store like `s3a://bucket/prefix` (the reference's native
-  * medium, python/adapters/s3_storage_adapter.py:27-78). `java.nio`
-  * would silently only ever work on local disk.
+  * The markers carry the commit, so the data write has no output
+  * committer of its own. [[save]] runs one Spark job; each task renders
+  * its rows with Spark's own CSV generator (Spark's write options and
+  * session time zone, under the session's SQL conf) into a hidden name
+  * unique to its task attempt inside `ledger=<hexseq>/`, then renames it
+  * once to `part-NNNNN-<uuid>-c000.csv`, Spark's naming. An empty task
+  * partition writes no file; a failed attempt deletes its hidden file. The
+  * driver writes `_SUCCESS` when rows were written, then the marker, then
+  * `last_file`. A failed job deletes the partition again and commits
+  * nothing.
+  *
+  * ALL I/O — the part files and the marker/pointer/probe side-files —
+  * goes through the Hadoop `FileSystem` resolved from `root`'s scheme, so
+  * the sink addresses any Hadoop-supported store uniformly: `file:///...`
+  * or a bare local path, `hdfs://...`, or an object store like
+  * `s3a://bucket/prefix` (the reference's native medium,
+  * python/adapters/s3_storage_adapter.py:27-78). The tasks resolve it
+  * through a snapshot of the session's Hadoop conf taken at the sink's
+  * first save and broadcast once per SparkContext; the driver's side
+  * files resolve it through the live session conf.
   */
 final class PartitionedFileSink(root: String) extends CheckpointSink {
   private val rootPath = new HPath(root)
@@ -55,16 +81,31 @@ final class PartitionedFileSink(root: String) extends CheckpointSink {
   private val lastFile = new HPath(rootPath, "last_file")
 
   /** FileSystem for `root`'s scheme through [[graft.Engine.fileSystem]]
-    * when a Spark session exists — the conf the partition write itself
-    * uses, so s3a credentials / endpoint settings set on the session
-    * (`spark.conf.set`, `spark.hadoop.*`) reach the side-files too. A
-    * sink probed before any session exists (`selfTest` at startup)
-    * falls back to a plain Hadoop conf.
+    * when a Spark session exists — the conf the part-file writes are
+    * snapshotted from, so s3a credentials / endpoint settings set on the
+    * session (`spark.conf.set`, `spark.hadoop.*`) reach the side-files
+    * too. A sink probed before any session exists (`selfTest` at
+    * startup) falls back to a plain Hadoop conf.
     */
   private def fs: FileSystem =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(graft.Engine.fileSystem(_, rootPath))
       .getOrElse(rootPath.getFileSystem(new Configuration()))
+
+  private var taskConf: Option[(SparkContext, Broadcast[SerializableConfiguration])] = None
+
+  /** The task-side Hadoop conf: the session's, taken at this sink's first
+    * save on `spark`'s SparkContext.
+    */
+  private def taskConfFor(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    synchronized {
+      val sc = spark.sparkContext
+      taskConf.collect { case (`sc`, conf) => conf }.getOrElse {
+        val conf = graft.Engine.hadoopConf(spark)
+        taskConf = Some(sc -> conf)
+        conf
+      }
+    }
 
   private def writeFile(f: FileSystem, p: HPath, bytes: Array[Byte]): Unit = {
     val out = f.create(p, true) // overwrite: markers/pointer are idempotent
@@ -85,19 +126,18 @@ final class PartitionedFileSink(root: String) extends CheckpointSink {
   override def save(ops: DataFrame, seq: Long): Unit = {
     val s = Archive.seqString(seq)
     val f = fs
-    // One job: the write counts its own rows, and an empty checkpoint's
-    // partition is removed after it. The `ledger` value lives ONLY in the
-    // directory name (Hive partition discovery restores it on read):
-    // writing it as a data column too would duplicate the partition
-    // column, and the reference's 13-column CSV layout has none. A frame
-    // with no columns is a marker-only commit: a file source cannot
-    // write it.
+    // The `ledger` value lives ONLY in the directory name (Hive partition
+    // discovery restores it on read): writing it as a data column too
+    // would duplicate the partition column, and the reference's 13-column
+    // CSV layout has none. A frame with no columns is a marker-only
+    // commit, as a file source cannot write it.
     if (ops.columns.nonEmpty) {
       val target = new HPath(rootPath, s"ledgers/ledger=$s")
-      val written = Observation()
-      ops.observe(written, count(lit(1)).as("rows"))
-        .write.mode("overwrite").option("header", "false").csv(target.toString)
-      if (written.get.get("rows").contains(0L)) f.delete(target, true)
+      f.delete(target, true) // overwrite: a replay rewrites its partition
+      val rows =
+        try PartitionedFileSink.writeParts(ops, target, taskConfFor(ops.sparkSession))
+        catch { case e: Throwable => PartitionedFileSink.deleteAfter(e, f, target, true) }
+      if (rows > 0) writeFile(f, new HPath(target, "_SUCCESS"), Array.emptyByteArray)
     }
     f.mkdirs(markers)
     writeFile(f, new HPath(markers, s), Array.emptyByteArray)
@@ -139,6 +179,63 @@ final class PartitionedFileSink(root: String) extends CheckpointSink {
     if (f.exists(markers))
       f.listStatus(markers).map(_.getPath.getName).toSeq.sorted
     else Nil
+  }
+}
+
+object PartitionedFileSink {
+
+  /** Writes `ops` as header-less CSV part files under `dir` in one Spark
+    * job, one file per non-empty task partition, and returns the rows
+    * written. The CSV options are those `df.write.csv` builds from the
+    * session's SQL conf.
+    */
+  private def writeParts(ops: DataFrame, dir: HPath,
+      conf: Broadcast[SerializableConfiguration]): Long = {
+    val qe = ops.queryExecution
+    val sql = qe.sparkSession.sessionState.conf
+    val schema = ops.schema
+    DataSourceUtils.verifySchema(new CSVFileFormat, schema)
+    val options = new CSVOptions(Map("header" -> "false"), sql.csvColumnPruning,
+      sql.sessionLocalTimeZone, sql.columnNameOfCorruptRecord)
+    val job = UUID.randomUUID().toString
+    val target = dir.toString
+    SQLExecution.withSQLConfPropagated(qe.sparkSession) {
+      qe.sparkSession.sparkContext.runJob(qe.toRdd, (task: TaskContext, rows: Iterator[InternalRow]) =>
+        writePart(task, rows, new HPath(target, f"part-${task.partitionId()}%05d-$job-c000.csv"),
+          schema, options, conf.value.value))
+    }.sum
+  }
+
+  /** One task's part file: its rows go to a hidden name unique to the task
+    * attempt, which is renamed once to `part`. A retried or speculative
+    * attempt renames over the same `part`; a failed one deletes its
+    * hidden file.
+    */
+  private def writePart(task: TaskContext, rows: Iterator[InternalRow], part: HPath,
+      schema: StructType, options: CSVOptions, conf: Configuration): Long =
+    if (!rows.hasNext) 0L
+    else {
+      val f = part.getFileSystem(conf)
+      val tmp = new HPath(part.getParent, s".${part.getName}.${task.taskAttemptId()}.inprogress")
+      try {
+        val gen = new UnivocityGenerator(schema,
+          new OutputStreamWriter(f.create(tmp, true), Charset.forName(options.charset)), options)
+        var n = 0L
+        try rows.foreach { r => gen.write(r); n += 1 } finally gen.close()
+        // a rename onto an existing file fails on some stores: a retried
+        // attempt replaces its predecessor's file
+        if (!f.rename(tmp, part) && !(f.delete(part, false) && f.rename(tmp, part)))
+          throw new IOException(s"could not rename $tmp to $part")
+        n
+      } catch { case e: Throwable => deleteAfter(e, f, tmp, false) }
+    }
+
+  /** Deletes what a failed write left at `p` and rethrows its failure,
+    * which a failed delete does not mask.
+    */
+  private def deleteAfter(e: Throwable, f: FileSystem, p: HPath, recursive: Boolean): Nothing = {
+    try f.delete(p, recursive) catch { case d: Throwable => e.addSuppressed(d) }
+    throw e
   }
 }
 

@@ -1,9 +1,12 @@
 package graft
 
+import java.net.URI
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.AbstractFileSystem
+import org.apache.hadoop.fs.local.LocalFs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline._
-import graft.sinks.PartitionedFileSink
+import graft.sinks.{NioLocalFs, PartitionedFileSink}
 import graft.sources.{Archive, ArchiveStreamRunner}
 import graft.xdr.{Stellar, StellarWriter}
 
@@ -177,6 +180,26 @@ class ArchiveStreamSpec extends AnyFunSuite {
     def lastFile(out: String) = new String(Files.readAllBytes(Paths.get(out, "last_file")), "UTF-8")
     assert(lastFile(streamed) === "000000bf")
     assert(lastFile(streamed) === lastFile(collected))
+  }
+
+  test("the streaming checkpoint log has the same names and modes under NioLocalFs as stock LocalFs") {
+    val archive = Files.createTempDirectory("graft-afs-arch").toString
+    writeCheckpoint(archive, 0x3fL)
+    writeCheckpoint(archive, 0x7fL)
+    def checkpointLog(impl: Class[_ <: AbstractFileSystem]): Map[String, Int] = {
+      val dir = Files.createTempDirectory("graft-afs").resolve("ckpt")
+      spark.conf.set("fs.AbstractFileSystem.file.impl", impl.getName)
+      try {
+        assert(AbstractFileSystem.get(URI.create("file:///"), spark.sessionState.newHadoopConf())
+          .getClass === impl)
+        ArchiveStreamRunner.runAvailableNow(spark, archive, Passphrase, cfg,
+          new PartitionedFileSink(dir.resolveSibling("sink").toString), dir.toString)
+      } finally spark.conf.unset("fs.AbstractFileSystem.file.impl")
+      FileTree.tree(dir).map { case (name, (_, mode)) => name -> mode }
+    }
+    val nio = checkpointLog(classOf[NioLocalFs])
+    assert(nio === checkpointLog(classOf[LocalFs]))
+    assert(Set("offsets/0", "commits/0", "metadata").subsetOf(nio.keySet), nio.keySet)
   }
 
   test("archive memos flow through the live curate-dedup-pack intake end to end") {

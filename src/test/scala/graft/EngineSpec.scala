@@ -484,9 +484,12 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("Engine.session binds file: to the chmod-free local filesystem") {
-    val fs = org.apache.hadoop.fs.FileSystem.newInstance(
-      java.net.URI.create("file:///"), spark.sessionState.newHadoopConf())
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = org.apache.hadoop.fs.FileSystem.newInstance(java.net.URI.create("file:///"), conf)
     try assert(fs.getClass === classOf[sinks.NioLocalFileSystem])
     finally fs.close()
+    // FileContext's binding too, which Spark's streaming checkpoint log resolves
+    assert(org.apache.hadoop.fs.AbstractFileSystem.get(java.net.URI.create("file:///"), conf)
+      .getClass === classOf[sinks.NioLocalFs])
   }
 }

@@ -12,6 +12,7 @@ import graft.sinks.{JdbcLayout, JdbcSink, NioLocalFileSystem, PartitionedFileSin
 import graft.sources.Archive
 import graft.streaming.ArchiveTail
 import graft.xdr.{Stellar, StellarWriter}
+import FileTree.tree
 
 class IngestSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -78,24 +79,45 @@ class IngestSpec extends AnyFunSuite {
     assert(sink.lastSequence === Some(0xffL))
   }
 
-  test("one non-empty checkpoint commits in exactly one Spark job") {
-    val archive = Files.createTempDirectory("graft-onejob").toString
-    val out = Files.createTempDirectory("graft-onejob-out").toString
+  test("a checkpoint commit is one Spark job, with no output committer under ledgers/") {
+    val archive = Files.createTempDirectory("graft-nocommitter").toString
+    val out = Files.createTempDirectory("graft-nocommitter-out").toString
     writeCheckpoint(archive, 0x3fL, 2)
-    val tail = new ArchiveTail(spark, archive, Passphrase, cfg, new PartitionedFileSink(out))
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     }
     val sc = spark.sparkContext
-    TestBus.drain(sc)
-    sc.addSparkListener(listener)
+    // a new instance of the recorder for every lookup, driver- and task-side
+    spark.conf.set("fs.file.impl", classOf[RecordingLocalFileSystem].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    RecordingLocalFileSystem.events.clear()
     try {
-      assert(tail.processOne(0x3fL))
+      val tail = new ArchiveTail(spark, archive, Passphrase, cfg, new PartitionedFileSink(out))
       TestBus.drain(sc)
-    } finally sc.removeSparkListener(listener)
+      sc.addSparkListener(listener)
+      try {
+        assert(tail.processOne(0x3fL))
+        TestBus.drain(sc)
+      } finally sc.removeSparkListener(listener)
+    } finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
     assert(jobs.get === 1)
-    assert(spark.read.csv(s"$out/ledgers").count() === 2)
+    import scala.jdk.CollectionConverters._
+    val ledgers = s"$out/ledgers/"
+    val events = RecordingLocalFileSystem.events.asScala.toSeq.filter(_.contains(ledgers))
+    assert(!events.exists(_.contains("_temporary")), events)
+    // the part file is renamed once, from a hidden name in its partition
+    val dir = s"${ledgers}ledger=0000003f"
+    val q = java.util.regex.Pattern.quote(dir)
+    val part = (s"rename $q/\\.part-00000-${FileTree.Uuid}-c000\\.csv\\.\\d+\\.inprogress " +
+      s"$q/part-00000-${FileTree.Uuid}-c000\\.csv").r
+    assert(events.count(_.startsWith("rename")) === 2, events) // with its .crc
+    assert(events.exists(part.matches), events)
+    assert(events.contains(s"create $dir/_SUCCESS"), events)
+    assert(spark.read.csv(ledgers).count() === 2)
   }
 
   test("Deploy wires the whole collector from the compose env map alone") {
@@ -767,23 +789,6 @@ class IngestSpec extends AnyFunSuite {
     assert(spark.read.option("header", "false").csv(s"$out/ledgers").count() === 2)
     // offset recovery reads back through the same FS
     assert(new PartitionedFileSink(out).lastSequence === Some(0x7fL))
-  }
-
-  /** Relative path → (bytes, `unix:mode`) of every file and directory
-    * under `root`, the root included; Spark's random part-file UUIDs are
-    * masked out of the names.
-    */
-  private def tree(root: java.nio.file.Path): Map[String, (Seq[Byte], Int)] = {
-    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
-    val walk = Files.walk(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator.asScala.map { p =>
-        uuid.replaceAllIn(root.relativize(p).toString, "<uuid>") ->
-          ((if (Files.isDirectory(p)) Seq.empty[Byte] else Files.readAllBytes(p).toSeq,
-            Files.getAttribute(p, "unix:mode").asInstanceOf[Int]))
-      }.toMap
-    } finally walk.close()
   }
 
   test("file sink commits the same names, bytes and modes as stock LocalFileSystem") {
