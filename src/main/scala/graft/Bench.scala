@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.ui.SQLExecutionUIData
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Benchmark main: times every inventory query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line on stdout (driver contract), ALSO writing it to a
@@ -498,7 +502,7 @@ object Bench {
       ).view.mapValues((_, 0.076)).toMap
   }
 
-  /** Local cores of the harness mains' session (Bench, Verify, Profile). */
+  /** Local cores of the harness mains' session (Bench, Verify, Profile, Explain). */
   val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
   /** The harness mains' session: [[Engine.session]] on [[cpus]] local
@@ -528,6 +532,112 @@ object Bench {
     // serving-path encode join). Read its median as memo overhead, not
     // training cost.
     graft.operators.Bpe.ensureTrained(spark, sfDir)
+  }
+
+  /** `SPARK_GRAFT_ONLY` (comma-separated names) limits a local run of
+    * Bench or Verify to those queries; unset, both run the full
+    * inventory, which the regression gate needs.
+    */
+  def selected(name: String): Boolean =
+    sys.env.get("SPARK_GRAFT_ONLY").forall(_.split(",").contains(name))
+
+  /** Every node of an executed plan: through AQE's wrapper into the
+    * final adaptive plan (reused stages show only there), each query
+    * stage and the plan under it, and every subquery.
+    */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case other => other +: (other.children ++ other.subqueries).flatMap(planNodes)
+  }
+
+  /** One root SQL execution as Spark's status store recorded it: wall
+    * from submission to completion, and the jobs of the execution and of
+    * every execution nested under it.
+    */
+  final case class Execution(id: Long, description: String, wallSec: Double, jobs: Int)
+
+  /** What [[captureExecutions]] saw while its body ran: the body's
+    * result, the QueryExecution of every action it ran (executed plans
+    * with their metrics), and its root executions in submission order.
+    */
+  final case class Capture[A](result: A, plans: Seq[QueryExecution],
+    executions: Seq[Execution])
+
+  /** Runs `body` and captures every execution it runs. Plans come from
+    * a QueryExecutionListener, jobs and walls from the session's SQL
+    * status store (kept with the UI off). The listener is async on the
+    * shared bus: before the body, three consecutive quiet 250 ms windows
+    * must pass and everything that arrived is discarded (events from
+    * executions that COMPLETED before registration can still be
+    * delivered to it when the bus is backlogged); after the body, three
+    * quiet windows again, with every execution submitted since the body
+    * began completed in the status store, before reading (under load a
+    * single quiet window can elapse while events are still queued,
+    * silently undercounting). Time the body inside it: the waits sit
+    * outside. Deadline-bounded: continuous activity on the shared
+    * session must degrade the capture, never hang the caller — after
+    * 30 s a wait proceeds with whatever arrived (calm sessions never hit
+    * it).
+    */
+  def captureExecutions[A](spark: SparkSession)(body: => A): Capture[A] = {
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = { qes.add(qe); () }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val store = spark.sharedState.statusStore
+    def submittedSince(ms: Long): Seq[SQLExecutionUIData] =
+      store.executionsList().filter(_.submissionTime >= ms)
+    def quiesce(since: Long): Unit = {
+      var last: Any = None
+      var quiet = 0
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (quiet < 3 && System.nanoTime() < deadline) {
+        Thread.sleep(250)
+        val execs = submittedSince(since)
+        val now = (qes.size, execs.map(e => (e.executionId, e.completionTime, e.jobs.size)))
+        if (now == last && execs.forall(_.completionTime.isDefined)) quiet += 1
+        else { quiet = 0; last = now }
+      }
+    }
+    spark.listenerManager.register(listener)
+    try {
+      quiesce(Long.MaxValue)
+      qes.clear()
+      val since = System.currentTimeMillis()
+      val result = body
+      quiesce(since)
+      val execs = submittedSince(since)
+      val roots = execs.filter(e => e.executionId == e.rootExecutionId)
+        .sortBy(_.executionId).map { r =>
+          val wall = r.completionTime.map(_.getTime - r.submissionTime).getOrElse(0L)
+          Execution(r.executionId, r.description, wall / 1e3,
+            execs.filter(_.rootExecutionId == r.executionId).map(_.jobs.size).sum)
+        }
+      import scala.jdk.CollectionConverters._
+      Capture(result, qes.asScala.toSeq, roots)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Runs `f` with AQE's empty-relation folding off, restoring the
+    * session's prior exclusion list after. The fold replaces an
+    * empty-result stage with an empty relation, deleting its
+    * (already-executed) scan from the final plan, so a plan walk would
+    * undercount: metrics executions run under this, timed runs keep
+    * production behaviour. Restore, not unset: unset would clobber an
+    * exclusion list a caller or config set.
+    */
+  private def keepingEmptyScans[A](spark: SparkSession)(f: => A): A = {
+    val key = "spark.sql.adaptive.optimizer.excludedRules"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
+    try f finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -585,65 +695,12 @@ object Bench {
     // from the pushed `In(key)` filters — the two layers of the 100 TB
     // probe-I/O claim, now measured instead of pinned-only. (Defined
     // before drainIntake, which reuses it for the drain's scan totals.)
-    def storeScanStats(plan: org.apache.spark.sql.execution.SparkPlan,
-        root: String): (Double, Double, Double) = {
-      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      def walk(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case f: FileSourceScanExec => Seq(f)
-        case other => (other.children ++ other.subqueries).flatMap(walk)
-      }
-      val scans = walk(plan)
+    def storeScanStats(plan: SparkPlan, root: String): (Double, Double, Double) = {
+      val scans = planNodes(plan).collect { case f: FileSourceScanExec => f }
         .filter(_.relation.location.rootPaths.exists(_.toUri.getPath.startsWith(root)))
       def m(name: String): Double =
         scans.flatMap(_.metrics.get(name).map(_.value)).sum.toDouble
       (m("numFiles"), m("filesSize"), m("numOutputRows"))
-    }
-
-    // `body`'s result and every execution it runs, captured through a
-    // QueryExecutionListener. The listener is async on the shared bus:
-    // before the body, three consecutive quiet 250 ms windows must pass
-    // and everything that arrived is discarded (events from executions
-    // that COMPLETED before registration can still be delivered to it
-    // when the bus is backlogged); after the body, three quiet windows
-    // again before reading (under load a single quiet window can elapse
-    // while onSuccess events are still queued, silently undercounting).
-    // The sleeps sit outside any timed region. Deadline-bounded:
-    // continuous activity on the shared session must degrade the
-    // capture, never hang the bench — after 30 s a wait proceeds with
-    // whatever arrived (calm sessions, the recording condition, never
-    // hit it).
-    def captureExecutions[A](body: => A): (A, Seq[org.apache.spark.sql.execution.QueryExecution]) = {
-      val qes = new java.util.concurrent.ConcurrentLinkedQueue[
-        org.apache.spark.sql.execution.QueryExecution]()
-      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit = { qes.add(qe); () }
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = ()
-      }
-      def quiesce(): Unit = {
-        var last = -1
-        var quiet = 0
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (quiet < 3 && System.nanoTime() < deadline) {
-          Thread.sleep(250)
-          if (qes.size == last) quiet += 1 else { quiet = 0; last = qes.size }
-        }
-      }
-      spark.listenerManager.register(listener)
-      try {
-        quiesce()
-        qes.clear()
-        val result = body
-        quiesce()
-        import scala.jdk.CollectionConverters._
-        (result, qes.asScala.toSeq)
-      } finally spark.listenerManager.unregister(listener)
     }
 
     // Drain outcome: wall-clock rate (noisy — the honest session spread
@@ -668,7 +725,7 @@ object Bench {
       val slice = Tables.documents(spark, sfDir)
         .select("doc_id", "lang", "text").filter(col("doc_id") % 10 < 4)
       val nDocs = slice.count().toDouble // outside the timed region
-      val (rate, qes) = captureExecutions {
+      val drain = captureExecutions(spark) {
         val t0 = System.nanoTime()
         for (i <- 0 until 6) {
           graft.streaming.LivePipeline.stepWithIndex(
@@ -677,10 +734,10 @@ object Bench {
         }
         nDocs / ((System.nanoTime() - t0) / 1e9)
       }
-      val plans = qes.map(_.executedPlan)
+      val plans = drain.plans.map(_.executedPlan)
       val store = plans.map(p => storeScanStats(p, root))
       val src = plans.map(p => storeScanStats(p, sfDir))
-      DrainStats(rate, store.map(_._3).sum, src.map(_._3).sum,
+      DrainStats(drain.result, store.map(_._3).sum, src.map(_._3).sum,
         store.map(_._2).sum / 1e6)
     } catch { case _: Throwable => DrainStats(-1.0, -1.0, -1.0, -1.0) }
     // r14 verdict #2 (intake-drain adjudication experiment): when
@@ -718,11 +775,10 @@ object Bench {
     // in isolation). Interleaved, a stall shorter than one full suite
     // pass lands in at most one of a query's Runs samples and the median
     // discards it.
-    // Local-iteration filter (comma-separated name list), mirroring
-    // Verify's: time one query without paying for the whole suite.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    // Local-iteration filter: time one query without paying for the
+    // whole suite.
     val ordered = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => selected(name) }
       .sortBy(_._1)
     // Timed action: a noop v2 write, not count(). Under a count the
     // optimizer prunes deterministic projections and eliminates final
@@ -1055,19 +1111,8 @@ object Bench {
       // where the bound binds and store-scan rows stay ~flat while the
       // store grows 64×.
       val smallProbe = docs.filter(col("doc_id") % 1000 === 7)
-      def scanFields(tag: String, n: Int, batch: org.apache.spark.sql.DataFrame): Seq[(String, Double)] = {
-        // AQE folds an empty-result probe stage into an empty relation,
-        // deleting its (already-executed) store scan from the final
-        // plan and silently undercounting the walk — exclude the rule
-        // for METRICS executions only; timed runs keep production
-        // behavior.
-        // save/restore rather than set/unset (r16 advice): unset would
-        // clobber any pre-existing exclusion list a caller or config set
-        val priorExcluded = spark.conf.getOption(
-          "spark.sql.adaptive.optimizer.excludedRules")
-        spark.conf.set("spark.sql.adaptive.optimizer.excludedRules",
-          "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
-        try {
+      def scanFields(tag: String, n: Int, batch: org.apache.spark.sql.DataFrame): Seq[(String, Double)] =
+        keepingEmptyScans(spark) {
           // actual bytes read off the local `file` FS across the whole
           // execution (tasks share this JVM on local[N], and Hadoop
           // FileSystem statistics aggregate across threads): the
@@ -1094,13 +1139,7 @@ object Bench {
             s"${tag}_mb_at_${n}x" -> bytes / 1e6,
             s"${tag}_rows_at_${n}x" -> rows,
             s"${tag}_io_mb_at_${n}x" -> ioMb)
-        } finally priorExcluded match {
-          case Some(v) => spark.conf.set(
-            "spark.sql.adaptive.optimizer.excludedRules", v)
-          case None => spark.conf.unset(
-            "spark.sql.adaptive.optimizer.excludedRules")
         }
-      }
       // min of two runs (the corpus-growth discipline: one-sided
       // inflation is what a second sample discards, and the curve's
       // signal is SHAPE at 0.3-3.5 s, far above the floor) — the r15
@@ -1157,12 +1196,8 @@ object Bench {
         val terms = rareTerm +: graft.operators.Retrieval.QueryTerms
         val postings = graft.streaming.LiveIndex
           .matchedPostingsCount(spark, idx, terms).toDouble
-        val priorExcluded = spark.conf.getOption(
-          "spark.sql.adaptive.optimizer.excludedRules")
-        spark.conf.set("spark.sql.adaptive.optimizer.excludedRules",
-          "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
-        try {
-          val (_, qes) = captureExecutions {
+        keepingEmptyScans(spark) {
+          val serve = captureExecutions(spark) {
             graft.streaming.LiveIndex.bm25(spark, idx, terms, 10).collect()
           }
           // postings scans ONLY (doclens/aux reads are candidate-pushed
@@ -1171,19 +1206,12 @@ object Bench {
           // repeated point-reads can exceed the naive read (pruning
           // pays when postings ≫ candidates), so the SLOPE vs the
           // postings curve is the signal, not the intercept
-          val rows = qes
+          val rows = serve.plans
             .map(qe => storeScanStats(qe.executedPlan, s"$root/idx/postings")._3).sum
           Seq(s"maxscore_rows_at_${n}x" -> rows,
             s"maxscore_postings_at_${n}x" -> postings,
             s"maxscore_cands_at_${n}x" ->
               graft.operators.Retrieval.lastServeCands.toDouble)
-        } finally {
-          priorExcluded match {
-            case Some(v) => spark.conf.set(
-              "spark.sql.adaptive.optimizer.excludedRules", v)
-            case None => spark.conf.unset(
-              "spark.sql.adaptive.optimizer.excludedRules")
-          }
         }
       }
       // Granularity emulation for the growth stores' FOLD WRITES: a

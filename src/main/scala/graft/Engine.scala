@@ -70,7 +70,9 @@ object Engine {
       "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.sinks.NioLocalFs].getName
     ).foreach { case (k, v) => conf.setIfMissing(k, v) }
     val s = SparkSession.builder().config(conf).getOrCreate()
-    graft.functions.GraftFunctions.register(s) // same-JVM reuse safety
+    // the one registration point: getOrCreate can hand back a session
+    // built without the extension, and every operator relies on this
+    graft.functions.GraftFunctions.register(s)
     s
   }
 

@@ -1,8 +1,10 @@
 package graft
 
 /** Plan-audit tool: prints `explain("formatted")` for the named queries
-  * (or a default set of scale-critical ones). Used to keep pushdown /
-  * broadcast / codegen properties honest; findings recorded in PLANS.md.
+  * (or a default set of scale-critical ones), on the session the bench
+  * times them under ([[Bench.session]]: its cores and shuffle
+  * partitions). Used to keep pushdown / broadcast / codegen properties
+  * honest; findings recorded in PLANS.md.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -18,7 +20,7 @@ object Explain {
         "d16_dedup_recall", "x28_nfc_normalize", "q6_recursive_cte",
         "q7_pipe_syntax", "x30_intake_audit", "x31_intake_contract",
         "x32_token_budget", "x33_leakage_split", "o6_global_rank")
-    val spark = Engine.session("local[4]", 4)
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n########## $n ##########")

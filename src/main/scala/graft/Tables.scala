@@ -113,8 +113,8 @@ object Cols {
       s"z -> CAST(CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE) AS DECIMAL(28,12)))) AS DOUBLE)"
 
   /** Bit-identical native spelling of [[dotDec]]
-    * ([[graft.functions.DecimalDot]]); the session must have called
-    * `GraftFunctions.register` (or carry GraftExtensions).
+    * ([[graft.functions.DecimalDot]]); the session must come from
+    * [[Engine.session]] (or carry GraftExtensions).
     */
   def fastDot(a: Column, b: Column): Column = call_function("decimal_dot", a, b)
 

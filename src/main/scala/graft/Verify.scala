@@ -7,9 +7,6 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
-    // Local-iteration filter (comma-separated name list); the driver
-    // never sets it, so the gate always runs the full inventory.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // a FAILED query must leave no dump behind: write-overwrite only
     // clears the previous run's parquet once the plan actually runs,
     // so an analysis/action-time exception would otherwise leave stale
@@ -23,7 +20,7 @@ object Verify {
       }
     }
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => Bench.selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

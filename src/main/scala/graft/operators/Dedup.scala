@@ -52,7 +52,6 @@ object Dedup {
   private val storeCache = scala.collection.concurrent.TrieMap.empty[String, String]
 
   private def sigStore(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val path = storeCache.getOrElseUpdate(d, {
       val out = Stores.dir(s, d, "minhash-store")
       Tables.documents(s, d)
@@ -94,7 +93,6 @@ object Dedup {
     * drops unchanged into batch and streaming plans.
     */
   def bandKeys(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sig = call_function("minhash_sigs",
       call_function("word_shingles", col("text")))
     val bandCols = (0 until NumBands).map(j =>
@@ -252,7 +250,6 @@ object Dedup {
     // the native DecimalDot expression — same values as the lambda
     // spelling, ~10× less per-pair work.
     "d5_embedding_neardup" -> { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
         .withColumn("norm", sqrt(Cols.fastDot(col("embedding"), col("embedding"))))
       val a = e.select(col("label"), col("vec_id").as("vec_a"),
@@ -844,7 +841,6 @@ object Dedup {
     // verdicts, pairwise only WITHIN a cell (the materialized quantizer
     // store supplies cell + norm; nothing corpus-quadratic anywhere).
     "d11_semantic_dedup" -> { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       semanticDedupVerdicts(Ivf.kmeansVectors(s, d), threshold = 0.35)
         .orderBy("vec_id")
     },

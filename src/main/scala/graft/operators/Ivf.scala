@@ -101,7 +101,6 @@ object Ivf {
     * so recorded medians reflect steady-state serving, not ingest cost.
     */
   def ensureStores(s: SparkSession, d: String): Unit = {
-    graft.functions.GraftFunctions.register(s)
     cellStore(s, d)
     kmeansStore(s, d)
   }
@@ -266,14 +265,12 @@ object Ivf {
 
   def queries: Map[String, Q] = Map(
     "n4_ann_ivf" -> { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val (cent, vecs) = cellStore(s, d)
       probe(s, d, cent, vecs, "label")
     },
     // k-means IVF: identical probe, trained quantizer — the output's
     // `cell` column is the trained cell id (vs n4's label cell).
     "n6_ann_kmeans" -> { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val (cent, vecs) = kmeansStore(s, d)
       probe(s, d, cent, vecs, "cell")
     }

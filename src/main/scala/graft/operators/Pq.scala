@@ -170,7 +170,6 @@ object Pq {
 
   /** Exact-cosine re-rank of the shortlist rows only. */
   private def refine(s: SparkSession, d: String, shortlist: Seq[Long]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val qF = Similarity.paramVec(s, d, 0L)
     val qn = Similarity.paramNorm(s, d, 0L)
     Tables.embeddings(s, d)

@@ -363,7 +363,6 @@ object Retrieval {
     // contributions are added in a fixed spelled order, so the fused
     // score is bit-identical cross-engine without decimal routing.
     "n10_hybrid_rrf" -> { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val rrfK = 60
       val denseTop = Similarity.multiProbeScores(s, d)
         .select("vec_id", "cos")
@@ -398,7 +397,6 @@ object Retrieval {
     // engines. At scale MMR cost is K·|candidates| cosine pairs — a
     // re-rank, by construction never corpus-shaped.
     "n11_mmr" -> { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val cand = Similarity.multiProbeScores(s, d)
         .orderBy(col("cos").desc, col("vec_id")).limit(MmrCand)
         .join(Tables.embeddings(s, d).select("vec_id", "embedding"), Seq("vec_id"))

@@ -84,7 +84,6 @@ object Similarity {
     * steady-state serving, not ingest cost.
     */
   def ensureStores(s: SparkSession, d: String): Unit = {
-    graft.functions.GraftFunctions.register(s)
     signatureTable(s, d)
     probeParams(s, d)
   }
@@ -145,7 +144,6 @@ object Similarity {
     // Brute-force exact top-10 by cosine against the vec_id=0 query
     // vector: one scan, broadcast query row, TakeOrderedAndProject.
     "n1_ann_bruteforce" -> { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val e = withNorm(Tables.embeddings(s, d))
       val q = e.filter(col("vec_id") === 0)
         .select(col("embedding").as("qv"), col("norm").as("qn"))
@@ -163,7 +161,6 @@ object Similarity {
     // serving deployment the query vector arrives with the request and its
     // bucket is 8 dot products against the broadcast hyperplanes.)
     "n2_ann_lsh" -> { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val t = signatureTable(s, d)
       // Query planning is the cached [[probeParams]] point read (the
       // serving-path equivalent of "the query arrives with the request");
@@ -188,7 +185,6 @@ object Similarity {
     // the query rows themselves (round 9 rebuilt the broadcast side
     // from a second corpus scan per invocation).
     "n9_ann_batch" -> { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val qs = (1L to 5L)
         .map(id => (id, paramVec(s, d, id), paramNorm(s, d, id)))
@@ -224,7 +220,6 @@ object Similarity {
     // row-group filter), so post-filtering never inflates the candidate
     // set driver-side and the plan stays one pruned scan + top-k.
     "n14_ann_filtered" -> { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val t = signatureTable(s, d)
       val p = probeParams(s, d)
       t.filter(col("bucket").isin(probeBuckets(p): _*) &&
@@ -267,7 +262,6 @@ object Similarity {
     * anti-pattern). Columns: `vec_id`, `bucket`, `cos`.
     */
   def multiProbeScores(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = signatureTable(s, d)
     // Query planning from the cached point read — same as n2; the 9
     // probe buckets land in ONE IN-list filter, so the scan is a single

@@ -32,10 +32,7 @@ object Stores {
 
   /** Resolve the directory for store `kind` over `dataset`. */
   def dir(s: SparkSession, dataset: String, kind: String): String =
-    resolve(
-      s.conf.getOption("spark.graft.storeRoot")
-        .orElse(sys.env.get("SPARK_GRAFT_STORE_ROOT"))
-        .filter(_.nonEmpty),
+    resolve(s.conf.getOption("spark.graft.storeRoot").filter(_.nonEmpty),
       s.sparkContext.isLocal, dataset, kind)
 
   /** Pure resolution (unit-testable without a cluster master): the

@@ -614,7 +614,6 @@ object TextAnalysis {
     // ratios are long/long double divisions (correctly rounded in both
     // engines, no decimal routing needed).
     "x9_repetition" -> { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val docs = Tables.documents(s, d)
       val wc = docs
         .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))

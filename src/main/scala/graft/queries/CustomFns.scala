@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{GraftFunctions, TopKDoubles}
+import graft.functions.TopKDoubles
 
 /** Queries exercising the custom extension surface (SURVEY.md §2.13/§7.5):
   * a native codegen'd Catalyst expression, a typed Aggregator, and the
@@ -16,7 +16,6 @@ object CustomFns {
     // Custom Catalyst expression (whole-stage codegen) — polynomial
     // rolling hash as a per-doc fingerprint.
     "x5_rolling_hash" -> { (s, d) =>
-      GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"), call_function("rolling_hash", col("text")).as("rhash"))
         .orderBy("doc_id")
@@ -45,7 +44,6 @@ object CustomFns {
     // genuinely recompose; DuckDB's native nfc_normalize is the oracle
     // (both delegate to Unicode canonical composition).
     "x28_nfc_normalize" -> { (s, d) =>
-      GraftFunctions.register(s)
       def deco = concat(substring(col("text"), 1, 24), lit("e\u0301"))
       def norm = call_function("nfc_normalize", deco)
       Tables.documents(s, d).select(

@@ -110,7 +110,6 @@ object LiveVectors {
     */
   def step(batch: DataFrame, batchId: Long, cfg: Config): Unit = {
     val s = batch.sparkSession
-    graft.functions.GraftFunctions.register(s) // Cols.fastDot's float_dot
     // writer-side fold recovery (single-writer: step and compact are
     // the same maintenance owner, serialized)
     BatchParts.recoverFold(s, s"${cfg.root}/sigs")
@@ -273,7 +272,6 @@ object LiveVectors {
     */
   def topK(s: SparkSession, cfg: Config, q: Array[Float], k: Int,
       probes: Int = 1): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val planes = planeCache.getOrElseUpdate(cfg.root,
       planesOf(s, cfg).collect()
         .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).sortBy(_._1))

@@ -68,4 +68,32 @@ class BenchGateSpec extends AnyFunSuite {
     assert(!Bench.growthCountOver(900.0, 400.0))
     assert(!Bench.growthCountOver(-1.0, rowsRec))
   }
+
+  test("captureExecutions returns only the body's executions, with plans, jobs and walls") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.functions.col
+    val spark = TestSpark.spark
+    val dir = java.nio.file.Files.createTempDirectory("graft-capture").toString
+    spark.range(100).write.mode("overwrite").parquet(dir)
+    // an aggregate, so AQE wraps the plan and the scan sits under a stage
+    def read() = spark.read.parquet(dir).groupBy(col("id") % 3).count()
+    val before = read()
+    before.collect()
+    val body = read()
+    val cap = Bench.captureExecutions(spark)(body.collect().length)
+    assert(cap.result === 3)
+    // the write and the earlier read finished before the capture
+    assert(!cap.plans.exists(_ eq before.queryExecution))
+    assert(cap.plans.exists(_ eq body.queryExecution))
+    assert(cap.executions.size === 1, cap.executions)
+    val e = cap.executions.head
+    assert(e.jobs >= 1 && e.wallSec > 0, e)
+    val plan = body.queryExecution.executedPlan
+    assert(plan.isInstanceOf[AdaptiveSparkPlanExec])
+    val nodes = Bench.planNodes(plan)
+    assert(nodes.exists(_.isInstanceOf[QueryStageExec]))
+    assert(nodes.collect { case f: FileSourceScanExec => f }
+      .exists(_.relation.location.rootPaths.exists(_.toUri.getPath == dir)))
+  }
 }

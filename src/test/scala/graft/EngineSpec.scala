@@ -106,7 +106,6 @@ class EngineSpec extends AnyFunSuite {
 
   test("semanticDedup keeps the min-id canonical per in-cell near-dup group, blocked by cell") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // v1≡v2 (same direction, cell 0) → v2 drops to v1; v3 orthogonal →
     // kept; v4 parallel to v1 but in ANOTHER cell → kept (blocking:
     // cross-cell pairs are never compared, the SemDeDup cost contract)

@@ -75,7 +75,6 @@ class RetrievalSpec extends AnyFunSuite {
 
   test("mmrRerank trades relevance for diversity; lambda=1 is pure relevance") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // v1 and v2: same direction (near-dups), highest relevance;
     // v3: orthogonal, lower relevance
     val cand = Seq(
